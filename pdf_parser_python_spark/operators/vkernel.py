@@ -40,6 +40,7 @@ Reference semantics: /root/reference/parser/state_machine.py:133-366
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Iterator
 
 import numpy as np
@@ -1006,26 +1007,46 @@ def _emit_final(state) -> pa.RecordBatch:
     )
 
 
-def _fallback_final(doc_ids, fb_docs) -> pa.RecordBatch | None:
+#: commit form of QUESTION_FINAL: every row carries a ``parse_failed``
+#: flag, True only on the one stand-in row a document emits when its
+#: Python-fallback parse raised. The bucket commit counts the flags on
+#: its write job and drops those rows (plans/lineage.py).
+QUESTION_COMMIT_ARROW_SCHEMA = QUESTION_FINAL_ARROW_SCHEMA.append(
+    pa.field("parse_failed", pa.bool_())
+)
+
+
+def _fallback_final(doc_ids, fb_docs,
+                    flag_failures: bool = False) -> pa.RecordBatch | None:
     from . import dkernel
 
+    schema_ = (QUESTION_COMMIT_ARROW_SCHEMA if flag_failures
+               else QUESTION_FINAL_ARROW_SCHEMA)
     rows: list[tuple] = []
     ids_py = doc_ids.to_pylist()
     for d, k, t, r, p in fb_docs:
         for raw in dkernel._parse_doc(ids_py[d], k, t, r, p):
             fin = dkernel._finalize_row(raw)
+            if fin is None and flag_failures:  # the failed doc's sentinel
+                fin = (raw[0], 0, -1, "mcq", "", [], [], "", [], "", [],
+                       1, 1, [], 0, False, False, False, 0)
             if fin is not None:
-                rows.append(fin)
+                rows.append(fin + (raw[13],) if flag_failures else fin)
     if not rows:
         return None
     cols = list(zip(*rows))
     return pa.RecordBatch.from_arrays(
-        [
-            pa.array(list(cols[i]),
-                     QUESTION_FINAL_ARROW_SCHEMA.field(i).type)
-            for i in range(len(cols))
-        ],
-        schema=QUESTION_FINAL_ARROW_SCHEMA,
+        [pa.array(list(cols[i]), schema_.field(i).type)
+         for i in range(len(cols))],
+        schema=schema_,
+    )
+
+
+def _emit_commit(state) -> pa.RecordBatch:
+    out = _emit_final(state)
+    return pa.RecordBatch.from_arrays(
+        out.columns + [pa.array(np.zeros(len(out), dtype=bool))],
+        schema=QUESTION_COMMIT_ARROW_SCHEMA,
     )
 
 
@@ -1336,6 +1357,17 @@ def parse_docs_final_arrow(
     entities (nested options/images/anomalies built arrow-side)."""
     yield from _entry(batches, _emit_final, _fallback_final,
                       QUESTION_FINAL_ARROW_SCHEMA)
+
+
+def parse_docs_commit_arrow(
+    batches: Iterator[pa.RecordBatch],
+) -> Iterator[pa.RecordBatch]:
+    """mapInArrow entrypoint for bucket commits: parse_docs_final_arrow
+    plus the ``parse_failed`` flag column, so the failure count rides
+    the questions write job (schema.QUESTION_COMMIT)."""
+    yield from _entry(batches, _emit_commit,
+                      partial(_fallback_final, flag_failures=True),
+                      QUESTION_COMMIT_ARROW_SCHEMA)
 
 
 def validate_docs_arrow(

@@ -16,9 +16,16 @@ Reference semantics being re-expressed (SURVEY.md §2.8):
   by doc_id gives the FSM its whole input;
 - idempotent writes: the reference deletes page-range rows before
   re-insert (background_worker.py:343-357, database.py:289-322); here
-  each bucket's output directory is overwritten atomically before its
-  lineage row lands (write data → commit lineage), so a crash between
-  the two re-runs the bucket harmlessly.
+  each bucket's output directories are overwritten before its lineage
+  row lands (write data → commit lineage), so a crash between the two
+  re-runs the bucket harmlessly.
+
+A bucket commit is two writes straight off the staged input, each ONE
+vectorized ``mapInArrow`` pass of the read path's kernel
+(operators/vkernel.py): questions, then flat spans. Parsing twice is
+cheaper than parsing once and staging: the kernel's compute is small
+next to the per-job cost of a staged raw table that a Catalyst
+finalize and a flatten job would each read back.
 
 Storage is a parquet directory layout with Iceberg-shaped semantics
 (no Iceberg runtime jar ships in this sandbox); the lineage contract
@@ -36,9 +43,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import finalize as _finalize
-from ..operators import flatten as _flatten
-from . import pipeline
+from .. import schema
+from ..operators import dkernel, vkernel
 
 
 #: bucket commits in flight at once (r8, guide §2.6): the driver-side
@@ -78,7 +84,6 @@ class ExtractionJob:
         self.n_buckets = n_buckets
         self.questions_dir = os.path.join(out_dir, "questions")
         self.spans_dir = os.path.join(out_dir, "flat_spans")
-        self.raw_dir = os.path.join(out_dir, "raw_questions")
         self.lineage_path = os.path.join(out_dir, "lineage.jsonl")
         self._lineage_lock = __import__("threading").Lock()
 
@@ -108,12 +113,19 @@ class ExtractionJob:
             return spark.createDataFrame([], self.EMPTY_LINEAGE_SCHEMA)
         return spark.createDataFrame(rows)
 
-    def done_buckets(self) -> set[int]:
+    def _latest_done(self, phase: str | None = None) -> dict[int, dict]:
+        """partition_id → its latest ``done`` journal row (of ``phase``,
+        when given). A unit re-committed under a retained journal has
+        several done rows; the last one describes the data on disk."""
         return {
-            r["partition_id"]
+            r["partition_id"]: r
             for r in self.lineage_rows()
             if r["status"] == "done"
+            and (phase is None or r.get("phase") == phase)
         }
+
+    def done_buckets(self) -> set[int]:
+        return set(self._latest_done())
 
     def pending_buckets(self) -> list[int]:
         done = self.done_buckets()
@@ -181,51 +193,52 @@ class ExtractionJob:
     def _write_bucket(
         self, bucket: int, docs: DataFrame, n_docs: int, n_spans_in: int
     ) -> dict:
-        """One bucket commit — the parse executes exactly ONCE.
+        """One bucket commit: two kernel passes over the bucket's staged
+        input, questions then flat spans, and no staged intermediate.
 
-        Round 1 ran the parse twice (questions write + failure count)
-        and scanned the input a third time for metrics; at scale that
-        doubled extraction cost per bucket. Now the raw kernel output
-        (incl. parse_failed sentinel rows) is materialized first, and
-        questions/flat-spans/failure counts all derive from written
-        parquet; input metrics come from staging time.
+        Both outputs come from the read path's vectorized kernel, one
+        ``mapInArrow`` write job each. A staged parse would run once
+        but costs a third job plus two parquet read-backs, and the
+        kernel's compute is small next to that per-job cost. The
+        parse-failure count rides the questions write: its kernel
+        flags the stand-in row of each document whose Python-fallback
+        parse failed, the Observation sums the flag, and the rows are
+        dropped before the write (the flat-spans kernel emits nothing
+        for them). Input metrics come from staging time.
         """
         t0 = time.perf_counter()
-        spark = docs.sparkSession
         qdir = os.path.join(self.questions_dir, f"bucket={bucket}")
         sdir = os.path.join(self.spans_dir, f"bucket={bucket}")
-        rdir = os.path.join(self.raw_dir, f"bucket={bucket}")
         # delete-before-insert (reference background_worker.py:343-357)
-        for d in (qdir, sdir, rdir):
+        for d in (qdir, sdir):
             shutil.rmtree(d, ignore_errors=True)
 
         # metric counts ride ON the write actions (Observation API) —
-        # r5: the three separate count() jobs were measured as a large
-        # share of the per-bucket fixed cost (BENCH.md lineage phase);
-        # at 4096 buckets that is 3×4096 driver round-trips for numbers
-        # the write jobs already see
+        # r5: separate count() jobs were measured as a large share of
+        # the per-bucket fixed cost (BENCH.md lineage phase)
         from pyspark.sql import Observation
 
-        ob_raw = Observation()
-        pipeline.parse_raw(docs).observe(
-            ob_raw,
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("parse_failed").cast("long")).alias("nf"),
-        ).write.mode("overwrite").parquet(rdir)
-        n_fail = int(ob_raw.get["nf"] or 0)
-        raw = spark.read.parquet(rdir)
-
+        proj = dkernel.packed_projection(docs)
+        failed = F.col("parse_failed")
         ob_q = Observation()
-        _finalize.finalize_questions(raw).observe(
-            ob_q, F.count(F.lit(1)).alias("n")
-        ).write.mode("overwrite").parquet(qdir)
-        n_q = int(ob_q.get["n"])
-        written = spark.read.parquet(qdir)
+        proj.mapInArrow(
+            vkernel.parse_docs_commit_arrow, schema=schema.QUESTION_COMMIT
+        ).observe(
+            ob_q,
+            F.sum((~failed).cast("long")).alias("n"),
+            F.sum(failed.cast("long")).alias("nf"),
+        ).where(~failed).drop("parse_failed").write.mode(
+            "overwrite"
+        ).parquet(qdir)
+        n_q = int(ob_q.get["n"] or 0)
+        n_fail = int(ob_q.get["nf"] or 0)
 
         ob_s = Observation()
-        _flatten.flat_spans(written).observe(
-            ob_s, F.count(F.lit(1)).alias("n")
-        ).write.mode("overwrite").parquet(sdir)
+        proj.mapInArrow(
+            vkernel.parse_docs_flat_arrow, schema=schema.FLAT_SPAN_SEQ
+        ).observe(ob_s, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(sdir)
         n_spans_out = int(ob_s.get["n"])
         return {
             "partition_id": bucket,
@@ -461,18 +474,19 @@ class DedupJob(ExtractionJob):
     # ── lineage bookkeeping (two phases in one journal) ──────────────
 
     def done_buckets(self) -> set[int]:
-        return {
-            r["partition_id"]
-            for r in self.lineage_rows()
-            if r["status"] == "done" and r.get("phase") == "sig"
-        }
+        return set(self._latest_done("sig"))
 
     def done_bands(self) -> set[int]:
-        return {
-            r["partition_id"]
-            for r in self.lineage_rows()
-            if r["status"] == "done" and r.get("phase") == "band"
-        }
+        return set(self._latest_done("band"))
+
+    def _committed_sigs(self) -> int:
+        """Rows in the committed signature store, from the journal:
+        one count per bucket (its latest done row), so a bucket
+        re-committed under a retained journal is not counted twice."""
+        return sum(
+            r.get("rows_emitted", 0)
+            for r in self._latest_done("sig").values()
+        )
 
     def pending_bands(self) -> list[int]:
         done = self.done_bands()
@@ -583,12 +597,7 @@ class DedupJob(ExtractionJob):
         # the cap the planner's shuffled join returns untouched.
         from ..operators.dedup import _bcast_small
 
-        n_sigs = sum(
-            r.get("rows_emitted", 0)
-            for r in self.lineage_rows()
-            if r["status"] == "done" and r.get("phase") == "sig"
-        )
-        sig_bytes = n_sigs * (56 + 8 * self.k)
+        sig_bytes = self._committed_sigs() * (56 + 8 * self.k)
         sa = _bcast_small(
             sigs.select(F.col("doc_id").alias("doc_a"),
                         F.col("signature").alias("sig_a")), sig_bytes)

@@ -1,25 +1,35 @@
 """End-to-end extraction plan.
 
-    documents(doc_id, spans[]) ──explode──▶ line tokens (native)
-        ──noise prefilter (native, pushed below the UDF barrier)──▶
-        groupBy(doc_id).applyInPandas(segment_kernel) ──▶ raw questions
-        ──finalize (native HOFs)──▶ questions
-        ──flatten (native)──▶ canonical output spans
+Default (``engine="packed"``), one scan and one Python barrier, no
+Exchange:
 
-Stage placement mirrors the reference's hand-fusion (SURVEY.md §4): the
-always-ignore noise filter (state_machine.py:200-202) and empty-line
-drop (:95,182,196-198) run as Column predicates *before* the grouped
-kernel, so Catalyst prunes columns and the Arrow transfer ships only
-surviving lines. Cover-page noise is state-dependent and stays in the
-kernel.
+    documents(doc_id, spans[]) ──packed_projection (native: spans
+        sorted by offset → kinds/texts/refs/pages arrays)──▶
+        mapInArrow(vkernel.*_arrow) ──▶ questions | flat spans |
+        validation | doc text | question scalars
+
+The vectorized kernel (operators/vkernel.py) tokenizes, drops noise and
+runs the FSM inside the pass, and builds each output there, so no
+finalize/flatten stage follows it. Documents whose characters make RE2
+and Python ``re`` diverge fall back, inside the same pass, to the
+row-exact Python kernel (operators/dkernel.py). Documents above
+``GIANT_DOC_SPANS`` spans reroute to operators/chunked.py: anchor-aligned
+chunks, one hash exchange on (doc_id, chunk), the same kernel.
+
+Other engines, row-equal by test: ``packed-pandas`` is the same plan
+with the pandas kernel under mapInPandas; ``native`` is the FSM in
+Catalyst; ``partition`` and ``grouped`` explode to lines (``tokenize``:
+noise filtered JVM-side, below the UDF barrier), shuffle by doc_id, run
+the pandas FSM per partition or per group, then finalize and flatten as
+Column expressions.
 
 Scale notes (100 TB / 10^12 docs):
-- the only shuffle is the hash partition by ``doc_id`` feeding the
-  grouped kernel; it is also the skew point — see ``repartition_hint``
-  and operators/native.py's segment-level alternative;
-- tokenization is explode + split: narrow, no shuffle, whole-stage
-  codegen;
-- finalize/flatten are per-row expressions: no shuffle after the kernel.
+- the packed default needs no shuffle: the input is already one row
+  per document, and a pathological document is bounded by the giant-doc
+  reroute instead;
+- on the line-grained engines the hash partition by ``doc_id`` is the
+  only shuffle and the skew point (operators/native.py has the
+  segment-level alternative).
 """
 
 from __future__ import annotations

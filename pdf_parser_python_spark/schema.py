@@ -130,6 +130,14 @@ QUESTION_FINAL = T.StructType(
     ]
 )
 
+#: Bucket-commit form of QUESTION_FINAL (operators/vkernel.py
+#: parse_docs_commit_arrow): one extra flag, True only on the stand-in
+#: row of a document whose parse failed.
+QUESTION_COMMIT = T.StructType(
+    QUESTION_FINAL.fields
+    + [T.StructField("parse_failed", T.BooleanType(), False)]
+)
+
 #: Canonical flattened output span (the correctness contract, §1.4 of
 #: SURVEY.md; reference crud.py:633-726 `_question_to_blocks`).
 FLAT_SPAN = T.StructType(

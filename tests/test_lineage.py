@@ -1,5 +1,6 @@
 """Checkpoint/resume with per-partition lineage (north-rule contract)."""
 
+import os
 import tempfile
 
 import pytest
@@ -54,6 +55,95 @@ def test_interrupt_and_resume(spark, docs):
             docs
         ).count()
         assert sum(r["questions_emitted"] for r in lin.values()) == direct.count()
+
+
+def _row_set(df, cols):
+    """Sorted JSON rows of ``df`` over ``cols`` — a multiset that also
+    compares map-typed columns (anomaly contexts)."""
+    return sorted(
+        r[0] for r in df.select(F.to_json(F.struct(*cols))).collect()
+    )
+
+
+def _spans(texts, page=True):
+    return [
+        {"kind": "text", "text": t, "media_ref": "", "offset": i,
+         **({"page": 1 + i // 3} if page else {})}
+        for i, t in enumerate(texts)
+    ]
+
+
+_EXAM = ["Question: 1 Which city is on two continents?",
+         "(A) Istanbul", "(B) Paris", "Answer: A",
+         "Explanation: it spans the Bosphorus."]
+#: İ and Arabic-Indic digits route a document to the Python fallback
+_FALLBACK = [t.replace("Istanbul", "İstanbul") for t in _EXAM] + [
+    "Question: 2 How many continents does it touch?",
+    "(A) ٢", "(B) 3", "Answer: A"]
+
+
+@pytest.mark.parametrize("pageless", [False, True],
+                         ids=["document_spans_ext", "document_spans"])
+def test_committed_outputs_equal_batch_extraction(spark, pageless):
+    """The committed questions and flat spans are row-set-equal to the
+    batch extraction, edge documents included, and the commit stages
+    no raw_questions/ intermediate."""
+    corpus = [
+        (f"eq-{i:03d}", generate_doc_spans(5000 + i, mean_questions=5))
+        for i in range(12)
+    ] + [
+        ("eq-fallback", _spans(_FALLBACK)),
+        ("eq-empty", []),
+        ("eq-anchorless", _spans(["just prose", "no anchors here"])),
+    ]
+    if pageless:
+        corpus = [
+            (d, [{k: v for k, v in s.items() if k != "page"} for s in sp])
+            for d, sp in corpus
+        ]
+    docs = spark.createDataFrame(
+        corpus,
+        schema=schema.DOCUMENT_SPANS if pageless
+        else schema.DOCUMENT_SPANS_EXT,
+    )
+    with tempfile.TemporaryDirectory() as td:
+        job = ExtractionJob(td, n_buckets=4)
+        job.run(spark, docs)
+        assert not job.pending_buckets()
+        assert not os.path.exists(os.path.join(td, "raw_questions"))
+
+        want_q = pipeline.extract_questions(docs)
+        got_q = _row_set(job.questions(spark), want_q.columns)
+        assert got_q == _row_set(want_q, want_q.columns)
+        assert any('"doc_id":"eq-fallback"' in r for r in got_q)
+        want_s = pipeline.extract_flat_spans(docs)
+        assert _row_set(job.flat_spans(spark), want_s.columns) == (
+            _row_set(want_s, want_s.columns))
+        lin = job.lineage_rows()
+        assert sum(r["docs_parsed"] for r in lin) == len(corpus)
+        assert sum(r["questions_emitted"] for r in lin) == len(got_q)
+        assert all(r["parse_failures"] == 0 for r in lin)
+
+
+def test_dedup_signature_count_takes_latest_done_row():
+    """A bucket re-committed under a retained journal has two done
+    rows; the committed signature count takes only the latest."""
+    from pdf_parser_python_spark.plans.lineage import DedupJob
+
+    with tempfile.TemporaryDirectory() as td:
+        job = DedupJob(td, n_buckets=2)
+        for pid, phase, status, n in [
+            (0, "sig", "done", 10),
+            (1, "sig", "failed", 0),
+            (1, "sig", "done", 5),
+            (0, "sig", "done", 12),  # re-commit of bucket 0
+            (0, "band", "done", 99),
+        ]:
+            job._append_lineage(job._row(pid, phase, status,
+                                         rows_emitted=n))
+        assert job._committed_sigs() == 12 + 5
+        assert job.done_buckets() == {0, 1}
+        assert job.done_bands() == {0}
 
 
 def test_rerun_is_noop(spark, docs):
