@@ -9,8 +9,9 @@ re-expressed Spark-first:
   (the Iceberg-style layout of BASELINE.json's ``input_hint``);
 - a vectorized line tokenizer + anchor classifier (native Column ops and
   Arrow-batched pandas, never per-row Python);
-- a batched state-machine segmenter (grouped-map pandas kernel, plus a
-  fully-native window/array implementation used as the scale path);
+- one state-machine segmenter, run by a vectorized Arrow kernel (the
+  default), its row-exact pandas twin, and a fully-native window/array
+  implementation;
 - native finalization, canonical span flattening, and validation layers;
 - checkpoint/resume with per-partition lineage + extraction metrics;
 - training-data-pipeline operators: dedup (exact/minhash/simhash),

@@ -6,9 +6,9 @@ pure-Catalyst FSM, operators/native.py) runs at ~23k lines/s on
 local[32] — ~15× slower than a single vkernel task, so auto-dispatch
 never won wall-clock. The fix exploits an FSM property instead of a
 different engine: a ``Question: N`` anchor line that is neither a solo
-"Question N" artifact (line-local test, pkernel.py:158-159) nor
+"Question N" artifact (line-local test, dkernel.py:151-152) nor
 cover-page noise (only consulted while no question is open,
-pkernel.py:160-163) unconditionally flushes the open question and
+dkernel.py:153-156) unconditionally flushes the open question and
 hard-resets all parser state (reference state_machine.py:205-230).
 Splitting a giant document AT such spans therefore yields pseudo-
 documents whose independent parses equal the whole-doc parse — the
@@ -27,7 +27,7 @@ Safe-split subtleties mirrored from the kernels:
 - the anchor must be the first NON-EMPTY line of its span (earlier
   lines would belong to the previous question); empty lines use the
   kernels' python-strip parity class;
-- noise wins over anchors (pkernel._COMBINED_NOISE order), so a first
+- noise wins over anchors (dkernel._COMBINED_NOISE order), so a first
   line matching any always-ignore pattern is not a split;
 - ties on duplicate span offsets may re-order differently from the
   packed comparator sort; offsets are unique in every source this

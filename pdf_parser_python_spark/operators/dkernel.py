@@ -1,39 +1,203 @@
-"""Packed document kernel — the zero-shuffle fast path.
+"""Packed document kernel: the row-exact Python FSM.
 
-The input_hint table is already one row per document with the full
-ordered span array, so the explode → shuffle-by-doc_id → re-group
-dance of the line-grained path (:mod:`.pkernel`) moves ~100 bytes/line
-through a shuffle only to reassemble what the input row already held.
-This kernel parses straight off the packed rows:
+The input table is already one row per document with the full ordered
+span array, so the kernel parses straight off the packed rows:
 
     documents --array_sort(spans)--> 4 primitive arrays (native)
-        --mapInPandas(parse_docs)--> raw question rows
+        --mapInPandas(parse_docs*)--> question rows
 
 No shuffle anywhere; the only cross-row machinery is Arrow batching.
 Tokenization (newline split, strip, noise filter) happens inside the
 kernel with compiled regexes — with packed input there is no data-size
 win from filtering JVM-side, since whole documents ship regardless.
 
-The FSM itself is shared with pkernel (`_DocState`/`_process_rows`),
-so the two engines cannot drift; tests assert all engines agree.
-
-Trade-off vs pkernel: a pathological single document is one task here
-(no intra-doc parallelism), and its spans sit in one Arrow row. Use
-pkernel for line-grained sources or when rows exceed batch memory.
+This is the ``packed-pandas`` engine, the twin the vectorized kernel
+(:mod:`.vkernel`) is tested against row for row, and that kernel's
+fallback for documents whose characters make RE2 and Python ``re``
+diverge. A pathological single document is one task here; the
+pipeline's giant-doc dispatch reroutes such documents to
+:mod:`.chunked`.
 """
 
 from __future__ import annotations
 
+import re
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-import re
+from ..functions import anchors as A
 
-from ..functions.anchors import is_noise_line
-from .pkernel import _COLUMNS, _COMBINED_NOISE, _DocState, _process_rows
+_ANCHOR_ALTERNATION = (
+    r"Question\s*:?\s*(?P<qnum>\d+)"
+    r"|(?P<hot>HOTSPOT)\s*$"
+    r"|\(?(?P<okey>[A-Za-z])\s*[.):\-–—]\s*"
+    r"|(?P<ans>(?:Correct\s+)?(?:Answer|Ans|Key))[\s.:]*"
+    r"|(?P<exp>Explanation|Reference|Rationale|Solution)\s*:?\s*"
+)
+
+#: one C-level regex pass classifies a line completely. The ordered
+#: alternation keeps the reference's check order (question → hotspot →
+#: option → answer → explanation), and the always-ignore noise check
+#: (reference state_machine.py:200-202 — noise wins over every anchor)
+#: rides as the FIRST alternative. The two case-SENSITIVE noise rules
+#: (separators, lone URLs) keep their sensitivity via (?-i:...).
+_COMBINED_NOISE = re.compile(
+    r"^\s*(?:(?P<noise>"
+    + A.NOISE_CI_BODY
+    + r"|(?-i:" + A.NOISE_CS_BODY + r"))"
+    + r"|" + _ANCHOR_ALTERNATION + r")",
+    re.IGNORECASE,
+)
+_COVER = A.RE_COVER_NOISE
+
+_COLUMNS = [
+    "doc_id", "seq", "question_number", "question_type", "question_text",
+    "question_images", "options", "answer_text", "answer_images",
+    "explanation_text", "explanation_images", "page_start", "page_end",
+    "parse_failed",
+]
+
+# FSM states
+_QBODY, _OPTION, _ANSWER, _EXPL = 0, 1, 2, 3
+
+
+class _DocState:
+    """Accumulator for one document's question rows."""
+
+    __slots__ = ("doc_id", "seq", "cur", "rows", "failed")
+
+    def __init__(self, doc_id: str) -> None:
+        self.doc_id = doc_id
+        self.seq = 0
+        self.cur: list | None = None
+        self.rows: list[tuple] = []
+        self.failed = False
+
+    def flush_question(self) -> None:
+        q = self.cur
+        self.rows.append(
+            (
+                self.doc_id, self.seq, q[0], q[1], " ".join(q[2]), q[3],
+                [
+                    {"key": k, "text": " ".join(t), "is_correct": False,
+                     "images": im}
+                    for (k, t, im) in q[4]
+                ],
+                " ".join(q[5]), q[6], " ".join(q[7]), q[8], q[9], q[10],
+                False,
+            )
+        )
+        self.seq += 1
+
+    def finish(self) -> list[tuple]:
+        if self.failed:
+            return [(self.doc_id, 0, -1, "mcq", "", [], [], "", [], "", [],
+                     1, 1, True)]
+        if self.cur is not None:
+            self.flush_question()
+        return self.rows
+
+
+def _process_rows(ds: _DocState, kinds, texts, medias, pages) -> None:
+    """Run one document's rows (already in order) through the FSM —
+    reference state_machine.py:133-366; ``(:N)`` notes cite its lines.
+    ``ds.cur`` is the open question, flushed on the next anchor."""
+    match = _COMBINED_NOISE.match
+    cover = _COVER.match
+    state = _QBODY
+    cur = None
+    opt = None
+
+    for i in range(len(kinds)):
+        if kinds[i] == "image":
+            if cur is None:
+                continue  # pre-amble orphan image (:184-187)
+            ref = medias[i]
+            if state == _QBODY:
+                cur[3].append(ref)
+            elif state == _OPTION:
+                opt[2].append(ref)
+            elif state == _ANSWER:
+                cur[6].append(ref)
+            else:
+                cur[8].append(ref)
+            pg = pages[i]
+            if pg > cur[10]:
+                cur[10] = pg
+            continue
+
+        line = texts[i]
+        m = match(line)
+        if m is None:
+            if cur is not None and line:
+                if state == _QBODY:
+                    cur[2].append(line)
+                elif state == _OPTION:
+                    opt[1].append(line)
+                elif state == _ANSWER:
+                    cur[5].append(line)
+                else:
+                    cur[7].append(line)
+            continue
+
+        g = m.lastgroup
+        if g == "noise":
+            continue  # always-ignored boilerplate (:200-202)
+        if g == "qnum":
+            rem = line[m.end():].strip()
+            if ":" not in line and not rem:
+                continue  # solo "Question N" artifact (:209-215)
+            if cur is None and cover(line):
+                continue  # cover-page noise pre-first-anchor (:276-280)
+            if cur is not None:
+                ds.flush_question()
+            pg = pages[i]
+            cur = [min(int(m.group("qnum")), A.QNUM_CAP), "mcq",
+                   [], [], [], [], [], [], [], pg, pg]
+            ds.cur = cur
+            opt = None
+            state = _QBODY
+            if rem:
+                cur[2].append(rem)
+        elif cur is None:
+            continue  # everything before the first anchor (:231-234)
+        elif g == "hot":
+            if state == _QBODY:
+                cur[1] = "hotspot"
+            elif state == _OPTION:
+                opt[1].append(line)
+            elif state == _ANSWER:
+                cur[5].append(line)
+            else:
+                cur[7].append(line)
+        elif g == "okey":
+            if state in (_QBODY, _OPTION):
+                opt = [m.group("okey").upper(), [], []]
+                cur[4].append(opt)
+                state = _OPTION
+                rem = line[m.end():].strip()
+                if rem:
+                    opt[1].append(rem)
+            elif state == _ANSWER:  # invalid anchor → plain text (:238)
+                cur[5].append(line)
+            else:
+                cur[7].append(line)
+        elif g == "ans":
+            state = _ANSWER
+            opt = None
+            rem = line[m.end():].strip()
+            if rem:
+                cur[5].append(rem)
+        else:  # exp
+            state = _EXPL
+            opt = None
+            rem = line[m.end():].strip()
+            if rem:
+                cur[7].append(rem)
+
 
 _FLAT_COLUMNS = [
     "doc_id", "seq", "question_number", "section", "kind", "text",
@@ -79,7 +243,7 @@ def _finalize_row(r: tuple) -> tuple | None:
     qtext, qimgs, options = r[4], r[5], r[6]
     ans, aimgs, expl, eimgs = r[7], r[8], r[9], r[10]
     opts = [o for o in options if o["text"].strip() != "" or o["images"]]
-    if expl != "" and is_noise_line(expl.strip()):
+    if expl != "" and A.is_noise_line(expl.strip()):
         expl = ""  # F9
     has_q = qtext.strip() != ""
     has_a = ans.strip() != ""
@@ -265,9 +429,9 @@ def validate_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def _parse_doc(doc_id: str, kinds, texts, refs, pages) -> list[tuple]:
     """One packed document → raw question rows.
 
-    Noise filtering is fused into the classifier (pkernel's
-    _COMBINED_NOISE): one C-level regex pass per line instead of
-    separate noise + anchor passes."""
+    Noise filtering is fused into the classifier (_COMBINED_NOISE):
+    one C-level regex pass per line instead of separate noise + anchor
+    passes."""
     k_l: list[str] = []
     t_l: list[str] = []
     m_l: list[str] = []
@@ -289,7 +453,7 @@ def _parse_doc(doc_id: str, kinds, texts, refs, pages) -> list[tuple]:
                     p_l.append(pg)
     ds = _DocState(doc_id)
     try:
-        _process_rows(ds, k_l, t_l, m_l, p_l, match=_COMBINED_NOISE.match)
+        _process_rows(ds, k_l, t_l, m_l, p_l)
     except Exception:
         ds.failed = True
     return ds.finish()
@@ -365,7 +529,7 @@ def _flatten_rows(raw_rows: list[tuple]) -> list[tuple]:
         for m in r[8]:
             emit("answer", "image", "", m)
         expl = r[9]
-        if expl != "" and is_noise_line(expl.strip()):
+        if expl != "" and A.is_noise_line(expl.strip()):
             expl = ""  # F9 boilerplate scrub
         if expl != "":
             emit("explanation", "text", expl, "")

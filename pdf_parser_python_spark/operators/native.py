@@ -22,7 +22,7 @@ relationally because state only ever *advances* within a question:
 This is the "prove the built-ins could do it" engine: one shuffle
 (hash by doc_id for the windows + the final groupBy reuses the same
 partitioning), whole-stage codegen for classification, interpreted
-HOFs only at assembly. The Arrow kernels (dkernel/pkernel) remain the
+HOFs only at assembly. The Arrow kernels (vkernel/dkernel) remain the
 default because a linear scan in compiled-regex Python beats four
 window passes — but the semantics are identical and tests assert it.
 """

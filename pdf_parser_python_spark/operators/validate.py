@@ -141,11 +141,3 @@ def page_metrics(lines: DataFrame) -> DataFrame:
         F.sum((F.col("kind") == "text").cast("int")).alias("n_text_lines"),
     )
 
-
-def extraction_metrics(raw_questions: DataFrame) -> DataFrame:
-    """North-rule extraction-metric rows per document: questions
-    emitted + parse failures (kernel sentinel rows, kernel.py)."""
-    return raw_questions.groupBy("doc_id").agg(
-        F.sum((~F.col("parse_failed")).cast("long")).alias("questions_emitted"),
-        F.max(F.col("parse_failed").cast("int")).cast("boolean").alias("parse_failed"),
-    )

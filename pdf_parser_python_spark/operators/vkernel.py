@@ -95,7 +95,7 @@ _R_NOISE = f"(?:(?i:{_re2(A.NOISE_CI, False)})|{_re2(A.NOISE_CS, False)})"
 _R_COVER = _re2(A.COVER_NOISE, False)
 
 #: NOTE (measured dead end, do not revisit): folding the whole grammar
-#: into ONE ordered-alternation extract_regex pass (pkernel._COMBINED
+#: into ONE ordered-alternation extract_regex pass (dkernel._COMBINED_NOISE
 #: style) is ~2× SLOWER than the independent match passes above —
 #: capture groups in a large alternation push RE2 off its DFA fast
 #: path into per-line submatch NFA. Independent group-free

@@ -16,19 +16,18 @@ row-exact Python kernel (operators/dkernel.py). Documents above
 ``GIANT_DOC_SPANS`` spans reroute to operators/chunked.py: anchor-aligned
 chunks, one hash exchange on (doc_id, chunk), the same kernel.
 
-Other engines, row-equal by test: ``packed-pandas`` is the same plan
-with the pandas kernel under mapInPandas; ``native`` is the FSM in
-Catalyst; ``partition`` and ``grouped`` explode to lines (``tokenize``:
-noise filtered JVM-side, below the UDF barrier), shuffle by doc_id, run
-the pandas FSM per partition or per group, then finalize and flatten as
-Column expressions.
+The other engines are row-equal by test: ``packed-pandas`` is the same
+plan with the pandas kernel under mapInPandas; ``native`` is the FSM in
+Catalyst over ``tokenize``'s line rows (noise filtered JVM-side), then
+finalize and flatten as Column expressions. Any other engine name
+raises ValueError when the plan is built.
 
 Scale notes (100 TB / 10^12 docs):
 - the packed default needs no shuffle: the input is already one row
   per document, and a pathological document is bounded by the giant-doc
   reroute instead;
-- on the line-grained engines the hash partition by ``doc_id`` is the
-  only shuffle and the skew point (operators/native.py has the
+- on the native engine the hash partition by ``doc_id`` is the only
+  shuffle and the skew point (its ``chunk_size`` option is the
   segment-level alternative).
 """
 
@@ -42,8 +41,6 @@ from ..functions import anchors as A
 from ..operators import finalize as _finalize
 from ..operators import flatten as _flatten
 from ..operators import dkernel
-from ..operators.kernel import segment_kernel
-from ..operators.pkernel import parse_partition
 
 #: Giant-document dispatch threshold (spans per doc). The packed engines
 #: carry one document per Arrow row, so a pathological doc is one task.
@@ -279,24 +276,16 @@ def tokenize(documents: DataFrame) -> DataFrame:
 
 def parse_raw(
     documents: DataFrame,
-    shuffle_partitions: int | None = None,
     engine: str = "packed",
     chunk_size: int | None = None,
 ) -> DataFrame:
     """documents → raw question rows (pre-finalize).
 
-    engine="packed" (default): zero-shuffle — the input is already one
-    row per document, so parse straight off the packed span arrays
-    (operators/dkernel.py). Scan → mapInPandas, single stage.
-
-    engine="partition": line-grained scale path — explode + repartition
-    by doc_id + sortWithinPartitions + mapInPandas over whole Arrow
-    batches, FSM state carried across batches. Use for line-grained
-    sources or documents too large for a single Arrow row.
-
-    engine="grouped": groupBy(doc_id).applyInPandas — one invocation
-    per document; kept as the semantically-obvious reference
-    implementation (tests assert all engines agree).
+    engine="packed" (default): the pandas kernel straight off the
+    packed span arrays (operators/dkernel.py), scan → mapInPandas, no
+    shuffle. engine="native": the Catalyst FSM over ``tokenize``'s line
+    rows; ``chunk_size`` turns on its intra-doc parallel segmentation
+    for giant docs. Any other engine raises ValueError.
     """
     if engine == "packed":
         proj = dkernel.packed_projection(documents)
@@ -304,26 +293,8 @@ def parse_raw(
     if engine == "native":
         from ..operators.native import parse_native
 
-        # chunk_size: intra-doc parallel segmentation for giant docs
         return parse_native(tokenize(documents), chunk_size=chunk_size)
-    lines = tokenize(documents)
-    if engine == "grouped":
-        grouped = (
-            lines.repartition(shuffle_partitions, "doc_id")
-            if shuffle_partitions
-            else lines
-        )
-        return grouped.groupBy("doc_id").applyInPandas(
-            segment_kernel, schema=schema.QUESTION_RAW
-        )
-    parts = (
-        lines.repartition(shuffle_partitions, "doc_id")
-        if shuffle_partitions
-        else lines.repartition("doc_id")
-    )
-    return parts.sortWithinPartitions("doc_id", "offset", "line_no").mapInPandas(
-        parse_partition, schema=schema.QUESTION_RAW
-    )
+    raise ValueError(f"unknown engine {engine!r}")
 
 
 def extract_questions(documents: DataFrame, **kw) -> DataFrame:
@@ -332,14 +303,13 @@ def extract_questions(documents: DataFrame, **kw) -> DataFrame:
     Packed default = the vectorized Arrow kernel (parse + finalize in
     one pass, nested entities assembled arrow-side — operators/
     vkernel.py); engine="packed-pandas" keeps the fused pandas kernel;
-    other engines keep parse → native finalize, and tests assert row
+    engine="native" keeps parse → Column finalize, and tests assert row
     equality between all of them. Documents above ``giant_doc_spans``
-    (default auto-probe; None disables) auto-route to the chunked
-    native engine — no single-task straggler on skewed corpora."""
+    (default auto-probe; None disables) auto-route to the anchor-chunked
+    branch (operators/chunked.py) — no single-task straggler on skewed
+    corpora."""
     engine = kw.get("engine", "packed")
-    if engine in ("packed", "packed-pandas") and not kw.get(
-        "shuffle_partitions"
-    ):
+    if engine in ("packed", "packed-pandas"):
         threshold = _resolve_threshold(documents, kw)
         small, big = (
             (documents, None)
@@ -372,13 +342,10 @@ def extract_validation(documents: DataFrame, **kw) -> DataFrame:
     shuffle, and no question text ever crosses the Arrow boundary —
     where extract_questions → validation_report pays the full FSM parse
     and then aggregates it away (r2 bench: 6.99 s vs 5.69 s for the
-    parse alone at sf0.1). Other engines keep the relational
+    parse alone at sf0.1). engine="native" keeps the relational
     decomposition (operators/validate.py), row-equal by test."""
     engine = kw.get("engine", "packed")
-    if engine in ("packed", "packed-pandas") and not kw.get(
-        "shuffle_partitions"
-    ):
-        from ..operators import dkernel as _dk
+    if engine in ("packed", "packed-pandas"):
         from ..operators.validate import validation_report as _vrep
 
         threshold = _resolve_threshold(documents, kw)
@@ -397,7 +364,7 @@ def extract_validation(documents: DataFrame, **kw) -> DataFrame:
             )
         else:
             out = proj.mapInPandas(
-                _dk.validate_docs, schema=schema.VALIDATION_REPORT
+                dkernel.validate_docs, schema=schema.VALIDATION_REPORT
             )
         if big is not None:
             out = out.unionByName(_vrep(_parse_giant_final(big)))
@@ -414,13 +381,11 @@ def extract_flat_spans(documents: DataFrame, **kw) -> DataFrame:
     (dkernel.parse_docs_flat): scan → one mapInPandas emitting flat
     primitive columns. The Column-API finalize+flatten stage it
     replaces is interpreted HOF expressions costing ~3× the FSM itself;
-    the fused path is row-equal by test. Other engines keep
+    the fused path is row-equal by test. engine="native" keeps
     parse → finalize → flatten (the reference decomposition).
     """
     engine = kw.get("engine", "packed")
-    if engine in ("packed", "packed-pandas") and not kw.get(
-        "shuffle_partitions"
-    ):
+    if engine in ("packed", "packed-pandas"):
         threshold = _resolve_threshold(documents, kw)
         small, big = (
             (documents, None)

@@ -67,11 +67,10 @@ def main() -> None:
     print("3. probes: empty / anchorless / pageless  OK")
 
     # 4. plan checks
-    plan = pipeline.parse_raw(d, engine="grouped")._jdf.queryExecution(
+    plan = pipeline.extract_questions(d)._jdf.queryExecution(
     ).executedPlan().toString()
-    assert plan.count("FlatMapGroupsInPandas") == 1
-    assert "RLIKE" in plan.split("FlatMapGroupsInPandas")[1]
-    print("4. plan: 1 grouped kernel, RLIKE noise filter below it  OK")
+    assert plan.count("MapInArrow") == 1 and "Exchange" not in plan
+    print("4. plan: 1 vectorized kernel, no Exchange  OK")
     assert A.QNUM_CAP == 10**18 - 1
 
     # 5. driver contract smoke

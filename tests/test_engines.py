@@ -1,4 +1,6 @@
-"""All three segmentation engines must agree span-for-span."""
+"""The segmentation engines must agree span-for-span."""
+
+import pytest
 
 from pdf_parser_python_spark import schema
 from pdf_parser_python_spark.operators import finalize
@@ -24,10 +26,8 @@ def test_engines_agree(spark):
     ]
     docs = spark.createDataFrame(corpus, schema=schema.DOCUMENT_SPANS_EXT)
     packed = _flat(spark, docs, "packed")
-    partition = _flat(spark, docs, "partition")
-    grouped = _flat(spark, docs, "grouped")
     native = _flat(spark, docs, "native")
-    assert packed == partition == grouped == native
+    assert packed == native
     assert len(packed) > 200
 
     # the vectorized arrow kernel (default extract_flat_spans path) and
@@ -52,7 +52,7 @@ def test_engines_agree(spark):
     )
     full = sorted(
         tuple(r)
-        for r in pipeline.extract_questions(docs, engine="grouped").select(
+        for r in pipeline.extract_questions(docs, engine="native").select(
             "doc_id", "seq", "question_number", "question_type",
             "question_text", "answer_text", "anomaly_score",
         ).collect()
@@ -88,6 +88,21 @@ def test_engines_agree(spark):
         )
 
     assert entities("packed") == entities("packed-pandas")
+
+
+@pytest.mark.parametrize("engine", ["grouped", "partition", "pandas"])
+@pytest.mark.parametrize(
+    "entry",
+    ["parse_raw", "extract_questions", "extract_flat_spans",
+     "extract_validation"],
+)
+def test_unknown_engine_raises_at_plan_time(spark, entry, engine):
+    """An engine name outside packed / packed-pandas / native is a
+    plan-construction error, never a silent fall-through to some other
+    plan."""
+    docs = spark.createDataFrame([], schema=schema.DOCUMENT_SPANS_EXT)
+    with pytest.raises(ValueError, match="unknown engine"):
+        getattr(pipeline, entry)(docs, engine=engine)
 
 
 def test_py_ws_chars_equals_python_whitespace_everywhere():
@@ -174,7 +189,7 @@ def test_zero_padded_and_overflow_qnum_clamp(spark):
         [("zp", spans)], schema=schema.DOCUMENT_SPANS_EXT
     )
     per_engine = {}
-    for engine in ("packed", "partition", "grouped", "native"):
+    for engine in ("packed", "native"):
         rows = pipeline.parse_raw(docs, engine=engine).collect()
         per_engine[engine] = sorted(
             (r.seq, r.question_number) for r in rows

@@ -6,10 +6,6 @@ minimal line sequence)."""
 
 from hypothesis import given, settings, strategies as st
 
-from pdf_parser_python_spark.operators.kernel import segment_kernel
-from pdf_parser_python_spark.operators.pkernel import parse_partition
-from pdf_parser_python_spark.functions import anchors as A
-
 from .oracle import flatten_doc, run_reference
 
 # building blocks chosen to collide with every anchor/noise pattern
@@ -62,83 +58,6 @@ def _spans(items):
     return out
 
 
-def _kernel_flat(spans):
-    """Run the shared FSM (pkernel path) in-process on one doc."""
-    import pandas as pd
-
-    rows = []
-    for s in spans:
-        if s["kind"] == "image":
-            rows.append(("f", "image", "", s["media_ref"], s["offset"], 0,
-                         s["page"]))
-        else:
-            for ln_no, ln in enumerate(s["text"].split("\n")):
-                t = ln.strip()
-                if not t or A.is_noise_line(t):
-                    continue
-                rows.append(("f", "text", t, "", s["offset"], ln_no,
-                             s["page"]))
-    pdf = pd.DataFrame(rows, columns=[
-        "doc_id", "kind", "text", "media_ref", "offset", "line_no", "page"])
-    out = []
-    for batch in parse_partition(iter([pdf])) if len(pdf) else []:
-        out.append(batch)
-    import pandas as pd2
-    if not out:
-        return []
-    all_rows = pd2.concat(out)
-    qs = []
-    for _, r in all_rows.sort_values("seq").iterrows():
-        if r["parse_failed"]:
-            continue
-        qs.append(_finalize_py(r))
-    return flatten_doc(qs)
-
-
-def _finalize_py(r):
-    """Python replica of the native finalize stage (only for fuzz
-    comparison — production finalize is Column-native)."""
-    import re as _re
-
-    opts = [o for o in r["options"]
-            if o["text"].strip() or o["images"]]
-    expl = r["explanation_text"]
-    if expl and A.is_noise_line(expl.strip()):
-        expl = ""
-    ans = r["answer_text"]
-    is_hot = r["question_type"] == "hotspot"
-    if ans.strip() and not is_hot:
-        up = ans.strip().upper()
-        if "," in up:
-            keys = set()
-            for part in up.split(","):
-                keys.update(_re.findall(r"\b([A-Z])\b", part))
-        else:
-            keys = set(_re.findall(r"[A-Z]", up))
-        valid = {o["key"].upper() for o in opts}
-        final = keys & valid if valid else keys
-        opts = [{**o, "is_correct": o["key"].upper() in final} for o in opts]
-    return {
-        "question_number": r["question_number"],
-        "question_text": r["question_text"],
-        "question_images": r["question_images"],
-        "options": opts,
-        "answer_text": ans,
-        "answer_images": r["answer_images"],
-        "explanation_text": expl,
-        "explanation_images": r["explanation_images"],
-    }
-
-
-@given(st.lists(SPAN, min_size=1, max_size=25))
-@settings(max_examples=300, deadline=None)
-def test_fuzz_kernel_matches_reference(items):
-    spans = _spans(items)
-    expected = flatten_doc(run_reference(spans))
-    got = _kernel_flat(spans)
-    assert got == expected
-
-
 def _arrays(spans):
     kinds = [s["kind"] for s in spans]
     texts = [s["text"] for s in spans]
@@ -181,6 +100,14 @@ def _vkernel_batch(spans):
     )
 
 
+def _arrow_rows(kernel, spans):
+    """Run a vkernel mapInArrow entrypoint over one doc → row tuples."""
+    rows = []
+    for b in kernel(iter([_vkernel_batch(spans)])):
+        rows.extend(zip(*[c.to_pylist() for c in b.columns]))
+    return rows
+
+
 @given(st.lists(SPAN, min_size=1, max_size=25))
 @settings(max_examples=200, deadline=None)
 def test_fuzz_vectorized_kernel_matches_reference(items):
@@ -190,9 +117,7 @@ def test_fuzz_vectorized_kernel_matches_reference(items):
 
     spans = _spans(items)
     expected = flatten_doc(run_reference(spans))
-    rows = []
-    for b in vkernel.parse_docs_flat_arrow(iter([_vkernel_batch(spans)])):
-        rows.extend(zip(*[c.to_pylist() for c in b.columns]))
+    rows = _arrow_rows(vkernel.parse_docs_flat_arrow, spans)
     rows.sort(key=lambda r: (r[1], r[7]))  # (seq, order) = emission order
     got = [(r[2], r[3], r[4], r[5], r[6], r[7]) for r in rows]
     assert got == expected
@@ -243,16 +168,31 @@ def test_fuzz_vectorized_final_matches_reference(items):
 @given(st.lists(SPAN, min_size=1, max_size=25))
 @settings(max_examples=200, deadline=None)
 def test_fuzz_vectorized_validation_matches_pandas(items):
-    """The arrow validation emitter against the (oracled) python
-    _validate_doc twin on the same parse."""
+    """The arrow kernels against their python twins on the same draw —
+    flat spans vs dkernel._flatten_rows, finalized entities vs
+    dkernel._finalize_row, validation vs _validate_doc. No reference
+    checkout needed; SPAN's Unicode words (non-ASCII digits, İ/ı) send
+    some draws through vkernel's fallback to the python FSM."""
     from pdf_parser_python_spark.operators import dkernel, vkernel
 
     spans = _spans(items)
+    raws = dkernel._parse_doc("f", *_arrays(spans))
+    assert _arrow_rows(vkernel.parse_docs_flat_arrow, spans) == (
+        dkernel._flatten_rows(raws)
+    )
     fins = [
-        fin
-        for raw in dkernel._parse_doc("f", *_arrays(spans))
-        if (fin := dkernel._finalize_row(raw)) is not None
+        fin for raw in raws if (fin := dkernel._finalize_row(raw)) is not None
     ]
+    # arrow hands an anomaly's context map back as (key, value) pairs
+    got = [
+        r[:13] + ([
+            {**a, "context": None if a["context"] is None
+             else dict(a["context"])}
+            for a in r[13]
+        ],) + r[14:]
+        for r in _arrow_rows(vkernel.parse_docs_final_arrow, spans)
+    ]
+    assert got == fins
     rep = dkernel._validate_doc(fins)
     exp = [] if rep is None else [
         rep[:10] + (dict(rep[10]), rep[11])

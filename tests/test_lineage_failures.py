@@ -166,3 +166,71 @@ def test_crash_between_data_and_journal_reruns_bucket(spark):
         assert got.select("doc_id", "seq").distinct().count() == n
         spans = job.flat_spans(spark)
         assert spans.count() == pipeline.extract_flat_spans(docs).count()
+
+
+def test_crash_between_questions_and_spans_writes_reruns_bucket(
+    spark, monkeypatch
+):
+    """A bucket that fails after its questions write and before its
+    flat-spans write is journaled failed and stays pending; its
+    half-written questions are not exposed, and the rerun leaves both
+    stores equal to the batch extraction with no duplicate
+    (doc_id, seq). Runs under the default pool."""
+    import threading
+
+    corpus = [
+        (f"qs-{i:03d}", generate_doc_spans(9500 + i, mean_questions=4))
+        for i in range(24)
+    ]
+    docs = spark.createDataFrame(corpus, schema=schema.DOCUMENT_SPANS_EXT)
+    frame = type(docs)
+    real = frame.mapInArrow
+    lock = threading.Lock()
+    blown = []
+
+    def flaky(self, func, *args, **kw):
+        if kw.get("schema", args[0] if args else None) is (
+            schema.FLAT_SPAN_SEQ
+        ):
+            with lock:
+                if not blown:
+                    blown.append(func)
+                    raise RuntimeError("simulated crash before flat spans")
+        return real(self, func, *args, **kw)
+
+    with tempfile.TemporaryDirectory() as td:
+        job = ExtractionJob(td, n_buckets=4)
+        monkeypatch.setattr(frame, "mapInArrow", flaky)
+        first = job.run(spark, docs)
+        monkeypatch.undo()
+
+        failed = [r["partition_id"] for r in job.lineage_rows()
+                  if r["status"] == "failed"]
+        assert len(failed) == 1
+        b = failed[0]
+        assert b not in first["processed"] and first["remaining"] == [b]
+        assert b in job.pending_buckets()
+        assert os.path.isdir(os.path.join(job.questions_dir, f"bucket={b}"))
+        assert not os.path.isdir(os.path.join(job.spans_dir, f"bucket={b}"))
+        staged = spark.read.parquet(
+            os.path.join(td, "input_bucketed", f"bucket={b}"))
+        b_ids = {r.doc_id for r in staged.select("doc_id").collect()}
+        assert b_ids
+        exposed = {r.doc_id for r in
+                   job.questions(spark).select("doc_id").collect()}
+        assert not exposed & b_ids
+
+        second = job.run(spark, docs)
+        assert second["processed"] == [b] and second["remaining"] == []
+
+        def rows(df, cols):
+            row = F.to_json(F.struct(*cols))
+            return sorted(r[0] for r in df.select(row).collect())
+
+        got_q, want_q = job.questions(spark), pipeline.extract_questions(docs)
+        assert rows(got_q, want_q.columns) == rows(want_q, want_q.columns)
+        assert got_q.select("doc_id", "seq").distinct().count() == (
+            got_q.count())
+        got_s = job.flat_spans(spark)
+        want_s = pipeline.extract_flat_spans(docs)
+        assert rows(got_s, want_s.columns) == rows(want_s, want_s.columns)

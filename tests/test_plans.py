@@ -55,14 +55,6 @@ def test_default_dispatch_probe_and_forced_union(spark):
     assert p.count("MapInArrow") == 2
 
 
-def test_partition_engine_single_shuffle_filters_below_barrier(spark):
-    p = _plan(pipeline.parse_raw(_docs(spark), engine="partition"))
-    assert p.count("Exchange") == 1
-    i_py = p.find("MapInPandas")
-    i_rlike = p.find("RLIKE")
-    assert 0 <= i_py < i_rlike  # noise filter runs before Python
-
-
 def test_validation_single_shuffle(spark):
     p = _plan(validation_report(pipeline.extract_questions(
         _docs(spark), giant_doc_spans=None)))

@@ -59,7 +59,7 @@ def test_strip_parity_x1c_separators(spark):
     ]
     d = spark.createDataFrame([("x1c", spans)], schema=schema.DOCUMENT_SPANS_EXT)
     rows = {}
-    for engine in ("packed", "native", "partition", "grouped"):
+    for engine in ("packed", "packed-pandas", "native"):
         r = pipeline.extract_questions(d, engine=engine).first()
         rows[engine] = (r.question_text, r.answer_text,
                         [(o.key, o.text) for o in r.options])
@@ -79,7 +79,7 @@ def test_question_number_int64_and_clamp(spark):
          "offset": 3, "page": 1},
     ]
     d = spark.createDataFrame([("big", spans)], schema=schema.DOCUMENT_SPANS_EXT)
-    for engine in ("packed", "native", "partition", "grouped"):
+    for engine in ("packed", "packed-pandas", "native"):
         got = [r.question_number
                for r in pipeline.extract_questions(d, engine=engine)
                .orderBy("seq").collect()]

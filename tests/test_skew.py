@@ -1,9 +1,10 @@
 """Giant-document skew: one doc with ~100× the median span count must
-parse correctly through every engine and must not dominate wall-clock
-pathologically (the packed kernel streams it inside one Arrow row; the
-partition kernel streams it across Arrow batches)."""
+parse correctly and must not dominate wall-clock pathologically (the
+packed kernel streams it inside one Arrow row)."""
 
 from pdf_parser_python_spark import schema
+from pdf_parser_python_spark.operators import finalize
+from pdf_parser_python_spark.operators.flatten import flat_spans
 from pdf_parser_python_spark.plans import pipeline
 from pdf_parser_python_spark.sources.spans import generate_doc_spans
 
@@ -24,47 +25,19 @@ def test_giant_doc_correct_on_all_engines(spark):
     expected = {
         d: flatten_doc(run_reference(s)) for d, s in corpus
     }
-    for engine in ("packed", "partition"):
-        from pdf_parser_python_spark.operators import finalize
-        from pdf_parser_python_spark.operators.flatten import flat_spans
-
-        rows = flat_spans(
-            finalize.finalize_questions(pipeline.parse_raw(docs, engine=engine))
-        ).collect()
-        by_doc: dict[str, list] = {d: [] for d, _ in corpus}
-        for r in rows:
-            by_doc[r.doc_id].append(r)
-        for d, exp in expected.items():
-            got = [
-                (r.question_number, r.section, r.kind, r.text, r.media_ref,
-                 r.order)
-                for r in sorted(by_doc[d], key=lambda r: (r.seq, r.order))
-            ]
-            assert got == exp, (engine, d)
-
-
-def test_giant_doc_cross_batch_state(spark):
-    """Force tiny Arrow batches so the giant doc spans dozens of
-    batches in the partition kernel — state carry must hold."""
-    spans = generate_doc_spans(9002, mean_questions=6, giant_every=1)
-    assert len(spans) > 2000
-    docs = spark.createDataFrame(
-        [("giant", spans)], schema=schema.DOCUMENT_SPANS_EXT
-    )
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    try:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "97")
-        got = (
-            pipeline.extract_flat_spans(docs.repartition(1), engine="partition")
-            .count()
-        )
-    finally:
-        if old:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-        else:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-    expected = len(flatten_doc(run_reference(spans)))
-    assert got == expected
+    rows = flat_spans(
+        finalize.finalize_questions(pipeline.parse_raw(docs))
+    ).collect()
+    by_doc: dict[str, list] = {d: [] for d, _ in corpus}
+    for r in rows:
+        by_doc[r.doc_id].append(r)
+    for d, exp in expected.items():
+        got = [
+            (r.question_number, r.section, r.kind, r.text, r.media_ref,
+             r.order)
+            for r in sorted(by_doc[d], key=lambda r: (r.seq, r.order))
+        ]
+        assert got == exp, d
 
 
 def test_asof_hot_key_chunked_carry_equals_single_window(spark):

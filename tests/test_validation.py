@@ -42,7 +42,7 @@ def corpus():
 def test_fused_validation_equals_relational(spark):
     """pipeline.extract_validation's packed fast path (report computed
     inside the parse kernel, dkernel.validate_docs) must be row-equal
-    to the relational operator over the grouped engine — every column,
+    to the relational operator over the native engine — every column,
     including gap/duplicate lists, breakdown map, and success_rate's
     HALF_UP rounding."""
     from pdf_parser_python_spark.sources.spans import generate_doc_spans
@@ -54,7 +54,7 @@ def test_fused_validation_equals_relational(spark):
     docs = spark.createDataFrame(corpus, schema=schema.DOCUMENT_SPANS_EXT)
     fused = pipeline.extract_validation(docs)
     rel = validation_report(
-        pipeline.extract_questions(docs, engine="grouped")
+        pipeline.extract_questions(docs, engine="native")
     )
     cols = fused.columns
     a = sorted(repr(r) for r in fused.collect())
