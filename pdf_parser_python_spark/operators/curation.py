@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..zipcache import drop_zip_finders
 from .repetition import line_repetition, ngram_repetition, word_ngrams
 from .textstats import lang_guess, quality_score, token_count
 
@@ -81,6 +82,7 @@ def _gate_metrics_arrow(staged: DataFrame, n: int, line_width: int | None,
     }
 
     def kernel(batches):
+        drop_zip_finders()
         import numpy as np
         import pandas as pd
 

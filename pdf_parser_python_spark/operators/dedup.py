@@ -43,6 +43,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import xx64
+from ..zipcache import drop_zip_finders
 from .textstats import shingles
 
 Hasher = Callable[[Column, int], Column]
@@ -77,10 +78,15 @@ def _reuse_count(df: DataFrame) -> int | None:
     costs a block scan, not a recompute of the signature pipeline.
     Returns None when the cut is disabled (streaming input or
     ``PDFP_DEDUP_REUSE=0``), so size-aware planning stands down rather
-    than paying a full re-evaluation just to learn a row count."""
+    than paying a full re-evaluation just to learn a row count. Also
+    None under ``PDFP_PAIR_BCAST=0``: the count only sizes the
+    :func:`_bcast_small` hint, so with broadcasting off the plan is
+    built without running a job."""
     import os
 
-    if df.isStreaming or os.environ.get("PDFP_DEDUP_REUSE", "1") == "0":
+    if (df.isStreaming
+            or os.environ.get("PDFP_DEDUP_REUSE", "1") == "0"
+            or os.environ.get("PDFP_PAIR_BCAST", "1") == "0"):
         return None
     return df.count()
 
@@ -96,8 +102,12 @@ def _bcast_small(df: DataFrame, est_bytes: int | None) -> DataFrame:
     while the signature/vector table is a few hundred MB.
 
     ``est_bytes=None`` (unknown count) keeps the planner's choice, as
-    does ``PDFP_PAIR_BCAST=0``. ``PDFP_PAIR_BCAST_MB`` (default 512)
-    caps the built size — the guide's "a few hundred MB is usually
+    does ``PDFP_PAIR_BCAST=0``. That switch drops the hints and the
+    ``minhash_lsh_pairs`` count job that sizes them (see
+    :func:`_reuse_count`); ``embedding_near_dups`` still counts its
+    rows, which it needs for the hyperplane count, so its plan build
+    runs a job either way. ``PDFP_PAIR_BCAST_MB`` (default 512) caps
+    the built size — the guide's "a few hundred MB is usually
     fine" zone; a corpus past the cap (any real 100-TB run) falls back
     to the planner's shuffled join automatically, so the knob is
     scale-adaptive, not tuned to local mode."""
@@ -196,6 +206,7 @@ def _minhash_sig_kernel(k: int, shingle_k: int):
     import pyarrow.compute as pc
 
     def fn(batches):
+        drop_zip_finders()
         # uint64 wraparound is the algorithm; numpy warns on scalar
         # overflow (the n=0 constant chain) — silence locally
         with np.errstate(over="ignore"):
@@ -413,6 +424,7 @@ def _simhash_sig_kernel(shingle_k: int = 3):
     import pyarrow.compute as pc
 
     def fn(batches):
+        drop_zip_finders()
         with np.errstate(over="ignore"):
             yield from _fn(batches)
 
@@ -907,6 +919,7 @@ def _simhash_majority_udf():
     null in → null signature out exactly like the native Column)."""
     @F.pandas_udf("long")
     def sig(hashes: pd.Series) -> pd.Series:
+        drop_zip_finders()
         arrs = hashes.to_numpy()
         n = len(arrs)
         # null text → null hash array: propagate a NULL signature to

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import anchors as A
+from ..zipcache import drop_zip_finders
 
 _ANCHOR_ALTERNATION = (
     r"Question\s*:?\s*(?P<qnum>\d+)"
@@ -289,6 +290,7 @@ def _finalize_row(r: tuple) -> tuple | None:
 def parse_docs_final(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas entrypoint: packed documents → FINALIZED question
     entities in one fused pass (schema.QUESTION_FINAL)."""
+    drop_zip_finders()
     yielded = False
     for pdf in batches:
         out: list[tuple] = []
@@ -390,6 +392,7 @@ def validate_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     Replaces extract_questions → validation_report when the consumer
     only wants the report: that pipeline pays the full FSM parse just
     to aggregate it away."""
+    drop_zip_finders()
     yielded = False
     for pdf in batches:
         out: list[tuple] = []
@@ -461,6 +464,7 @@ def _parse_doc(doc_id: str, kinds, texts, refs, pages) -> list[tuple]:
 
 def parse_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas entrypoint over (doc_id, kinds, texts, refs, pages)."""
+    drop_zip_finders()
     yielded = False
     for pdf in batches:
         out: list[tuple] = []
@@ -541,6 +545,7 @@ def _flatten_rows(raw_rows: list[tuple]) -> list[tuple]:
 def parse_docs_flat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas entrypoint: packed documents → canonical flat spans
     in one fused pass (zero shuffle, flat primitive output columns)."""
+    drop_zip_finders()
     yielded = False
     for pdf in batches:
         out: list[tuple] = []

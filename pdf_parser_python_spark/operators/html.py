@@ -58,6 +58,8 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..zipcache import drop_zip_finders
+
 #: strip-first boilerplate: scripts/styles/comments + container chrome.
 RE_STRIP = (
     "(?s)<script[^>]*>.*?</script>|<style[^>]*>.*?</style>"
@@ -215,6 +217,7 @@ def _arrow_spans(html_df: DataFrame) -> DataFrame:
     rx_link = re.compile(RE_LINK)
 
     def gen(batches):
+        drop_zip_finders()
         import numpy as np
 
         for pdf in batches:

@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..zipcache import drop_zip_finders
+
 try:  # pragma: no cover - not present in this container
     import PIL.Image  # noqa: F401
 
@@ -118,6 +120,7 @@ def synthetic_bmp_corpus(spark, n: int, partitions: int = 32) -> DataFrame:
     import numpy as np
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for b in batches:
             ids = b["id"].to_numpy()
             rows = []
@@ -352,6 +355,7 @@ def extract_features(
     fallback = _md5_features if feature_hasher == "md5" else _fake_features
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             out = []
             for ref, payload in zip(pdf["media_ref"], pdf["payload"]):

@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..zipcache import drop_zip_finders
 from .textstats import tokens
 
 
@@ -315,6 +316,7 @@ def repetition_profile_arrow(
     )
 
     def kernel(batches):
+        drop_zip_finders()
         import pandas as pd
 
         for pdf in batches:

@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..zipcache import drop_zip_finders
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -103,6 +105,7 @@ def _lsh_signature_udf(planes: list[list[float]]):
 
     @F.pandas_udf("long")
     def sig(vecs: pd.Series) -> pd.Series:
+        drop_zip_finders()
         M = np.stack(
             [np.asarray(v, dtype=np.float64) for v in vecs.to_numpy()]
         )
@@ -121,6 +124,7 @@ def _cosine_pair_udf():
     :func:`cosine`."""
     @F.pandas_udf("double")
     def cos(va: pd.Series, vb: pd.Series) -> pd.Series:
+        drop_zip_finders()
         A = np.stack([np.asarray(v, dtype=np.float64) for v in va.to_numpy()])
         B = np.stack([np.asarray(v, dtype=np.float64) for v in vb.to_numpy()])
         num = np.einsum("ij,ij->i", A, B)
@@ -139,6 +143,7 @@ def _cosine_query_udf(qvec: list[float]):
 
     @F.pandas_udf("double")
     def cos(vs: pd.Series) -> pd.Series:
+        drop_zip_finders()
         M = np.stack([np.asarray(v, dtype=np.float64) for v in vs.to_numpy()])
         den = np.linalg.norm(M, axis=1) * qn
         num = M @ q
@@ -430,6 +435,7 @@ def _ivf_assign_udf(centroids: list[tuple[int, list[float]]]):
 
     @F.pandas_udf("int")
     def cell(vs: pd.Series) -> pd.Series:
+        drop_zip_finders()
         M = np.stack([np.asarray(v, dtype=np.float64) for v in vs.to_numpy()])
         d2 = (M * M).sum(axis=1)[:, None] - 2.0 * (M @ C.T) + c2[None, :]
         return pd.Series(np.argmin(d2, axis=1).astype(np.int32))

@@ -48,6 +48,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from ..functions import anchors as A
+from ..zipcache import drop_zip_finders
 
 # ── RE2 forms of the shared grammar ──────────────────────────────────────
 # Python \s (unicode) as explicit RE2 class innards: the exact 29-char
@@ -1301,6 +1302,7 @@ def _slices(batch: pa.RecordBatch):
 
 
 def _entry(batches, emit, fallback, schema_):
+    drop_zip_finders()
     yielded = False
     for batch in (s for b in batches for s in _slices(b)):
         doc_ids, state, fb_docs = _core(batch)

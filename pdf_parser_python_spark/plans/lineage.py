@@ -25,7 +25,13 @@ vectorized ``mapInArrow`` pass of the read path's kernel
 (operators/vkernel.py): questions, then flat spans. Parsing twice is
 cheaper than parsing once and staging: the kernel's compute is small
 next to the per-job cost of a staged raw table that a Catalyst
-finalize and a flatten job would each read back.
+finalize and a flatten job would each read back. Part of that per-job
+cost was the Python worker re-reading ``pyspark.zip`` and the Spark
+jar before every task (see ``zipcache.py``); with that gone the
+traced commit p50 on the perfbench corpus fell from 1.70 s to 1.15 s
+(4-vCPU Xeon), while the kernel still parses either output of the
+100-document corpus in 30-40 ms outside Spark, so the commit stays
+two writes.
 
 Storage is a parquet directory layout with Iceberg-shaped semantics
 (no Iceberg runtime jar ships in this sandbox); the lineage contract
@@ -199,7 +205,9 @@ class ExtractionJob:
         Both outputs come from the read path's vectorized kernel, one
         ``mapInArrow`` write job each. A staged parse would run once
         but costs a third job plus two parquet read-backs, and the
-        kernel's compute is small next to that per-job cost. The
+        kernel's compute is small next to that per-job cost, which is
+        still about 0.6 s per job once the workers skip the per-task
+        zip re-read (commit p50 1.15 s for two jobs). The
         parse-failure count rides the questions write: its kernel
         flags the stand-in row of each document whose Python-fallback
         parse failed, the Observation sums the flag, and the rows are

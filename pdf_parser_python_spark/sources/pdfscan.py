@@ -40,6 +40,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from ..zipcache import drop_zip_finders
+
 try:  # pragma: no cover — not in this container
     import fitz  # noqa: F401
 
@@ -211,6 +213,7 @@ def scan_blocks(
     pr = page_range
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         cols = [f.name for f in BLOCK.fields]
         for pdf in batches:
             rows: list[tuple] = []

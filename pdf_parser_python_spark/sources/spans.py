@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schema
+from ..zipcache import drop_zip_finders
 
 
 # ── 1. reference fixture loader ──────────────────────────────────────────
@@ -264,6 +265,7 @@ def synthetic_corpus(spark: SparkSession, n_docs: int,
     mq, ge = mean_questions, giant_every
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for b in batches:
             rows = [
                 (f"syn-{int(i):08d}", generate_doc_spans(int(i), mq, ge))

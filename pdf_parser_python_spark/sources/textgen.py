@@ -32,6 +32,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..zipcache import drop_zip_finders
+
 # ── text corpus layout ──────────────────────────────────────────────────
 MEGA = 100_000          #: mega-cluster size (ids [0, MEGA))
 N_SMALL = 10_000        #: planted 5-member clusters
@@ -101,6 +103,7 @@ def dedup_bench_corpus(spark: SparkSession, n_docs: int,
     )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for b in batches:
             ids = b["id"].to_numpy()
             yield pd.DataFrame({"doc_id": ids, "text": _texts(ids)})
@@ -140,6 +143,7 @@ def dedup_bench_embeddings(spark: SparkSession, n_vecs: int, dim: int = 16,
     )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for b in batches:
             ids = b["id"].to_numpy()
             vecs = _vec_matrix(ids, dim)

@@ -33,6 +33,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
+from ..zipcache import drop_zip_finders
+
 
 def windowed_event_counts(
     events_stream: DataFrame,
@@ -105,6 +107,7 @@ def stateful_doc_assembler(
     "document went quiet")."""
 
     def assemble(key, pdfs, state):
+        drop_zip_finders()
         import json
 
         if state.hasTimedOut:
@@ -210,6 +213,7 @@ def stateful_streaming_dedup(
     )
 
     def first_seen(key, pdfs, state):
+        drop_zip_finders()
         n_new = 0
         mn = None
         for pdf in pdfs:
