@@ -30,6 +30,14 @@ per run and every join side reads the materialized blocks. This is
 within-query reuse of a deterministic intermediate — nothing persists
 across invocations (each call builds a fresh checkpoint; results are
 recomputed from the parquet inputs every run).
+
+Join strategy is Spark's: no operator here hints a broadcast or counts
+rows to size one. Under AQE each join stage re-plans from the runtime
+size of its materialized inputs, so a signature or vector table under
+``spark.sql.adaptive.autoBroadcastJoinThreshold`` is broadcast and a
+larger one stays a shuffled join. Building a pair plan runs no Spark
+job (``embedding_near_dups`` probes the vector width, and counts rows
+only when it must derive ``n_planes``).
 """
 
 from __future__ import annotations
@@ -55,8 +63,9 @@ def _reuse(df: DataFrame) -> DataFrame:
     executor block storage on first use, MEMORY_AND_DISK) instead of
     re-evaluating the whole subtree per side. Lazy: no job runs at plan
     build. Per-DataFrame-instance, so nothing is shared across separate
-    invocations — every run still computes from its inputs. Streaming
-    frames pass through unchanged (checkpointing needs a batch RDD).
+    invocations — every run still computes from its inputs. Every batch
+    frame is cut; streaming frames pass through unchanged
+    (checkpointing needs a batch RDD).
 
     Production note (100 TB): local checkpoints live on executor
     storage and are lost with the executor — the upstream lineage is
@@ -65,60 +74,9 @@ def _reuse(df: DataFrame) -> DataFrame:
     signature store to a table (plans/lineage.py DedupJob does exactly
     that); inside a single query this trade (recompute-on-loss vs
     guaranteed 2-4× recompute every run) is the right default."""
-    import os
-
-    if df.isStreaming or os.environ.get("PDFP_DEDUP_REUSE", "1") == "0":
+    if df.isStreaming:
         return df
     return df.localCheckpoint(eager=False)
-
-
-def _reuse_count(df: DataFrame) -> int | None:
-    """Row count of a :func:`_reuse`-cut frame — the job triggers (or
-    reads) the checkpoint materialization every consumer shares, so it
-    costs a block scan, not a recompute of the signature pipeline.
-    Returns None when the cut is disabled (streaming input or
-    ``PDFP_DEDUP_REUSE=0``), so size-aware planning stands down rather
-    than paying a full re-evaluation just to learn a row count. Also
-    None under ``PDFP_PAIR_BCAST=0``: the count only sizes the
-    :func:`_bcast_small` hint, so with broadcasting off the plan is
-    built without running a job."""
-    import os
-
-    if (df.isStreaming
-            or os.environ.get("PDFP_DEDUP_REUSE", "1") == "0"
-            or os.environ.get("PDFP_PAIR_BCAST", "1") == "0"):
-        return None
-    return df.count()
-
-
-def _bcast_small(df: DataFrame, est_bytes: int | None) -> DataFrame:
-    """Hint ``df`` broadcast when its estimated built size is provably
-    under the cap — guide §3.1's "broadcast the side that fits",
-    decided from an EXACT row count the operator already holds (the
-    planner's own estimates are way off after checkpoints/kernels, so
-    AQE never converts these joins itself). Used on the pair-family
-    re-attachment joins, where the alternative is shuffling the
-    candidate-pair stream (tens of millions of rows) once per join
-    while the signature/vector table is a few hundred MB.
-
-    ``est_bytes=None`` (unknown count) keeps the planner's choice, as
-    does ``PDFP_PAIR_BCAST=0``. That switch drops the hints and the
-    ``minhash_lsh_pairs`` count job that sizes them (see
-    :func:`_reuse_count`); ``embedding_near_dups`` still counts its
-    rows, which it needs for the hyperplane count, so its plan build
-    runs a job either way. ``PDFP_PAIR_BCAST_MB`` (default 512) caps
-    the built size — the guide's "a few hundred MB is usually
-    fine" zone; a corpus past the cap (any real 100-TB run) falls back
-    to the planner's shuffled join automatically, so the knob is
-    scale-adaptive, not tuned to local mode."""
-    import os
-
-    if est_bytes is None or os.environ.get("PDFP_PAIR_BCAST", "1") == "0":
-        return df
-    cap_mb = int(os.environ.get("PDFP_PAIR_BCAST_MB", "512"))
-    if est_bytes <= cap_mb << 20:
-        return F.broadcast(df)
-    return df
 
 
 def _drop_over_cap(df: DataFrame, keys: list[str], max_bucket: int,
@@ -546,6 +504,17 @@ def _simhash_sig_arrow(documents: DataFrame, text_col: str) -> DataFrame:
     return d.mapInArrow(_simhash_sig_kernel(), schema)
 
 
+def _simhash_sig_hof(documents: DataFrame, text_col: str,
+                     hasher: Hasher) -> DataFrame:
+    """(doc_id, sig) from JVM-built shingle-string hashes and the
+    :func:`_simhash_majority_udf` vote — the reference that
+    :func:`_simhash_sig_kernel` reproduces bit-exactly for xx64."""
+    hashes = F.transform(shingles(F.col(text_col)), lambda s: hasher(s, 0))
+    return documents.select(
+        "doc_id", _simhash_majority_udf()(hashes).alias("sig")
+    )
+
+
 def exact_dedup(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """Digest-grouped duplicate clusters; keeper = min doc_id."""
     d = documents.select("doc_id", F.sha2(F.col(text_col), 256).alias("digest"))
@@ -580,29 +549,31 @@ def minhash_signatures(
     over all tokens; null lanes are skipped by both combiners, so the
     construction is well-defined down to empty text.
     """
-    import os
-
     from ..functions.hashing import combiner_for
     from .textstats import tokens
 
-    combine = combiner_for(hasher)
     toks = tokens(F.lower(F.col(text_col)))
     d = documents.select(
         "doc_id", F.transform(toks, lambda t: hasher(t, 0)).alias("th")
     )
     # r8: on the production xx64 path the shingle-combine + K-seed
     # min-fold runs as a vectorized Arrow kernel — bit-exact with the
-    # HOF fold below (see _minhash_sig_kernel), ~K× less hashing work
+    # HOF fold (see _minhash_sig_kernel), ~K× less hashing work
     # because the seed-independent hashLong is computed once per
     # shingle. The md5/generic hashers (the DuckDB-oracled queries)
-    # keep the HOF path untouched. PDFP_MINHASH_KERNEL=0 restores the
-    # HOF fold for A/B and differential testing.
-    if (
-        hasher is xx64
-        and not documents.isStreaming
-        and os.environ.get("PDFP_MINHASH_KERNEL", "1") != "0"
-    ):
+    # and streaming input keep the HOF fold.
+    if hasher is xx64 and not documents.isStreaming:
         return _minhash_sig_arrow(d, k, shingle_k)
+    return _minhash_sig_hof(d, k, shingle_k, combiner_for(hasher))
+
+
+def _minhash_sig_hof(d: DataFrame, k: int, shingle_k: int,
+                     combine) -> DataFrame:
+    """(doc_id, th) → (doc_id, signature) as JVM higher-order functions:
+    ``combine`` chains ``shingle_k`` consecutive token hashes into a
+    distinct base hash per shingle, and signature[s] is the min over
+    the bases of ``combine([base], s)``. The reference that
+    :func:`_minhash_sig_kernel` reproduces bit-exactly for xx64."""
     th = F.col("th")
     n = F.size(th)
     idx = F.sequence(F.lit(0), F.greatest(n - shingle_k, F.lit(0)))
@@ -735,28 +706,17 @@ def minhash_lsh_pairs(
     )
     # NOTE (r8): forcing SHUFFLE_HASH on these join-backs (build side =
     # signature table) was A/B-measured at parity-to-worse vs the
-    # planner's sort-merge (smj best 24.0 s vs shj 24.6 s interleaved),
-    # so the shuffled strategy stays with the planner. The r8 bonus
-    # pass adds the strategy the planner CANNOT pick on its own: when
-    # the signature table provably fits (exact row count off the
-    # checkpoint × K-long row width), broadcast it, so the candidate
-    # pair stream — the big side by orders of magnitude — is never
-    # shuffled for the re-attachment (guide §3.1).
-    n_docs = _reuse_count(sigs)
-    sig_bytes = None if n_docs is None else n_docs * (56 + 8 * k)
-    sa = _bcast_small(
-        sigs.select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("signature").alias("sig_a"),
-        ),
-        sig_bytes,
+    # planner's sort-merge (smj best 24.0 s vs shj 24.6 s interleaved).
+    # The strategy is left to AQE: it re-plans each join from the
+    # checkpointed signature table's runtime size, so a table under
+    # the adaptive broadcast threshold is broadcast and the candidate
+    # pair stream is not shuffled for the re-attachment; a larger one
+    # keeps the shuffled join.
+    sa = sigs.select(
+        F.col("doc_id").alias("doc_a"), F.col("signature").alias("sig_a")
     )
-    sb = _bcast_small(
-        sigs.select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("signature").alias("sig_b"),
-        ),
-        sig_bytes,
+    sb = sigs.select(
+        F.col("doc_id").alias("doc_b"), F.col("signature").alias("sig_b")
     )
     sim = (
         F.size(
@@ -1032,25 +992,14 @@ def simhash_near_dups(
     magnitude faster at corpus scale. The native path stays the default
     because it is the zero-Python, DuckDB-oracled form."""
     if vectorized:
-        import os
-
-        if (
-            hasher is xx64
-            and not documents.isStreaming
-            and os.environ.get("PDFP_SIMHASH_KERNEL", "1") != "0"
-        ):
+        if hasher is xx64 and not documents.isStreaming:
             # r8: fused tokens→signature Arrow kernel — no JVM shingle
             # strings, one Python crossing (see _simhash_sig_kernel);
             # bit-identical signatures, differential-tested. md5 (the
             # oracled queries) keeps the HOF-hash + majority-UDF path.
             d = _simhash_sig_arrow(documents, text_col)
         else:
-            hashes = F.transform(
-                shingles(F.col(text_col)), lambda s: hasher(s, 0)
-            )
-            d = documents.select(
-                "doc_id", _simhash_majority_udf()(hashes).alias("sig")
-            )
+            d = _simhash_sig_hof(documents, text_col, hasher)
     else:
         d = documents.select(
             "doc_id", simhash(F.col(text_col), hasher=hasher).alias("sig")
@@ -1194,9 +1143,8 @@ def embedding_near_dups(
     )
 
     dim = int(embeddings.select(F.size(vec_col).alias("d")).first()["d"])
-    n_rows = embeddings.count()
     if n_planes is None:
-        n_planes = near_dup_planes_for(n_rows)
+        n_planes = near_dup_planes_for(embeddings.count())
     planes = hyperplanes(dim, n_planes)
     sig_expr = (
         _lsh_signature_udf(planes)(F.col(vec_col))
@@ -1230,15 +1178,12 @@ def embedding_near_dups(
     # self-join and pair dedup ship only (vid, bucket/sig) — the dim-
     # wide vectors re-attach to deduplicated pairs afterwards
     exploded = sigs.select("vid", F.explode(probes).alias("bucket"))
-    # r8 bonus pass (guide §3.1): the build side of the bucket join is
-    # the slim (vid, sig) table — 16 payload bytes/row, size known
-    # EXACTLY from the count above — while the probe side is the
-    # (n_planes+1)-way explode. Broadcasting the slim side when it
-    # fits keeps the exploded probe stream map-side (no exchange, no
-    # sort of n·(P+1) rows); past the cap the planner's shuffled join
-    # returns untouched.
-    b_sigs = _bcast_small(sigs.select("vid", "sig"), n_rows * 48)
-    a, b = exploded.alias("a"), b_sigs.alias("b")
+    # build side of the bucket join: the slim (vid, sig) table, 16
+    # payload bytes/row, against the (n_planes+1)-way explode. AQE
+    # broadcasts it from its runtime size when it fits, keeping the
+    # exploded probe stream map-side (no exchange, no sort of n·(P+1)
+    # rows); past the threshold the join stays shuffled.
+    a, b = exploded.alias("a"), sigs.alias("b")
     pairs = (
         a.join(b, (F.col("a.bucket") == F.col("b.sig"))
                & (F.col("a.vid") < F.col("b.vid")))
@@ -1255,44 +1200,26 @@ def embedding_near_dups(
     # bucket, and vec_a < vec_b excludes the mirrored orientation.
     # The dropDuplicates this replaces was a full exchange + hash
     # aggregate over every candidate pair (72.5M rows at 10⁶ vectors)
-    # for zero removed rows. PDFP_EMB_PAIR_DEDUP=1 restores it (only
-    # needed if an input ever violates the unique-id contract).
-    import os as _os
-
-    if _os.environ.get("PDFP_EMB_PAIR_DEDUP", "0") == "1":
-        pairs = pairs.dropDuplicates(["vec_a", "vec_b"])
+    # for zero removed rows.
     # NOTE (r8): a task-side vector-gather rerank (scratch parquet +
     # searchsorted inside the cosine kernel, guide §8) was built and
     # A/B-measured here against the join-back shape: values identical,
     # walls parity-to-worse (gather 35.4 s best vs join 24.9 s best at
     # 10⁶ vectors / 72.5M candidates) — AQE's handling of the dim-wide
     # joins is already competitive on this data, so the simpler join
-    # shape stays.
-    # r8 bonus pass (guide §3.1): the re-attachment sides are the
-    # whole embedding table projected to (id, vec) — dim·8 bytes/row,
-    # size known exactly — while the candidate pair stream is tens of
-    # millions of rows; broadcasting the vectors when they fit means
-    # the pair stream flows map-side through BOTH attachments instead
-    # of being exchanged once per join. Past the cap (any real corpus)
-    # the planner's shuffled joins return untouched.
-    vec_bytes = n_rows * (dim * 8 + 56)
-    cand = (
-        pairs.join(
-            _bcast_small(
-                embeddings.select(F.col(id_col).alias("vec_a"),
-                                  F.col(vec_col).alias("va")),
-                vec_bytes,
-            ),
-            "vec_a",
-        )
-        .join(
-            _bcast_small(
-                embeddings.select(F.col(id_col).alias("vec_b"),
-                                  F.col(vec_col).alias("vb")),
-                vec_bytes,
-            ),
-            "vec_b",
-        )
+    # shape stays. The re-attachment sides are the embedding table
+    # projected to (id, vec); AQE broadcasts them from their runtime
+    # size when they fit, so the candidate pair stream flows map-side
+    # through both attachments, and shuffles both joins past the
+    # threshold.
+    cand = pairs.join(
+        embeddings.select(F.col(id_col).alias("vec_a"),
+                          F.col(vec_col).alias("va")),
+        "vec_a",
+    ).join(
+        embeddings.select(F.col(id_col).alias("vec_b"),
+                          F.col(vec_col).alias("vb")),
+        "vec_b",
     )
     # the threshold filter references a UDF-derived column; Catalyst
     # pushes the filter below the projection and EVALUATES THE UDF

@@ -61,17 +61,17 @@ from ..operators import dkernel, vkernel
 #: job with tasks of the next). Per-bucket commit atomicity is
 #: unchanged: each bucket still writes its data directories first and
 #: appends its lineage row after (under a lock), so kill/resume
-#: semantics are identical. Override with $PDFP_LINEAGE_POOL (set 1 to
-#: restore the serial loop); production guidance: 2-4 on a busy
-#: shared cluster, more only when buckets are small relative to it.
-LINEAGE_POOL = int(os.environ.get("PDFP_LINEAGE_POOL", "8"))
+#: semantics are identical. A fixed width, not a setting: the pool
+#: only bounds how many small jobs the driver submits at once, and
+#: Spark's scheduler shares the executors among them.
+LINEAGE_POOL = 8
 
 
 def _pooled(fn, units: list):
     """Run ``fn`` over ``units`` with up to LINEAGE_POOL driver
     threads; returns the non-None results in submission order (map
     preserves order, so resume bookkeeping is deterministic)."""
-    if LINEAGE_POOL <= 1 or len(units) <= 1:
+    if len(units) <= 1:
         return [r for u in units if (r := fn(u)) is not None]
     from concurrent.futures import ThreadPoolExecutor
 
@@ -487,15 +487,6 @@ class DedupJob(ExtractionJob):
     def done_bands(self) -> set[int]:
         return set(self._latest_done("band"))
 
-    def _committed_sigs(self) -> int:
-        """Rows in the committed signature store, from the journal:
-        one count per bucket (its latest done row), so a bucket
-        re-committed under a retained journal is not counted twice."""
-        return sum(
-            r.get("rows_emitted", 0)
-            for r in self._latest_done("sig").values()
-        )
-
     def pending_bands(self) -> list[int]:
         done = self.done_bands()
         return [b for b in range(self.bands) if b not in done]
@@ -598,20 +589,12 @@ class DedupJob(ExtractionJob):
             )
             .dropDuplicates(["doc_a", "doc_b"])
         )
-        # r8 bonus pass: same size-aware broadcast as
-        # minhash_lsh_pairs' join-backs (guide §3.1) — the committed
-        # signature store's EXACT row count is already in the journal
-        # (phase-1 rows_emitted), so the decision costs nothing; past
-        # the cap the planner's shuffled join returns untouched.
-        from ..operators.dedup import _bcast_small
-
-        sig_bytes = self._committed_sigs() * (56 + 8 * self.k)
-        sa = _bcast_small(
-            sigs.select(F.col("doc_id").alias("doc_a"),
-                        F.col("signature").alias("sig_a")), sig_bytes)
-        sb = _bcast_small(
-            sigs.select(F.col("doc_id").alias("doc_b"),
-                        F.col("signature").alias("sig_b")), sig_bytes)
+        # join strategy is AQE's, from the store's runtime size (as in
+        # minhash_lsh_pairs)
+        sa = sigs.select(F.col("doc_id").alias("doc_a"),
+                         F.col("signature").alias("sig_a"))
+        sb = sigs.select(F.col("doc_id").alias("doc_b"),
+                         F.col("signature").alias("sig_b"))
         sim = (
             F.size(
                 F.filter(

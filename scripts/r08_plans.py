@@ -93,31 +93,26 @@ def main() -> None:
     # the signature STAGE plan (the pairs/clusters plans root at the
     # localCheckpoint, so the signature pipeline — where the r8 Arrow
     # kernel vs HOF fold difference lives — is invisible there);
-    # "before" captures the HOF fold via PDFP_MINHASH_KERNEL=0
+    # "before" captures the HOF fold: the kernel entry is swapped for
+    # dedup._minhash_sig_hof
     def bench_minhash_sig():
+        from pdf_parser_python_spark.functions.hashing import xx64_combine
         from pdf_parser_python_spark.operators import dedup
 
         if TAG == "before":
-            os.environ["PDFP_MINHASH_KERNEL"] = "0"
-        else:
-            os.environ.pop("PDFP_MINHASH_KERNEL", None)
+            dedup._minhash_sig_arrow = (
+                lambda d, k, shingle_k:
+                dedup._minhash_sig_hof(d, k, shingle_k, xx64_combine))
         docs = spark.read.parquet("/tmp/bench_dedup_docs_1000000.parquet")
         return dedup.minhash_signatures(docs)
 
     def bench_simhash_sig():
-        from pyspark.sql import functions as F
-
+        from pdf_parser_python_spark.functions.hashing import xx64
         from pdf_parser_python_spark.operators import dedup
 
         docs = spark.read.parquet("/tmp/bench_dedup_docs_1000000.parquet")
         if TAG == "before":
-            hashes = F.transform(
-                dedup.shingles(F.col("text")),
-                lambda s: F.xxhash64(s, F.lit(0)),
-            )
-            return docs.select(
-                "doc_id", dedup._simhash_majority_udf()(hashes).alias("sig")
-            )
+            return dedup._simhash_sig_hof(docs, "text", xx64)
         return dedup._simhash_sig_arrow(docs, "text")
 
     targets["bench_minhash_sig"] = bench_minhash_sig

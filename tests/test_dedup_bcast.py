@@ -1,30 +1,29 @@
-"""Round-8 bonus pass: size-aware broadcast of the pair-family
-re-attachment joins (guide §3.1). The candidate-pair stream is the big
-side by orders of magnitude, while the signature/vector table's size
-is known EXACTLY (checkpoint row count × fixed row width) — so when it
-fits under PDFP_PAIR_BCAST_MB the operators hint it broadcast and the
-pair stream is never shuffled for the re-attachment. These tests lock
-(1) row-identical results with the hint on and off, (2) the broadcast
-actually engaging on a small corpus, (3) the off-switch restoring
-the planner's choice, and (4) no plan-time job with the switch off.
-AQE may turn a small join into a broadcast on its own, so the hint
-itself is checked in the analyzed plan: a ``ResolvedHint`` directly
-over the side the operator sized."""
+"""The pair-family re-attachment joins carry no broadcast hint: AQE picks
+broadcast or shuffle from the runtime size of each join's inputs. These
+tests lock (1) no ``ResolvedHint (strategy=broadcast)`` in any
+operator's analyzed plan, (2) no Spark job while a pair plan is built,
+(3) AQE broadcasting the signature join-backs of a small corpus by
+itself (the final adaptive plan has no ``SortMergeJoin``), and (4) rows
+equal to the same query with both broadcast thresholds at -1, which
+forces every join to shuffle."""
+
+import tempfile
 
 import pytest
-from pyspark.sql import functions as F
+
+_THRESHOLDS = ("spark.sql.autoBroadcastJoinThreshold",
+               "spark.sql.adaptive.autoBroadcastJoinThreshold")
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+def _hinted(df) -> bool:
+    plan = df._jdf.queryExecution().analyzed().toString()
+    return "ResolvedHint (strategy=broadcast)" in plan
 
 
-def _hinted(df) -> list[str]:
-    """The child line under each broadcast ``ResolvedHint`` of the
-    analyzed plan."""
-    lines = df._jdf.queryExecution().analyzed().toString().splitlines()
-    return [lines[i + 1] for i, ln in enumerate(lines)
-            if "ResolvedHint (strategy=broadcast)" in ln]
+def _final_plan(df) -> str:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    return plan
 
 
 @pytest.fixture()
@@ -45,79 +44,96 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_minhash_pairs_bcast_rows_equal_and_bhj(spark, docs, monkeypatch):
+def _rows_shuffled(spark, build):
+    """Rows and final plan of ``build()`` with broadcast joins off."""
+    prev = {k: spark.conf.get(k, None) for k in _THRESHOLDS}
+    try:
+        for k in _THRESHOLDS:
+            spark.conf.set(k, "-1")
+        df = build()
+        return _rows(df), _final_plan(df)
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_minhash_pairs_bcast_rows_equal_and_bhj(spark, docs):
     from pdf_parser_python_spark.operators import dedup
 
-    monkeypatch.setenv("PDFP_PAIR_BCAST", "0")
-    old_df = dedup.minhash_lsh_pairs(docs)
-    old = _rows(old_df)
-    monkeypatch.delenv("PDFP_PAIR_BCAST")
-    new_df = dedup.minhash_lsh_pairs(docs)
-    assert _rows(new_df) == old and len(old) > 0
-    # the two signature join-backs are broadcast on a corpus this size
-    assert "BroadcastHashJoin" in _plan(new_df)
-    hinted = _hinted(new_df)
-    assert len(hinted) == 2
-    assert any("AS sig_a" in h for h in hinted)
-    assert any("AS sig_b" in h for h in hinted)
-    assert _hinted(old_df) == []
+    df = dedup.minhash_lsh_pairs(docs)
+    assert not _hinted(df)
+    got = _rows(df)
+    assert len(got) > 0
+    # AQE converts every join of a corpus this size on its own
+    plan = _final_plan(df)
+    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
+    want, shuffled = _rows_shuffled(
+        spark, lambda: dedup.minhash_lsh_pairs(docs))
+    assert "SortMergeJoin" in shuffled and "BroadcastHashJoin" not in shuffled
+    assert got == want
 
 
-def test_embedding_bcast_rows_equal_both_engines(spark, emb, monkeypatch):
+def test_embedding_bcast_rows_equal_both_engines(spark, emb):
     from pdf_parser_python_spark.operators import dedup
 
     for vec in (False, True):
-        monkeypatch.setenv("PDFP_PAIR_BCAST", "0")
-        old = _rows(dedup.embedding_near_dups(
-            emb, threshold=0.99, vectorized=vec))
-        monkeypatch.delenv("PDFP_PAIR_BCAST")
-        new_df = dedup.embedding_near_dups(
-            emb, threshold=0.99, vectorized=vec)
-        assert _rows(new_df) == old and len(old) > 0
-        assert "BroadcastHashJoin" in _plan(new_df)
-        # slim (vid, sig) bucket side plus both vector re-attachments
-        hinted = _hinted(new_df)
-        assert len(hinted) == 3
-        assert any("Project [vid#" in h and "sig#" in h for h in hinted)
-        assert any("AS va#" in h for h in hinted)
-        assert any("AS vb#" in h for h in hinted)
-        monkeypatch.setenv("PDFP_PAIR_BCAST", "0")
-        assert _hinted(dedup.embedding_near_dups(
-            emb, threshold=0.99, vectorized=vec)) == []
-        monkeypatch.delenv("PDFP_PAIR_BCAST")
+        def build():
+            return dedup.embedding_near_dups(
+                emb, threshold=0.99, vectorized=vec)
+
+        df = build()
+        assert not _hinted(df)
+        got = _rows(df)
+        assert len(got) > 0
+        want, shuffled = _rows_shuffled(spark, build)
+        assert "BroadcastHashJoin" not in shuffled
+        assert got == want
 
 
-def test_bcast_cap_and_off_switch_fall_back(spark, docs, monkeypatch):
-    from pdf_parser_python_spark.operators import dedup
+def test_dedup_job_band_write_has_no_hint(spark, docs, monkeypatch):
+    """The band pass builds and writes its plan in one call, so the
+    test reads the analyzed plan of the frame handed to ``observe``."""
+    from pdf_parser_python_spark.plans.lineage import DedupJob
 
-    # over-cap estimate: the hint must not fire (planner's choice);
-    # AQE may still broadcast tiny sides at runtime, so assert on the
-    # operator's own helper rather than the whole executed plan
-    monkeypatch.setenv("PDFP_PAIR_BCAST_MB", "0")
-    d = dedup._bcast_small(docs, est_bytes=1)
-    assert d is docs
-    monkeypatch.delenv("PDFP_PAIR_BCAST_MB")
-    monkeypatch.setenv("PDFP_PAIR_BCAST", "0")
-    assert dedup._bcast_small(docs, est_bytes=1) is docs
-    monkeypatch.delenv("PDFP_PAIR_BCAST")
-    # unknown size (reuse cut disabled) also stands down
-    assert dedup._bcast_small(docs, est_bytes=None) is docs
-    monkeypatch.setenv("PDFP_DEDUP_REUSE", "0")
-    from pdf_parser_python_spark.operators.dedup import _reuse_count
+    seen = []
+    cls = type(docs)
+    observe = cls.observe
 
-    assert _reuse_count(docs) is None
+    def spy(self, *args, **kw):
+        seen.append(_hinted(self))
+        return observe(self, *args, **kw)
+
+    with tempfile.TemporaryDirectory() as td:
+        job = DedupJob(td, n_buckets=2, bands=2, k=8)
+        job.run(spark, docs.limit(200), max_bands=0)
+        monkeypatch.setattr(cls, "observe", spy)
+        out = job.run(spark, docs.limit(200))
+    assert out["bands_processed"] == [0, 1]
+    assert seen == [False, False]
 
 
-def test_minhash_pairs_bcast_off_builds_plan_without_jobs(
-        spark, docs, monkeypatch):
-    """With broadcasting off the signature count only fed the hint, so
-    building the plan must not run it (or any other job)."""
+def test_minhash_pairs_builds_plan_without_jobs(spark, docs):
     from pdf_parser_python_spark.operators import dedup
 
     tracker = spark.sparkContext.statusTracker()
-    monkeypatch.setenv("PDFP_PAIR_BCAST", "0")
     before = set(tracker.getJobIdsForGroup())
-    off_df = dedup.minhash_lsh_pairs(docs)
+    df = dedup.minhash_lsh_pairs(docs)
     assert set(tracker.getJobIdsForGroup()) - before == set()
-    monkeypatch.delenv("PDFP_PAIR_BCAST")
-    assert _rows(off_df) == _rows(dedup.minhash_lsh_pairs(docs))
+    assert len(_rows(df)) > 0
+
+
+def test_embedding_explicit_planes_skips_count(spark, emb):
+    """With ``n_planes`` given, the plan build runs only the vector
+    width probe; the row count is taken only to derive ``n_planes``."""
+    from pdf_parser_python_spark.operators import dedup
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    dedup.embedding_near_dups(emb, threshold=0.99, n_planes=12)
+    assert len(set(tracker.getJobIdsForGroup()) - before) == 1
+    before = set(tracker.getJobIdsForGroup())
+    dedup.embedding_near_dups(emb, threshold=0.99)
+    assert len(set(tracker.getJobIdsForGroup()) - before) > 1

@@ -1,26 +1,38 @@
 """Round 8: the vectorized minhash and simhash signature kernels must
 be BIT-EXACT with the JVM paths they replace (operators/dedup.py
-`_minhash_sig_kernel` vs the `xxhash64` HOF fold behind
-PDFP_MINHASH_KERNEL=0; `_simhash_sig_kernel` vs the shingle-string
-HOF hash + `_simhash_majority_udf` behind PDFP_SIMHASH_KERNEL=0) —
-the xx64 signatures feed the bench family's pair counts and planted
-recall, so any divergence would silently change results."""
-
-import os
+`_minhash_sig_kernel` vs the `xxhash64` HOF fold in `_minhash_sig_hof`;
+`_simhash_sig_kernel` vs the shingle-string HOF hash +
+`_simhash_majority_udf` in `_simhash_sig_hof`) — the xx64 signatures
+feed the bench family's pair counts and planted recall, so any
+divergence would silently change results. The HOF side runs the same
+public operator with its kernel entry swapped for the HOF function."""
 
 import pytest
 from pyspark.sql import functions as F
 
+from pdf_parser_python_spark.functions.hashing import xx64, xx64_combine
 from pdf_parser_python_spark.operators import dedup
 
 
-def _sigs(df, flag, **kw):
-    os.environ["PDFP_MINHASH_KERNEL"] = flag
-    try:
+def _minhash_hof(d, k, shingle_k):
+    return dedup._minhash_sig_hof(d, k, shingle_k, xx64_combine)
+
+
+def _simhash_hof(documents, text_col):
+    return dedup._simhash_sig_hof(documents, text_col, xx64)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+def _sigs(df, hof, **kw):
+    with pytest.MonkeyPatch.context() as mp:
+        if hof:
+            mp.setattr(dedup, "_minhash_sig_arrow", _minhash_hof)
         out = dedup.minhash_signatures(df, **kw)
+        assert ("MapInArrow" in _plan(out)) != hof
         return {r["doc_id"]: list(r["signature"]) for r in out.collect()}
-    finally:
-        os.environ.pop("PDFP_MINHASH_KERNEL", None)
 
 
 TRICKY = [
@@ -38,8 +50,8 @@ TRICKY = [
 
 def test_kernel_bit_exact_vs_hof(spark):
     df = spark.createDataFrame(TRICKY, "doc_id long, text string")
-    old = _sigs(df, "0")
-    new = _sigs(df, "1")
+    old = _sigs(df, True)
+    new = _sigs(df, False)
     assert old == new
 
 
@@ -47,16 +59,16 @@ def test_kernel_bit_exact_on_generated_corpus(spark):
     from pdf_parser_python_spark.sources import textgen
 
     docs = textgen.dedup_bench_corpus(spark, 2000)
-    old = _sigs(docs, "0")
-    new = _sigs(docs, "1")
+    old = _sigs(docs, True)
+    new = _sigs(docs, False)
     assert old == new
 
 
 @pytest.mark.parametrize("k,shingle_k", [(8, 2), (16, 5)])
 def test_kernel_bit_exact_nondefault_params(spark, k, shingle_k):
     df = spark.createDataFrame(TRICKY, "doc_id long, text string")
-    old = _sigs(df, "0", k=k, shingle_k=shingle_k)
-    new = _sigs(df, "1", k=k, shingle_k=shingle_k)
+    old = _sigs(df, True, k=k, shingle_k=shingle_k)
+    new = _sigs(df, False, k=k, shingle_k=shingle_k)
     assert old == new
 
 
@@ -79,12 +91,10 @@ def test_xx64_pairs_identical_across_paths(spark):
          for i in range(200)],
         "doc_id long, text string",
     ).withColumn("text", F.concat("text", F.lit(" tail")))
-    os.environ["PDFP_MINHASH_KERNEL"] = "0"
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, "_minhash_sig_arrow", _minhash_hof)
         old = {(r["doc_a"], r["doc_b"]) for r in
                dedup.minhash_lsh_pairs(docs).select("doc_a", "doc_b").collect()}
-    finally:
-        os.environ.pop("PDFP_MINHASH_KERNEL", None)
     new = {(r["doc_a"], r["doc_b"]) for r in
            dedup.minhash_lsh_pairs(docs).select("doc_a", "doc_b").collect()}
     assert old == new and len(new) > 0
@@ -108,35 +118,24 @@ SIM_ROWS = (
 )
 
 
-def _simhash_sigs(spark, df, flag):
-    from pyspark.sql import functions as F
-
-    os.environ["PDFP_SIMHASH_KERNEL"] = flag
-    try:
-        if flag == "0":
-            hashes = F.transform(
-                dedup.shingles(F.col("text")),
-                lambda s: F.xxhash64(s, F.lit(0)),
-            )
-            out = df.select(
-                "doc_id", dedup._simhash_majority_udf()(hashes).alias("sig"))
-        else:
-            out = dedup._simhash_sig_arrow(df, "text")
-        return {r["doc_id"]: r["sig"] for r in out.collect()}
-    finally:
-        os.environ.pop("PDFP_SIMHASH_KERNEL", None)
+def _simhash_sigs(df, hof):
+    if hof:
+        out = dedup._simhash_sig_hof(df, "text", xx64)
+    else:
+        out = dedup._simhash_sig_arrow(df, "text")
+    return {r["doc_id"]: r["sig"] for r in out.collect()}
 
 
 def test_simhash_kernel_bit_exact_all_length_classes(spark):
     df = spark.createDataFrame(SIM_ROWS, "doc_id long, text string")
-    assert _simhash_sigs(spark, df, "0") == _simhash_sigs(spark, df, "1")
+    assert _simhash_sigs(df, True) == _simhash_sigs(df, False)
 
 
 def test_simhash_kernel_bit_exact_on_generated_corpus(spark):
     from pdf_parser_python_spark.sources import textgen
 
     docs = textgen.dedup_bench_corpus(spark, 2000)
-    assert _simhash_sigs(spark, docs, "0") == _simhash_sigs(spark, docs, "1")
+    assert _simhash_sigs(docs, True) == _simhash_sigs(docs, False)
 
 
 def test_simhash_near_dups_identical_across_paths(spark):
@@ -147,12 +146,10 @@ def test_simhash_near_dups_identical_across_paths(spark):
          for i in range(120)],
         "doc_id long, text string",
     )
-    os.environ["PDFP_SIMHASH_KERNEL"] = "0"
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, "_simhash_sig_arrow", _simhash_hof)
         old = {(r["doc_a"], r["doc_b"], r["hamming"]) for r in
                dedup.simhash_near_dups(docs, vectorized=True).collect()}
-    finally:
-        os.environ.pop("PDFP_SIMHASH_KERNEL", None)
     new = {(r["doc_a"], r["doc_b"], r["hamming"]) for r in
            dedup.simhash_near_dups(docs, vectorized=True).collect()}
     assert old == new and len(new) > 0

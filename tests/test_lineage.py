@@ -125,9 +125,10 @@ def test_committed_outputs_equal_batch_extraction(spark, pageless):
         assert all(r["parse_failures"] == 0 for r in lin)
 
 
-def test_dedup_signature_count_takes_latest_done_row():
+def test_dedup_done_sets_take_latest_done_row():
     """A bucket re-committed under a retained journal has two done
-    rows; the committed signature count takes only the latest."""
+    rows, and a failed row followed by a done row counts as done; the
+    done sets hold each bucket and band once."""
     from pdf_parser_python_spark.plans.lineage import DedupJob
 
     with tempfile.TemporaryDirectory() as td:
@@ -141,7 +142,6 @@ def test_dedup_signature_count_takes_latest_done_row():
         ]:
             job._append_lineage(job._row(pid, phase, status,
                                          rows_emitted=n))
-        assert job._committed_sigs() == 12 + 5
         assert job.done_buckets() == {0, 1}
         assert job.done_bands() == {0}
 

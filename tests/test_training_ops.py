@@ -155,13 +155,12 @@ def test_embedding_near_dups(spark):
     assert not any(a >= 50 and b >= 50 for a, b in pairs)
 
 
-def test_embedding_pair_stream_unique_without_dedup(spark, monkeypatch):
+def test_embedding_pair_stream_unique_without_dedup(spark):
     """r8: the candidate self-join meets each pair in at most one bucket
     (probes = sig + distinct 1-bit flips vs a single sig on the build
     side), so the final-pair dropDuplicates was removed. Assert the
-    default pair stream is duplicate-free — including hamming-0 pairs
-    (identical clones) and hamming-1 neighbors — and identical to the
-    restored-dedup path (PDFP_EMB_PAIR_DEDUP=1)."""
+    pair stream is duplicate-free — including hamming-0 pairs
+    (identical clones) and hamming-1 neighbors."""
     import random
 
     rng = random.Random(7)
@@ -175,17 +174,11 @@ def test_embedding_pair_stream_unique_without_dedup(spark, monkeypatch):
     )
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
-    def run():
-        out = dedup.embedding_near_dups(emb, threshold=0.97, n_planes=10)
-        return sorted((r.vec_a, r.vec_b, r.cosine) for r in out.collect())
-
-    monkeypatch.delenv("PDFP_EMB_PAIR_DEDUP", raising=False)
-    new = run()
+    out = dedup.embedding_near_dups(emb, threshold=0.97, n_planes=10)
+    new = sorted((r.vec_a, r.vec_b, r.cosine) for r in out.collect())
     keys = [(a, b) for a, b, _ in new]
     assert len(keys) == len(set(keys)), "duplicate candidate pair leaked"
     assert (1, 2, 1.0) in new and (1, 3, 1.0) in new and (2, 3, 1.0) in new
-    monkeypatch.setenv("PDFP_EMB_PAIR_DEDUP", "1")
-    assert run() == new
 
 
 # ── vectorized (Arrow/numpy) twins vs native, + cluster assignment ─────
