@@ -15,13 +15,21 @@ documents whose independent parses equal the whole-doc parse — the
 only cross-chunk state is the ``seq`` counter, restored afterwards by
 a per-chunk offset (window over #chunks rows, not spans).
 
-Scale shape: one explode, flag evaluation distributed after a round-
-robin repartition, chunk assignment via a per-doc bucket map (tiny:
-``n_spans/chunk`` rows) broadcast onto span rows, one hash exchange on
-(doc_id, chunk) to re-pack pseudo-docs, then the ordinary
-scan→mapInArrow kernel. A 10⁷-span document becomes ~n/chunk
-independent kernel rows instead of one straggler task; everything is
-lazy (no driver collect), so plan construction stays job-free.
+Scale shape: the span rows are scanned twice and nothing else. The
+first scan evaluates the safe-split flag once per span (one
+``regexp_extract`` of the first non-empty line, then the grammar
+matches on that line alone) inside ONE aggregation over fine buckets
+of ``chunk_spans`` offsets, which keeps each bucket's first safe
+split. Window functions on that small table (one exchange on
+doc_id) coarsen it to ≤MAX_CHUNKS chunks per doc, each with its head
+and the previous head, and one row per doc carries them as an array
+indexed by chunk bucket: the broadcast map. The second scan looks
+every span's chunk up in that map, one hash exchange on (doc_id,
+chunk) re-packs pseudo-docs, then the ordinary scan→mapInArrow kernel
+runs (a packed giant row is exploded and round-robin re-distributed
+first). A 10⁷-span document becomes ~n/chunk independent kernel rows
+instead of one straggler task; everything is lazy (no driver
+collect), so plan construction stays job-free.
 
 Safe-split subtleties mirrored from the kernels:
 - the anchor must be the first NON-EMPTY line of its span (earlier
@@ -35,6 +43,8 @@ Safe-split subtleties mirrored from the kernels:
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -52,31 +62,55 @@ SEP = "\x1d"
 MAX_CHUNKS = 256
 
 
-def _strip(col):
-    return F.regexp_replace(
-        col, f"^{A.J_PY_STRIP_CLASS}+|{A.J_PY_STRIP_CLASS}+$", ""
+#: the first non-empty line of a span, stripped as ``str.strip()``
+#: strips it (group 1; "" when every line is blank): leading blank
+#: lines and whitespace go to the possessive prefix, trailing
+#: whitespace of that line to the lazy body's tail. Lines split on
+#: "\n" only, as the kernels split them; ``\z``, not ``$``, because
+#: Java's ``$`` also matches before a final \r, \u0085, \u2028 or
+#: \u2029.
+_FIRST_LINE = (
+    f"^{A.J_PY_STRIP_CLASS}*+([^\\n]*?)"
+    f"[{A.J_PY_STRIP_CLASS}&&[^\\n]]*+(?:\\n|\\z)"
+)
+
+
+def _first_line():
+    """The span's first non-empty stripped line: ONE ``regexp_extract``
+    per span."""
+    return F.regexp_extract(
+        F.coalesce(F.col("text"), F.lit("")), _FIRST_LINE, 1
     )
 
 
-def _safe_split_flag():
+def _py_ws(pattern: str) -> str:
+    """A (?U) J_* grammar pattern with ``\\s``/``\\S`` widened to Python's
+    whitespace set: Java's (?U) ``\\s`` is Unicode White_Space, which
+    lacks \\x1C-\\x1F, and Python's ``re`` and ``str.strip()`` count
+    those as whitespace too."""
+    return re.sub(
+        r"\\([sS])",
+        lambda m: ("[^" if m.group(1) == "S" else "[") + r"\s\x1C-\x1F]",
+        pattern,
+    )
+
+
+_SPLIT = _py_ws(A.J_QUESTION)
+_NO_SPLIT = [_py_ws(p) for p in (A.J_SOLO_QUESTION, A.J_COVER_NOISE,
+                                 A.J_NOISE_CI, A.J_NOISE_CS)]
+
+
+def _safe_split_flag(first=None):
     """First non-empty stripped line of the span is an unconditional
-    question anchor."""
-    first = F.get(
-        F.filter(
-            F.transform(F.split(F.col("text"), "\n"), _strip),
-            lambda x: x != "",
-        ),
-        0,
-    )
-    return (
-        (F.col("kind") == "text")
-        & first.isNotNull()
-        & first.rlike(A.J_QUESTION)
-        & ~first.rlike(A.J_SOLO_QUESTION)
-        & ~first.rlike(A.J_COVER_NOISE)
-        & ~first.rlike(A.J_NOISE_CI)
-        & ~first.rlike(A.J_NOISE_CS)
-    )
+    question anchor: an anchor, and neither a solo "Question N" nor
+    cover or boilerplate noise. ``first``: that line, when the caller
+    has already projected :func:`_first_line` (so the plan evaluates
+    it once)."""
+    first = _first_line() if first is None else first
+    flag = (F.col("kind") == "text") & (first != "") & first.rlike(_SPLIT)
+    for p in _NO_SPLIT:
+        flag = flag & ~first.rlike(p)
+    return flag
 
 
 def span_chunk_projection(
@@ -98,10 +132,9 @@ def span_chunk_projection(
 
     ``offset`` need only be UNIQUE per doc and order-defining — it
     does NOT have to be dense 0..n-1. Byte/char offsets, or gaps left
-    by upstream filtering, are fine: the chunk bucket table is sized
-    from max(offset), so every span's bucket exists (chunk width is
-    then measured in offset units, with ≥``chunk_spans`` offset units
-    per chunk and ≤MAX_CHUNKS chunks per doc either way)."""
+    by upstream filtering, are fine: chunks are ranges of offsets
+    (≥``chunk_spans`` offset units each, ≤MAX_CHUNKS per doc), so
+    every span falls in one whatever the gaps."""
     has_page = "page" in span_rows.columns
     ex = span_rows.select(
         "doc_id", "kind", "text", "media_ref",
@@ -109,22 +142,7 @@ def span_chunk_projection(
         (F.col("page") if has_page else F.lit(None)).cast("int")
         .alias("page"),
     )
-
-    # per-doc chunk width: ≥chunk_spans, and ≤MAX_CHUNKS chunks/doc.
-    # n = max(offset)+1, NOT count(*): bucket keys downstream are
-    # offset/width, so the bucket table must span the offset RANGE —
-    # sizing it from the row count silently drops spans whose offset
-    # exceeds the count when offsets are non-dense (byte offsets,
-    # filtered gaps). Dense 0..n-1 inputs are unchanged: max+1 == n.
-    meta = ex.groupBy("doc_id").agg(
-        (F.max("offset") + 1).cast("long").alias("n")
-    ).select(
-        "doc_id", "n",
-        F.greatest(
-            F.lit(chunk_spans), F.ceil(F.col("n") / MAX_CHUNKS)
-        ).cast("long").alias("width"),
-    )
-    return _chunk_and_pack(ex, meta, has_page)
+    return _chunk_and_pack(ex, chunk_spans, has_page)
 
 
 def packed_chunk_projection(big: DataFrame, chunk_spans: int) -> DataFrame:
@@ -155,75 +173,60 @@ def packed_chunk_projection(big: DataFrame, chunk_spans: int) -> DataFrame:
     # the explode of one giant row is a single task; re-distribute
     # BEFORE the regex flag evaluation so it runs on every core
     ex = ex.repartition(shuffle_n)
-
-    # per-doc chunk width: ≥chunk_spans, and ≤MAX_CHUNKS chunks/doc.
-    # n = max(offset)+1 (not array size) for the same non-dense-offset
-    # reason as span_chunk_projection: bucket keys are offset/width.
-    n_expr = (
-        F.array_max(F.transform("spans", lambda s: s["offset"]))
-        .cast("long") + 1
-    )
-    meta = big.select(
-        "doc_id",
-        F.greatest(
-            F.lit(chunk_spans),
-            F.ceil(n_expr / MAX_CHUNKS),
-        ).cast("long").alias("width"),
-        n_expr.alias("n"),
-    )
-    return _chunk_and_pack(ex, meta, has_page)
+    return _chunk_and_pack(ex, chunk_spans, has_page)
 
 
-def _chunk_and_pack(ex: DataFrame, meta: DataFrame,
+def _chunk_and_pack(ex: DataFrame, chunk_spans: int,
                     has_page: bool) -> DataFrame:
-
-    flagged = ex.withColumn("_safe", _safe_split_flag())
-    bounds = (
-        flagged.where("_safe")
-        .join(F.broadcast(meta), "doc_id")
-        .groupBy("doc_id", (F.col("offset") / F.col("width"))
-                 .cast("long").alias("bucket"))
-        .agg(F.min("offset").alias("b"))
+    # ONE aggregation over fine buckets of chunk_spans offsets: each
+    # bucket's first safe-split offset (null when it has none)
+    fb = (F.col("offset") / chunk_spans).cast("long")
+    fine = (
+        ex.withColumn("_first", _first_line())
+        .groupBy("doc_id", fb.alias("fb"))
+        .agg(F.min(F.when(_safe_split_flag(F.col("_first")),
+                          F.col("offset"))).alias("b"))
     )
-    # complete per-doc bucket table (tiny) + running last boundary
-    buckets = meta.select(
-        "doc_id", "width",
-        F.explode(
-            F.sequence(F.lit(0), F.ceil(F.col("n") / F.col("width")))
-        ).alias("bucket"),
-    )
-    w_cur = (
-        Window.partitionBy("doc_id").orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, 0)
+    # coarsen on that small table: k fine buckets per chunk bucket, so
+    # a doc has ≤MAX_CHUNKS of them; each one's head is its first safe
+    # split and ``prev`` the last head before it
+    k = F.greatest(
+        F.lit(1),
+        F.ceil((F.max("fb").over(Window.partitionBy("doc_id")) + 1)
+               / MAX_CHUNKS),
     )
     w_prev = (
-        Window.partitionBy("doc_id").orderBy("bucket")
+        Window.partitionBy("doc_id").orderBy("cb")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
+    heads = (
+        fine.withColumn("k", k)
+        .groupBy("doc_id", "k", (F.col("fb") / F.col("k")).cast("long")
+                 .alias("cb"))
+        .agg(F.min("b").alias("head"))
+        .withColumn("prev", F.last("head", ignorenulls=True).over(w_prev))
+    )
+    # the broadcast map: ONE row per doc, its (head, prev) pairs in an
+    # array indexed by chunk bucket (null where no span falls)
+    entries = F.col("hp")
     bucket_map = (
-        buckets.join(bounds, ["doc_id", "bucket"], "left")
+        heads.groupBy("doc_id", "k")
+        .agg(F.max("cb").alias("last"),
+             F.collect_list(F.struct("cb", "head", "prev")).alias("hp"))
         .select(
-            "doc_id", "bucket", "b",
-            F.last("b", ignorenulls=True).over(w_prev).alias("prev_b"),
+            "doc_id", "k",
+            F.transform(
+                F.sequence(F.lit(0).cast("long"), F.col("last")),
+                lambda c: F.get(F.filter(entries, lambda e: e["cb"] == c), 0),
+            ).alias("hp"),
         )
     )
 
-    assigned = (
-        flagged.join(F.broadcast(meta.select("doc_id", "width")), "doc_id")
-        .withColumn(
-            "bucket", (F.col("offset") / F.col("width")).cast("long")
-        )
-        .join(F.broadcast(bucket_map), ["doc_id", "bucket"])
-        .withColumn(
-            "chunk",
-            F.coalesce(
-                F.when(
-                    F.col("b").isNotNull() & (F.col("offset") >= F.col("b")),
-                    F.col("b"),
-                ).otherwise(F.col("prev_b")),
-                F.lit(-1),
-            ),
-        )
+    e = F.col("hp")[(fb / F.col("k")).cast("int")]
+    assigned = ex.join(F.broadcast(bucket_map), "doc_id").withColumn(
+        "chunk",
+        F.when(F.col("offset") >= e["head"], e["head"])
+        .otherwise(F.coalesce(e["prev"], F.lit(-1).cast("long"))),
     )
 
     packed = (

@@ -40,7 +40,6 @@ Reference semantics: /root/reference/parser/state_machine.py:133-366
 
 from __future__ import annotations
 
-from functools import partial
 from typing import Iterator
 
 import numpy as np
@@ -1008,31 +1007,10 @@ def _emit_final(state) -> pa.RecordBatch:
     )
 
 
-#: commit form of QUESTION_FINAL: every row carries a ``parse_failed``
-#: flag, True only on the one stand-in row a document emits when its
-#: Python-fallback parse raised. The bucket commit counts the flags on
-#: its write job and drops those rows (plans/lineage.py).
-QUESTION_COMMIT_ARROW_SCHEMA = QUESTION_FINAL_ARROW_SCHEMA.append(
-    pa.field("parse_failed", pa.bool_())
-)
-
-
-def _fallback_final(doc_ids, fb_docs,
-                    flag_failures: bool = False) -> pa.RecordBatch | None:
-    from . import dkernel
-
-    schema_ = (QUESTION_COMMIT_ARROW_SCHEMA if flag_failures
-               else QUESTION_FINAL_ARROW_SCHEMA)
-    rows: list[tuple] = []
-    ids_py = doc_ids.to_pylist()
-    for d, k, t, r, p in fb_docs:
-        for raw in dkernel._parse_doc(ids_py[d], k, t, r, p):
-            fin = dkernel._finalize_row(raw)
-            if fin is None and flag_failures:  # the failed doc's sentinel
-                fin = (raw[0], 0, -1, "mcq", "", [], [], "", [], "", [],
-                       1, 1, [], 0, False, False, False, 0)
-            if fin is not None:
-                rows.append(fin + (raw[13],) if flag_failures else fin)
+def _rows_batch(rows: list[tuple],
+                schema_: pa.Schema) -> pa.RecordBatch | None:
+    """Python-fallback rows (tuples in ``schema_`` column order) as one
+    Arrow batch; None when there are none."""
     if not rows:
         return None
     cols = list(zip(*rows))
@@ -1043,12 +1021,88 @@ def _fallback_final(doc_ids, fb_docs,
     )
 
 
+def _fallback_final(doc_ids, fb_docs) -> pa.RecordBatch | None:
+    from . import dkernel
+
+    ids_py = doc_ids.to_pylist()
+    return _rows_batch([
+        fin
+        for d, k, t, r, p in fb_docs
+        for raw in dkernel._parse_doc(ids_py[d], k, t, r, p)
+        if (fin := dkernel._finalize_row(raw)) is not None
+    ], QUESTION_FINAL_ARROW_SCHEMA)
+
+
+# ── bucket-commit emitter (plans/lineage.py) ────────────────────────────
+
+#: ``output`` values of a commit batch: the partition each row is
+#: written to, or the stand-in row of a document whose Python-fallback
+#: parse failed (counted by the commit, never written)
+COMMIT_QUESTIONS = "questions"
+COMMIT_FLAT_SPANS = "flat_spans"
+COMMIT_FAILED = "failed"
+
+#: union of QUESTION_FINAL and the flat-span columns it lacks, plus the
+#: ``output`` discriminator (schema.EXTRACTION_COMMIT): one parse emits
+#: both committed outputs in one batch, and each row nulls the other
+#: output's columns
+COMMIT_ARROW_SCHEMA = pa.schema(
+    list(QUESTION_FINAL_ARROW_SCHEMA)
+    + [f for f in FLAT_ARROW_SCHEMA
+       if f.name not in QUESTION_FINAL_ARROW_SCHEMA.names]
+    + [pa.field("output", pa.string())]
+)
+
+
+def _commit_union(parts) -> pa.RecordBatch:
+    """``(batch, output)`` parts (None parts skipped) → ONE commit
+    batch: each part fills its own columns, nulls fill the rest, and
+    ``output`` names the part."""
+    parts = [(b, o) for b, o in parts if b is not None]
+    cols = [
+        pa.concat_arrays([
+            _combine(b.column(f.name)) if f.name in b.schema.names
+            else pa.nulls(len(b), f.type)
+            for b, _ in parts
+        ])
+        for f in COMMIT_ARROW_SCHEMA
+        if f.name != "output"
+    ]
+    cols.append(pa.concat_arrays(
+        [pa.array([o] * len(b), pa.string()) for b, o in parts]))
+    return pa.RecordBatch.from_arrays(cols, schema=COMMIT_ARROW_SCHEMA)
+
+
 def _emit_commit(state) -> pa.RecordBatch:
-    out = _emit_final(state)
-    return pa.RecordBatch.from_arrays(
-        out.columns + [pa.array(np.zeros(len(out), dtype=bool))],
-        schema=QUESTION_COMMIT_ARROW_SCHEMA,
-    )
+    return _commit_union([(_emit_final(state), COMMIT_QUESTIONS),
+                          (_emit_flat(state), COMMIT_FLAT_SPANS)])
+
+
+def _fallback_commit(doc_ids, fb_docs) -> pa.RecordBatch:
+    """Fallback documents, each parsed ONCE: finalized questions, flat
+    spans, and one ``failed`` stand-in row per document whose parse
+    raised (its other rows are dropped, as finalize and flatten drop
+    them)."""
+    from . import dkernel
+
+    finals: list[tuple] = []
+    flats: list[tuple] = []
+    failed: list[str] = []
+    ids_py = doc_ids.to_pylist()
+    for d, k, t, r, p in fb_docs:
+        raws = dkernel._parse_doc(ids_py[d], k, t, r, p)
+        for raw in raws:
+            if raw[13]:
+                failed.append(raw[0])
+            elif (fin := dkernel._finalize_row(raw)) is not None:
+                finals.append(fin)
+        flats.extend(dkernel._flatten_rows(raws))
+    return _commit_union([
+        (_rows_batch(finals, QUESTION_FINAL_ARROW_SCHEMA), COMMIT_QUESTIONS),
+        (_rows_batch(flats, FLAT_ARROW_SCHEMA), COMMIT_FLAT_SPANS),
+        (pa.RecordBatch.from_arrays([pa.array(failed, pa.string())],
+                                    names=["doc_id"]), COMMIT_FAILED),
+    ])
 
 
 # ── validation emitter (per-doc ValidationReport) ────────────────────────
@@ -1202,16 +1256,7 @@ def _fallback_validation(doc_ids, fb_docs) -> pa.RecordBatch | None:
         rep = dkernel._validate_doc(fins)
         if rep is not None:
             rows.append(rep)
-    if not rows:
-        return None
-    cols = list(zip(*rows))
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array(list(cols[i]), VALIDATION_ARROW_SCHEMA.field(i).type)
-            for i in range(len(cols))
-        ],
-        schema=VALIDATION_ARROW_SCHEMA,
-    )
+    return _rows_batch(rows, VALIDATION_ARROW_SCHEMA)
 
 
 # ── mapInArrow entrypoints ───────────────────────────────────────────────
@@ -1225,14 +1270,7 @@ def _fallback_flat(doc_ids, fb_docs) -> pa.RecordBatch | None:
     for d, k, t, r, p in fb_docs:
         rows.extend(dkernel._flatten_rows(
             dkernel._parse_doc(ids_py[d], k, t, r, p)))
-    if not rows:
-        return None
-    cols = list(zip(*rows))
-    return pa.RecordBatch.from_arrays(
-        [pa.array(list(cols[i]), FLAT_ARROW_SCHEMA.field(i).type)
-         for i in range(len(cols))],
-        schema=FLAT_ARROW_SCHEMA,
-    )
+    return _rows_batch(rows, FLAT_ARROW_SCHEMA)
 
 
 def _fallback_doc_text(doc_ids, fb_docs) -> pa.RecordBatch | None:
@@ -1251,14 +1289,7 @@ def _fallback_doc_text(doc_ids, fb_docs) -> pa.RecordBatch | None:
             rows.append(
                 (ids_py[d], " ".join(s[2] for s in spans), len(spans))
             )
-    if not rows:
-        return None
-    cols = list(zip(*rows))
-    return pa.RecordBatch.from_arrays(
-        [pa.array(list(cols[i]), DOC_TEXT_ARROW_SCHEMA.field(i).type)
-         for i in range(len(cols))],
-        schema=DOC_TEXT_ARROW_SCHEMA,
-    )
+    return _rows_batch(rows, DOC_TEXT_ARROW_SCHEMA)
 
 
 def _fallback_scalars(doc_ids, fb_docs) -> pa.RecordBatch | None:
@@ -1272,15 +1303,7 @@ def _fallback_scalars(doc_ids, fb_docs) -> pa.RecordBatch | None:
             if fin is not None:
                 rows.append((fin[0], fin[1], fin[2], fin[3], fin[4],
                              fin[7], fin[14]))
-    if not rows:
-        return None
-    cols = list(zip(*rows))
-    return pa.RecordBatch.from_arrays(
-        [pa.array(list(cols[i]),
-                  QUESTION_SCALARS_ARROW_SCHEMA.field(i).type)
-         for i in range(len(cols))],
-        schema=QUESTION_SCALARS_ARROW_SCHEMA,
-    )
+    return _rows_batch(rows, QUESTION_SCALARS_ARROW_SCHEMA)
 
 
 #: docs per kernel slice. Spark hands Arrow batches of up to
@@ -1364,12 +1387,12 @@ def parse_docs_final_arrow(
 def parse_docs_commit_arrow(
     batches: Iterator[pa.RecordBatch],
 ) -> Iterator[pa.RecordBatch]:
-    """mapInArrow entrypoint for bucket commits: parse_docs_final_arrow
-    plus the ``parse_failed`` flag column, so the failure count rides
-    the questions write job (schema.QUESTION_COMMIT)."""
-    yield from _entry(batches, _emit_commit,
-                      partial(_fallback_final, flag_failures=True),
-                      QUESTION_COMMIT_ARROW_SCHEMA)
+    """mapInArrow entrypoint for bucket commits: ONE parse per slice
+    emits both committed outputs, finalized questions and flat spans,
+    as one union-shaped batch (schema.EXTRACTION_COMMIT) whose
+    ``output`` column is the partition each row is written to."""
+    yield from _entry(batches, _emit_commit, _fallback_commit,
+                      COMMIT_ARROW_SCHEMA)
 
 
 def validate_docs_arrow(

@@ -20,18 +20,16 @@ Reference semantics being re-expressed (SURVEY.md §2.8):
   row lands (write data → commit lineage), so a crash between the two
   re-runs the bucket harmlessly.
 
-A bucket commit is two writes straight off the staged input, each ONE
+A bucket commit is ONE write job straight off the staged input: one
 vectorized ``mapInArrow`` pass of the read path's kernel
-(operators/vkernel.py): questions, then flat spans. Parsing twice is
-cheaper than parsing once and staging: the kernel's compute is small
-next to the per-job cost of a staged raw table that a Catalyst
-finalize and a flatten job would each read back. Part of that per-job
-cost was the Python worker re-reading ``pyspark.zip`` and the Spark
-jar before every task (see ``zipcache.py``); with that gone the
-traced commit p50 on the perfbench corpus fell from 1.70 s to 1.15 s
-(4-vCPU Xeon), while the kernel still parses either output of the
-100-document corpus in 30-40 ms outside Spark, so the commit stays
-two writes.
+(operators/vkernel.py) parses each document once and emits both
+outputs, questions and flat spans, as one batch written partitioned
+by output. Every journal count is an Observation on that job, and
+staging is one write job too, so a run costs one job per step and
+reads nothing back. The commit used to be two writes, one per output,
+kept because the kernel's compute is small next to a job's fixed
+cost; measured, that same fixed cost made the second job the larger
+price (see ``_write_bucket``).
 
 Storage is a parquet directory layout with Iceberg-shaped semantics
 (no Iceberg runtime jar ships in this sandbox); the lineage contract
@@ -46,8 +44,9 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import schema
 from ..operators import dkernel, vkernel
@@ -88,8 +87,10 @@ class ExtractionJob:
     def __init__(self, out_dir: str, n_buckets: int = 16) -> None:
         self.out_dir = out_dir
         self.n_buckets = n_buckets
-        self.questions_dir = os.path.join(out_dir, "questions")
-        self.spans_dir = os.path.join(out_dir, "flat_spans")
+        self.staged_dir = os.path.join(out_dir, "input_bucketed")
+        #: one directory per bucket commit, partitioned by output:
+        #: commits/bucket=b/output=questions and .../output=flat_spans
+        self.commits_dir = os.path.join(out_dir, "commits")
         self.lineage_path = os.path.join(out_dir, "lineage.jsonl")
         self._lineage_lock = __import__("threading").Lock()
 
@@ -155,108 +156,117 @@ class ExtractionJob:
         )
 
     def _stage_input(self, documents: DataFrame) -> str:
-        """One-time ingest normalization: write the input partitioned by
-        bucket so every per-bucket pass is partition-pruned instead of a
-        full-corpus scan (the parquet stand-in for an Iceberg table
-        partitioned on bucket(doc_id)). Per-bucket input metrics
-        (docs, spans) are computed HERE, in one aggregation over the
-        staged table, so bucket commits never re-scan the input for
-        bookkeeping. Idempotent via a _STAGED marker.
+        """One-time ingest normalization, ONE write job: the input
+        partitioned by bucket, so every bucket commit is partition-
+        pruned instead of a full-corpus scan (the parquet stand-in for
+        an Iceberg table partitioned on bucket(doc_id)). The input
+        schema is saved beside the _STAGED marker, so no bucket read
+        infers it from parquet footers (each inference is a Spark
+        job); the per-bucket input metrics ride on each commit's write
+        job instead (:meth:`_observed`). Idempotent via the marker.
         """
-        staged = os.path.join(self.out_dir, "input_bucketed")
+        staged = self.staged_dir
         marker = os.path.join(staged, "_STAGED")
         if not os.path.exists(marker):
             self._bucketed(documents).write.mode("overwrite").partitionBy(
                 "bucket"
             ).parquet(staged)
-            m = (
-                documents.sparkSession.read.parquet(staged)
-                .groupBy("bucket")
-                .agg(
-                    F.count("*").alias("d"),
-                    self._input_metric_expr().alias("s"),
-                )
-                .collect()
-            )
-            metrics = {int(r["bucket"]): [int(r["d"]), int(r["s"] or 0)]
-                       for r in m}
-            with open(os.path.join(staged, "_input_metrics.json"), "w") as fh:
-                json.dump(metrics, fh)
+            with open(os.path.join(staged, "_schema.json"), "w") as fh:
+                fh.write(documents.schema.json())
             with open(marker, "w") as fh:
                 fh.write("ok\n")
         return staged
+
+    def _input_schema(self) -> T.StructType:
+        """The staged input's schema (saved by :meth:`_stage_input`);
+        before anything is staged, (doc_id, text) strings."""
+        path = os.path.join(self.staged_dir, "_schema.json")
+        if not os.path.exists(path):
+            return T.StructType([T.StructField(c, T.StringType())
+                                 for c in ("doc_id", "text")])
+        with open(path) as fh:
+            return T.StructType.fromJson(json.load(fh))
+
+    def _empty_input(self, spark: SparkSession) -> DataFrame:
+        """An empty input frame, from which an output schema is derived
+        by analysis alone (no job)."""
+        return spark.createDataFrame([], self._input_schema())
 
     def _input_metric_expr(self):
         """Second per-bucket input metric (first is doc count) — the
         extraction job tracks input spans; subclasses override."""
         return F.sum(F.size("spans"))
 
-    def _input_metrics(self, staged: str, bucket: int) -> tuple[int, int]:
-        with open(os.path.join(staged, "_input_metrics.json")) as fh:
-            metrics = json.load(fh)
-        return tuple(metrics.get(str(bucket), [0, 0]))
+    def _observed(self, docs: DataFrame) -> tuple[DataFrame, Observation]:
+        """``docs`` with the bucket's input metrics observed on the
+        commit's write job: docs (``d``) and the second metric
+        (``s``)."""
+        ob = Observation()
+        return docs.observe(
+            ob,
+            F.count(F.lit(1)).alias("d"),
+            self._input_metric_expr().alias("s"),
+        ), ob
 
-    def _write_bucket(
-        self, bucket: int, docs: DataFrame, n_docs: int, n_spans_in: int
-    ) -> dict:
-        """One bucket commit: two kernel passes over the bucket's staged
-        input, questions then flat spans, and no staged intermediate.
+    @staticmethod
+    def _input_counts(ob: Observation) -> tuple[int, int]:
+        m = ob.get
+        return int(m["d"]), int(m["s"] or 0)
 
-        Both outputs come from the read path's vectorized kernel, one
-        ``mapInArrow`` write job each. A staged parse would run once
-        but costs a third job plus two parquet read-backs, and the
-        kernel's compute is small next to that per-job cost, which is
-        still about 0.6 s per job once the workers skip the per-task
-        zip re-read (commit p50 1.15 s for two jobs). The
-        parse-failure count rides the questions write: its kernel
-        flags the stand-in row of each document whose Python-fallback
-        parse failed, the Observation sums the flag, and the rows are
-        dropped before the write (the flat-spans kernel emits nothing
-        for them). Input metrics come from staging time.
+    def _write_bucket(self, bucket: int, docs: DataFrame) -> dict:
+        """One bucket commit: ONE ``mapInArrow`` write job over the
+        bucket's staged input.
+
+        The read path's vectorized kernel parses each document once
+        and emits both outputs, finalized questions and flat spans, as
+        one union-shaped batch (schema.EXTRACTION_COMMIT) written
+        partitioned by its ``output`` column. A commit used to be two
+        write jobs, one per output, on the argument that the kernel's
+        compute is small next to a job's fixed cost; by that same
+        argument the second job was the larger cost. Measured on the
+        perfbench ``extract_read`` corpus (4-vCPU Xeon, traced, seeds
+        3-5), the resume run that commits one ~50-document bucket took
+        0.85/0.97/0.70 s against 1.00/1.01/0.90 s with two write jobs,
+        and a two-bucket run with its read-back takes 3 Spark jobs
+        instead of 12. Every
+        journal count is an Observation on this one job: questions,
+        flat spans and parse failures on the kernel output (the
+        stand-in row of a document whose Python-fallback parse failed
+        is counted, then dropped before the write), docs and spans on
+        the input.
         """
         t0 = time.perf_counter()
-        qdir = os.path.join(self.questions_dir, f"bucket={bucket}")
-        sdir = os.path.join(self.spans_dir, f"bucket={bucket}")
+        bdir = os.path.join(self.commits_dir, f"bucket={bucket}")
         # delete-before-insert (reference background_worker.py:343-357)
-        for d in (qdir, sdir):
-            shutil.rmtree(d, ignore_errors=True)
+        shutil.rmtree(bdir, ignore_errors=True)
 
-        # metric counts ride ON the write actions (Observation API) —
+        # metric counts ride ON the write action (Observation API) —
         # r5: separate count() jobs were measured as a large share of
         # the per-bucket fixed cost (BENCH.md lineage phase)
-        from pyspark.sql import Observation
-
-        proj = dkernel.packed_projection(docs)
-        failed = F.col("parse_failed")
-        ob_q = Observation()
-        proj.mapInArrow(
-            vkernel.parse_docs_commit_arrow, schema=schema.QUESTION_COMMIT
+        docs, ob_in = self._observed(docs)
+        out = F.col("output")
+        ob = Observation()
+        dkernel.packed_projection(docs).mapInArrow(
+            vkernel.parse_docs_commit_arrow, schema=schema.EXTRACTION_COMMIT
         ).observe(
-            ob_q,
-            F.sum((~failed).cast("long")).alias("n"),
-            F.sum(failed.cast("long")).alias("nf"),
-        ).where(~failed).drop("parse_failed").write.mode(
+            ob,
+            *[F.count_if(out == v).alias(v) for v in (
+                vkernel.COMMIT_QUESTIONS, vkernel.COMMIT_FLAT_SPANS,
+                vkernel.COMMIT_FAILED)],
+        ).where(out != vkernel.COMMIT_FAILED).write.mode(
             "overwrite"
-        ).parquet(qdir)
-        n_q = int(ob_q.get["n"] or 0)
-        n_fail = int(ob_q.get["nf"] or 0)
-
-        ob_s = Observation()
-        proj.mapInArrow(
-            vkernel.parse_docs_flat_arrow, schema=schema.FLAT_SPAN_SEQ
-        ).observe(ob_s, F.count(F.lit(1)).alias("n")).write.mode(
-            "overwrite"
-        ).parquet(sdir)
-        n_spans_out = int(ob_s.get["n"])
+        ).partitionBy("output").parquet(bdir)
+        n_docs, n_spans_in = self._input_counts(ob_in)
+        m = ob.get
         return {
             "partition_id": bucket,
             "status": "done",
             "docs_parsed": n_docs,
-            "spans_emitted": int(n_spans_out),
-            "questions_emitted": int(n_q),
-            "parse_failures": int(n_fail),
+            "spans_emitted": int(m[vkernel.COMMIT_FLAT_SPANS]),
+            "questions_emitted": int(m[vkernel.COMMIT_QUESTIONS]),
+            "parse_failures": int(m[vkernel.COMMIT_FAILED]),
             "wall_sec": round(time.perf_counter() - t0, 3),
-            "input_spans": int(n_spans_in),
+            "input_spans": n_spans_in,
             "error": "",
         }
 
@@ -308,15 +318,16 @@ class ExtractionJob:
         Commit protocol per bucket is unchanged — data first, lineage
         row after — and a failure never blocks the other buckets."""
 
+        in_schema = self._input_schema()
+
         def commit(b: int) -> int | None:
             bdir = os.path.join(staged, f"bucket={b}")
             if not os.path.exists(bdir):  # hash range empty at this size
                 self._append_lineage(self._empty_row(b))
                 return b
-            docs_b = spark.read.parquet(bdir)
-            metrics = self._input_metrics(staged, b)
+            docs_b = spark.read.schema(in_schema).parquet(bdir)
             try:
-                row = self._write_bucket(b, docs_b, *metrics)
+                row = self._write_bucket(b, docs_b)
             except Exception as exc:  # never lose prior commits
                 self._append_lineage(self._failed_row(b, exc))
                 return None
@@ -327,19 +338,28 @@ class ExtractionJob:
 
     # ── results ──────────────────────────────────────────────────────
 
-    def _read_done(self, spark: SparkSession, base: str) -> DataFrame:
-        paths = [
-            p
-            for b in sorted(self.done_buckets())
-            if os.path.exists(p := os.path.join(base, f"bucket={b}"))
-        ]
-        return spark.read.option("basePath", base).parquet(*paths)
+    @staticmethod
+    def _read(spark: SparkSession, schema_: T.StructType,
+              paths: list[str]) -> DataFrame:
+        """Committed parquet at those of ``paths`` that exist, read with
+        ``schema_`` (no footer-inference job); an empty frame of
+        ``schema_`` while none exists."""
+        paths = [p for p in paths if os.path.exists(p)]
+        if not paths:
+            return spark.createDataFrame([], schema_)
+        return spark.read.schema(schema_).parquet(*paths)
+
+    def _done_paths(self, base: str, *leaf: str) -> list[str]:
+        return [os.path.join(base, f"bucket={b}", *leaf)
+                for b in sorted(self.done_buckets())]
 
     def questions(self, spark: SparkSession) -> DataFrame:
-        return self._read_done(spark, self.questions_dir)
+        return self._read(spark, schema.QUESTION_FINAL, self._done_paths(
+            self.commits_dir, f"output={vkernel.COMMIT_QUESTIONS}"))
 
     def flat_spans(self, spark: SparkSession) -> DataFrame:
-        return self._read_done(spark, self.spans_dir)
+        return self._read(spark, schema.FLAT_SPAN_SEQ, self._done_paths(
+            self.commits_dir, f"output={vkernel.COMMIT_FLAT_SPANS}"))
 
 
 class CurationJob(ExtractionJob):
@@ -347,10 +367,10 @@ class CurationJob(ExtractionJob):
     (operators/curation.py) under the exact bucket-commit contract of
     :class:`ExtractionJob` — doc_id-hash buckets, delete-before-insert,
     lineage row appended after data, resume = run() again and only
-    pending buckets execute. Per-bucket metrics ride on the write via
-    the Observation API (docs gated, docs kept); input metrics (docs,
-    tokens) come from staging time. Extends the north-rule resumability
-    story from extraction to the training-data lane."""
+    pending buckets execute. Every per-bucket metric rides on the
+    write via the Observation API: docs gated and kept on the
+    verdicts, docs and tokens on the input. Extends the north-rule
+    resumability story from extraction to the training-data lane."""
 
     EMPTY_LINEAGE_SCHEMA = (
         "partition_id int, status string, docs_in long, docs_gated long, "
@@ -390,28 +410,28 @@ class CurationJob(ExtractionJob):
             "input_tokens": 0, "error": str(exc)[:500],
         }
 
-    def _write_bucket(
-        self, bucket: int, docs: DataFrame, n_docs: int, n_tokens_in: int
-    ) -> dict:
-        from pyspark.sql import Observation
-
+    def _gate(self, docs: DataFrame) -> DataFrame:
         from ..operators.curation import curation_filter
         from ..operators.repetition import chunked_lines
 
-        t0 = time.perf_counter()
-        vdir = os.path.join(self.verdicts_dir, f"bucket={bucket}")
-        shutil.rmtree(vdir, ignore_errors=True)
-        ob = Observation()
-        gate = curation_filter(
+        return curation_filter(
             docs.drop("bucket"),
             lines=chunked_lines(F.col("text"), self.line_width),
             **self.gate_kw,
         )
-        gate.observe(
+
+    def _write_bucket(self, bucket: int, docs: DataFrame) -> dict:
+        t0 = time.perf_counter()
+        vdir = os.path.join(self.verdicts_dir, f"bucket={bucket}")
+        shutil.rmtree(vdir, ignore_errors=True)
+        docs, ob_in = self._observed(docs)
+        ob = Observation()
+        self._gate(docs).observe(
             ob,
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("keep").cast("long")).alias("k"),
         ).write.mode("overwrite").parquet(vdir)
+        n_docs, n_tokens_in = self._input_counts(ob_in)
         return {
             "partition_id": bucket,
             "status": "done",
@@ -419,12 +439,13 @@ class CurationJob(ExtractionJob):
             "docs_gated": int(ob.get["n"]),
             "docs_kept": int(ob.get["k"] or 0),
             "wall_sec": round(time.perf_counter() - t0, 3),
-            "input_tokens": int(n_tokens_in),
+            "input_tokens": n_tokens_in,
             "error": "",
         }
 
     def verdicts(self, spark: SparkSession) -> DataFrame:
-        return self._read_done(spark, self.verdicts_dir).drop("bucket")
+        return self._read(spark, self._gate(self._empty_input(spark)).schema,
+                          self._done_paths(self.verdicts_dir))
 
 
 class DedupJob(ExtractionJob):
@@ -516,29 +537,26 @@ class DedupJob(ExtractionJob):
     def _failed_row(self, bucket: int, exc: Exception) -> dict:
         return self._row(bucket, "sig", "failed", error=str(exc)[:500])
 
-    def _write_bucket(self, bucket, docs, n_docs, n_tokens_in) -> dict:
-        # the base _commit_buckets pool calls _write_bucket; phase 1
-        # of this job commits signatures
-        return self._write_sig_bucket(bucket, docs, n_docs, n_tokens_in)
-
-    def _write_sig_bucket(
-        self, bucket: int, docs: DataFrame, n_docs: int, n_tokens_in: int
-    ) -> dict:
-        from pyspark.sql import Observation
-
+    def _signatures(self, docs: DataFrame) -> DataFrame:
         from ..operators.dedup import minhash_signatures
 
-        t0 = time.perf_counter()
-        sdir = os.path.join(self.sigs_dir, f"bucket={bucket}")
-        shutil.rmtree(sdir, ignore_errors=True)
-        ob = Observation()
-        sigs = minhash_signatures(
+        return minhash_signatures(
             docs.drop("bucket"), k=self.k, shingle_k=self.shingle_k,
             hasher=self.hasher,
         )
-        sigs.observe(ob, F.count(F.lit(1)).alias("n")).write.mode(
-            "overwrite"
-        ).parquet(sdir)
+
+    def _write_bucket(self, bucket: int, docs: DataFrame) -> dict:
+        # the base _commit_buckets pool calls _write_bucket; phase 1
+        # of this job commits signatures
+        t0 = time.perf_counter()
+        sdir = os.path.join(self.sigs_dir, f"bucket={bucket}")
+        shutil.rmtree(sdir, ignore_errors=True)
+        docs, ob_in = self._observed(docs)
+        ob = Observation()
+        self._signatures(docs).observe(
+            ob, F.count(F.lit(1)).alias("n")
+        ).write.mode("overwrite").parquet(sdir)
+        n_docs, n_tokens_in = self._input_counts(ob_in)
         return self._row(
             bucket, "sig", "done", docs_in=n_docs,
             rows_emitted=int(ob.get["n"]),
@@ -548,24 +566,19 @@ class DedupJob(ExtractionJob):
     # ── phase 2: per-band LSH candidate pass ─────────────────────────
 
     def _sigs(self, spark: SparkSession) -> DataFrame:
-        return self._read_done(spark, self.sigs_dir).select(
-            "doc_id", "signature"
-        )
+        sig_schema = self._signatures(self._empty_input(spark)).schema
+        return self._read(
+            spark, sig_schema, self._done_paths(self.sigs_dir)
+        ).select("doc_id", "signature")
 
-    def _write_band(self, spark: SparkSession, band: int) -> dict:
-        """One band of minhash_lsh_pairs (operators/dedup.py) over the
-        committed signature store: slim (doc_id, bucket) self-join,
-        max_bucket skew cap, signature-similarity verify — identical
-        hashing via the shared combiner."""
-        from pyspark.sql import Observation
-
+    def _band_pairs(self, sigs: DataFrame, band: int) -> DataFrame:
+        """One band of minhash_lsh_pairs (operators/dedup.py) over a
+        signature store: slim (doc_id, bucket) self-join, max_bucket
+        skew cap, signature-similarity verify — identical hashing via
+        the shared combiner."""
         from ..functions.hashing import combiner_for
         from ..operators.dedup import _drop_over_cap
 
-        t0 = time.perf_counter()
-        pdir = os.path.join(self.pairs_dir, f"band={band}")
-        shutil.rmtree(pdir, ignore_errors=True)
-        sigs = self._sigs(spark)
         combine = combiner_for(self.hasher)
         rpb = self.k // self.bands
         bucket = combine(
@@ -604,17 +617,24 @@ class DedupJob(ExtractionJob):
             )
             / F.lit(self.k)
         )
-        ob = Observation()
-        out = (
+        return (
             cand.join(sa, "doc_a")
             .join(sb, "doc_b")
             .withColumn("sig_similarity", F.round(sim, 4))
             .where(F.col("sig_similarity") >= self.threshold)
             .select("doc_a", "doc_b", "sig_similarity")
         )
-        out.observe(ob, F.count(F.lit(1)).alias("n")).write.mode(
-            "overwrite"
-        ).parquet(pdir)
+
+    def _write_band(self, spark: SparkSession, band: int) -> dict:
+        """Commit one band's pairs over the committed signature store:
+        partition-pruned, never re-hashing text."""
+        t0 = time.perf_counter()
+        pdir = os.path.join(self.pairs_dir, f"band={band}")
+        shutil.rmtree(pdir, ignore_errors=True)
+        ob = Observation()
+        self._band_pairs(self._sigs(spark), band).observe(
+            ob, F.count(F.lit(1)).alias("n")
+        ).write.mode("overwrite").parquet(pdir)
         return self._row(
             band, "band", "done", rows_emitted=int(ob.get["n"] or 0),
             wall=time.perf_counter() - t0,
@@ -676,15 +696,11 @@ class DedupJob(ExtractionJob):
         """Union of committed bands, cross-band pair dedup — row-equal
         to minhash_lsh_pairs over the same corpus once all bands are
         committed (a pair found in several bands has ONE similarity)."""
-        paths = [
-            p
-            for b in sorted(self.done_bands())
-            if os.path.exists(p := os.path.join(self.pairs_dir,
-                                                f"band={b}"))
-        ]
-        return (
-            spark.read.option("basePath", self.pairs_dir)
-            .parquet(*paths)
-            .select("doc_a", "doc_b", "sig_similarity")
-            .dropDuplicates(["doc_a", "doc_b"])
-        )
+        empty_sigs = spark.createDataFrame(
+            [], self._signatures(self._empty_input(spark)).schema)
+        return self._read(
+            spark,
+            self._band_pairs(empty_sigs, 0).schema,
+            [os.path.join(self.pairs_dir, f"band={b}")
+             for b in sorted(self.done_bands())],
+        ).dropDuplicates(["doc_a", "doc_b"])

@@ -130,14 +130,6 @@ QUESTION_FINAL = T.StructType(
     ]
 )
 
-#: Bucket-commit form of QUESTION_FINAL (operators/vkernel.py
-#: parse_docs_commit_arrow): one extra flag, True only on the stand-in
-#: row of a document whose parse failed.
-QUESTION_COMMIT = T.StructType(
-    QUESTION_FINAL.fields
-    + [T.StructField("parse_failed", T.BooleanType(), False)]
-)
-
 #: Canonical flattened output span (the correctness contract, §1.4 of
 #: SURVEY.md; reference crud.py:633-726 `_question_to_blocks`).
 FLAT_SPAN = T.StructType(
@@ -165,6 +157,21 @@ FLAT_SPAN_SEQ = T.StructType(
         T.StructField("media_ref", T.StringType(), False),
         T.StructField("order", T.IntegerType(), False),
     ]
+)
+
+#: Bucket-commit batch (operators/vkernel.py parse_docs_commit_arrow):
+#: both committed outputs of ONE parse in one union shape. ``output``
+#: is the partition a row is written to ("questions" or "flat_spans"),
+#: or "failed" on the stand-in row of a document whose parse failed;
+#: every column the row's output lacks is null.
+EXTRACTION_COMMIT = T.StructType(
+    [T.StructField(f.name, f.dataType, True) for f in QUESTION_FINAL.fields]
+    + [
+        T.StructField(f.name, f.dataType, True)
+        for f in FLAT_SPAN_SEQ.fields
+        if f.name not in QUESTION_FINAL.names
+    ]
+    + [T.StructField("output", T.StringType(), False)]
 )
 
 #: Per-document reassembled text (exam_reassemble / the e2e pipeline's

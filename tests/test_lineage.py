@@ -244,3 +244,121 @@ def test_dedup_job_two_phase_resume_and_parity(spark):
         assert lin.count() == 4 + 8
         assert set(lin.columns) >= {"partition_id", "phase", "status",
                                     "rows_emitted", "error"}
+
+
+def test_fresh_jobs_read_back_empty_frames(spark):
+    """Before anything is committed, every read-back is an empty frame
+    with its output schema (it used to raise "basePath not found")."""
+    from pdf_parser_python_spark.operators.curation import curation_filter
+    from pdf_parser_python_spark.operators.repetition import chunked_lines
+    from pdf_parser_python_spark.plans.lineage import CurationJob, DedupJob
+
+    text = spark.createDataFrame([("d0", "some text")],
+                                 "doc_id string, text string")
+    gate = curation_filter(text, lines=chunked_lines(F.col("text"), 10))
+    with tempfile.TemporaryDirectory() as td:
+        ext = ExtractionJob(os.path.join(td, "e"))
+        dedup = DedupJob(os.path.join(td, "d"))
+        cases = [
+            (ext.questions(spark), schema.QUESTION_FINAL),
+            (ext.flat_spans(spark), schema.FLAT_SPAN_SEQ),
+            (CurationJob(os.path.join(td, "c")).verdicts(spark),
+             gate.schema),
+            (dedup.signatures(spark),
+             "doc_id string, signature array<bigint>"),
+            (dedup.pairs(spark),
+             "doc_a string, doc_b string, sig_similarity double"),
+        ]
+        for df, want in cases:
+            if isinstance(want, str):
+                want = spark.createDataFrame([], want).schema
+            assert [(f.name, f.dataType) for f in df.schema] == [
+                (f.name, f.dataType) for f in want]
+            assert df.count() == 0
+
+
+def _by_bucket(df, n, **aggs):
+    """{bucket: {name: value}} under the commit's xxhash bucketing."""
+    bucket = F.pmod(F.xxhash64("doc_id"), F.lit(n)).cast("int")
+    return {
+        r["b"]: {k: r[k] for k in aggs}
+        for r in df.groupBy(bucket.alias("b"))
+        .agg(*[v.alias(k) for k, v in aggs.items()]).collect()
+    }
+
+
+def _journal(job, fields, phase=None):
+    rows = job._latest_done(phase)
+    return {b: {k: rows[b][k] for k in fields} for b in sorted(rows)}
+
+
+def _expected(n, fields, *tables):
+    return {b: {k: next((t[b][k] for t in tables if b in t
+                         and k in t[b]), 0) for k in fields}
+            for b in range(n)}
+
+
+def test_journal_rows_equal_independent_counts(spark):
+    """Every done journal row of each job kind equals counts computed
+    independently from the input under the same xxhash bucketing, so
+    moving the input metrics from staging onto the commit job changed
+    no number."""
+    from pdf_parser_python_spark.operators.curation import curation_filter
+    from pdf_parser_python_spark.operators.dedup import minhash_signatures
+    from pdf_parser_python_spark.operators.repetition import chunked_lines
+    from pdf_parser_python_spark.operators.textstats import token_count
+    from pdf_parser_python_spark.plans.lineage import CurationJob, DedupJob
+
+    n = 5
+    count = F.count(F.lit(1))
+    corpus = [
+        (f"jp-{i:03d}", generate_doc_spans(6100 + i, mean_questions=4))
+        for i in range(20)
+    ] + [("jp-fallback", _spans(_FALLBACK)), ("jp-empty", [])]
+    docs = spark.createDataFrame(corpus, schema=schema.DOCUMENT_SPANS_EXT)
+    fields = ("docs_parsed", "input_spans", "questions_emitted",
+              "spans_emitted", "parse_failures")
+    with tempfile.TemporaryDirectory() as td:
+        job = ExtractionJob(td, n_buckets=n)
+        job.run(spark, docs, max_buckets=2)
+        job.run(spark, docs)
+        assert _journal(job, fields) == _expected(
+            n, fields,
+            _by_bucket(docs, n, docs_parsed=count,
+                       input_spans=F.sum(F.size("spans"))),
+            _by_bucket(pipeline.extract_questions(docs), n,
+                       questions_emitted=count),
+            _by_bucket(pipeline.extract_flat_spans(docs), n,
+                       spans_emitted=count),
+        )
+
+    text = spark.createDataFrame(
+        [(i, ("the quick brown fox is in that for with and of to "
+              * (1 + i % 4)) if i % 5 else "zz")
+         for i in range(40)] + [(40, None), (41, "")],
+        "doc_id long, text string",
+    )
+    tokens = F.sum(token_count(F.coalesce(F.col("text"), F.lit(""))))
+    fields = ("docs_in", "input_tokens", "docs_gated", "docs_kept")
+    with tempfile.TemporaryDirectory() as td:
+        job = CurationJob(td, n_buckets=n)
+        job.run(spark, text)
+        gate = curation_filter(text, lines=chunked_lines(F.col("text"), 10))
+        assert _journal(job, fields) == _expected(
+            n, fields,
+            _by_bucket(text, n, docs_in=count, input_tokens=tokens),
+            _by_bucket(gate, n, docs_gated=count,
+                       docs_kept=F.sum(F.col("keep").cast("long"))),
+        )
+
+    text = text.where(F.col("text").isNotNull())
+    fields = ("docs_in", "input_tokens", "rows_emitted")
+    with tempfile.TemporaryDirectory() as td:
+        job = DedupJob(td, n_buckets=n, k=16, bands=4)
+        job.run(spark, text, max_bands=0)
+        sigs = minhash_signatures(text, k=16)
+        assert _journal(job, fields, "sig") == _expected(
+            n, fields,
+            _by_bucket(text, n, docs_in=count, input_tokens=tokens),
+            _by_bucket(sigs, n, rows_emitted=count),
+        )

@@ -79,12 +79,30 @@ def _packed_batch(docs):
     )
 
 
-def test_commit_kernel_counts_fallback_parse_failure(monkeypatch):
-    """The commit entrypoint flags exactly one row for a document whose
-    Python-fallback parse raises, and emits nothing else for it; the
-    other documents, on either kernel, parse normally. No Spark."""
+def _outputs(batches):
+    """Commit-kernel batches → {output: rows without the other output's
+    columns}."""
     import pyarrow as pa
 
+    from pdf_parser_python_spark.operators import vkernel
+
+    own = {
+        vkernel.COMMIT_QUESTIONS: vkernel.QUESTION_FINAL_ARROW_SCHEMA.names,
+        vkernel.COMMIT_FLAT_SPANS: vkernel.FLAT_ARROW_SCHEMA.names,
+        vkernel.COMMIT_FAILED: ["doc_id"],
+    }
+    out = {k: [] for k in own}
+    for r in pa.Table.from_batches(batches).to_pylist():
+        out[r["output"]].append({k: r[k] for k in own[r["output"]]})
+    return out
+
+
+def test_commit_kernel_counts_fallback_parse_failure(monkeypatch):
+    """The commit entrypoint emits exactly one ``failed`` row for a
+    document whose Python-fallback parse raises, and no question or
+    flat-span row for it; the other documents, on either kernel, emit
+    exactly the read-path kernels' questions and flat spans. No
+    Spark."""
     from pdf_parser_python_spark.operators import dkernel, vkernel
 
     exam = ["Question: 1 Which city is on two continents?",
@@ -101,23 +119,22 @@ def test_commit_kernel_counts_fallback_parse_failure(monkeypatch):
         return real(ds, *args, **kw)
 
     monkeypatch.setattr(dkernel, "_process_rows", boom)
-    out = pa.Table.from_batches(
-        list(vkernel.parse_docs_commit_arrow(iter([batch])))
-    ).to_pylist()
+    out = _outputs(list(vkernel.parse_docs_commit_arrow(iter([batch]))))
 
-    failed = [r for r in out if r["parse_failed"]]
-    assert len(failed) == 1 and failed[0]["doc_id"] == "bad"
-    assert not [r for r in out if r["doc_id"] == "bad"
-                and not r["parse_failed"]]
-    kept = {r["doc_id"]: r for r in out if not r["parse_failed"]}
-    assert set(kept) == {"ascii", "uni-ok"}
-    assert kept["uni-ok"]["options"][0]["text"] == "İstanbul"
-    # the unflagged rows are exactly the read-path kernel's output
-    final = pa.Table.from_batches(
-        list(vkernel.parse_docs_final_arrow(iter([batch])))
-    ).to_pylist()
-    assert [{k: v for k, v in r.items() if k != "parse_failed"}
-            for r in out if not r["parse_failed"]] == final
+    assert out[vkernel.COMMIT_FAILED] == [{"doc_id": "bad"}]
+    questions = out[vkernel.COMMIT_QUESTIONS]
+    spans = out[vkernel.COMMIT_FLAT_SPANS]
+    assert {r["doc_id"] for r in questions} == {"ascii", "uni-ok"}
+    assert {r["doc_id"] for r in spans} == {"ascii", "uni-ok"}
+    assert [r["options"][0]["text"] for r in questions
+            if r["doc_id"] == "uni-ok"] == ["İstanbul"]
+    # the good documents' rows are exactly the read-path kernels' output
+    final = [r for b in vkernel.parse_docs_final_arrow(iter([batch]))
+             for r in b.to_pylist()]
+    flat = [r for b in vkernel.parse_docs_flat_arrow(iter([batch]))
+            for r in b.to_pylist()]
+    assert questions == final
+    assert spans == flat and len(flat) > len(final)
 
 
 def test_crash_between_data_and_journal_reruns_bucket(spark):
@@ -139,8 +156,9 @@ def test_crash_between_data_and_journal_reruns_bucket(spark):
         def crash_once(row):
             if row["partition_id"] == 2 and not seen:
                 seen.append([
-                    os.path.isdir(os.path.join(d, "bucket=2"))
-                    for d in (job.questions_dir, job.spans_dir)
+                    os.path.isdir(os.path.join(
+                        job.commits_dir, "bucket=2", f"output={o}"))
+                    for o in ("questions", "flat_spans")
                 ])
                 raise RuntimeError("simulated driver crash")
             return real(row)
@@ -148,9 +166,18 @@ def test_crash_between_data_and_journal_reruns_bucket(spark):
         job._append_lineage = crash_once
         with pytest.raises(RuntimeError, match="simulated driver crash"):
             job.run(spark, docs)
-        assert seen == [[True, True]]  # both data dirs preceded it
+        assert seen == [[True, True]]  # both outputs' data preceded it
         assert 2 in job.pending_buckets()
         assert all(r["partition_id"] != 2 for r in job.lineage_rows())
+        # its data is on disk, but no read-back exposes an unjournaled
+        # bucket
+        staged = spark.read.parquet(
+            os.path.join(td, "input_bucketed", "bucket=2"))
+        b2 = {r.doc_id for r in staged.select("doc_id").collect()}
+        assert b2
+        for out in (job.questions(spark), job.flat_spans(spark)):
+            exposed = {r.doc_id for r in out.select("doc_id").collect()}
+            assert exposed and not exposed & b2
 
         second = job.run(spark, docs)
         assert 2 in second["processed"]
@@ -168,15 +195,27 @@ def test_crash_between_data_and_journal_reruns_bucket(spark):
         assert spans.count() == pipeline.extract_flat_spans(docs).count()
 
 
-def test_crash_between_questions_and_spans_writes_reruns_bucket(
-    spark, monkeypatch
-):
-    """A bucket that fails after its questions write and before its
-    flat-spans write is journaled failed and stays pending; its
-    half-written questions are not exposed, and the rerun leaves both
-    stores equal to the batch extraction with no duplicate
+def _fail_after_first_batch(kernel):
+    """``kernel`` that raises inside its Spark task after yielding its
+    first batch, so the task has started writing when it fails."""
+
+    def failing(batches):
+        for out in kernel(batches):
+            yield out
+            raise RuntimeError("simulated task failure in the commit job")
+
+    return failing
+
+
+def test_failure_inside_commit_job_reruns_bucket(spark, monkeypatch):
+    """A task failure inside a bucket's single commit job, after it
+    has begun writing, leaves the bucket journaled failed and pending;
+    neither committed output exposes any of its documents, and the
+    rerun leaves both equal to the batch extraction with no duplicate
     (doc_id, seq). Runs under the default pool."""
     import threading
+
+    from pdf_parser_python_spark.operators import vkernel
 
     corpus = [
         (f"qs-{i:03d}", generate_doc_spans(9500 + i, mean_questions=4))
@@ -189,13 +228,11 @@ def test_crash_between_questions_and_spans_writes_reruns_bucket(
     blown = []
 
     def flaky(self, func, *args, **kw):
-        if kw.get("schema", args[0] if args else None) is (
-            schema.FLAT_SPAN_SEQ
-        ):
+        if func is vkernel.parse_docs_commit_arrow:
             with lock:
                 if not blown:
                     blown.append(func)
-                    raise RuntimeError("simulated crash before flat spans")
+                    func = _fail_after_first_batch(func)
         return real(self, func, *args, **kw)
 
     with tempfile.TemporaryDirectory() as td:
@@ -204,21 +241,19 @@ def test_crash_between_questions_and_spans_writes_reruns_bucket(
         first = job.run(spark, docs)
         monkeypatch.undo()
 
-        failed = [r["partition_id"] for r in job.lineage_rows()
-                  if r["status"] == "failed"]
-        assert len(failed) == 1
-        b = failed[0]
+        failed = [r for r in job.lineage_rows() if r["status"] == "failed"]
+        assert len(blown) == 1 and len(failed) == 1
+        assert "simulated task failure" in failed[0]["error"]
+        b = failed[0]["partition_id"]
         assert b not in first["processed"] and first["remaining"] == [b]
         assert b in job.pending_buckets()
-        assert os.path.isdir(os.path.join(job.questions_dir, f"bucket={b}"))
-        assert not os.path.isdir(os.path.join(job.spans_dir, f"bucket={b}"))
         staged = spark.read.parquet(
             os.path.join(td, "input_bucketed", f"bucket={b}"))
         b_ids = {r.doc_id for r in staged.select("doc_id").collect()}
         assert b_ids
-        exposed = {r.doc_id for r in
-                   job.questions(spark).select("doc_id").collect()}
-        assert not exposed & b_ids
+        for out in (job.questions(spark), job.flat_spans(spark)):
+            exposed = {r.doc_id for r in out.select("doc_id").collect()}
+            assert exposed and not exposed & b_ids
 
         second = job.run(spark, docs)
         assert second["processed"] == [b] and second["remaining"] == []

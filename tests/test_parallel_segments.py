@@ -340,3 +340,62 @@ def test_chunked_vs_reference_random_compositions(spark):
             assert r.page_start == e["page_start"], doc_id
             assert r.page_end == e["page_end"], doc_id
             assert r.anomaly_score == e["anomaly_score"], doc_id
+
+
+def _py_safe_split(kind, text):
+    """Pure-Python safe-split definition: the first non-empty
+    ``str.strip()`` line of ``text.split("\\n")`` is a question anchor
+    and neither a solo artifact nor cover or boilerplate noise, under
+    the shared ``re`` grammar."""
+    from pdf_parser_python_spark.functions import anchors as A
+
+    if kind != "text":
+        return False
+    first = next(
+        (s for ln in (text or "").split("\n") if (s := ln.strip())), None
+    )
+    return bool(
+        first is not None
+        and A.RE_QUESTION.match(first)
+        and not A.RE_SOLO_QUESTION.match(first)
+        and not A.RE_COVER_NOISE.match(first)
+        and not A.is_noise_line(first)
+    )
+
+
+def test_safe_split_flag_matches_python_definition(spark):
+    """``chunked._safe_split_flag()`` equals the pure-Python definition
+    on first-line edge cases: blank and whitespace-only leading lines,
+    \\r\\n, every one of the 29 Python whitespace chars around and
+    inside an anchor line, \\u2028 inside a line, solo "Question 7",
+    cover-noise and noise-word first lines. No reference checkout."""
+    from pdf_parser_python_spark.functions import anchors as A
+    from pdf_parser_python_spark.operators import chunked
+
+    texts = [
+        "Question: 1 Which?", "\n\nQuestion: 2 x", "   \n\t \nQuestion: 3",
+        "Question: 4 a\r\nb", "\r\nQuestion: 5\r\n", " \r\n \r\nQuestion 6",
+        "Question: 7 tail", "Question 7 tail", " Question: 8",
+        "Question 7", "  Question 7  \nQuestion: 9", "question:10 lower",
+        "AZ-900\nQuestion: 1", "12\nQuestion: 1", "Question12",
+        "Topic 1, Case A\nQuestion: 3", "Page 3 of 10\nQuestion: 2",
+        "dumpsgate.com\nQuestion: 5", "=====\nQuestion: 5",
+        "https://x.example/q\nQuestion: 5", "Answer: A\nQuestion: 6",
+        "Questions and Answers PDF\nQuestion: 1", "", "\n", " \n\t\n",
+        None, "(A) opt\nQuestion: 2", "Question: 3\u2028more",
+        "Question 7\u2028x", "\u2028Question: 4\u2028", "AZ\u2028900",
+    ]
+    for c in A.PY_WS_CHARS:
+        texts += [
+            f"{c}\n{c}{c}Question:{c}5{c}\nnext",
+            f"{c}{c}\n{c}",
+            f"Question{c}6",
+            f"Question:{c}{c}7 body{c}",
+            f"Topic{c}1{c}x\nQuestion: 8",
+        ]
+    rows = [("text", t) for t in texts] + [("image", "Question: 1")]
+    df = spark.createDataFrame(rows, "kind string, text string")
+    got = [r[0] for r in df.select(chunked._safe_split_flag()).collect()]
+    want = [_py_safe_split(k, t) for k, t in rows]
+    assert got == want
+    assert 10 < sum(want) < len(want)

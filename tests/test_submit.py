@@ -71,12 +71,15 @@ def test_spark_submit_py_files_batch(spark, tmp_path):
     assert summary["docs_parsed"] == 30
     assert summary["parse_failures"] == 0
     assert summary["spans_emitted"] > 0
-    # outputs landed where the job said they would (bucket-partitioned)
-    qdir = os.path.join(out, "questions")
+    # outputs landed where the job said they would (bucket-partitioned:
+    # commits/bucket=b/output=questions)
+    cdir = os.path.join(out, "commits")
     parts = [
         f
-        for root, _dirs, files in os.walk(qdir)
+        for root, _dirs, files in os.walk(cdir)
+        if os.path.basename(root) == "output=questions"
+        and os.path.basename(os.path.dirname(root)).startswith("bucket=")
         for f in files
         if f.endswith(".parquet")
     ]
-    assert parts, os.listdir(qdir)
+    assert parts, os.listdir(cdir)
