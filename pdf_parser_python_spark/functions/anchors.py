@@ -13,7 +13,14 @@ Dialect notes (Python re ↔ Java regex):
 - ``match()`` (anchored-at-start) ↔ ``rlike`` is search semantics, so all
   patterns here are explicitly ``^``-anchored where the reference used
   ``.match``;
-- ``\\b``, ``\\s``, ``\\d`` behave identically for ASCII input.
+- ``\\b``, ``\\s``, ``\\d`` behave identically for ASCII input; Java's
+  ``(?U)`` makes them Unicode-aware, as Python's are;
+- IGNORECASE folds ſ, K (Kelvin sign), İ and ı into ASCII letters in
+  Python; ``(?iU)`` does the same in Java, so J_OPTION is ``(?iU)`` as
+  dkernel's option alternative is IGNORECASE;
+- RE2 (the vectorized kernel) has ASCII ``\\b``/``\\s``/``\\d`` and does
+  not fold İ/ı: operators/vkernel.py builds a Python-exact RE2 form of
+  this grammar for non-ASCII input.
 """
 
 from __future__ import annotations
@@ -110,7 +117,7 @@ RE_COVER_NOISE = re.compile(COVER_NOISE)
 # default on str patterns — PDFs carry NBSP and friends.
 
 J_QUESTION = "(?iU)" + QUESTION
-J_OPTION = "(?U)" + OPTION
+J_OPTION = "(?iU)" + OPTION
 J_ANSWER = "(?iU)" + ANSWER
 J_EXPLANATION = "(?iU)" + EXPLANATION
 J_HOTSPOT = "(?iU)" + HOTSPOT

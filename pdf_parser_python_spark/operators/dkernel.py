@@ -11,10 +11,9 @@ Tokenization (newline split, strip, noise filter) happens inside the
 kernel with compiled regexes — with packed input there is no data-size
 win from filtering JVM-side, since whole documents ship regardless.
 
-This is the ``packed-pandas`` engine, the twin the vectorized kernel
-(:mod:`.vkernel`) is tested against row for row, and that kernel's
-fallback for documents whose characters make RE2 and Python ``re``
-diverge. A pathological single document is one task here; the
+This is the ``packed-pandas`` engine and the twin the vectorized
+kernel (:mod:`.vkernel`) is tested against row for row. A
+pathological single document is one task here; the
 pipeline's giant-doc dispatch reroutes such documents to
 :mod:`.chunked`.
 """
@@ -294,19 +293,8 @@ def parse_docs_final(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     yielded = False
     for pdf in batches:
         out: list[tuple] = []
-        ids = pdf["doc_id"].to_numpy()
-        kinds = pdf["kinds"].to_numpy()
-        texts = pdf["texts"].to_numpy()
-        refs = pdf["refs"].to_numpy()
-        pages = pdf["pages"].to_numpy()
-        for r in range(len(ids)):
-            pg = pages[r]
-            pg_list = (
-                [1] * len(kinds[r])
-                if pg is None
-                else [1 if p is None or p != p else int(p) for p in pg]
-            )
-            for raw in _parse_doc(ids[r], kinds[r], texts[r], refs[r], pg_list):
+        for doc in _docs(pdf):
+            for raw in _parse_doc(*doc):
                 fin = _finalize_row(raw)
                 if fin is not None:
                     out.append(fin)
@@ -396,22 +384,10 @@ def validate_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     yielded = False
     for pdf in batches:
         out: list[tuple] = []
-        ids = pdf["doc_id"].to_numpy()
-        kinds = pdf["kinds"].to_numpy()
-        texts = pdf["texts"].to_numpy()
-        refs = pdf["refs"].to_numpy()
-        pages = pdf["pages"].to_numpy()
-        for r in range(len(ids)):
-            pg = pages[r]
-            pg_list = (
-                [1] * len(kinds[r])
-                if pg is None
-                else [1 if p is None or p != p else int(p) for p in pg]
-            )
+        for doc in _docs(pdf):
             fins = [
                 fin
-                for raw in _parse_doc(ids[r], kinds[r], texts[r], refs[r],
-                                      pg_list)
+                for raw in _parse_doc(*doc)
                 if (fin := _finalize_row(raw)) is not None
             ]
             rep = _validate_doc(fins)
@@ -427,6 +403,22 @@ def validate_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(
             {c: pd.Series(dtype=object) for c in _VALIDATION_COLUMNS}
         )
+
+
+def _docs(pdf: pd.DataFrame) -> Iterator[tuple]:
+    """A packed batch's documents as ``_parse_doc`` arguments. A null
+    span list is an empty document (native's explode drops it too); a
+    null page list, or a null page in one, is page 1."""
+    for doc_id, kinds, texts, refs, pages in zip(
+        pdf["doc_id"], pdf["kinds"], pdf["texts"], pdf["refs"],
+        pdf["pages"],
+    ):
+        if kinds is None:
+            kinds = texts = refs = pages = []
+        elif pages is None:
+            pages = [1] * len(kinds)
+        yield (doc_id, kinds, texts, refs,
+               [1 if p is None or p != p else int(p) for p in pages])
 
 
 def _parse_doc(doc_id: str, kinds, texts, refs, pages) -> list[tuple]:
@@ -468,19 +460,8 @@ def parse_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     yielded = False
     for pdf in batches:
         out: list[tuple] = []
-        ids = pdf["doc_id"].to_numpy()
-        kinds = pdf["kinds"].to_numpy()
-        texts = pdf["texts"].to_numpy()
-        refs = pdf["refs"].to_numpy()
-        pages = pdf["pages"].to_numpy()
-        for r in range(len(ids)):
-            pg = pages[r]
-            pg_list = (
-                [1] * len(kinds[r])
-                if pg is None
-                else [1 if p is None or p != p else int(p) for p in pg]
-            )
-            out.extend(_parse_doc(ids[r], kinds[r], texts[r], refs[r], pg_list))
+        for doc in _docs(pdf):
+            out.extend(_parse_doc(*doc))
         if out:
             yielded = True
             cols = list(zip(*out))
@@ -549,23 +530,8 @@ def parse_docs_flat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     yielded = False
     for pdf in batches:
         out: list[tuple] = []
-        ids = pdf["doc_id"].to_numpy()
-        kinds = pdf["kinds"].to_numpy()
-        texts = pdf["texts"].to_numpy()
-        refs = pdf["refs"].to_numpy()
-        pages = pdf["pages"].to_numpy()
-        for r in range(len(ids)):
-            pg = pages[r]
-            pg_list = (
-                [1] * len(kinds[r])
-                if pg is None
-                else [1 if p is None or p != p else int(p) for p in pg]
-            )
-            out.extend(
-                _flatten_rows(
-                    _parse_doc(ids[r], kinds[r], texts[r], refs[r], pg_list)
-                )
-            )
+        for doc in _docs(pdf):
+            out.extend(_flatten_rows(_parse_doc(*doc)))
         if out:
             yielded = True
             # zip-transpose: pandas infers dtype per column from a flat

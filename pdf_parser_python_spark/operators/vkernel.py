@@ -20,19 +20,18 @@ end:
 4. assemble output strings with stable lexsort + ``binary_join`` —
    fragments never become Python objects.
 
-Dialect safety: RE2's ``\\s``/``\\d``/``\\b`` are ASCII-only while
-Python's are Unicode-aware. ``\\s``/``\\S`` are rewritten to the exact
-29-char class Python treats as whitespace (anchors.PY_WS_CHARS — NBSP,
-NEL, Zs spaces and all; verified char-for-char over all of Unicode in
-tests), so ordinary non-ASCII text — including the unicode-whitespace
-torture real PDFs carry — stays on the vectorized path. Only documents
-containing a character that genuinely diverges between the dialects
-fall back to the row-exact Python kernel (:mod:`.dkernel`):
-non-ASCII decimal digits (Python ``\\d``/int() accept them), İ/ı
-(Python case-folds them into ASCII i/I, RE2 does not), or a ``\\b``
-noise-anchor word followed by a non-ASCII word char. Bit-equality with
-the reference FSM is never traded for speed; tests assert all engines
-agree and the fuzz suite ties this path to the live reference.
+Dialect: RE2's ``\\s``/``\\d``/``\\b`` are ASCII-only and its case
+folding skips İ/ı, while Python's are Unicode-aware. Each grammar
+pattern therefore has two RE2 forms. The ASCII form rewrites only
+``\\s``/``\\S`` to the exact 29-char class Python treats as whitespace
+(anchors.PY_WS_CHARS); on ASCII text it equals Python ``re`` by
+construction. The Python-exact form also spells ``\\d``, ``\\b``, a
+case-insensitive ``i`` and the option key class as classes read off
+Python's own ``re`` over every codepoint. A slice whose lines are all
+ASCII runs the ASCII form (the patterns are smaller and RE2 compiles
+them on every call); any other slice runs the Python-exact form. Every
+document stays on this path; tests assert row-equality with the Python
+kernel (:mod:`.dkernel`) over all of Unicode's divergent classes.
 
 Reference semantics: /root/reference/parser/state_machine.py:133-366
 (segmentation), crud.py:633-726 (flatten contract).
@@ -40,7 +39,9 @@ Reference semantics: /root/reference/parser/state_machine.py:133-366
 
 from __future__ import annotations
 
-from typing import Iterator
+import functools
+import re
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -55,44 +56,95 @@ from ..zipcache import drop_zip_finders
 # over all of Unicode is asserted by tests/test_engines.py).
 _WS_IN = "".join(f"\\x{{{ord(c):x}}}" for c in A.PY_WS_CHARS)
 
-#: chars/contexts where Python `re` and RE2 genuinely diverge — any
-#: span matching this routes its document to the Python kernel:
-#: İ/ı case-fold into ASCII only in Python; a \b-guarded noise word
-#: followed by a non-ASCII word char breaks only RE2's ASCII \b.
-#: (Non-ASCII digits are detected separately via \p{Nd} counts.)
-_R_RISKY = (
-    "[İı]"
-    "|(?i:choosing|your|materials|at|questions|certified|free)"
-    "[^\\x00-\\x7f]"
-)
+#: a bracketed class of a grammar pattern (RE2 has no nested classes)
+_CLASS = re.compile(r"(\[(?:[^\]\\]|\\.)*\])")
 
 
-def _re2(pattern: str, ci: bool) -> str:
-    # RE2 has no nested classes, so \s INSIDE [...] (e.g. [\s.:],
-    # [\s,]) must expand to the raw innards, not a bracketed class
-    import re as _pyre
+class _Grammar(NamedTuple):
+    """One RE2 form of every grammar pattern the kernel runs."""
 
-    p = _pyre.sub(
-        r"\[(?:[^\]\\]|\\.)*\]",
-        lambda m: m.group(0).replace("\\s", _WS_IN),
-        pattern,
+    question: str
+    option: str
+    answer: str
+    explanation: str
+    hotspot: str
+    noise: str  # NOISE_CI and NOISE_CS in one pass
+    cover: str
+
+
+def _py_class(pattern: str, every: str) -> str:
+    """RE2 class innards: the codepoint ranges of ``every`` (each
+    codepoint once, ascending) that Python's ``re`` matches with the
+    one-character ``pattern``."""
+    rng = ((ord(m[0][0]), ord(m[0][-1]))
+           for m in re.finditer(f"(?:{pattern})+", every))
+    return "".join(f"\\x{{{a:x}}}" + (f"-\\x{{{b:x}}}" if b > a else "")
+                   for a, b in rng)
+
+
+def _py_classes() -> dict:
+    """Python's Unicode ``\\d``, ``\\w``, case-insensitive ``i`` and
+    case-insensitive ``[A-Za-z]`` (the option key) as RE2 class innards,
+    read off Python's own ``re`` over every non-surrogate codepoint.
+    RE2's ``\\p{Nd}`` is no substitute: its Unicode tables can be newer
+    than Python's and count more digits."""
+    cps = np.arange(0x110000, dtype=np.uint32)
+    every = cps[(cps < 0xD800) | (cps > 0xDFFF)].tobytes().decode(
+        "utf-32-le")
+    return {k: _py_class(p, every) for k, p in (
+        ("d", r"\d"), ("w", r"\w"), ("i", "(?i:i)"),
+        ("key", "(?i:[A-Za-z])"))}
+
+
+def _re2(pattern: str, ci: bool, py: dict | None = None) -> str:
+    """RE2 form of a grammar pattern: ``\\s``/``\\S`` become Python's
+    whitespace set. With ``py`` (:func:`_py_classes`) ``\\d`` becomes
+    Python's decimal digits, ``\\b`` (always after an ASCII letter in
+    the grammar) a non-word char or the end, and a case-insensitive
+    ``i``/``I`` also matches İ and ı, which RE2 does not fold."""
+    parts = _CLASS.split(pattern)  # odd items are bracketed classes
+    for j, p in enumerate(parts):
+        if j % 2:  # inside a class: splice in the raw innards
+            p = p.replace("\\s", _WS_IN)
+        else:
+            if py:
+                if ci:
+                    p = re.sub(r"(?<!\\)[iI]", lambda _: f"[{py['i']}]", p)
+                p = p.replace("\\d", f"[{py['d']}]").replace(
+                    "\\b", f"(?-i:$|[^{py['w']}])")
+            p = p.replace("\\S", f"[^{_WS_IN}]").replace(
+                "\\s", f"[{_WS_IN}]")
+        parts[j] = p
+    p = "".join(parts)
+    return f"(?i:{p})" if ci else p
+
+
+def _grammar(py: dict | None) -> _Grammar:
+    key = py["key"] if py else "A-Za-z"
+    return _Grammar(
+        question=_re2(A.QUESTION.replace("(\\d+)", "(?P<q>\\d+)"), True,
+                      py),
+        option=_re2(A.OPTION.replace("([A-Za-z])", f"(?P<k>[{key}])"),
+                    False, py),
+        answer=_re2(A.ANSWER, True, py),
+        explanation=_re2(A.EXPLANATION, True, py),
+        hotspot=_re2(A.HOTSPOT, True, py),
+        noise=f"(?:{_re2(A.NOISE_CI, True, py)}|"
+              f"{_re2(A.NOISE_CS, False, py)})",
+        cover=_re2(A.COVER_NOISE, False, py),
     )
-    p = p.replace("\\S", f"[^{_WS_IN}]")
-    p = p.replace("\\s", f"[{_WS_IN}]")
-    return ("(?i)" + p) if ci else p
 
 
-_R_QUESTION = _re2(A.QUESTION, True).replace("(\\d+)", "(?P<q>\\d+)")
-_R_OPTION = _re2(A.OPTION, False).replace("([A-Za-z])", "(?P<k>[A-Za-z])")
-_R_ANSWER = _re2(A.ANSWER, True)
-_R_EXPLANATION = _re2(A.EXPLANATION, True)
-_R_HOTSPOT = _re2(A.HOTSPOT, True)
-_R_NOISE_CI = _re2(A.NOISE_CI, True)
-_R_NOISE_CS = _re2(A.NOISE_CS, False)
-#: both noise alternations in ONE pass (RE2 scoped (?i:) keeps the
-#: separator/URL rules case-sensitive) — used by the F9 group scrub
-_R_NOISE = f"(?:(?i:{_re2(A.NOISE_CI, False)})|{_re2(A.NOISE_CS, False)})"
-_R_COVER = _re2(A.COVER_NOISE, False)
+#: the form for slices whose lines are all ASCII
+_ASCII = _grammar(None)
+
+
+@functools.lru_cache(maxsize=1)
+def _exact() -> _Grammar:
+    """The Python-exact form, built on a process's first non-ASCII
+    slice (the class scan and the build take ~0.2 s)."""
+    return _grammar(_py_classes())
+
 
 #: NOTE (measured dead end, do not revisit): folding the whole grammar
 #: into ONE ordered-alternation extract_regex pass (dkernel._COMBINED_NOISE
@@ -168,71 +220,42 @@ def _run_cumsum(x: np.ndarray, start_idx: np.ndarray,
 def _qnum_i64(qs: pa.Array) -> np.ndarray:
     """Anchor digit string → int64, clamping values beyond int64 to
     QNUM_CAP (value-based: leading zeros stripped first — the reference
-    uses plain int(), state_machine.py:217)."""
+    uses plain int(), state_machine.py:217). Strings holding non-ASCII
+    digits convert with dkernel's own ``min(int(s), QNUM_CAP)``."""
+    asc = _np(pc.string_is_ascii(qs))
     stripped = pc.utf8_ltrim(qs, characters="0")
     big = _np(pc.greater(pc.utf8_length(stripped), 18).fill_null(False))
     safe = pc.if_else(
-        pa.array(big),
+        pa.array(big | ~asc),
         pa.scalar("0"),
         pc.if_else(pc.equal(stripped, ""), pa.scalar("0"), stripped),
     )
-    vals = _np(pc.cast(safe, pa.int64()))
-    return np.where(big, A.QNUM_CAP, vals)
+    vals = np.where(big, A.QNUM_CAP, _np(pc.cast(safe, pa.int64())))
+    for i in np.flatnonzero(~asc):
+        vals[i] = min(int(qs[i].as_py()), A.QNUM_CAP)
+    return vals
 
 
-# ── batch explosion + ascii routing ──────────────────────────────────────
+# ── batch explosion ──────────────────────────────────────────────────────
 
 
 def _explode_batch(batch: pa.RecordBatch):
-    """Packed batch → (doc_ids, vec row-stream dict, fallback doc list).
+    """Packed batch → (doc_ids, row-stream dict).
 
-    Docs containing dialect-divergent chars (module docstring) go to
-    the row-exact python kernel; everything else becomes one flat row
-    stream: text lines (split on \\n, python-strip, empties dropped)
-    interleaved with image rows, in span order.
+    Every document becomes part of one flat row stream: text lines
+    (split on \\n, python-strip, empties dropped) interleaved with
+    image rows, in span order. A null span list is an empty document.
+    The stream carries the grammar form its lines need (module
+    docstring): ASCII when every line is ASCII, else Python-exact.
     """
     doc_ids = batch.column("doc_id")
     kinds = batch.column("kinds")
-    texts = batch.column("texts")
-    refs = batch.column("refs")
     pages = batch.column("pages")
 
     span_parent = _np(pc.list_parent_indices(kinds)).astype(np.int64)
     kind_f = pc.list_flatten(kinds)
-    text_f = pc.list_flatten(texts)
-    ref_f = pc.list_flatten(refs)
-    ndocs = len(doc_ids)
-
+    text_f = pc.list_flatten(batch.column("texts"))
     is_img_span = _np(pc.equal(kind_f, "image").fill_null(False))
-
-    ok = np.ones(ndocs, dtype=bool)
-    if len(text_f):
-        tf = text_f.fill_null("")
-        na = np.flatnonzero(~_np(pc.string_is_ascii(tf)))
-        if len(na):
-            # risky checks only on the non-ASCII span subset
-            sub = pc.take(tf, pa.array(na))
-            risky = _m(sub, _R_RISKY) | (
-                _np(pc.count_substring_regex(sub, pattern="[\\p{Nd}]"))
-                > _np(pc.count_substring_regex(sub, pattern="[0-9]"))
-            )
-            ok[np.unique(span_parent[na[risky]])] = False
-
-    fb_docs = []
-    bad = np.flatnonzero(~ok)
-    if len(bad):
-        k_py = kinds.to_pylist()
-        t_py = texts.to_pylist()
-        r_py = refs.to_pylist()
-        p_py = pages.to_pylist()
-        for d in bad:
-            pg = p_py[d]
-            pg_list = (
-                [1] * len(k_py[d])
-                if pg is None
-                else [1 if p is None else int(p) for p in pg]
-            )
-            fb_docs.append((int(d), k_py[d], t_py[d], r_py[d], pg_list))
 
     # image spans contribute exactly one row each: blank their text
     split_src = pc.if_else(pa.array(is_img_span), pa.scalar(""),
@@ -242,31 +265,29 @@ def _explode_batch(batch: pa.RecordBatch):
     line_f = pc.utf8_trim(pc.list_flatten(lines_l),
                           characters=_STRIP_CHARS)
 
-    row_doc = span_parent[line_parent]
     row_img = is_img_span[line_parent]
-    nonempty = _np(pc.not_equal(line_f, ""))
-    keep = ok[row_doc] & (row_img | nonempty)
+    keep = row_img | _np(pc.not_equal(line_f, ""))
 
-    # span-indexed page numbers (packed_projection emits a real list per
-    # row or an all-null column when the source has no page field)
-    n_spans_total = len(kind_f)
-    span_page = np.ones(n_spans_total, dtype=np.int64)
-    if pages.null_count == 0 and len(pages):
-        pf = pc.list_flatten(pages).fill_null(1)
-        if len(pf) == n_spans_total:
-            span_page = _np(pf).astype(np.int64)
+    # span-indexed page numbers: 1 for the spans of a document without
+    # a page list (null, or an all-null column when the source has no
+    # page field)
+    span_page = np.ones(len(kind_f), dtype=np.int64)
+    paged = _np(pc.is_valid(pages))[span_parent]
+    if paged.any():
+        span_page[paged] = _np(pc.list_flatten(pages).fill_null(1))
 
     ki = np.flatnonzero(keep)
+    lines = pc.take(line_f, pa.array(ki))
     vec = {
-        "doc": row_doc[ki],
+        "doc": span_parent[line_parent[ki]],
         "img": row_img[ki],
         "span": line_parent[ki],
-        "lines": pc.take(line_f, pa.array(ki)),
-        "ref_f": ref_f,
+        "lines": lines,
+        "ref_f": pc.list_flatten(batch.column("refs")),
         "span_page": span_page,
-        "ndocs": ndocs,
+        "g": _ASCII if _np(pc.string_is_ascii(lines)).all() else _exact(),
     }
-    return doc_ids, vec, fb_docs
+    return doc_ids, vec
 
 
 # ── classification + segmentation ────────────────────────────────────────
@@ -282,17 +303,17 @@ def _rem(lines: pa.Array, pattern: str) -> pa.Array:
     ).fill_null("")
 
 
-def _classify(lines: pa.Array, img: np.ndarray) -> dict:
+def _classify(lines: pa.Array, img: np.ndarray, g: _Grammar) -> dict:
     """Full-corpus passes only where every line genuinely needs one;
     solo/cover/qnum run on the question-anchor subset (the per-class
     remainders are computed later on even smaller subsets)."""
     n = len(img)
-    noise = _m(lines, _R_NOISE)  # CI+CS alternations, one pass
-    q_hit = _m(lines, _R_QUESTION)
-    hot_m = _m(lines, _R_HOTSPOT)
-    okey_m = _m(lines, _R_OPTION)
-    ans_m = _m(lines, _R_ANSWER)
-    exp_m = _m(lines, _R_EXPLANATION)
+    noise = _m(lines, g.noise)  # CI+CS alternations, one pass
+    q_hit = _m(lines, g.question)
+    hot_m = _m(lines, g.hotspot)
+    okey_m = _m(lines, g.option)
+    ans_m = _m(lines, g.answer)
+    exp_m = _m(lines, g.explanation)
 
     txt = ~img
     noise &= txt
@@ -310,23 +331,23 @@ def _classify(lines: pa.Array, img: np.ndarray) -> dict:
         # group extraction only on the anchor subsets (~5% of lines)
         qia = pa.array(qi)
         lines_q = pc.take(lines, qia)
-        rem_q_sub = _rem(lines_q, _R_QUESTION)
+        rem_q_sub = _rem(lines_q, g.question)
         solo_sub = (
             ~_np(pc.match_substring(lines_q, ":").fill_null(False))
             & _np(pc.equal(rem_q_sub, ""))
         )
         solo[qi] = solo_sub
-        cover[qi] = _m(lines_q, _R_COVER)
+        cover[qi] = _m(lines_q, g.cover)
         qnum_sub = _qnum_i64(
             pc.struct_field(
-                pc.extract_regex(lines_q, pattern=_R_QUESTION), "q"
+                pc.extract_regex(lines_q, pattern=g.question), "q"
             ).fill_null("0")
         )
     okey_rows = np.flatnonzero(okey)
     okey_vals = pc.utf8_upper(
         pc.struct_field(
             pc.extract_regex(
-                pc.take(lines, pa.array(okey_rows)), pattern=_R_OPTION
+                pc.take(lines, pa.array(okey_rows)), pattern=g.option
             ),
             "k",
         ).fill_null("")
@@ -409,16 +430,17 @@ def _fragments(vec: dict, cl: dict, sg: dict) -> pa.Array:
     ki = sg["ki"]
     m = len(ki)
     lines_kept = pc.take(vec["lines"], pa.array(ki)).fill_null("")
+    g = vec["g"]
 
     pieces = [lines_kept]
     src_idx = np.arange(m, dtype=np.int64)  # default: the full line
     base = m
 
     for mask, pattern in (
-        (sg["anchor_q"], _R_QUESTION),
-        (sg["opt_valid"], _R_OPTION),
-        (sg["ans"], _R_ANSWER),
-        (sg["exp"], _R_EXPLANATION),
+        (sg["anchor_q"], g.question),
+        (sg["opt_valid"], g.option),
+        (sg["ans"], g.answer),
+        (sg["exp"], g.explanation),
     ):
         rows = np.flatnonzero(mask)
         if len(rows):
@@ -464,11 +486,11 @@ def _combine(arr):
 
 def _core(batch: pa.RecordBatch):
     """Shared front half: explode, classify, segment, fragment, join."""
-    doc_ids, vec, fb_docs = _explode_batch(batch)
-    cl = _classify(vec["lines"], vec["img"])
+    doc_ids, vec = _explode_batch(batch)
+    cl = _classify(vec["lines"], vec["img"], vec["g"])
     sg = _segment(vec, cl)
     if sg is None:
-        return doc_ids, None, fb_docs
+        return None
     frag = _fragments(vec, cl, sg)
 
     nonempty = _np(pc.not_equal(frag, ""))
@@ -480,15 +502,12 @@ def _core(batch: pa.RecordBatch):
         pc.take(frag, pa.array(ti)),
     )
 
-    # F9: scrub boilerplate explanations. Safe on the vectorized path
-    # even for non-ASCII text (NBSP/accents/Zs spaces stay here): docs
-    # whose chars make RE2 diverge from Python re (İ/ı case folds,
-    # non-ASCII digits, \b-relevant word chars) were already routed to
-    # the Python kernel by _explode_batch's dialect-divergence check.
+    # F9: scrub boilerplate explanations. The joined text is made of
+    # the slice's lines, so the slice's grammar form is exact for it.
     if len(g_qid):
         em = g_sec == 3
         if em.any():
-            badg = _m(joined, _R_NOISE_CI) | _m(joined, _R_NOISE_CS)
+            badg = _m(joined, vec["g"].noise)
             keepg = ~(em & badg)
             if not keepg.all():
                 g_qid, g_sec, g_oi = (g_qid[keepg], g_sec[keepg],
@@ -500,7 +519,7 @@ def _core(batch: pa.RecordBatch):
         "doc_ids": doc_ids, "vec": vec, "cl": cl, "sg": sg,
         "g_qid": g_qid, "g_sec": g_sec, "g_oi": g_oi, "joined": joined,
     }
-    return doc_ids, state, fb_docs
+    return state
 
 
 def _per_question_text(state, sec_code: int):
@@ -1007,40 +1026,12 @@ def _emit_final(state) -> pa.RecordBatch:
     )
 
 
-def _rows_batch(rows: list[tuple],
-                schema_: pa.Schema) -> pa.RecordBatch | None:
-    """Python-fallback rows (tuples in ``schema_`` column order) as one
-    Arrow batch; None when there are none."""
-    if not rows:
-        return None
-    cols = list(zip(*rows))
-    return pa.RecordBatch.from_arrays(
-        [pa.array(list(cols[i]), schema_.field(i).type)
-         for i in range(len(cols))],
-        schema=schema_,
-    )
-
-
-def _fallback_final(doc_ids, fb_docs) -> pa.RecordBatch | None:
-    from . import dkernel
-
-    ids_py = doc_ids.to_pylist()
-    return _rows_batch([
-        fin
-        for d, k, t, r, p in fb_docs
-        for raw in dkernel._parse_doc(ids_py[d], k, t, r, p)
-        if (fin := dkernel._finalize_row(raw)) is not None
-    ], QUESTION_FINAL_ARROW_SCHEMA)
-
-
 # ── bucket-commit emitter (plans/lineage.py) ────────────────────────────
 
 #: ``output`` values of a commit batch: the partition each row is
-#: written to, or the stand-in row of a document whose Python-fallback
-#: parse failed (counted by the commit, never written)
+#: written to
 COMMIT_QUESTIONS = "questions"
 COMMIT_FLAT_SPANS = "flat_spans"
-COMMIT_FAILED = "failed"
 
 #: union of QUESTION_FINAL and the flat-span columns it lacks, plus the
 #: ``output`` discriminator (schema.EXTRACTION_COMMIT): one parse emits
@@ -1054,11 +1045,12 @@ COMMIT_ARROW_SCHEMA = pa.schema(
 )
 
 
-def _commit_union(parts) -> pa.RecordBatch:
-    """``(batch, output)`` parts (None parts skipped) → ONE commit
-    batch: each part fills its own columns, nulls fill the rest, and
-    ``output`` names the part."""
-    parts = [(b, o) for b, o in parts if b is not None]
+def _emit_commit(state) -> pa.RecordBatch:
+    """Both committed outputs of one parse as ONE batch: each part
+    fills its own columns, nulls fill the rest, and ``output`` names
+    the part."""
+    parts = [(_emit_final(state), COMMIT_QUESTIONS),
+             (_emit_flat(state), COMMIT_FLAT_SPANS)]
     cols = [
         pa.concat_arrays([
             _combine(b.column(f.name)) if f.name in b.schema.names
@@ -1071,38 +1063,6 @@ def _commit_union(parts) -> pa.RecordBatch:
     cols.append(pa.concat_arrays(
         [pa.array([o] * len(b), pa.string()) for b, o in parts]))
     return pa.RecordBatch.from_arrays(cols, schema=COMMIT_ARROW_SCHEMA)
-
-
-def _emit_commit(state) -> pa.RecordBatch:
-    return _commit_union([(_emit_final(state), COMMIT_QUESTIONS),
-                          (_emit_flat(state), COMMIT_FLAT_SPANS)])
-
-
-def _fallback_commit(doc_ids, fb_docs) -> pa.RecordBatch:
-    """Fallback documents, each parsed ONCE: finalized questions, flat
-    spans, and one ``failed`` stand-in row per document whose parse
-    raised (its other rows are dropped, as finalize and flatten drop
-    them)."""
-    from . import dkernel
-
-    finals: list[tuple] = []
-    flats: list[tuple] = []
-    failed: list[str] = []
-    ids_py = doc_ids.to_pylist()
-    for d, k, t, r, p in fb_docs:
-        raws = dkernel._parse_doc(ids_py[d], k, t, r, p)
-        for raw in raws:
-            if raw[13]:
-                failed.append(raw[0])
-            elif (fin := dkernel._finalize_row(raw)) is not None:
-                finals.append(fin)
-        flats.extend(dkernel._flatten_rows(raws))
-    return _commit_union([
-        (_rows_batch(finals, QUESTION_FINAL_ARROW_SCHEMA), COMMIT_QUESTIONS),
-        (_rows_batch(flats, FLAT_ARROW_SCHEMA), COMMIT_FLAT_SPANS),
-        (pa.RecordBatch.from_arrays([pa.array(failed, pa.string())],
-                                    names=["doc_id"]), COMMIT_FAILED),
-    ])
 
 
 # ── validation emitter (per-doc ValidationReport) ────────────────────────
@@ -1242,69 +1202,7 @@ def _emit_validation(state) -> pa.RecordBatch:
     )
 
 
-def _fallback_validation(doc_ids, fb_docs) -> pa.RecordBatch | None:
-    from . import dkernel
-
-    rows: list[tuple] = []
-    ids_py = doc_ids.to_pylist()
-    for d, k, t, r, p in fb_docs:
-        fins = [
-            fin
-            for raw in dkernel._parse_doc(ids_py[d], k, t, r, p)
-            if (fin := dkernel._finalize_row(raw)) is not None
-        ]
-        rep = dkernel._validate_doc(fins)
-        if rep is not None:
-            rows.append(rep)
-    return _rows_batch(rows, VALIDATION_ARROW_SCHEMA)
-
-
 # ── mapInArrow entrypoints ───────────────────────────────────────────────
-
-
-def _fallback_flat(doc_ids, fb_docs) -> pa.RecordBatch | None:
-    from . import dkernel
-
-    rows: list[tuple] = []
-    ids_py = doc_ids.to_pylist()
-    for d, k, t, r, p in fb_docs:
-        rows.extend(dkernel._flatten_rows(
-            dkernel._parse_doc(ids_py[d], k, t, r, p)))
-    return _rows_batch(rows, FLAT_ARROW_SCHEMA)
-
-
-def _fallback_doc_text(doc_ids, fb_docs) -> pa.RecordBatch | None:
-    from . import dkernel
-
-    rows: list[tuple] = []
-    ids_py = doc_ids.to_pylist()
-    for d, k, t, r, p in fb_docs:
-        flat = dkernel._flatten_rows(dkernel._parse_doc(ids_py[d], k, t, r, p))
-        # FLAT schema tuple: (doc_id, seq, qnum, section, kind, text,
-        # media_ref, order) — text-kind spans in (seq, order) sequence
-        spans = sorted(
-            ((f[1], f[7], f[5]) for f in flat if f[4] == "text")
-        )
-        if spans:
-            rows.append(
-                (ids_py[d], " ".join(s[2] for s in spans), len(spans))
-            )
-    return _rows_batch(rows, DOC_TEXT_ARROW_SCHEMA)
-
-
-def _fallback_scalars(doc_ids, fb_docs) -> pa.RecordBatch | None:
-    from . import dkernel
-
-    rows: list[tuple] = []
-    ids_py = doc_ids.to_pylist()
-    for d, k, t, r, p in fb_docs:
-        for raw in dkernel._parse_doc(ids_py[d], k, t, r, p):
-            fin = dkernel._finalize_row(raw)
-            if fin is not None:
-                rows.append((fin[0], fin[1], fin[2], fin[3], fin[4],
-                             fin[7], fin[14]))
-    return _rows_batch(rows, QUESTION_SCALARS_ARROW_SCHEMA)
-
 
 #: docs per kernel slice. Spark hands Arrow batches of up to
 #: maxRecordsPerBatch (default 10k) PACKED documents — megabytes of
@@ -1324,21 +1222,16 @@ def _slices(batch: pa.RecordBatch):
         yield batch.slice(i, _SLICE_DOCS)
 
 
-def _entry(batches, emit, fallback, schema_):
+def _entry(batches, emit, schema_):
     drop_zip_finders()
     yielded = False
     for batch in (s for b in batches for s in _slices(b)):
-        doc_ids, state, fb_docs = _core(batch)
+        state = _core(batch)
         if state is not None:
             out = emit(state)
             if len(out):
                 yielded = True
                 yield out
-        if fb_docs:
-            fb = fallback(doc_ids, fb_docs)
-            if fb is not None and len(fb):
-                yielded = True
-                yield fb
     if not yielded:
         yield pa.RecordBatch.from_arrays(
             [pa.array([], f.type) for f in schema_],
@@ -1351,8 +1244,7 @@ def parse_docs_flat_arrow(
 ) -> Iterator[pa.RecordBatch]:
     """mapInArrow entrypoint: packed documents → canonical flat spans
     (schema.FLAT_SPAN_SEQ), strings Arrow-resident end to end."""
-    yield from _entry(batches, _emit_flat, _fallback_flat,
-                      FLAT_ARROW_SCHEMA)
+    yield from _entry(batches, _emit_flat, FLAT_ARROW_SCHEMA)
 
 
 def doc_text_arrow(
@@ -1362,8 +1254,7 @@ def doc_text_arrow(
     per document (doc_id, text, n_text_spans) — zero-Exchange exam
     reassembly (the groupBy(collect_list) it replaces re-shuffled rows
     the kernel already had colocated)."""
-    yield from _entry(batches, _emit_doc_text, _fallback_doc_text,
-                      DOC_TEXT_ARROW_SCHEMA)
+    yield from _entry(batches, _emit_doc_text, DOC_TEXT_ARROW_SCHEMA)
 
 
 def question_scalars_arrow(
@@ -1371,7 +1262,7 @@ def question_scalars_arrow(
 ) -> Iterator[pa.RecordBatch]:
     """mapInArrow entrypoint: packed documents → per-question scalar
     columns (the flagship extract_questions projection)."""
-    yield from _entry(batches, _emit_question_scalars, _fallback_scalars,
+    yield from _entry(batches, _emit_question_scalars,
                       QUESTION_SCALARS_ARROW_SCHEMA)
 
 
@@ -1380,8 +1271,7 @@ def parse_docs_final_arrow(
 ) -> Iterator[pa.RecordBatch]:
     """mapInArrow entrypoint: packed documents → finalized QUESTION_FINAL
     entities (nested options/images/anomalies built arrow-side)."""
-    yield from _entry(batches, _emit_final, _fallback_final,
-                      QUESTION_FINAL_ARROW_SCHEMA)
+    yield from _entry(batches, _emit_final, QUESTION_FINAL_ARROW_SCHEMA)
 
 
 def parse_docs_commit_arrow(
@@ -1391,8 +1281,7 @@ def parse_docs_commit_arrow(
     emits both committed outputs, finalized questions and flat spans,
     as one union-shaped batch (schema.EXTRACTION_COMMIT) whose
     ``output`` column is the partition each row is written to."""
-    yield from _entry(batches, _emit_commit, _fallback_commit,
-                      COMMIT_ARROW_SCHEMA)
+    yield from _entry(batches, _emit_commit, COMMIT_ARROW_SCHEMA)
 
 
 def validate_docs_arrow(
@@ -1400,5 +1289,4 @@ def validate_docs_arrow(
 ) -> Iterator[pa.RecordBatch]:
     """mapInArrow entrypoint: packed documents → per-doc
     ValidationReport rows in the same pass as the vectorized parse."""
-    yield from _entry(batches, _emit_validation, _fallback_validation,
-                      VALIDATION_ARROW_SCHEMA)
+    yield from _entry(batches, _emit_validation, VALIDATION_ARROW_SCHEMA)

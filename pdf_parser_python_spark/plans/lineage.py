@@ -229,11 +229,11 @@ class ExtractionJob:
         0.85/0.97/0.70 s against 1.00/1.01/0.90 s with two write jobs,
         and a two-bucket run with its read-back takes 3 Spark jobs
         instead of 12. Every
-        journal count is an Observation on this one job: questions,
-        flat spans and parse failures on the kernel output (the
-        stand-in row of a document whose Python-fallback parse failed
-        is counted, then dropped before the write), docs and spans on
-        the input.
+        journal count is an Observation on this one job: questions and
+        flat spans on the kernel output, docs and spans on the input.
+        ``parse_failures`` stays in the journal and is always 0: every
+        document parses in the vectorized kernel, so a parse that
+        raises fails the job, and the bucket is journaled ``failed``.
         """
         t0 = time.perf_counter()
         bdir = os.path.join(self.commits_dir, f"bucket={bucket}")
@@ -251,9 +251,8 @@ class ExtractionJob:
         ).observe(
             ob,
             *[F.count_if(out == v).alias(v) for v in (
-                vkernel.COMMIT_QUESTIONS, vkernel.COMMIT_FLAT_SPANS,
-                vkernel.COMMIT_FAILED)],
-        ).where(out != vkernel.COMMIT_FAILED).write.mode(
+                vkernel.COMMIT_QUESTIONS, vkernel.COMMIT_FLAT_SPANS)],
+        ).write.mode(
             "overwrite"
         ).partitionBy("output").parquet(bdir)
         n_docs, n_spans_in = self._input_counts(ob_in)
@@ -264,7 +263,7 @@ class ExtractionJob:
             "docs_parsed": n_docs,
             "spans_emitted": int(m[vkernel.COMMIT_FLAT_SPANS]),
             "questions_emitted": int(m[vkernel.COMMIT_QUESTIONS]),
-            "parse_failures": int(m[vkernel.COMMIT_FAILED]),
+            "parse_failures": 0,
             "wall_sec": round(time.perf_counter() - t0, 3),
             "input_spans": n_spans_in,
             "error": "",

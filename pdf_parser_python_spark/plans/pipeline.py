@@ -10,9 +10,9 @@ Exchange:
 
 The vectorized kernel (operators/vkernel.py) tokenizes, drops noise and
 runs the FSM inside the pass, and builds each output there, so no
-finalize/flatten stage follows it. Documents whose characters make RE2
-and Python ``re`` diverge fall back, inside the same pass, to the
-row-exact Python kernel (operators/dkernel.py). Documents above
+finalize/flatten stage follows it. It parses every document: a slice
+with non-ASCII lines runs RE2 patterns built with Python ``re``'s
+Unicode semantics. Documents above
 ``GIANT_DOC_SPANS`` spans reroute to operators/chunked.py: anchor-aligned
 chunks, one hash exchange on (doc_id, chunk), the same kernel.
 

@@ -161,8 +161,7 @@ FLAT_SPAN_SEQ = T.StructType(
 
 #: Bucket-commit batch (operators/vkernel.py parse_docs_commit_arrow):
 #: both committed outputs of ONE parse in one union shape. ``output``
-#: is the partition a row is written to ("questions" or "flat_spans"),
-#: or "failed" on the stand-in row of a document whose parse failed;
+#: is the partition a row is written to ("questions" or "flat_spans");
 #: every column the row's output lacks is null.
 EXTRACTION_COMMIT = T.StructType(
     [T.StructField(f.name, f.dataType, True) for f in QUESTION_FINAL.fields]

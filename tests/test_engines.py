@@ -121,34 +121,99 @@ def test_py_ws_chars_equals_python_whitespace_everywhere():
         assert (ch in ws) == ch.isspace(), hex(c)
 
 
-def test_nonascii_stays_on_vectorized_path(spark):
-    """NBSP/Zs whitespace and plain accented content must NOT trigger
-    the python fallback; genuinely divergent chars must."""
+def test_exact_grammar_classes_equal_python_everywhere():
+    """The vectorized kernel's Python-exact grammar form, run by RE2
+    over every codepoint, matches what Python's ``re`` matches: \\d, the
+    \\b rewrite (as \\W), case-insensitive letters (İ/ı fold into i
+    only in Python) and the option key class. No Spark."""
+    import re
+
+    import numpy as np
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     from pdf_parser_python_spark.operators import vkernel
 
-    def batch(text):
-        return pa.RecordBatch.from_arrays(
-            [
-                pa.array(["d"]),
-                pa.array([["text"]], pa.list_(pa.string())),
-                pa.array([[text]], pa.list_(pa.string())),
-                pa.array([[""]], pa.list_(pa.string())),
-                pa.array([[1]], pa.list_(pa.int32())),
-            ],
-            names=["doc_id", "kinds", "texts", "refs", "pages"],
-        )
+    cps = [c for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF]
+    chars = [chr(c) for c in cps]
+    arr = pa.array(chars)
+    every = "".join(chars)
+    py = vkernel._py_classes()
 
-    def falls_back(text):
-        _, _, fb = vkernel._explode_batch(batch(text))
-        return bool(fb)
+    def re2(pattern, strings=arr):
+        return {cps[i] for i in np.flatnonzero(
+            pc.match_substring_regex(strings, pattern=pattern)
+            .to_numpy(zero_copy_only=False))}
 
-    assert not falls_back("\xa0Question:\xa05\xa0\ncafé body")
-    assert not falls_back("body with Zs　spaces")
-    assert falls_back("Question: ٣")          # non-ASCII digit
-    assert falls_back("questİon: 5")          # İ folds to i only in re
-    assert falls_back("Thank you for yourété")  # \b divergence
+    def python(pattern):
+        return {ord(m[0]) for m in re.finditer(pattern, every)}
+
+    digits = re2(f"^[{py['d']}]$")
+    assert digits == {ord(c) for c in chars if c.isdecimal()}
+    assert digits == python(r"\d")
+    # RE2's \p{Nd} (Unicode 15) counts 20 digits that Python's does not
+    newer = {*range(0x11F50, 0x11F5A), *range(0x1E4F0, 0x1E4FA)}
+    assert newer <= re2(r"^\p{Nd}$") and not newer & digits
+
+    non_word = python(r"\W")
+    assert non_word == {ord(c) for c in chars
+                        if not (c.isalnum() or c == "_")}
+    after_a = pa.array(["a" + c for c in chars])
+    for ci in (False, True):
+        assert re2("^" + vkernel._re2(r"a\b", ci, py), after_a) == non_word
+        assert re2("^" + vkernel._re2(r"a\b", ci, py), pa.array(["a"]))
+
+    for letter in "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ":
+        got = re2(f"^{vkernel._re2(letter, True, py)}$")
+        assert got == python(f"(?i:{letter})"), letter
+    assert python("(?i:i)") == {ord(c) for c in "iIİı"}
+
+    key = python("(?i:[A-Za-z])")
+    assert re2(f"^[{py['key']}]$") == key
+    keys = pa.array([chr(c) for c in sorted(key)])
+    assert pc.utf8_upper(keys).to_pylist() == [
+        k.upper() for k in keys.to_pylist()]
+
+    exact = vkernel._exact()
+    for name, pattern in exact._asdict().items():
+        assert "\\b" not in pattern and "\\d" not in pattern, name
+
+
+def test_nonascii_stays_on_vectorized_path(spark, monkeypatch):
+    """Every document parses in the vectorized kernel, whatever its
+    characters: with dkernel's FSM patched to raise, all six entry
+    points return the rows its unpatched twin derives, for NBSP/Zs
+    whitespace, accents, Nd digits, İ/ı/ſ/K and \\b noise words."""
+    from pdf_parser_python_spark.operators import dkernel, vkernel
+
+    from .test_fuzz import UNI_WORDS, kernel_rows, packed_docs, twin_rows
+
+    texts = ["\xa0Question:\xa05\xa0\ncafé body", "body with Zs\u3000spaces",
+             "Question: ٣", "questİon: 5", "Thank you for yourété",
+             *UNI_WORDS]
+    docs = [
+        (f"u{i}", [{"kind": "text", "text": line, "media_ref": "",
+                    "offset": j, "page": 1 + j}
+                   for j, line in enumerate([
+                       t, "Question: 1 intro", t, "A. first", t,
+                       "Answer: A", "Explanation: " + t])])
+        for i, t in enumerate(texts)
+    ]
+    ascii_docs = [(f"a{i}", sp) for i, (_, sp) in enumerate(docs[:3])]
+    for _, sp in ascii_docs:
+        for s in sp:
+            s["text"] = s["text"].encode("ascii", "replace").decode()
+    batches = [packed_docs(ascii_docs + docs), packed_docs(ascii_docs)]
+    want = twin_rows(batches)
+    assert all(want.values())
+
+    def boom(*args, **kw):
+        raise AssertionError("the Python FSM ran")
+
+    monkeypatch.setattr(dkernel, "_parse_doc", boom)
+    monkeypatch.setattr(dkernel, "_process_rows", boom)
+    for name, rows in want.items():
+        assert kernel_rows(getattr(vkernel, name), batches) == rows, name
 
     # NBSP-wrapped anchor parses identically through the arrow path
     docs = spark.createDataFrame(
@@ -221,6 +286,72 @@ def test_packed_handles_mixed_null_pages(spark):
     assert [r.question_number for r in rows] == [3]
 
 
+def _json_rows(df):
+    from pyspark.sql import functions as F
+
+    return sorted(r[0] for r in df.select(
+        F.to_json(F.struct(*df.columns))).collect())
+
+
+def test_engines_read_unicode_option_bullets(spark):
+    """Python's IGNORECASE ``[A-Za-z]`` reads ſ, K (Kelvin sign), İ and
+    ı as option bullets, keyed by ``.upper()``: S, K, İ, I. All three
+    engines must, the Catalyst one through Java's ``(?iU)``."""
+    lines = ["Question: 1 Pick one", "A. first", "ſ. long s",
+             "\u212a) kelvin", "İ: dotted", "(ı) dotless", "Answer: ſ"]
+    docs = spark.createDataFrame(
+        [("bul", [{"kind": "text", "text": t, "media_ref": "",
+                   "offset": i, "page": 1} for i, t in enumerate(lines)])],
+        schema=schema.DOCUMENT_SPANS_EXT,
+    )
+    got = {e: _json_rows(pipeline.extract_questions(docs, engine=e))
+           for e in ("packed", "packed-pandas", "native")}
+    assert got["packed"] == got["packed-pandas"] == got["native"]
+    (q,) = pipeline.extract_questions(docs).collect()
+    assert [(o.key, o.text, o.is_correct) for o in q.options] == [
+        ("A", "first", False), ("S", "long s", True),
+        ("\u212a", "kelvin", False), ("İ", "dotted", False),
+        ("I", "dotless", False)]
+
+
+def test_engines_treat_null_spans_as_empty_document(spark):
+    """A parquet read does not enforce DOCUMENT_SPANS's non-null
+    ``spans``. A null span list is an empty document in every engine,
+    and the other documents of its Arrow batch keep their pages."""
+    from pyspark.sql import types as T
+
+    nullable = T.StructType([
+        T.StructField(f.name, f.dataType, f.name == "spans" or f.nullable)
+        for f in schema.DOCUMENT_SPANS_EXT.fields
+    ])
+
+    def doc(qnum, pages):
+        return [
+            {"kind": "text", "text": f"Question: {qnum} body",
+             "media_ref": "", "offset": 0, "page": pages[0]},
+            {"kind": "image", "text": "", "media_ref": f"img/{qnum}",
+             "offset": 1, "page": pages[1]},
+            {"kind": "text", "text": "Answer: A", "media_ref": "",
+             "offset": 2, "page": pages[1]},
+        ]
+
+    docs = spark.createDataFrame(
+        [("p1", doc(1, [3, 4])), ("nul", None), ("p2", doc(2, [5, 5]))],
+        schema=nullable,
+    ).coalesce(1)
+    for entry in ("extract_questions", "extract_flat_spans",
+                  "extract_validation"):
+        got = {e: _json_rows(getattr(pipeline, entry)(docs, engine=e))
+               for e in ("packed", "packed-pandas", "native")}
+        assert got["packed"] == got["packed-pandas"] == got["native"], entry
+    raw = {r.doc_id: r for r in pipeline.parse_raw(
+        docs, engine="packed").collect()}
+    assert sorted(raw) == ["p1", "p2"]
+    pages = sorted((r.doc_id, r.page_start, r.page_end)
+                   for r in pipeline.extract_questions(docs).collect())
+    assert pages == [("p1", 3, 4), ("p2", 5, 5)]
+
+
 def test_packed_handles_unsorted_spans(spark):
     spans = generate_doc_spans(7777, mean_questions=5)
     shuffled = list(reversed(spans))  # offsets encode the true order
@@ -238,18 +369,19 @@ def test_packed_handles_unsorted_spans(spark):
 def test_doc_text_equals_groupby_reassembly(spark):
     """r7: the in-kernel exam reassembly (pipeline.extract_doc_text)
     must be row-equal to the groupBy(collect_list) formulation it
-    replaces — including docs routed to the python fallback (risky
-    non-ASCII) and docs whose flat output has zero text spans."""
+    replaces — including a doc with non-ASCII digits (the kernel's
+    Python-exact grammar form) and docs whose flat output has zero text
+    spans."""
     from pyspark.sql import functions as F
 
     corpus = [
         (f"dtx-{i:03d}", generate_doc_spans(7000 + i, mean_questions=7))
         for i in range(12)
     ]
-    # a dialect-divergent doc (Arabic-Indic digits) → python fallback
+    # Arabic-Indic digits: its slice runs the Python-exact grammar form
     corpus.append(
         (
-            "dtx-fb",
+            "dtx-uni",
             [
                 ("text", "Question 1. ما هو ٣ زائد ٤؟", "", 0, 1),
                 ("text", "A. سبعة", "", 1, 1),
@@ -281,7 +413,7 @@ def test_doc_text_equals_groupby_reassembly(spark):
         .collect()
     )
     assert kernel == grouped
-    assert any(r[0] == "dtx-fb" for r in kernel)
+    assert any(r[0] == "dtx-uni" for r in kernel)
     assert len(kernel) == len(corpus)
 
     # forced-giant dispatch: the union branch must agree too

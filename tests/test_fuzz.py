@@ -4,7 +4,7 @@ reference FSM. This is the strongest guard on classification order
 and state-validity rules (hypothesis shrinks any divergence to a
 minimal line sequence)."""
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from .oracle import flatten_doc, run_reference
 
@@ -36,13 +36,49 @@ LINE = st.builds(
     st.lists(WORDS, min_size=0, max_size=4),
 )
 
-SPAN = st.one_of(
-    st.builds(lambda t: ("text", t), LINE),
-    st.builds(
-        lambda t1, t2: ("text", t1 + "\n" + t2), LINE, LINE
-    ),
-    st.builds(lambda i: ("image", f"img/{i}.png"), st.integers(0, 5)),
-)
+
+
+def _span_of(line):
+    return st.one_of(
+        st.builds(lambda t: ("text", t), line),
+        st.builds(
+            lambda t1, t2: ("text", t1 + "\n" + t2), line, line
+        ),
+        st.builds(lambda i: ("image", f"img/{i}.png"), st.integers(0, 5)),
+    )
+
+
+SPAN = _span_of(LINE)
+
+#: where RE2 and Python ``re`` part ways unless the vectorized kernel's
+#: Python-exact grammar form closes the gap: Nd digits (Arabic-Indic,
+#: Devanagari, fullwidth, mixed, zero-padded past 18 digits), Kawi
+#: digits (Nd in RE2's newer Unicode tables, not in Python's), İ/ı/ſ/K
+#: (Kelvin sign) in every keyword and option bullet, and \b noise words
+#: followed by letters, NBSP, dashes, "_" or a combining mark
+UNI_WORDS = [
+    "Question: ٣", "Question: ४२", "Question: ５", "Question: 1٢3",
+    "Question: \U00011f53", "Question 7\U00011f50:",
+    "Question: " + "٠" * 20 + "٤٢", "Question: " + "٩" * 25,
+    "questİon: 5", "QUESTıON 8:", "Queſtion: 6", "Question ٥", "٣",
+    "Anſwer: A", "\u212aey: ſ", "Answer: İ, A", "Answer: ı",
+    "Explanatıon:", "Reference İ", "Ratıonale:", "Solutİon", "HOTſPOT",
+    "ſ.", "\u212a)", "İ.", "(ı)", "ı:", "ſ -", "İstanbul", "optıon",
+    "Thank you for yourété", "Thank you for your\xa0visit",
+    "Thank you for choosing_x", "Get certified–now", "Download freeé",
+    "Visit us at\u0345", "For more questionsı", "Vİsit us at x",
+    "Topic ٣, x", "Page ٣ of ٥", "Box ٢: x", "Product Questions: ٣",
+    "examtopİcs.com x", "Thank you for your vİsit", "\xa0",
+]
+ASCII_WORDS = [w for w in WORDS.elements if w.isascii()]
+
+#: one document: all-ASCII, or drawn from every word above
+DOC = st.one_of(*(
+    st.lists(_span_of(st.builds(
+        " ".join, st.lists(st.sampled_from(words), max_size=4))),
+        max_size=12)
+    for words in (ASCII_WORDS, list(WORDS.elements) + UNI_WORDS)
+))
 
 
 def _spans(items):
@@ -82,22 +118,95 @@ def test_fuzz_fused_flat_kernel_matches_reference(items):
     assert got == expected
 
 
-def _vkernel_batch(spans):
+def packed_docs(docs):
+    """``[(doc_id, spans), ...]`` → one packed-projection Arrow batch."""
     import pyarrow as pa
 
-    spans = sorted(spans, key=lambda s: s["offset"])
+    docs = [(d, sorted(sp, key=lambda s: s["offset"])) for d, sp in docs]
+
+    def col(f, t):
+        return pa.array([[f(s) for s in sp] for _, sp in docs],
+                        pa.list_(t))
+
     return pa.RecordBatch.from_arrays(
         [
-            pa.array(["f"], pa.string()),
-            pa.array([[s["kind"] for s in spans]], pa.list_(pa.string())),
-            pa.array([[s["text"] for s in spans]], pa.list_(pa.string())),
-            pa.array([[s["media_ref"] for s in spans]],
-                     pa.list_(pa.string())),
-            pa.array([[s.get("page") or 1 for s in spans]],
-                     pa.list_(pa.int32())),
+            pa.array([d for d, _ in docs], pa.string()),
+            col(lambda s: s["kind"], pa.string()),
+            col(lambda s: s["text"], pa.string()),
+            col(lambda s: s["media_ref"], pa.string()),
+            col(lambda s: s.get("page") or 1, pa.int32()),
         ],
         names=["doc_id", "kinds", "texts", "refs", "pages"],
     )
+
+
+def _vkernel_batch(spans):
+    return packed_docs([("f", spans)])
+
+
+def kernel_rows(kernel, batches):
+    """A vkernel entry point's rows over ``batches`` as dicts, each map
+    value (an anomaly's context, a breakdown) as a dict."""
+    import pyarrow as pa
+
+    rows = pa.Table.from_batches(list(kernel(iter(batches)))).to_pylist()
+    for r in rows:
+        if r.get("anomaly_breakdown") is not None:
+            r["anomaly_breakdown"] = dict(r["anomaly_breakdown"])
+        for a in r.get("anomalies") or []:
+            if a["context"] is not None:
+                a["context"] = dict(a["context"])
+    return rows
+
+
+def twin_rows(batches):
+    """Every vkernel entry point's expected rows over ``batches``
+    (by entry-point name), derived from dkernel's row-exact Python FSM:
+    _flatten_rows, _finalize_row and _validate_doc per document, with
+    doc texts, question scalars and commit batches built from those."""
+    from pdf_parser_python_spark.operators import dkernel
+    from pdf_parser_python_spark.operators import vkernel as V
+
+    out = {k: [] for k in (
+        "parse_docs_flat_arrow", "parse_docs_final_arrow",
+        "question_scalars_arrow", "doc_text_arrow", "validate_docs_arrow",
+        "parse_docs_commit_arrow")}
+    for b in batches:
+        finals, flats = [], []
+        for d in b.to_pylist():
+            raws = dkernel._parse_doc(d["doc_id"], d["kinds"], d["texts"],
+                                      d["refs"], d["pages"])
+            flat = [dict(zip(V.FLAT_ARROW_SCHEMA.names, r))
+                    for r in dkernel._flatten_rows(raws)]
+            fins = [
+                fin for raw in raws
+                if (fin := dkernel._finalize_row(raw)) is not None
+            ]
+            finals += [dict(zip(V.QUESTION_FINAL_ARROW_SCHEMA.names, f))
+                       for f in fins]
+            flats += flat
+            rep = dkernel._validate_doc(fins)
+            if rep is not None:
+                out["validate_docs_arrow"].append(
+                    dict(zip(V.VALIDATION_ARROW_SCHEMA.names, rep)))
+            texts = sorted((r["seq"], r["order"], r["text"])
+                           for r in flat if r["kind"] == "text")
+            if texts:
+                out["doc_text_arrow"].append({
+                    "doc_id": d["doc_id"],
+                    "text": " ".join(t for _, _, t in texts),
+                    "n_text_spans": len(texts)})
+        out["parse_docs_final_arrow"] += finals
+        out["parse_docs_flat_arrow"] += flats
+        out["question_scalars_arrow"] += [
+            {k: f[k] for k in V.QUESTION_SCALARS_ARROW_SCHEMA.names}
+            for f in finals]
+        out["parse_docs_commit_arrow"] += [
+            {**dict.fromkeys(V.COMMIT_ARROW_SCHEMA.names), **r, "output": o}
+            for rows, o in ((finals, V.COMMIT_QUESTIONS),
+                            (flats, V.COMMIT_FLAT_SPANS))
+            for r in rows]
+    return out
 
 
 def _arrow_rows(kernel, spans):
@@ -165,52 +274,29 @@ def test_fuzz_vectorized_final_matches_reference(items):
     assert got == exp
 
 
-@given(st.lists(SPAN, min_size=1, max_size=25))
+@given(st.lists(st.lists(DOC, min_size=1, max_size=4), min_size=1,
+                max_size=3))
+@example([[
+    [("text", "Question: 1 pick\nA. first\nſ. long s option"),
+     ("text", "\u212a) kelvin\nAnswer: ſ")],
+    [("text", "Question: 2 plain\nA. yes\nAnswer: A")],
+]])
 @settings(max_examples=200, deadline=None)
-def test_fuzz_vectorized_validation_matches_pandas(items):
-    """The arrow kernels against their python twins on the same draw —
-    flat spans vs dkernel._flatten_rows, finalized entities vs
-    dkernel._finalize_row, validation vs _validate_doc. No reference
-    checkout needed; SPAN's Unicode words (non-ASCII digits, İ/ı) send
-    some draws through vkernel's fallback to the python FSM."""
-    from pdf_parser_python_spark.operators import dkernel, vkernel
+def test_fuzz_vectorized_validation_matches_pandas(draw):
+    """All six arrow entry points against their python twins on the
+    same draw (:func:`twin_rows`): flat spans, finalized entities,
+    question scalars, doc texts, validation reports and commit batches.
+    Each draw is up to three batches of ASCII and Unicode documents, so
+    both of the kernel's grammar forms run, and a Unicode document
+    shares its batch with ASCII ones. No reference checkout needed."""
+    from pdf_parser_python_spark.operators import vkernel
 
-    spans = _spans(items)
-    raws = dkernel._parse_doc("f", *_arrays(spans))
-    assert _arrow_rows(vkernel.parse_docs_flat_arrow, spans) == (
-        dkernel._flatten_rows(raws)
-    )
-    fins = [
-        fin for raw in raws if (fin := dkernel._finalize_row(raw)) is not None
-    ]
-    # arrow hands an anomaly's context map back as (key, value) pairs
-    got = [
-        r[:13] + ([
-            {**a, "context": None if a["context"] is None
-             else dict(a["context"])}
-            for a in r[13]
-        ],) + r[14:]
-        for r in _arrow_rows(vkernel.parse_docs_final_arrow, spans)
-    ]
-    assert got == fins
-    rep = dkernel._validate_doc(fins)
-    exp = [] if rep is None else [
-        rep[:10] + (dict(rep[10]), rep[11])
-    ]
-    got = []
-    for b in vkernel.validate_docs_arrow(iter([_vkernel_batch(spans)])):
-        for r in b.to_pylist():
-            got.append((
-                r["doc_id"], r["total_questions_detected"],
-                r["structured_successfully"],
-                r["questions_missing_answer"],
-                r["questions_missing_explanation"],
-                r["failed_to_structure"], r["orphan_images"],
-                r["missing_question_numbers"], r["gap_list_suppressed"],
-                r["duplicate_question_numbers"],
-                dict(r["anomaly_breakdown"]), r["success_rate"],
-            ))
-    assert got == exp
+    n = iter(range(1_000))
+    batches = [packed_docs([(f"d{next(n)}", _spans(items)) for items in docs])
+               for docs in draw]
+    want = twin_rows(batches)
+    for name, rows in want.items():
+        assert kernel_rows(getattr(vkernel, name), batches) == rows, name
 
 
 @given(st.lists(SPAN, min_size=1, max_size=25))

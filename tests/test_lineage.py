@@ -76,8 +76,9 @@ def _spans(texts, page=True):
 _EXAM = ["Question: 1 Which city is on two continents?",
          "(A) Istanbul", "(B) Paris", "Answer: A",
          "Explanation: it spans the Bosphorus."]
-#: İ and Arabic-Indic digits route a document to the Python fallback
-_FALLBACK = [t.replace("Istanbul", "İstanbul") for t in _EXAM] + [
+#: İ and Arabic-Indic digits make the kernel run its Python-exact
+#: grammar form on the document's slice
+_UNICODE = [t.replace("Istanbul", "İstanbul") for t in _EXAM] + [
     "Question: 2 How many continents does it touch?",
     "(A) ٢", "(B) 3", "Answer: A"]
 
@@ -92,7 +93,7 @@ def test_committed_outputs_equal_batch_extraction(spark, pageless):
         (f"eq-{i:03d}", generate_doc_spans(5000 + i, mean_questions=5))
         for i in range(12)
     ] + [
-        ("eq-fallback", _spans(_FALLBACK)),
+        ("eq-unicode", _spans(_UNICODE)),
         ("eq-empty", []),
         ("eq-anchorless", _spans(["just prose", "no anchors here"])),
     ]
@@ -115,7 +116,7 @@ def test_committed_outputs_equal_batch_extraction(spark, pageless):
         want_q = pipeline.extract_questions(docs)
         got_q = _row_set(job.questions(spark), want_q.columns)
         assert got_q == _row_set(want_q, want_q.columns)
-        assert any('"doc_id":"eq-fallback"' in r for r in got_q)
+        assert any('"doc_id":"eq-unicode"' in r for r in got_q)
         want_s = pipeline.extract_flat_spans(docs)
         assert _row_set(job.flat_spans(spark), want_s.columns) == (
             _row_set(want_s, want_s.columns))
@@ -314,7 +315,7 @@ def test_journal_rows_equal_independent_counts(spark):
     corpus = [
         (f"jp-{i:03d}", generate_doc_spans(6100 + i, mean_questions=4))
         for i in range(20)
-    ] + [("jp-fallback", _spans(_FALLBACK)), ("jp-empty", [])]
+    ] + [("jp-unicode", _spans(_UNICODE)), ("jp-empty", [])]
     docs = spark.createDataFrame(corpus, schema=schema.DOCUMENT_SPANS_EXT)
     fields = ("docs_parsed", "input_spans", "questions_emitted",
               "spans_emitted", "parse_failures")

@@ -89,46 +89,34 @@ def _outputs(batches):
     own = {
         vkernel.COMMIT_QUESTIONS: vkernel.QUESTION_FINAL_ARROW_SCHEMA.names,
         vkernel.COMMIT_FLAT_SPANS: vkernel.FLAT_ARROW_SCHEMA.names,
-        vkernel.COMMIT_FAILED: ["doc_id"],
     }
-    out = {k: [] for k in own}
+    out = {}
     for r in pa.Table.from_batches(batches).to_pylist():
-        out[r["output"]].append({k: r[k] for k in own[r["output"]]})
+        out.setdefault(r["output"], []).append(
+            {k: r[k] for k in own.get(r["output"], r)})
     return out
 
 
-def test_commit_kernel_counts_fallback_parse_failure(monkeypatch):
-    """The commit entrypoint emits exactly one ``failed`` row for a
-    document whose Python-fallback parse raises, and no question or
-    flat-span row for it; the other documents, on either kernel, emit
-    exactly the read-path kernels' questions and flat spans. No
-    Spark."""
-    from pdf_parser_python_spark.operators import dkernel, vkernel
+def test_commit_kernel_emits_read_path_rows():
+    """The commit entrypoint's questions and flat spans are exactly the
+    read-path kernels' output on a batch that mixes ASCII and Unicode
+    documents, and every row is one of those two outputs. No Spark."""
+    from pdf_parser_python_spark.operators import vkernel
 
     exam = ["Question: 1 Which city is on two continents?",
             "(A) Istanbul", "(B) Paris", "Answer: A"]
-    # İ routes a document to the Python fallback kernel
-    uni = [t.replace("Istanbul", "İstanbul") for t in exam]
-    batch = _packed_batch([("ascii", exam), ("uni-ok", uni), ("bad", uni)])
+    uni = [t.replace("Istanbul", "İstanbul") for t in exam] + [
+        "Question: ٢ How many continents?", "ſ. two", "(B) 3", "Answer: S"]
+    batch = _packed_batch([("ascii", exam), ("uni", uni), ("ascii2", exam)])
 
-    real = dkernel._process_rows
-
-    def boom(ds, *args, **kw):
-        if ds.doc_id == "bad":
-            raise RuntimeError("injected FSM failure")
-        return real(ds, *args, **kw)
-
-    monkeypatch.setattr(dkernel, "_process_rows", boom)
     out = _outputs(list(vkernel.parse_docs_commit_arrow(iter([batch]))))
-
-    assert out[vkernel.COMMIT_FAILED] == [{"doc_id": "bad"}]
+    assert set(out) == {vkernel.COMMIT_QUESTIONS, vkernel.COMMIT_FLAT_SPANS}
     questions = out[vkernel.COMMIT_QUESTIONS]
     spans = out[vkernel.COMMIT_FLAT_SPANS]
-    assert {r["doc_id"] for r in questions} == {"ascii", "uni-ok"}
-    assert {r["doc_id"] for r in spans} == {"ascii", "uni-ok"}
-    assert [r["options"][0]["text"] for r in questions
-            if r["doc_id"] == "uni-ok"] == ["İstanbul"]
-    # the good documents' rows are exactly the read-path kernels' output
+    assert {r["doc_id"] for r in questions} == {"ascii", "uni", "ascii2"}
+    assert [(r["question_number"], [o["text"] for o in r["options"]])
+            for r in questions if r["doc_id"] == "uni"] == [
+        (1, ["İstanbul", "Paris"]), (2, ["two", "3"])]
     final = [r for b in vkernel.parse_docs_final_arrow(iter([batch]))
              for r in b.to_pylist()]
     flat = [r for b in vkernel.parse_docs_flat_arrow(iter([batch]))

@@ -85,7 +85,7 @@ def _packed_batch():
             "(A) Istanbul", "(B) Paris", "Answer: A",
             "Explanation: it spans the Bosphorus.",
             "Question: 2 Pick one", "(A) yes", "(B) no", "Answer: B"]
-    # İ sends the second document through the Python fallback kernel
+    # İ makes the kernels run their Python-exact grammar form
     uni = [t.replace("Istanbul", "İstanbul") for t in exam]
     return packed_batch([("ascii", exam), ("uni", uni)])
 
