@@ -103,10 +103,6 @@ COVER_NOISE = r"^\s*(?:\d{1,5}|[A-Z][A-Za-z0-9\-_.]{0,30})\s*$"
 # ── compiled Python forms (for the pandas kernel + pure-python oracle) ───
 
 RE_QUESTION = re.compile(QUESTION, re.IGNORECASE)
-RE_OPTION = re.compile(OPTION)  # character class already covers both cases
-RE_ANSWER = re.compile(ANSWER, re.IGNORECASE)
-RE_EXPLANATION = re.compile(EXPLANATION, re.IGNORECASE)
-RE_HOTSPOT = re.compile(HOTSPOT, re.IGNORECASE)
 RE_SOLO_QUESTION = re.compile(SOLO_QUESTION, re.IGNORECASE)
 RE_NOISE_CI = re.compile(NOISE_CI, re.IGNORECASE)
 RE_NOISE_CS = re.compile(NOISE_CS)

@@ -6,9 +6,9 @@ pure-Catalyst FSM, operators/native.py) runs at ~23k lines/s on
 local[32] — ~15× slower than a single vkernel task, so auto-dispatch
 never won wall-clock. The fix exploits an FSM property instead of a
 different engine: a ``Question: N`` anchor line that is neither a solo
-"Question N" artifact (line-local test, dkernel.py:151-152) nor
+"Question N" artifact (line-local test, dkernel.py:141-142) nor
 cover-page noise (only consulted while no question is open,
-dkernel.py:153-156) unconditionally flushes the open question and
+dkernel.py:143-146) unconditionally flushes the open question and
 hard-resets all parser state (reference state_machine.py:205-230).
 Splitting a giant document AT such spans therefore yields pseudo-
 documents whose independent parses equal the whole-doc parse — the

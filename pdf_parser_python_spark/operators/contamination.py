@@ -49,8 +49,10 @@ def _reuse_expensive_input(documents: DataFrame) -> DataFrame:
     But when the input plan already crosses the Python boundary (a
     curation-gate kernel, an extraction pass), re-evaluating it doubles
     the most expensive stage of a composed pipeline — so persist
-    (LAZY, MEMORY_AND_DISK, reclaimed by the ContextCleaner on GC)
-    exactly when the analyzed plan carries a Python-eval node."""
+    (LAZY, MEMORY_AND_DISK) exactly when the analyzed plan carries a
+    Python-eval node. The session's CacheManager keeps that cache until
+    ``unpersist()`` or ``spark.catalog.clearCache()``: garbage
+    collecting the frame does not release it."""
     if documents.isStreaming:
         return documents
     try:

@@ -836,8 +836,9 @@ def minhash_dedup_clusters(
     # cache block is INTENTIONALLY retained: dropping it here would
     # force the caller to recompute the whole hop chain (whose
     # intermediate persists are already released). Callers that are
-    # done with the result should `.unpersist()` it — Spark's
-    # ContextCleaner reclaims the block on GC otherwise.
+    # done with the result should `.unpersist()` it: the session's
+    # CacheManager keeps the plan cached until `unpersist()` or
+    # `spark.catalog.clearCache()`, garbage collection does not free it.
     out = labels.select("doc_id", F.col("rep").alias("cluster_rep"))
     return out
 
@@ -1309,8 +1310,9 @@ def paragraph_dedup(
         # this) that doubles every stage before the dedup. A LAZY
         # persist (MEMORY_AND_DISK) materializes the exploded
         # paragraphs once on first action; no job runs at plan build.
-        # Spark's ContextCleaner reclaims the cache when the frame is
-        # garbage-collected.
+        # The session's CacheManager holds the cache until
+        # `unpersist()` or `spark.catalog.clearCache()`; garbage
+        # collecting the frame does not release it.
         paras = paras.persist()
     winners = (
         paras.where(F.col("para").isNotNull())
@@ -1344,6 +1346,7 @@ def paragraph_dedup(
         # r8: downstream composition (mixture plan + sample, packing's
         # prefix-sum sides) references this result several times — the
         # round-7 compose plan re-ran the reassembly aggregate 8×.
-        # Same lazy-persist rationale as `paras` above.
+        # Same lazy-persist rationale, and the same lifetime, as
+        # `paras` above.
         out = out.persist()
     return out

@@ -4,7 +4,8 @@ The input table is already one row per document with the full ordered
 span array, so the kernel parses straight off the packed rows:
 
     documents --array_sort(spans)--> 4 primitive arrays (native)
-        --mapInPandas(parse_docs*)--> question rows
+        --mapInPandas(parse_docs_final | parse_docs_flat | validate_docs)-->
+        finalized questions | flat spans | validation reports
 
 No shuffle anywhere; the only cross-row machinery is Arrow batching.
 Tokenization (newline split, strip, noise filter) happens inside the
@@ -15,7 +16,8 @@ This is the ``packed-pandas`` engine and the twin the vectorized
 kernel (:mod:`.vkernel`) is tested against row for row. A
 pathological single document is one task here; the
 pipeline's giant-doc dispatch reroutes such documents to
-:mod:`.chunked`.
+:mod:`.chunked`. A document the FSM raises on fails its task, as in
+the vectorized kernel.
 """
 
 from __future__ import annotations
@@ -53,13 +55,6 @@ _COMBINED_NOISE = re.compile(
 )
 _COVER = A.RE_COVER_NOISE
 
-_COLUMNS = [
-    "doc_id", "seq", "question_number", "question_type", "question_text",
-    "question_images", "options", "answer_text", "answer_images",
-    "explanation_text", "explanation_images", "page_start", "page_end",
-    "parse_failed",
-]
-
 # FSM states
 _QBODY, _OPTION, _ANSWER, _EXPL = 0, 1, 2, 3
 
@@ -67,14 +62,13 @@ _QBODY, _OPTION, _ANSWER, _EXPL = 0, 1, 2, 3
 class _DocState:
     """Accumulator for one document's question rows."""
 
-    __slots__ = ("doc_id", "seq", "cur", "rows", "failed")
+    __slots__ = ("doc_id", "seq", "cur", "rows")
 
     def __init__(self, doc_id: str) -> None:
         self.doc_id = doc_id
         self.seq = 0
         self.cur: list | None = None
         self.rows: list[tuple] = []
-        self.failed = False
 
     def flush_question(self) -> None:
         q = self.cur
@@ -87,15 +81,11 @@ class _DocState:
                     for (k, t, im) in q[4]
                 ],
                 " ".join(q[5]), q[6], " ".join(q[7]), q[8], q[9], q[10],
-                False,
             )
         )
         self.seq += 1
 
     def finish(self) -> list[tuple]:
-        if self.failed:
-            return [(self.doc_id, 0, -1, "mcq", "", [], [], "", [], "", [],
-                     1, 1, True)]
         if self.cur is not None:
             self.flush_question()
         return self.rows
@@ -232,14 +222,11 @@ def _answer_keys(ans: str) -> list[str]:
     return out
 
 
-def _finalize_row(r: tuple) -> tuple | None:
+def _finalize_row(r: tuple) -> tuple:
     """Python twin of operators/finalize.py (F8/F9/J5 + anomaly
-    stamping + computed fields) for the fused packed path; None for
-    parse_failed sentinels. Row-equality with the Column-API finalize is
-    asserted by tests — that implementation remains the reference one
-    for the other engines."""
-    if r[13]:
-        return None
+    stamping + computed fields) for the fused packed path. Row-equality
+    with the Column-API finalize is asserted by tests — that
+    implementation remains the reference one for the native engine."""
     qtext, qimgs, options = r[4], r[5], r[6]
     ans, aimgs, expl, eimgs = r[7], r[8], r[9], r[10]
     opts = [o for o in options if o["text"].strip() != "" or o["images"]]
@@ -294,10 +281,7 @@ def parse_docs_final(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         out: list[tuple] = []
         for doc in _docs(pdf):
-            for raw in _parse_doc(*doc):
-                fin = _finalize_row(raw)
-                if fin is not None:
-                    out.append(fin)
+            out.extend(_finalize_row(raw) for raw in _parse_doc(*doc))
         if out:
             yielded = True
             cols = list(zip(*out))
@@ -385,11 +369,7 @@ def validate_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         out: list[tuple] = []
         for doc in _docs(pdf):
-            fins = [
-                fin
-                for raw in _parse_doc(*doc)
-                if (fin := _finalize_row(raw)) is not None
-            ]
+            fins = [_finalize_row(raw) for raw in _parse_doc(*doc)]
             rep = _validate_doc(fins)
             if rep is not None:
                 out.append(rep)
@@ -447,47 +427,25 @@ def _parse_doc(doc_id: str, kinds, texts, refs, pages) -> list[tuple]:
                     m_l.append("")
                     p_l.append(pg)
     ds = _DocState(doc_id)
-    try:
-        _process_rows(ds, k_l, t_l, m_l, p_l)
-    except Exception:
-        ds.failed = True
+    _process_rows(ds, k_l, t_l, m_l, p_l)
     return ds.finish()
-
-
-def parse_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas entrypoint over (doc_id, kinds, texts, refs, pages)."""
-    drop_zip_finders()
-    yielded = False
-    for pdf in batches:
-        out: list[tuple] = []
-        for doc in _docs(pdf):
-            out.extend(_parse_doc(*doc))
-        if out:
-            yielded = True
-            cols = list(zip(*out))
-            yield pd.DataFrame({c: cols[i] for i, c in enumerate(_COLUMNS)})
-    if not yielded:
-        yield pd.DataFrame({c: pd.Series(dtype=object) for c in _COLUMNS})
 
 
 def _flatten_rows(raw_rows: list[tuple]) -> list[tuple]:
     """Apply the finalize rules flatten depends on (F8 ghost-option
-    filter, F9 explanation scrub, parse_failed drop — operators/
-    finalize.py) and emit the §1.4 canonical flatten
-    (operators/flatten.py semantics), directly as FLAT columns.
+    filter, F9 explanation scrub — operators/finalize.py) and emit the
+    §1.4 canonical flatten (operators/flatten.py semantics), directly
+    as FLAT columns.
 
     Why in the kernel: the Column-API finalize+flatten are interpreted
     higher-order array expressions — measured ~8s of a 13s stage at
     sf0.1 while the whole Python FSM costs ~2.5s. Emitting flat rows
     here removes the nested-array Arrow conversion AND the HOF stage;
     tests assert row-equality against the native finalize→flatten path,
-    which stays the reference implementation (and serves engines that
-    need the QUESTION_RAW form).
+    which stays the reference implementation.
     """
     out: list[tuple] = []
     for r in raw_rows:
-        if r[13]:  # parse_failed sentinel — finalize drops it
-            continue
         doc_id, seq, qnum = r[0], r[1], r[2]
         order = 0
 

@@ -4,7 +4,9 @@ Everything the reference does in ``_finalize_question`` /
 ``_mark_correct_options`` (/root/reference/parser/state_machine.py:368-459)
 is a pure function of the raw question row, so it runs as Catalyst
 Column expressions (higher-order array functions), keeping the work
-inside whole-stage codegen instead of the pandas kernel:
+inside whole-stage codegen. This is the ``native`` engine's finalize;
+the packed kernels fuse a row-equal twin into their pass
+(vkernel, dkernel._finalize_row):
 
 - F8 ghost-option filter (:373-377) → ``filter()`` HOF;
 - F9 explanation boilerplate scrub (:379-384) → ``regexp_like`` + when;
@@ -45,14 +47,12 @@ def _answer_keys(answer: Column) -> Column:
 def finalize_questions(raw: DataFrame) -> DataFrame:
     """Raw kernel rows → finalized questions with anomalies.
 
-    Input schema: schema.QUESTION_RAW. Output adds ``anomalies``,
-    ``anomaly_score``, ``has_question_text/answer/explanation``,
-    ``image_count`` and drops sentinel rows (``parse_failed``).
+    Input schema: schema.QUESTION_RAW. Output (schema.QUESTION_FINAL)
+    adds ``anomalies``, ``anomaly_score``,
+    ``has_question_text/answer/explanation`` and ``image_count``.
     """
-    df = raw.filter(~F.col("parse_failed"))
-
     # F8: drop options with no text and no images
-    df = df.withColumn(
+    df = raw.withColumn(
         "options",
         F.filter(
             "options",
@@ -155,6 +155,5 @@ def finalize_questions(raw: DataFrame) -> DataFrame:
                 "options", F.lit(0), lambda acc, o: acc + F.size(o["images"])
             ),
         )
-        .drop("parse_failed")
     )
     return df

@@ -25,6 +25,9 @@ partitioning), whole-stage codegen for classification, interpreted
 HOFs only at assembly. The Arrow kernels (vkernel/dkernel) remain the
 default because a linear scan in compiled-regex Python beats four
 window passes — but the semantics are identical and tests assert it.
+There is no giant-document path here: a document is one window
+partition. The packed engines' giant-doc dispatch (operators/chunked.py)
+is the intra-document parallel path.
 """
 
 from __future__ import annotations
@@ -41,30 +44,8 @@ def _strip_anchor(text, pattern: str):
     return F.trim(F.regexp_replace(text, pattern, ""))
 
 
-def parse_native(lines: DataFrame, chunk_size: int | None = None) -> DataFrame:
-    """Tokenized (noise-filtered) lines → QUESTION_RAW rows, natively.
-
-    ``chunk_size`` enables INTRA-document parallel segmentation for
-    pathological giant documents (SURVEY.md §4 salt-split-merge): the
-    doc-sequential prefix sum that numbers segments is replaced by the
-    classic two-phase scan —
-
-    1. per (doc, offset-chunk): local anchor counts (parallel),
-    2. exclusive scan over the per-chunk totals (tiny: rows = chunks),
-    3. seg = chunk base + within-chunk running count (parallel window
-       keyed (doc_id, _chunk)),
-
-    and the first-effective-anchor lookup becomes a map-side-combining
-    aggregation + join instead of a whole-doc window. After that, every
-    window/groupBy keys on (doc_id, _seg) — thousands of independent
-    tasks for a 10⁷-span document instead of one. State never crosses a
-    chunk boundary EXCEPT through the scanned base count, which is the
-    only carry an advance-only FSM needs for numbering; section
-    assignment stays within (doc, seg) groups, which parallelize by
-    construction. A single 10⁷-line *segment* (one question) would
-    still serialize — that degenerate shape is a content pathology the
-    reference would equally single-thread.
-    """
+def parse_native(lines: DataFrame) -> DataFrame:
+    """Tokenized (noise-filtered) lines → QUESTION_RAW rows, natively."""
     t = F.col("text")
     is_img = F.col("kind") == "image"
 
@@ -107,78 +88,28 @@ def parse_native(lines: DataFrame, chunk_size: int | None = None) -> DataFrame:
     )
 
     ordkey = F.struct(F.col("offset"), F.col("line_no"))
-    if chunk_size is None:
-        wdoc = Window.partitionBy("doc_id").orderBy("offset", "line_no")
-        wdoc_all = wdoc.rowsBetween(Window.unboundedPreceding,
-                                    Window.unboundedFollowing)
+    wdoc = Window.partitionBy("doc_id").orderBy("offset", "line_no")
+    wdoc_all = wdoc.rowsBetween(Window.unboundedPreceding,
+                                Window.unboundedFollowing)
 
-        # first effective anchor: earliest question anchor that is not
-        # cover-noise (state_machine.py:276-280 + 231-234)
-        df = df.withColumn(
-            "_first_eff",
-            F.min(F.when(F.col("_q") & ~F.col("_cover"), ordkey)).over(
-                wdoc_all
-            ),
-        )
-        df = df.where(
-            F.col("_first_eff").isNotNull() & (ordkey >= F.col("_first_eff"))
-        )
+    # first effective anchor: earliest question anchor that is not
+    # cover-noise (state_machine.py:276-280 + 231-234)
+    df = df.withColumn(
+        "_first_eff",
+        F.min(F.when(F.col("_q") & ~F.col("_cover"), ordkey)).over(wdoc_all),
+    )
+    df = df.where(
+        F.col("_first_eff").isNotNull() & (ordkey >= F.col("_first_eff"))
+    )
 
-        # segment id = running count of question anchors (all question
-        # anchors from the first effective one on are real anchors)
-        df = df.withColumn(
-            "_seg",
-            F.sum(F.col("_q").cast("int")).over(
-                wdoc.rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        )
-    else:
-        # intra-doc parallel path (docstring): chunked two-phase scan.
-        # Everything that must see the WHOLE document operates on the
-        # per-chunk summary table (rows = chunks, tiny); the line-level
-        # exchanges all key on (doc_id, _chunk) so one giant document
-        # spreads over many tasks at every stage.
-        df = df.withColumn(
-            "_chunk",
-            (F.col("offset").cast("long") / F.lit(chunk_size)).cast("long"),
-        )
-        cand = F.when(F.col("_q") & ~F.col("_cover"), ordkey)
-        pc1 = df.groupBy("doc_id", "_chunk").agg(F.min(cand).alias("_fc"))
-        firsts = pc1.select(
-            "doc_id",
-            "_chunk",
-            F.min("_fc").over(Window.partitionBy("doc_id")).alias(
-                "_first_eff"
-            ),
-        )
-        df = df.join(firsts, ["doc_id", "_chunk"]).where(
-            F.col("_first_eff").isNotNull() & (ordkey >= F.col("_first_eff"))
-        )
-
-        per_chunk = df.groupBy("doc_id", "_chunk").agg(
-            F.sum(F.col("_q").cast("int")).alias("_cq")
-        )
-        wchunks = (
-            Window.partitionBy("doc_id")
-            .orderBy("_chunk")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        bases = per_chunk.select(
-            "doc_id",
-            "_chunk",
-            F.coalesce(F.sum("_cq").over(wchunks), F.lit(0)).alias("_base"),
-        )
-        df = df.join(bases, ["doc_id", "_chunk"])
-        wchunk = Window.partitionBy("doc_id", "_chunk").orderBy(
-            "offset", "line_no"
-        )
-        df = df.withColumn(
-            "_seg",
-            F.col("_base")
-            + F.sum(F.col("_q").cast("int")).over(
-                wchunk.rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        )
+    # segment id = running count of question anchors (all question
+    # anchors from the first effective one on are real anchors)
+    df = df.withColumn(
+        "_seg",
+        F.sum(F.col("_q").cast("int")).over(
+            wdoc.rowsBetween(Window.unboundedPreceding, 0)
+        ),
+    )
 
     wseg = Window.partitionBy("doc_id", "_seg").orderBy("offset", "line_no")
     before = wseg.rowsBetween(Window.unboundedPreceding, -1)
@@ -335,6 +266,5 @@ def parse_native(lines: DataFrame, chunk_size: int | None = None) -> DataFrame:
         sec_imgs("explanation").alias("explanation_images"),
         F.coalesce(anchor_page, F.lit(1)).cast("int").alias("page_start"),
         F.coalesce(page_end, F.lit(1)).cast("int").alias("page_end"),
-        F.lit(False).alias("parse_failed"),
     )
     return out

@@ -16,19 +16,25 @@ Unicode semantics. Documents above
 ``GIANT_DOC_SPANS`` spans reroute to operators/chunked.py: anchor-aligned
 chunks, one hash exchange on (doc_id, chunk), the same kernel.
 
+Every packed entry point is the same plan (``_packed``): giant-doc
+split → packed_projection → one kernel pass → union with the chunked
+branch, whose QUESTION_FINAL rows each call maps to its own output.
+
 The other engines are row-equal by test: ``packed-pandas`` is the same
-plan with the pandas kernel under mapInPandas; ``native`` is the FSM in
+plan with the pandas kernel under mapInPandas (extract_questions,
+extract_flat_spans and extract_validation); ``native`` is the FSM in
 Catalyst over ``tokenize``'s line rows (noise filtered JVM-side), then
-finalize and flatten as Column expressions. Any other engine name
-raises ValueError when the plan is built.
+finalize and flatten as Column expressions (``parse_raw`` is its parse
+stage). Any other engine name raises ValueError when the plan is built,
+before any probe job runs.
 
 Scale notes (100 TB / 10^12 docs):
 - the packed default needs no shuffle: the input is already one row
   per document, and a pathological document is bounded by the giant-doc
   reroute instead;
 - on the native engine the hash partition by ``doc_id`` is the only
-  shuffle and the skew point (its ``chunk_size`` option is the
-  segment-level alternative).
+  shuffle and the skew point: it has no giant-doc dispatch, so a giant
+  document is one window task there.
 """
 
 from __future__ import annotations
@@ -38,9 +44,11 @@ from pyspark.sql import functions as F
 
 from .. import schema
 from ..functions import anchors as A
+from ..operators import dkernel
 from ..operators import finalize as _finalize
 from ..operators import flatten as _flatten
-from ..operators import dkernel
+from ..operators import native as _native
+from ..operators import validate as _validate
 
 #: Giant-document dispatch threshold (spans per doc). The packed engines
 #: carry one document per Arrow row, so a pathological doc is one task.
@@ -168,10 +176,10 @@ def _footer_max_doc_spans(documents: DataFrame) -> int | None:
     return mx
 
 
-def _resolve_threshold(documents: DataFrame, kw: dict) -> int | None:
+def _resolve_threshold(documents: DataFrame, giant_doc_spans) -> int | None:
     """Giant-doc dispatch policy for the packed engines.
 
-    ``giant_doc_spans`` kw: ``"auto"`` (default) bounds the corpus's
+    ``giant_doc_spans``: ``"auto"`` (default) bounds the corpus's
     max doc size — `any doc > GIANT_DOC_SPANS spans?` — and only
     builds the union plan when outliers exist, because the chunked
     branch carries seconds of fixed plan/stage overhead that the common
@@ -182,9 +190,8 @@ def _resolve_threshold(documents: DataFrame, kw: dict) -> int | None:
     (deterministic plan, no probe); None disables dispatch. Streaming
     inputs skip the probe (no eager jobs on a stream).
     """
-    threshold = kw.get("giant_doc_spans", "auto")
-    if threshold != "auto":
-        return threshold
+    if giant_doc_spans != "auto":
+        return giant_doc_spans
     if documents.isStreaming:
         return None
     try:
@@ -274,144 +281,141 @@ def tokenize(documents: DataFrame) -> DataFrame:
     return text_lines.select(cols).unionByName(images.select(cols))
 
 
-def parse_raw(
+def parse_raw(documents: DataFrame) -> DataFrame:
+    """documents → raw question rows (schema.QUESTION_RAW), pre-finalize:
+    the Catalyst FSM over ``tokenize``'s line rows — the ``native``
+    engine's parse stage."""
+    return _native.parse_native(tokenize(documents))
+
+
+def _packed(
     documents: DataFrame,
-    engine: str = "packed",
-    chunk_size: int | None = None,
+    engine: str,
+    giant_doc_spans,
+    out_schema,
+    arrow_fn: str,
+    pandas_fn,
+    giant,
 ) -> DataFrame:
-    """documents → raw question rows (pre-finalize).
+    """The packed plan every ``extract_*`` call shares: giant-doc split
+    → ``packed_projection`` → one kernel pass, unioned with the chunked
+    branch for the documents above the threshold.
 
-    engine="packed" (default): the pandas kernel straight off the
-    packed span arrays (operators/dkernel.py), scan → mapInPandas, no
-    shuffle. engine="native": the Catalyst FSM over ``tokenize``'s line
-    rows; ``chunk_size`` turns on its intra-doc parallel segmentation
-    for giant docs. Any other engine raises ValueError.
-    """
+    ``arrow_fn`` names the ``vkernel`` entry point (``engine="packed"``);
+    ``pandas_fn`` is its dkernel twin (``"packed-pandas"``), None where
+    the call has no twin. ``giant`` turns the chunked branch's
+    QUESTION_FINAL rows into ``out_schema`` rows. The engine is checked
+    before ``_resolve_threshold`` can run its probe job."""
     if engine == "packed":
-        proj = dkernel.packed_projection(documents)
-        return proj.mapInPandas(dkernel.parse_docs, schema=schema.QUESTION_RAW)
-    if engine == "native":
-        from ..operators.native import parse_native
+        from ..operators import vkernel
 
-        return parse_native(tokenize(documents), chunk_size=chunk_size)
-    raise ValueError(f"unknown engine {engine!r}")
+        kernel = getattr(vkernel, arrow_fn)
+    elif engine == "packed-pandas" and pandas_fn is not None:
+        kernel = pandas_fn
+    else:
+        raise ValueError(f"unknown engine {engine!r}")
+    threshold = _resolve_threshold(documents, giant_doc_spans)
+    small, big = (
+        (documents, None)
+        if threshold is None
+        else _giant_split(documents, threshold)
+    )
+    proj = dkernel.packed_projection(small)
+    if engine == "packed":
+        out = proj.mapInArrow(kernel, schema=out_schema)
+    else:
+        out = proj.mapInPandas(kernel, schema=out_schema)
+    if big is not None:
+        out = out.unionByName(giant(_parse_giant_final(big)))
+    return out
 
 
-def extract_questions(documents: DataFrame, **kw) -> DataFrame:
+def extract_questions(
+    documents: DataFrame, *, engine: str = "packed", giant_doc_spans="auto"
+) -> DataFrame:
     """documents → finalized question table (the flagship operator).
 
     Packed default = the vectorized Arrow kernel (parse + finalize in
     one pass, nested entities assembled arrow-side — operators/
     vkernel.py); engine="packed-pandas" keeps the fused pandas kernel;
     engine="native" keeps parse → Column finalize, and tests assert row
-    equality between all of them. Documents above ``giant_doc_spans``
-    (default auto-probe; None disables) auto-route to the anchor-chunked
-    branch (operators/chunked.py) — no single-task straggler on skewed
-    corpora."""
-    engine = kw.get("engine", "packed")
-    if engine in ("packed", "packed-pandas"):
-        threshold = _resolve_threshold(documents, kw)
-        small, big = (
-            (documents, None)
-            if threshold is None
-            else _giant_split(documents, threshold)
-        )
-        proj = dkernel.packed_projection(small)
-        if engine == "packed":
-            from ..operators import vkernel
-
-            out = proj.mapInArrow(
-                vkernel.parse_docs_final_arrow,
-                schema=schema.QUESTION_FINAL,
-            )
-        else:
-            out = proj.mapInPandas(
-                dkernel.parse_docs_final, schema=schema.QUESTION_FINAL
-            )
-        if big is not None:
-            out = out.unionByName(_parse_giant_final(big))
-        return out
-    return _finalize.finalize_questions(parse_raw(documents, **kw))
+    equality between all of them. On the packed engines, documents
+    above ``giant_doc_spans`` (default auto-probe; None disables)
+    route to the anchor-chunked branch (operators/chunked.py) — no
+    single-task straggler on skewed corpora. ``native`` has no
+    giant-doc dispatch and ignores ``giant_doc_spans``."""
+    if engine == "native":
+        return _finalize.finalize_questions(parse_raw(documents))
+    return _packed(
+        documents, engine, giant_doc_spans, schema.QUESTION_FINAL,
+        "parse_docs_final_arrow", dkernel.parse_docs_final,
+        lambda questions: questions,
+    )
 
 
-def extract_validation(documents: DataFrame, **kw) -> DataFrame:
+def extract_validation(
+    documents: DataFrame, *, engine: str = "packed", giant_doc_spans="auto"
+) -> DataFrame:
     """documents → per-doc ValidationReport (reference validator.py).
 
-    The default packed engine computes the report INSIDE the parse
-    kernel (dkernel.validate_docs): one scan → mapInPandas pass, zero
-    shuffle, and no question text ever crosses the Arrow boundary —
-    where extract_questions → validation_report pays the full FSM parse
-    and then aggregates it away (r2 bench: 6.99 s vs 5.69 s for the
-    parse alone at sf0.1). engine="native" keeps the relational
-    decomposition (operators/validate.py), row-equal by test."""
-    engine = kw.get("engine", "packed")
-    if engine in ("packed", "packed-pandas"):
-        from ..operators.validate import validation_report as _vrep
-
-        threshold = _resolve_threshold(documents, kw)
-        small, big = (
-            (documents, None)
-            if threshold is None
-            else _giant_split(documents, threshold)
+    The packed engines compute the report INSIDE the parse kernel
+    (vkernel.validate_docs_arrow / dkernel.validate_docs): one scan →
+    one kernel pass, zero shuffle, and no question text ever crosses
+    the Arrow boundary — where extract_questions → validation_report
+    pays the full FSM parse and then aggregates it away (r2 bench:
+    6.99 s vs 5.69 s for the parse alone at sf0.1). engine="native"
+    keeps the relational decomposition (operators/validate.py),
+    row-equal by test, and ignores ``giant_doc_spans``."""
+    if engine == "native":
+        return _validate.validation_report(
+            extract_questions(documents, engine="native")
         )
-        proj = dkernel.packed_projection(small)
-        if engine == "packed":
-            from ..operators import vkernel
-
-            out = proj.mapInArrow(
-                vkernel.validate_docs_arrow,
-                schema=schema.VALIDATION_REPORT,
-            )
-        else:
-            out = proj.mapInPandas(
-                dkernel.validate_docs, schema=schema.VALIDATION_REPORT
-            )
-        if big is not None:
-            out = out.unionByName(_vrep(_parse_giant_final(big)))
-        return out
-    from ..operators.validate import validation_report
-
-    return validation_report(extract_questions(documents, **kw))
+    return _packed(
+        documents, engine, giant_doc_spans, schema.VALIDATION_REPORT,
+        "validate_docs_arrow", dkernel.validate_docs,
+        _validate.validation_report,
+    )
 
 
-def extract_flat_spans(documents: DataFrame, **kw) -> DataFrame:
+def extract_flat_spans(
+    documents: DataFrame, *, engine: str = "packed", giant_doc_spans="auto"
+) -> DataFrame:
     """documents → canonical ordered output spans (§1.4 contract).
 
-    The default packed engine uses the FUSED kernel
-    (dkernel.parse_docs_flat): scan → one mapInPandas emitting flat
-    primitive columns. The Column-API finalize+flatten stage it
-    replaces is interpreted HOF expressions costing ~3× the FSM itself;
-    the fused path is row-equal by test. engine="native" keeps
-    parse → finalize → flatten (the reference decomposition).
+    The packed engines emit flat primitive columns straight from the
+    kernel pass (vkernel.parse_docs_flat_arrow: RE2 classify + numpy
+    segmented cumsums + arrow-side joins, strings never become Python
+    objects; dkernel.parse_docs_flat its pandas twin). The Column-API
+    finalize+flatten stage they replace is interpreted HOF expressions
+    costing ~3× the FSM itself; the fused path is row-equal by test.
+    engine="native" keeps parse → finalize → flatten (the reference
+    decomposition) and ignores ``giant_doc_spans``.
     """
-    engine = kw.get("engine", "packed")
-    if engine in ("packed", "packed-pandas"):
-        threshold = _resolve_threshold(documents, kw)
-        small, big = (
-            (documents, None)
-            if threshold is None
-            else _giant_split(documents, threshold)
+    if engine == "native":
+        return _flatten.flat_spans(
+            extract_questions(documents, engine="native")
         )
-        proj = dkernel.packed_projection(small)
-        if engine == "packed":
-            # vectorized kernel (operators/vkernel.py): RE2 classify +
-            # numpy segmented cumsums + arrow-side joins — strings never
-            # become Python objects (~2.7x the pandas fused kernel)
-            from ..operators import vkernel
+    return _packed(
+        documents, engine, giant_doc_spans, schema.FLAT_SPAN_SEQ,
+        "parse_docs_flat_arrow", dkernel.parse_docs_flat,
+        _flatten.flat_spans,
+    )
 
-            out = proj.mapInArrow(
-                vkernel.parse_docs_flat_arrow, schema=schema.FLAT_SPAN_SEQ
-            )
-        else:
-            out = proj.mapInPandas(
-                dkernel.parse_docs_flat, schema=schema.FLAT_SPAN_SEQ
-            )
-        if big is not None:
-            out = out.unionByName(
-                _flatten.flat_spans(_parse_giant_final(big))
-            )
-        return out
-    return _flatten.flat_spans(extract_questions(documents, **kw))
+
+def _giant_doc_text(questions: DataFrame) -> DataFrame:
+    flat = _flatten.flat_spans(questions).where(F.col("kind") == "text")
+    return flat.groupBy("doc_id").agg(
+        F.array_join(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(F.struct("seq", "order", "text"))
+                ),
+                lambda s: s["text"],
+            ),
+            " ",
+        ).alias("text"),
+        F.count("*").cast("bigint").alias("n_text_spans"),
+    )
 
 
 def extract_doc_text(
@@ -429,39 +433,10 @@ def extract_doc_text(
     .groupBy(doc_id).agg(sort-by-(seq, order) string join)`` — which
     is exactly what the rare giant-doc branch still computes (one
     extra shuffle over a handful of outlier docs)."""
-    from ..operators import vkernel
-
-    threshold = _resolve_threshold(
-        documents, {"giant_doc_spans": giant_doc_spans}
+    return _packed(
+        documents, "packed", giant_doc_spans, schema.DOC_TEXT,
+        "doc_text_arrow", None, _giant_doc_text,
     )
-    small, big = (
-        (documents, None)
-        if threshold is None
-        else _giant_split(documents, threshold)
-    )
-    proj = dkernel.packed_projection(small)
-    out = proj.mapInArrow(vkernel.doc_text_arrow, schema=schema.DOC_TEXT)
-    if big is not None:
-        flat = _flatten.flat_spans(_parse_giant_final(big)).where(
-            F.col("kind") == "text"
-        )
-        out = out.unionByName(
-            flat.groupBy("doc_id").agg(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(
-                                F.struct("seq", "order", "text")
-                            )
-                        ),
-                        lambda s: s["text"],
-                    ),
-                    " ",
-                ).alias("text"),
-                F.count("*").cast("bigint").alias("n_text_spans"),
-            )
-        )
-    return out
 
 
 def extract_question_scalars(
@@ -472,25 +447,8 @@ def extract_question_scalars(
     anomaly_score) via the vectorized kernel — the flagship query's
     projection without materializing nested options/images/anomalies.
     For the full QUESTION_FINAL entity table use extract_questions."""
-    from ..operators import vkernel
-
-    threshold = _resolve_threshold(
-        documents, {"giant_doc_spans": giant_doc_spans}
+    return _packed(
+        documents, "packed", giant_doc_spans, schema.QUESTION_SCALARS,
+        "question_scalars_arrow", None,
+        lambda questions: questions.select(*schema.QUESTION_SCALARS.names),
     )
-    small, big = (
-        (documents, None)
-        if threshold is None
-        else _giant_split(documents, threshold)
-    )
-    proj = dkernel.packed_projection(small)
-    out = proj.mapInArrow(
-        vkernel.question_scalars_arrow, schema=schema.QUESTION_SCALARS
-    )
-    if big is not None:
-        out = out.unionByName(
-            _parse_giant_final(big).select(
-                "doc_id", "seq", "question_number", "question_type",
-                "question_text", "answer_text", "anomaly_score",
-            )
-        )
-    return out

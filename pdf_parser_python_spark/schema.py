@@ -73,10 +73,10 @@ OPTION = T.StructType(
     ]
 )
 
-#: Raw parsed question emitted by the segmentation kernel — before the
-#: native finalize stage (ghost-option filter, explanation scrub, answer
-#: marking, anomaly stamping). Mirrors reference ParsedQuestion
-#: (models.py:135-191) minus computed fields.
+#: Raw parsed question emitted by the native segmentation stage
+#: (pipeline.parse_raw) — before the native finalize stage (ghost-option
+#: filter, explanation scrub, answer marking, anomaly stamping). Mirrors
+#: reference ParsedQuestion (models.py:135-191) minus computed fields.
 QUESTION_RAW = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),
@@ -97,7 +97,6 @@ QUESTION_RAW = T.StructType(
         T.StructField("explanation_images", T.ArrayType(T.StringType()), False),
         T.StructField("page_start", T.IntegerType(), False),
         T.StructField("page_end", T.IntegerType(), False),
-        T.StructField("parse_failed", T.BooleanType(), False),
     ]
 )
 
@@ -116,10 +115,10 @@ ANOMALY = T.StructType(
 )
 
 #: Finalized question entity — finalize_questions() output (and the
-#: fused packed kernel's): QUESTION_RAW minus parse_failed, plus the
-#: anomaly list and computed fields (reference models.py:162-191).
+#: fused packed kernels'): QUESTION_RAW plus the anomaly list and
+#: computed fields (reference models.py:162-191).
 QUESTION_FINAL = T.StructType(
-    [f for f in QUESTION_RAW.fields if f.name != "parse_failed"]
+    QUESTION_RAW.fields
     + [
         T.StructField("anomalies", T.ArrayType(ANOMALY), False),
         T.StructField("anomaly_score", T.IntegerType(), False),

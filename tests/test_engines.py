@@ -9,13 +9,11 @@ from pdf_parser_python_spark.plans import pipeline
 from pdf_parser_python_spark.sources.spans import generate_doc_spans
 
 
-def _flat(spark, docs, engine):
-    raw = pipeline.parse_raw(docs, engine=engine)
-    rows = flat_spans(finalize.finalize_questions(raw)).collect()
+def _flat(df):
     return sorted(
         (r.doc_id, r.seq, r.order, r.question_number, r.section, r.kind,
          r.text, r.media_ref)
-        for r in rows
+        for r in df.collect()
     )
 
 
@@ -25,25 +23,15 @@ def test_engines_agree(spark):
         for i in range(15)
     ]
     docs = spark.createDataFrame(corpus, schema=schema.DOCUMENT_SPANS_EXT)
-    packed = _flat(spark, docs, "packed")
-    native = _flat(spark, docs, "native")
-    assert packed == native
-    assert len(packed) > 200
-
-    # the vectorized arrow kernel (default extract_flat_spans path) and
-    # the fused pandas kernel must emit identical flat spans
-    vec = sorted(
-        (r.doc_id, r.seq, r.order, r.question_number, r.section, r.kind,
-         r.text, r.media_ref)
-        for r in pipeline.extract_flat_spans(docs).collect()
-    )
-    pand = sorted(
-        (r.doc_id, r.seq, r.order, r.question_number, r.section, r.kind,
-         r.text, r.media_ref)
-        for r in pipeline.extract_flat_spans(
-            docs, engine="packed-pandas").collect()
-    )
-    assert vec == pand
+    # native: parse_raw → Column-API finalize → flatten, stage by stage
+    native = _flat(flat_spans(finalize.finalize_questions(
+        pipeline.parse_raw(docs))))
+    # the fused pandas kernel and the vectorized arrow kernel (the
+    # default extract_flat_spans path) must emit identical flat spans
+    pand = _flat(pipeline.extract_flat_spans(docs, engine="packed-pandas"))
+    vec = _flat(pipeline.extract_flat_spans(docs))
+    assert native == pand == vec
+    assert len(native) > 200
 
     # question scalars (vectorized) vs the full finalize pipeline
     scal = sorted(
@@ -93,8 +81,7 @@ def test_engines_agree(spark):
 @pytest.mark.parametrize("engine", ["grouped", "partition", "pandas"])
 @pytest.mark.parametrize(
     "entry",
-    ["parse_raw", "extract_questions", "extract_flat_spans",
-     "extract_validation"],
+    ["extract_questions", "extract_flat_spans", "extract_validation"],
 )
 def test_unknown_engine_raises_at_plan_time(spark, entry, engine):
     """An engine name outside packed / packed-pandas / native is a
@@ -103,6 +90,21 @@ def test_unknown_engine_raises_at_plan_time(spark, entry, engine):
     docs = spark.createDataFrame([], schema=schema.DOCUMENT_SPANS_EXT)
     with pytest.raises(ValueError, match="unknown engine"):
         getattr(pipeline, entry)(docs, engine=engine)
+
+
+def test_entry_points_take_explicit_options(spark):
+    """``engine`` and ``giant_doc_spans`` are explicit keyword options
+    of every engine (``native`` ignores the threshold), and any other
+    keyword is a TypeError rather than silently dropped."""
+    docs = spark.createDataFrame([], schema=schema.DOCUMENT_SPANS_EXT)
+    for entry in ("extract_questions", "extract_flat_spans",
+                  "extract_validation"):
+        for engine in ("packed", "packed-pandas", "native"):
+            df = getattr(pipeline, entry)(
+                docs, engine=engine, giant_doc_spans=None)
+            assert df.collect() == [], (entry, engine)
+    with pytest.raises(TypeError):
+        pipeline.extract_questions(docs, chunk_size=7)
 
 
 def test_py_ws_chars_equals_python_whitespace_everywhere():
@@ -254,8 +256,8 @@ def test_zero_padded_and_overflow_qnum_clamp(spark):
         [("zp", spans)], schema=schema.DOCUMENT_SPANS_EXT
     )
     per_engine = {}
-    for engine in ("packed", "native"):
-        rows = pipeline.parse_raw(docs, engine=engine).collect()
+    for engine in ("packed", "packed-pandas", "native"):
+        rows = pipeline.extract_questions(docs, engine=engine).collect()
         per_engine[engine] = sorted(
             (r.seq, r.question_number) for r in rows
         )
@@ -344,8 +346,7 @@ def test_engines_treat_null_spans_as_empty_document(spark):
         got = {e: _json_rows(getattr(pipeline, entry)(docs, engine=e))
                for e in ("packed", "packed-pandas", "native")}
         assert got["packed"] == got["packed-pandas"] == got["native"], entry
-    raw = {r.doc_id: r for r in pipeline.parse_raw(
-        docs, engine="packed").collect()}
+    raw = {r.doc_id: r for r in pipeline.parse_raw(docs).collect()}
     assert sorted(raw) == ["p1", "p2"]
     pages = sorted((r.doc_id, r.page_start, r.page_end)
                    for r in pipeline.extract_questions(docs).collect())

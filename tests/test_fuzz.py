@@ -178,10 +178,7 @@ def twin_rows(batches):
                                       d["refs"], d["pages"])
             flat = [dict(zip(V.FLAT_ARROW_SCHEMA.names, r))
                     for r in dkernel._flatten_rows(raws)]
-            fins = [
-                fin for raw in raws
-                if (fin := dkernel._finalize_row(raw)) is not None
-            ]
+            fins = [dkernel._finalize_row(raw) for raw in raws]
             finals += [dict(zip(V.QUESTION_FINAL_ARROW_SCHEMA.names, f))
                        for f in fins]
             flats += flat
@@ -322,8 +319,6 @@ def test_fuzz_fused_finalize_matches_reference(items):
     got = []
     for r in raw:
         f = dkernel._finalize_row(r)
-        if f is None:
-            continue
         got.append((
             f[2], f[3],
             [(o["key"], o["is_correct"]) for o in f[6]],

@@ -17,7 +17,7 @@ from .oracle import flatten_doc, run_reference
 
 
 def _native_flat(spark, docs):
-    raw = pipeline.parse_raw(docs, engine="native")
+    raw = pipeline.parse_raw(docs)
     return flat_spans(finalize.finalize_questions(raw)).collect()
 
 

@@ -46,7 +46,7 @@ def test_native_engine_fuzz_corpus(spark):
     docs = spark.createDataFrame(
         list(corpus.items()), schema=schema.DOCUMENT_SPANS_EXT
     )
-    raw = pipeline.parse_raw(docs, engine="native")
+    raw = pipeline.parse_raw(docs)
     rows = flat_spans(finalize.finalize_questions(raw)).collect()
     by_doc = {d: [] for d in corpus}
     for r in rows:

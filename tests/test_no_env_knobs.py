@@ -1,6 +1,8 @@
 """The package reads no ``PDFP_*`` environment variables: its behaviour
-follows from its arguments and the Spark session alone. No Spark."""
+follows from its arguments and the Spark session alone, and the
+extraction entry points name every option they take. No Spark."""
 
+import ast
 import pathlib
 
 PACKAGE = pathlib.Path(__file__).resolve().parent.parent / (
@@ -17,3 +19,18 @@ def test_package_has_no_pdfp_env_knobs():
         if "PDFP_" in line
     ]
     assert hits == []
+
+
+def test_pipeline_entry_points_declare_no_kwargs():
+    """A public ``plans.pipeline`` function names its options, so a
+    misspelled or unsupported one is a TypeError, not silently
+    dropped."""
+    tree = ast.parse((PACKAGE / "plans" / "pipeline.py").read_text())
+    public = [
+        node for node in tree.body
+        if isinstance(node, ast.FunctionDef) and not node.name.startswith("_")
+    ]
+    assert {f.name for f in public} >= {
+        "extract_questions", "extract_flat_spans", "extract_validation",
+        "extract_doc_text", "extract_question_scalars", "parse_raw"}
+    assert [f.name for f in public if f.args.kwarg is not None] == []

@@ -1,39 +1,14 @@
-"""Intra-document parallel segmentation (native engine, chunk_size):
-the doc-sequential segment-numbering prefix sum becomes a two-phase
-chunked scan, so one giant document parses across many tasks with
-span-identical output."""
+"""Intra-document parallelism for giant documents: the packed engines'
+giant-doc dispatch splits a document at anchor-aligned chunks
+(operators/chunked.py) and parses them with the same vectorized kernel,
+so one giant document parses across many tasks with row-identical
+output."""
 
 from pyspark.sql import functions as F
 
 from pdf_parser_python_spark import schema
-from pdf_parser_python_spark.operators import finalize
-from pdf_parser_python_spark.operators.flatten import flat_spans
-from pdf_parser_python_spark.operators.native import parse_native
 from pdf_parser_python_spark.plans import pipeline
 from pdf_parser_python_spark.sources.spans import generate_doc_spans
-
-
-def _flat(spark, docs, **kw):
-    raw = pipeline.parse_raw(docs, **kw)
-    rows = flat_spans(finalize.finalize_questions(raw)).collect()
-    return sorted(
-        (r.doc_id, r.seq, r.order, r.question_number, r.section, r.kind,
-         r.text, r.media_ref)
-        for r in rows
-    )
-
-
-def test_chunked_native_equals_packed_on_faulted_corpus(spark):
-    """chunk_size=7 slices every fault-injected document mid-question
-    (boundary carry exercised hard); output must be span-identical."""
-    corpus = [
-        (f"pseg-{i}", generate_doc_spans(6200 + i, mean_questions=8))
-        for i in range(10)
-    ]
-    docs = spark.createDataFrame(corpus, schema=schema.DOCUMENT_SPANS_EXT)
-    assert _flat(spark, docs, engine="packed") == _flat(
-        spark, docs, engine="native", chunk_size=7
-    )
 
 
 def _giant_lines(spark, n_questions: int, parts: int = 16):
@@ -66,52 +41,6 @@ def _giant_lines(spark, n_questions: int, parts: int = 16):
         F.lit(0).alias("line_no"),
         F.lit(1).alias("page"),
     )
-
-
-def test_giant_single_doc_parses_in_parallel(spark):
-    n_q = 20_000  # 100k lines, one document
-    lines = _giant_lines(spark, n_q)
-    out = parse_native(lines, chunk_size=1000)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # the scan stages key on (doc_id, _chunk)/(doc_id, _seg) — never a
-    # whole-document window, so one doc spreads over many tasks
-    import re as _re
-
-    parts = _re.findall(r"hashpartitioning\(([^)]*)\)", plan)
-    assert parts, plan[:500]
-    assert any("_chunk" in p for p in parts)
-    assert any("_seg" in p for p in parts)
-    # runtime proof of intra-doc parallelism: the single document's
-    # questions are assembled across >1 partition (doc-keyed grouping
-    # would collapse everything onto one). AQE's size-based coalescing
-    # is disabled for the probe — at test scale it folds the small
-    # shuffle into one partition, which at 100 TB it would not.
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
-        n_parts = (
-            out.select(F.spark_partition_id().alias("p")).distinct().count()
-        )
-    finally:
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.enabled", "true"
-        )
-    assert n_parts > 1, n_parts
-
-    agg = out.agg(
-        F.count("*").alias("n"),
-        F.min("question_number").alias("mn"),
-        F.max("question_number").alias("mx"),
-        F.countDistinct("question_number").alias("d"),
-        F.sum(F.when(F.col("question_text") != "", 1).otherwise(0)).alias("nb"),
-    ).first()
-    assert (agg.n, agg.mn, agg.mx, agg.d) == (n_q, 1, n_q, n_q)
-    assert agg.nb == n_q  # every question kept its body text
-
-    # spot-check one mid-stream question end-to-end
-    mid = out.where(F.col("question_number") == 10_000).first()
-    assert mid.question_text == "body 10000"
-    assert [o["key"] for o in mid.options] == ["A", "B"]
-    assert mid.answer_text == "A"
 
 
 def test_auto_giant_dispatch_span_equal_on_mixed_corpus(spark):
@@ -186,32 +115,6 @@ def test_auto_giant_dispatch_span_equal_on_mixed_corpus(spark):
         pipeline.GIANT_DOC_SPANS = old
     assert auto == ref
     assert "_chunk" in p_auto and "Union" in p_auto
-
-
-def test_chunk_boundary_mid_question_sections_survive(spark):
-    """A chunk cut between an option line and its images/answer must not
-    reset section state (the (doc, seg) grouping carries it)."""
-    spans = [
-        {"kind": "text", "text": "Question: 1 intro", "media_ref": "",
-         "offset": 0, "page": 1},
-        {"kind": "text", "text": "A. first", "media_ref": "", "offset": 1,
-         "page": 1},
-        {"kind": "image", "text": "", "media_ref": "img://x", "offset": 2,
-         "page": 1},
-        {"kind": "text", "text": "more option text", "media_ref": "",
-         "offset": 3, "page": 1},
-        {"kind": "text", "text": "Answer: A", "media_ref": "", "offset": 4,
-         "page": 1},
-        {"kind": "text", "text": "Explanation: why", "media_ref": "",
-         "offset": 5, "page": 1},
-    ]
-    docs = spark.createDataFrame([("b", spans)],
-                                 schema=schema.DOCUMENT_SPANS_EXT)
-    for cs in (1, 2, 3):
-        q = pipeline.parse_raw(docs, engine="native", chunk_size=cs).first()
-        assert q.options[0]["text"] == "first more option text", cs
-        assert q.options[0]["images"] == ["img://x"], cs
-        assert q.answer_text == "A" and q.explanation_text == "why", cs
 
 
 def test_chunked_vkernel_equals_whole_doc(spark):

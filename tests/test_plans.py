@@ -36,23 +36,33 @@ def test_default_dispatch_probe_and_forced_union(spark):
     """Default (auto) dispatch: a giant-free corpus gets the pure
     packed plan (probe says no outliers → no union overhead); a forced
     threshold builds the union with the anchor-chunked vectorized
-    branch keyed on (doc_id, chunk)."""
+    branch keyed on (doc_id, chunk). Holds for all five packed entry
+    points on every engine each one takes."""
     d = _docs(spark)
-    p_auto = _plan(pipeline.extract_flat_spans(d))
-    assert "MapInArrow" in p_auto and "Union" not in p_auto
-    assert p_auto.count("Exchange") == 0
-
-    p = _plan(pipeline.extract_flat_spans(d, giant_doc_spans=10))
-    assert "MapInArrow" in p and "Union" in p
-    import re as _re
-
-    parts = _re.findall(r"hashpartitioning\(([^)]*)\)", p)
-    assert any(
-        "doc_id" in x and "chunk" in x for x in parts
-    ), parts  # giant branch re-packs pseudo-docs on (doc_id, chunk)
-    # the giant branch uses the SAME vectorized kernel (two MapInArrow
-    # stages in the union), not the window-cascade native engine
-    assert p.count("MapInArrow") == 2
+    calls = [
+        (entry, {"engine": e})
+        for entry in ("extract_questions", "extract_flat_spans",
+                      "extract_validation")
+        for e in ("packed", "packed-pandas")
+    ] + [("extract_doc_text", {}), ("extract_question_scalars", {})]
+    for entry, kw in calls:
+        fn = getattr(pipeline, entry)
+        pandas = kw.get("engine") == "packed-pandas"
+        p_auto = _plan(fn(d, **kw))
+        assert (p_auto.count("MapInArrow"), p_auto.count("MapInPandas")) == (
+            (0, 1) if pandas else (1, 0)), (entry, kw)
+        assert "Exchange" not in p_auto and "Union" not in p_auto, (
+            entry, kw)
+        p = _plan(fn(d, giant_doc_spans=10, **kw))
+        assert "Union" in p, (entry, kw)
+        # the giant branch re-packs pseudo-docs on (doc_id, chunk)
+        parts = re.findall(r"hashpartitioning\(([^)]*)\)", p)
+        assert any("doc_id" in x and "chunk" in x for x in parts), (
+            entry, kw, parts)
+        # ... and runs the SAME vectorized kernel (a second MapInArrow
+        # in the union), not the window-cascade native engine
+        assert (p.count("MapInArrow"), p.count("MapInPandas")) == (
+            (1, 1) if pandas else (2, 0)), (entry, kw)
 
 
 def test_validation_single_shuffle(spark):
@@ -62,7 +72,7 @@ def test_validation_single_shuffle(spark):
 
 
 def test_native_engine_no_python(spark):
-    p = _plan(pipeline.parse_raw(_docs(spark), engine="native"))
+    p = _plan(pipeline.parse_raw(_docs(spark)))
     assert "MapInPandas" not in p and "FlatMapGroupsInPandas" not in p
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
 

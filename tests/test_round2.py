@@ -135,7 +135,7 @@ def test_fused_finalize_equals_native_finalize(spark):
 
     fused = canon(pipeline.extract_questions(docs))
     native = canon(
-        finalize.finalize_questions(pipeline.parse_raw(docs, engine="native"))
+        finalize.finalize_questions(pipeline.parse_raw(docs))
     )
     assert fused == native and len(fused) > 50
 

@@ -124,7 +124,6 @@ ENTRY_POINTS = {
         (vkernel.parse_docs_commit_arrow, _packed_batch),
     "vkernel.validate_docs_arrow":
         (vkernel.validate_docs_arrow, _packed_batch),
-    "dkernel.parse_docs": (dkernel.parse_docs, _pandas(_packed_batch)),
     "dkernel.parse_docs_final":
         (dkernel.parse_docs_final, _pandas(_packed_batch)),
     "dkernel.parse_docs_flat":
