@@ -42,6 +42,8 @@ only when it must derive ``n_planes``).
 
 from __future__ import annotations
 
+import functools
+import operator
 from typing import Callable
 
 import numpy as np
@@ -680,24 +682,36 @@ def minhash_lsh_pairs(
     buckets = minhash_band_buckets(k=k, bands=bands, hasher=hasher, sigs=sigs)
     slim = buckets.select("doc_id", "band", "bucket")
 
+    # skew guard: a mega-cluster of identical docs puts m docs in one
+    # band bucket → O(m²) pairs inside the self-join. Buckets beyond the
+    # cap are dropped (mass-duplicates belong to exact_dedup, which runs
+    # in one linear shuffle); re-deriving slim per join side is a cheap
+    # explode + band hash over the checkpointed signatures.
+    return _lsh_pairs(slim, ["band", "bucket"], sigs, k, threshold,
+                      max_bucket)
+
+
+def _lsh_pairs(slim: DataFrame, keys: list[str], sigs: DataFrame, k: int,
+               threshold: float, max_bucket: int | None) -> DataFrame:
+    """The candidate and verify half of banded LSH, shared by
+    :func:`minhash_lsh_pairs` and the per-band commits of
+    ``plans.lineage.DedupJob``: pairs ``doc_a < doc_b`` of ``slim``
+    rows (doc_id + ``keys``) that share every key, with keys held by
+    more than ``max_bucket`` rows dropped (:func:`_drop_over_cap`),
+    whose ``sigs`` signatures (doc_id, signature) agree on at least
+    ``threshold`` of their ``k`` minhashes. Returns (doc_a, doc_b,
+    sig_similarity)."""
     if max_bucket is not None:
-        # skew guard: a mega-cluster of identical docs puts m docs in
-        # one band bucket → O(m²) pairs inside the self-join. Buckets
-        # beyond the cap are dropped (mass-duplicates belong to
-        # exact_dedup, which runs in one linear shuffle). Anti-join
-        # formulation (:func:`_drop_over_cap`) — no whole-frame count
-        # window; re-deriving slim per join side is a cheap explode +
-        # band hash over the checkpointed signatures.
-        slim = _drop_over_cap(slim, ["band", "bucket"], max_bucket)
+        slim = _drop_over_cap(slim, keys, max_bucket)
     a = slim.alias("a")
     b = slim.alias("b")
+    on = functools.reduce(
+        operator.and_,
+        [F.col(f"a.{key}") == F.col(f"b.{key}") for key in keys]
+        + [F.col("a.doc_id") < F.col("b.doc_id")],
+    )
     cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        a.join(b, on)
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -708,10 +722,10 @@ def minhash_lsh_pairs(
     # signature table) was A/B-measured at parity-to-worse vs the
     # planner's sort-merge (smj best 24.0 s vs shj 24.6 s interleaved).
     # The strategy is left to AQE: it re-plans each join from the
-    # checkpointed signature table's runtime size, so a table under
-    # the adaptive broadcast threshold is broadcast and the candidate
-    # pair stream is not shuffled for the re-attachment; a larger one
-    # keeps the shuffled join.
+    # signature table's runtime size, so a table under the adaptive
+    # broadcast threshold is broadcast and the candidate pair stream is
+    # not shuffled for the re-attachment; a larger one keeps the
+    # shuffled join.
     sa = sigs.select(
         F.col("doc_id").alias("doc_a"), F.col("signature").alias("sig_a")
     )

@@ -8,6 +8,9 @@ span array, so the kernel parses straight off the packed rows:
         finalized questions | flat spans | validation reports
 
 No shuffle anywhere; the only cross-row machinery is Arrow batching.
+Each output's columns are the names of its ``schema.py`` type
+(QUESTION_FINAL, FLAT_SPAN_SEQ, VALIDATION_REPORT), declared nowhere
+else.
 Tokenization (newline split, strip, noise filter) happens inside the
 kernel with compiled regexes — with packed input there is no data-size
 win from filtering JVM-side, since whole documents ship regardless.
@@ -29,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import schema
 from ..functions import anchors as A
 from ..zipcache import drop_zip_finders
 
@@ -189,19 +193,6 @@ def _process_rows(ds: _DocState, kinds, texts, medias, pages) -> None:
                 cur[7].append(rem)
 
 
-_FLAT_COLUMNS = [
-    "doc_id", "seq", "question_number", "section", "kind", "text",
-    "media_ref", "order",
-]
-
-_FINAL_COLUMNS = [
-    "doc_id", "seq", "question_number", "question_type", "question_text",
-    "question_images", "options", "answer_text", "answer_images",
-    "explanation_text", "explanation_images", "page_start", "page_end",
-    "anomalies", "anomaly_score", "has_question_text", "has_answer",
-    "has_explanation", "image_count",
-]
-
 #: answer-letter extraction (reference state_machine.py:437-452)
 _LETTER_BOUND = re.compile(r"\b([A-Z])\b")
 _LETTER = re.compile(r"([A-Z])")
@@ -273,34 +264,31 @@ def _finalize_row(r: tuple) -> tuple:
     )
 
 
-def parse_docs_final(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas entrypoint: packed documents → FINALIZED question
-    entities in one fused pass (schema.QUESTION_FINAL)."""
+def _frames(batches: Iterator[pd.DataFrame], rows_of,
+            columns: list[str]) -> Iterator[pd.DataFrame]:
+    """Each packed batch → one frame of ``rows_of(doc)`` rows over its
+    documents, named by ``columns`` (the kernel's ``schema.py`` type);
+    one empty frame when no batch has a row."""
     drop_zip_finders()
     yielded = False
     for pdf in batches:
-        out: list[tuple] = []
-        for doc in _docs(pdf):
-            out.extend(_finalize_row(raw) for raw in _parse_doc(*doc))
+        out = [r for doc in _docs(pdf) for r in rows_of(doc)]
         if out:
             yielded = True
+            # zip-transpose: pandas infers dtype per column from a flat
+            # C-level tuple instead of scanning 2-3M row tuples
             cols = list(zip(*out))
-            yield pd.DataFrame(
-                {c: cols[i] for i, c in enumerate(_FINAL_COLUMNS)}
-            )
+            yield pd.DataFrame({c: cols[i] for i, c in enumerate(columns)})
     if not yielded:
-        yield pd.DataFrame(
-            {c: pd.Series(dtype=object) for c in _FINAL_COLUMNS}
-        )
+        yield pd.DataFrame({c: pd.Series(dtype=object) for c in columns})
 
 
-_VALIDATION_COLUMNS = [
-    "doc_id", "total_questions_detected", "structured_successfully",
-    "questions_missing_answer", "questions_missing_explanation",
-    "failed_to_structure", "orphan_images", "missing_question_numbers",
-    "gap_list_suppressed", "duplicate_question_numbers",
-    "anomaly_breakdown", "success_rate",
-]
+def parse_docs_final(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas entrypoint: packed documents → FINALIZED question
+    entities in one fused pass (schema.QUESTION_FINAL)."""
+    yield from _frames(
+        batches, lambda doc: [_finalize_row(r) for r in _parse_doc(*doc)],
+        schema.QUESTION_FINAL.names)
 
 
 def _round_half_up2(x: float) -> float:
@@ -364,25 +352,12 @@ def validate_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     Replaces extract_questions → validation_report when the consumer
     only wants the report: that pipeline pays the full FSM parse just
     to aggregate it away."""
-    drop_zip_finders()
-    yielded = False
-    for pdf in batches:
-        out: list[tuple] = []
-        for doc in _docs(pdf):
-            fins = [_finalize_row(raw) for raw in _parse_doc(*doc)]
-            rep = _validate_doc(fins)
-            if rep is not None:
-                out.append(rep)
-        if out:
-            yielded = True
-            cols = list(zip(*out))
-            yield pd.DataFrame(
-                {c: cols[i] for i, c in enumerate(_VALIDATION_COLUMNS)}
-            )
-    if not yielded:
-        yield pd.DataFrame(
-            {c: pd.Series(dtype=object) for c in _VALIDATION_COLUMNS}
-        )
+    yield from _frames(batches, _report_rows, schema.VALIDATION_REPORT.names)
+
+
+def _report_rows(doc: tuple) -> list[tuple]:
+    rep = _validate_doc([_finalize_row(r) for r in _parse_doc(*doc)])
+    return [] if rep is None else [rep]
 
 
 def _docs(pdf: pd.DataFrame) -> Iterator[tuple]:
@@ -484,22 +459,8 @@ def _flatten_rows(raw_rows: list[tuple]) -> list[tuple]:
 def parse_docs_flat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas entrypoint: packed documents → canonical flat spans
     in one fused pass (zero shuffle, flat primitive output columns)."""
-    drop_zip_finders()
-    yielded = False
-    for pdf in batches:
-        out: list[tuple] = []
-        for doc in _docs(pdf):
-            out.extend(_flatten_rows(_parse_doc(*doc)))
-        if out:
-            yielded = True
-            # zip-transpose: pandas infers dtype per column from a flat
-            # C-level tuple instead of scanning 2-3M row tuples
-            cols = list(zip(*out))
-            yield pd.DataFrame(
-                {c: cols[i] for i, c in enumerate(_FLAT_COLUMNS)}
-            )
-    if not yielded:
-        yield pd.DataFrame({c: pd.Series(dtype=object) for c in _FLAT_COLUMNS})
+    yield from _frames(batches, lambda doc: _flatten_rows(_parse_doc(*doc)),
+                       schema.FLAT_SPAN_SEQ.names)
 
 
 def packed_projection(documents: DataFrame) -> DataFrame:

@@ -33,6 +33,9 @@ them on every call); any other slice runs the Python-exact form. Every
 document stays on this path; tests assert row-equality with the Python
 kernel (:mod:`.dkernel`) over all of Unicode's divergent classes.
 
+Every output's Arrow schema is derived from its ``schema.py`` type
+(:func:`_arrow_schema`); no output format is declared here.
+
 Reference semantics: /root/reference/parser/state_machine.py:133-366
 (segmentation), crud.py:633-726 (flatten contract).
 """
@@ -46,7 +49,9 @@ from typing import Iterator, NamedTuple
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark.sql.pandas.types import to_arrow_schema
 
+from .. import schema
 from ..functions import anchors as A
 from ..zipcache import drop_zip_finders
 
@@ -161,30 +166,34 @@ _STRIP_CHARS = A.PY_WS_CHARS
 _SECTIONS = pa.array(["question", "options", "answer", "explanation"])
 _KINDS = pa.array(["text", "image"])
 
-FLAT_ARROW_SCHEMA = pa.schema(
-    [
-        ("doc_id", pa.string()),
-        ("seq", pa.int32()),
-        ("question_number", pa.int64()),
-        ("section", pa.string()),
-        ("kind", pa.string()),
-        ("text", pa.string()),
-        ("media_ref", pa.string()),
-        ("order", pa.int32()),
-    ]
-)
 
-QUESTION_SCALARS_ARROW_SCHEMA = pa.schema(
-    [
-        ("doc_id", pa.string()),
-        ("seq", pa.int32()),
-        ("question_number", pa.int64()),
-        ("question_type", pa.string()),
-        ("question_text", pa.string()),
-        ("answer_text", pa.string()),
-        ("anomaly_score", pa.int32()),
-    ]
-)
+def _relaxed(t: pa.DataType) -> pa.DataType:
+    if pa.types.is_map(t):
+        return pa.map_(_relaxed(t.key_type), _relaxed(t.item_type))
+    if pa.types.is_list(t):
+        return pa.list_(_relaxed(t.value_type))
+    if pa.types.is_struct(t):
+        return pa.struct([(f.name, _relaxed(f.type)) for f in t])
+    return t
+
+
+def _arrow_schema(st) -> pa.Schema:
+    """The Arrow schema of a ``schema.py`` output type with every field
+    nullable: PySpark's mapInArrow serializer rebuilds each batch with
+    ``pa.StructArray.from_arrays``, which rejects the emitters' nested
+    arrays against a ``not null`` child field."""
+    out = to_arrow_schema(st)
+    for i, f in enumerate(out):
+        out = out.set(i, f.with_type(_relaxed(f.type)).with_nullable(True))
+    return out
+
+
+FLAT_ARROW_SCHEMA = _arrow_schema(schema.FLAT_SPAN_SEQ)
+DOC_TEXT_ARROW_SCHEMA = _arrow_schema(schema.DOC_TEXT)
+QUESTION_SCALARS_ARROW_SCHEMA = _arrow_schema(schema.QUESTION_SCALARS)
+QUESTION_FINAL_ARROW_SCHEMA = _arrow_schema(schema.QUESTION_FINAL)
+COMMIT_ARROW_SCHEMA = _arrow_schema(schema.EXTRACTION_COMMIT)
+VALIDATION_ARROW_SCHEMA = _arrow_schema(schema.VALIDATION_REPORT)
 
 
 def _np(arr) -> np.ndarray:
@@ -522,6 +531,22 @@ def _core(batch: pa.RecordBatch):
     return state
 
 
+# ── per-question facts and options (computed once per state) ─────────────
+
+
+def _per_state(fn):
+    """Compute ``fn(state)`` once per kernel state: the commit emitter
+    runs the final and flat emitters on one state, and they share it."""
+
+    @functools.wraps(fn)
+    def get(state):
+        if fn.__name__ not in state:
+            state[fn.__name__] = fn(state)
+        return state[fn.__name__]
+
+    return get
+
+
 def _per_question_text(state, sec_code: int):
     """length-nq arrow string array: the joined text of one section."""
     sg = state["sg"]
@@ -538,6 +563,94 @@ def _doc_seq(sg):
     return (np.arange(sg["nq"]) - q_start).astype(np.int32)
 
 
+#: anomaly kinds in the reference's emit order (state_machine.py:386-414)
+_ANOM_TYPES = pa.array(
+    ["missing_question_text", "missing_answer", "orphan_image"]
+)
+_ANOM_SEV = np.array([80, 60, 30], dtype=np.int32)
+_ANOM_MSG = pa.array(
+    [
+        "Question has no text content",
+        "Question has no answer section",
+        "Question body contains only images",
+    ]
+)
+
+
+@_per_state
+def _facts(state) -> dict:
+    """Per-question facts (finalize.py / dkernel._finalize_row rules):
+    the question, answer and (post-F9) explanation texts, whether each
+    is non-empty, the hotspot flag, the question-image count, the 3×nq
+    anomaly mask (rows in :data:`_ANOM_TYPES` order) and the score."""
+    sg = state["sg"]
+    qid, nq = sg["qid"], sg["nq"]
+    qtext, anstext, expltext = (_per_question_text(state, c)
+                                for c in (0, 2, 3))
+    has_q = _np(pc.not_equal(qtext, ""))
+    has_a = _np(pc.not_equal(anstext, ""))
+    hot = np.zeros(nq, dtype=bool)
+    np.logical_or.at(hot, qid[sg["hot_valid"]], True)
+    qimg = np.bincount(qid[sg["img"] & (sg["sec"] == 0)], minlength=nq)
+    anom = np.stack([~has_q, ~hot & ~has_a, ~has_q & (qimg > 0)])
+    return {
+        "qtext": qtext, "anstext": anstext, "expltext": expltext,
+        "has_q": has_q, "has_a": has_a,
+        "has_e": _np(pc.not_equal(expltext, "")),
+        "hot": hot, "anom": anom,
+        "score": np.minimum(
+            100, (anom * _ANOM_SEV[:, None].astype(np.int64)).sum(axis=0)
+        ).astype(np.int32),
+    }
+
+
+@_per_state
+def _options(state) -> dict:
+    """The valid option anchors in (qid, oi) order: their question and
+    index, key, joined text, image count, the rows of their images and
+    the F8 ghost mask (no text and no image)."""
+    sg, cl = state["sg"], state["cl"]
+    g_qid, g_sec, g_oi = state["g_qid"], state["g_sec"], state["g_oi"]
+    qid, img, sec, oi = sg["qid"], sg["img"], sg["sec"], sg["oi"]
+
+    ovi = np.flatnonzero(sg["opt_valid"])
+    opt_qid, opt_oi = qid[ovi], oi[ovi]
+    key = pc.take(
+        cl["okey_vals"],
+        pa.array(np.searchsorted(cl["okey_rows"], sg["ki"][ovi])),
+    )
+
+    om = g_sec == 1
+    keymul = np.int64(
+        max(int(g_oi[om].max(initial=0)), int(opt_oi.max(initial=0))) + 2
+    )
+    want = opt_qid * keymul + opt_oi
+    okeys_sorted = g_qid[om] * keymul + g_oi[om]
+    oidx_global = np.flatnonzero(om)
+    if len(okeys_sorted):
+        pos = np.searchsorted(okeys_sorted, want)
+        found = (pos < len(okeys_sorted)) & (
+            np.take(okeys_sorted, pos, mode="clip") == want)
+        lookup = np.where(found,
+                          np.take(oidx_global, pos, mode="clip"), -1)
+    else:
+        lookup = np.full(len(want), -1, dtype=np.int64)
+    text = pc.take(state["joined"],
+                   pa.array(lookup, mask=lookup < 0)).fill_null("")
+
+    # option images: sec-1 image rows are sorted by (qid, oi) — the
+    # same order as the anchors — so per-anchor runs are contiguous
+    img_rows = np.flatnonzero(img & (sec == 1))
+    img_keys = qid[img_rows] * keymul + oi[img_rows]
+    n_img = (np.searchsorted(img_keys, want, side="right")
+             - np.searchsorted(img_keys, want, side="left")).astype(np.int64)
+    return {
+        "qid": opt_qid, "oi": opt_oi, "key": key, "text": text,
+        "n_img": n_img, "img_rows": img_rows,
+        "ghost": _np(pc.equal(text, "")) & (n_img == 0),  # F8
+    }
+
+
 # ── flat emitter (§1.4 contract) ─────────────────────────────────────────
 
 
@@ -549,10 +662,8 @@ def _flat_components(state):
     (row-per-document reassembly)."""
     sg = state["sg"]
     vec = state["vec"]
-    g_qid, g_sec, g_oi = state["g_qid"], state["g_sec"], state["g_oi"]
-    joined = state["joined"]
+    g_qid, g_sec = state["g_qid"], state["g_sec"]
     qid, img, sec, oi = sg["qid"], sg["img"], sg["sec"], sg["oi"]
-    nq = sg["nq"]
 
     # image pieces
     ii = np.flatnonzero(img)
@@ -562,52 +673,24 @@ def _flat_components(state):
     img_refs = pc.take(vec["ref_f"],
                        pa.array(vec["span"][sg["ki"]][ii])).fill_null("")
 
-    # option rows: one per valid option anchor, in (qid, oi) order
-    ovi = np.flatnonzero(sg["opt_valid"])
-    opt_qid = qid[ovi]
-    opt_oi = oi[ovi]
-    opt_key = pc.take(
-        state["cl"]["okey_vals"],
-        pa.array(np.searchsorted(state["cl"]["okey_rows"],
-                                 sg["ki"][ovi])),
-    )
-
-    om = g_sec == 1
-    keymul = np.int64(
-        max(int(g_oi.max(initial=0)), int(opt_oi.max(initial=0))) + 2
-    )
-    okeys_sorted = g_qid[om] * keymul + g_oi[om]
-    want = opt_qid * keymul + opt_oi
-    oidx_global = np.flatnonzero(om)
-    if len(okeys_sorted):
-        pos_in = np.searchsorted(okeys_sorted, want)
-        found = (pos_in < len(okeys_sorted)) & (
-            np.take(okeys_sorted, pos_in, mode="clip") == want)
-        lookup = np.where(found,
-                          np.take(oidx_global, pos_in, mode="clip"), -1)
-    else:
-        lookup = np.full(len(want), -1, dtype=np.int64)
-    otext = pc.take(joined,
-                    pa.array(lookup, mask=lookup < 0)).fill_null("")
-    oimg_keys = img_qid[img_sec == 1] * keymul + img_oi[img_sec == 1]
-    opt_has_img = np.isin(want, oimg_keys)
-    ghost = _np(pc.equal(otext, "")) & ~opt_has_img  # F8
-
+    # option rows: one per valid option anchor that is not a ghost
+    op = _options(state)
+    otext = op["text"]
     # "K. text" / bare "K."  (last join_element_wise arg = separator)
     opt_text = pc.if_else(
         pc.equal(otext, ""),
-        pc.binary_join_element_wise(opt_key, pa.scalar("."), ""),
-        pc.binary_join_element_wise(opt_key, pa.scalar(". "), otext,
+        pc.binary_join_element_wise(op["key"], pa.scalar("."), ""),
+        pc.binary_join_element_wise(op["key"], pa.scalar(". "), otext,
                                     ""),
     )
-    keepo = np.flatnonzero(~ghost)
-    opt_qid, opt_oi = opt_qid[keepo], opt_oi[keepo]
+    keepo = np.flatnonzero(~op["ghost"])
+    opt_qid, opt_oi = op["qid"][keepo], op["oi"][keepo]
     opt_text = pc.take(opt_text, pa.array(keepo))
 
     # question/answer/explanation text rows
     tm = g_sec != 1
     txt_qid, txt_sec = g_qid[tm], g_sec[tm]
-    txt_str = pc.take(joined, pa.array(np.flatnonzero(tm)))
+    txt_str = pc.take(state["joined"], pa.array(np.flatnonzero(tm)))
 
     n_txt, n_opt, n_img = len(txt_qid), len(opt_qid), len(img_qid)
     a_qid = np.concatenate([txt_qid, opt_qid, img_qid])
@@ -655,15 +738,6 @@ def _emit_flat(state) -> pa.RecordBatch:
     )
 
 
-DOC_TEXT_ARROW_SCHEMA = pa.schema(
-    [
-        ("doc_id", pa.string()),
-        ("text", pa.string()),
-        ("n_text_spans", pa.int64()),
-    ]
-)
-
-
 def _emit_doc_text(state) -> pa.RecordBatch:
     """Packed documents → ONE row per document: its text-kind flat
     spans joined with " " in the canonical (seq, order) sequence —
@@ -705,108 +779,33 @@ def _emit_doc_text(state) -> pa.RecordBatch:
 # ── question-scalars emitter (flagship query projection) ────────────────
 
 
+def _question_keys(state) -> list:
+    """The leading QUESTION_FINAL columns (doc_id, seq,
+    question_number, question_type), one row per question."""
+    sg = state["sg"]
+    return [
+        pc.take(state["doc_ids"], pa.array(sg["doc_of_q"])),
+        pa.array(_doc_seq(sg)),
+        pa.array(sg["qnum_of_q"]),
+        pc.if_else(pa.array(_facts(state)["hot"]), pa.scalar("hotspot"),
+                   pa.scalar("mcq")),
+    ]
+
+
 def _emit_question_scalars(state) -> pa.RecordBatch:
     """Per-question scalar columns (doc_id, seq, question_number,
     question_type, question_text, answer_text, anomaly_score) — the
-    flagship query's projection, straight from the vector state
-    (anomaly rules: finalize.py / dkernel._finalize_row)."""
-    sg = state["sg"]
-    nq = sg["nq"]
-    qtext = _per_question_text(state, 0)
-    anstext = _per_question_text(state, 2)
-
-    hot = np.zeros(nq, dtype=bool)
-    np.logical_or.at(hot, sg["qid"][sg["hot_valid"]], True)
-
-    qimg = np.zeros(nq, dtype=np.int64)
-    qi = sg["img"] & (sg["sec"] == 0)
-    np.add.at(qimg, sg["qid"][qi], 1)
-
-    has_q = _np(pc.not_equal(qtext, ""))
-    has_a = _np(pc.not_equal(anstext, ""))
-    score = (
-        80 * (~has_q)
-        + 60 * (~hot & ~has_a)
-        + 30 * (~has_q & (qimg > 0))
-    )
-    score = np.minimum(score, 100).astype(np.int32)
-
+    flagship query's projection, straight from the vector state."""
+    f = _facts(state)
     return pa.RecordBatch.from_arrays(
-        [
-            pc.take(state["doc_ids"], pa.array(sg["doc_of_q"])),
-            pa.array(_doc_seq(sg)),
-            pa.array(sg["qnum_of_q"]),
-            pc.if_else(pa.array(hot), pa.scalar("hotspot"),
-                       pa.scalar("mcq")),
-            _combine(qtext),
-            _combine(anstext),
-            pa.array(score),
-        ],
+        _question_keys(state)
+        + [_combine(f["qtext"]), _combine(f["anstext"]),
+           pa.array(f["score"])],
         schema=QUESTION_SCALARS_ARROW_SCHEMA,
     )
 
 
 # ── full-entity emitter (QUESTION_FINAL, nested arrow output) ───────────
-
-_ANOM_TYPES = pa.array(
-    ["missing_question_text", "missing_answer", "orphan_image"]
-)
-_ANOM_SEV = np.array([80, 60, 30], dtype=np.int32)
-_ANOM_MSG = pa.array(
-    [
-        "Question has no text content",
-        "Question has no answer section",
-        "Question body contains only images",
-    ]
-)
-
-QUESTION_FINAL_ARROW_SCHEMA = pa.schema(
-    [
-        ("doc_id", pa.string()),
-        ("seq", pa.int32()),
-        ("question_number", pa.int64()),
-        ("question_type", pa.string()),
-        ("question_text", pa.string()),
-        ("question_images", pa.list_(pa.string())),
-        (
-            "options",
-            pa.list_(
-                pa.struct(
-                    [
-                        ("key", pa.string()),
-                        ("text", pa.string()),
-                        ("is_correct", pa.bool_()),
-                        ("images", pa.list_(pa.string())),
-                    ]
-                )
-            ),
-        ),
-        ("answer_text", pa.string()),
-        ("answer_images", pa.list_(pa.string())),
-        ("explanation_text", pa.string()),
-        ("explanation_images", pa.list_(pa.string())),
-        ("page_start", pa.int32()),
-        ("page_end", pa.int32()),
-        (
-            "anomalies",
-            pa.list_(
-                pa.struct(
-                    [
-                        ("type", pa.string()),
-                        ("severity", pa.int32()),
-                        ("message", pa.string()),
-                        ("context", pa.map_(pa.string(), pa.string())),
-                    ]
-                )
-            ),
-        ),
-        ("anomaly_score", pa.int32()),
-        ("has_question_text", pa.bool_()),
-        ("has_answer", pa.bool_()),
-        ("has_explanation", pa.bool_()),
-        ("image_count", pa.int32()),
-    ]
-)
 
 _RE_KEY_BOUND = None  # compiled lazily (keeps import light)
 
@@ -844,21 +843,10 @@ def _emit_final(state) -> pa.RecordBatch:
     finalize rules (F8/F9/J5, anomaly stamping, computed fields;
     operators/finalize.py) applied with numpy masks + arrow assembly.
     Only answer-key parsing runs per-question Python (\\b dialect)."""
-    sg, vec, cl = state["sg"], state["vec"], state["cl"]
-    g_qid, g_sec, g_oi = state["g_qid"], state["g_sec"], state["g_oi"]
-    joined = state["joined"]
-    qid, img, sec, oi = sg["qid"], sg["img"], sg["sec"], sg["oi"]
+    sg, vec, f = state["sg"], state["vec"], _facts(state)
+    qid, img, sec = sg["qid"], sg["img"], sg["sec"]
     nq = sg["nq"]
-
-    qtext = _per_question_text(state, 0)
-    anstext = _per_question_text(state, 2)
-    expltext = _per_question_text(state, 3)  # post-F9
-    has_q = _np(pc.not_equal(qtext, ""))
-    has_a = _np(pc.not_equal(anstext, ""))
-    has_e = _np(pc.not_equal(expltext, ""))
-
-    hot = np.zeros(nq, dtype=bool)
-    np.logical_or.at(hot, qid[sg["hot_valid"]], True)
+    anstext = f["anstext"]
 
     # pages: anchor page opens page_start; only images advance page_end
     # (reference state_machine.py:366 — text never extends it)
@@ -877,47 +865,13 @@ def _emit_final(state) -> pa.RecordBatch:
 
     q_imgs, a_imgs, e_imgs = sec_imgs(0), sec_imgs(2), sec_imgs(3)
 
-    # ── options: anchors + text lookup + images + F8 + J5 ──
-    ovi = np.flatnonzero(sg["opt_valid"])
-    opt_qid, opt_oi = qid[ovi], oi[ovi]
-    opt_key = pc.take(
-        cl["okey_vals"],
-        pa.array(np.searchsorted(cl["okey_rows"], sg["ki"][ovi])),
-    ).fill_null("")
-
-    om = g_sec == 1
-    keymul = np.int64(
-        max(int(g_oi[om].max(initial=0)), int(opt_oi.max(initial=0))) + 2
-    )
-    want = opt_qid * keymul + opt_oi
-    okeys_sorted = g_qid[om] * keymul + g_oi[om]
-    oidx_global = np.flatnonzero(om)
-    if len(okeys_sorted):
-        pos = np.searchsorted(okeys_sorted, want)
-        found = (pos < len(okeys_sorted)) & (
-            np.take(okeys_sorted, pos, mode="clip") == want)
-        lookup = np.where(found,
-                          np.take(oidx_global, pos, mode="clip"), -1)
-    else:
-        lookup = np.full(len(want), -1, dtype=np.int64)
-    otext = pc.take(joined,
-                    pa.array(lookup, mask=lookup < 0)).fill_null("")
-
-    # option images: sec-1 image rows are sorted by (qid, oi) — the
-    # same order as the anchors — so per-anchor runs are contiguous
-    orows = np.flatnonzero(img & (sec == 1))
-    img_keys = qid[orows] * keymul + np.where(
-        sec[orows] == 1, oi[orows], 0
-    )
-    lo = np.searchsorted(img_keys, want, side="left")
-    hi = np.searchsorted(img_keys, want, side="right")
-    opt_img_counts = (hi - lo).astype(np.int64)
+    # ── options: anchors + text + images, F8 ghosts dropped, J5 ──
+    op = _options(state)
+    opt_qid, opt_key, otext = op["qid"], op["key"], op["text"]
     opt_img_refs = pc.take(
-        vec["ref_f"], pa.array(row_span[orows])
+        vec["ref_f"], pa.array(row_span[op["img_rows"]])
     ).fill_null("")
-
-    ghost = _np(pc.equal(otext, "")) & (opt_img_counts == 0)  # F8
-    keep = ~ghost  # ghosts carry no images, so the values stay intact
+    keep = ~op["ghost"]  # ghosts carry no images, so the values stay intact
 
     # J5 correct marking (key ∈ valid always, so the reference's
     # intersect-then-contains reduces to membership in the raw key
@@ -925,9 +879,9 @@ def _emit_final(state) -> pa.RecordBatch:
     # Python's on pure-ASCII text, so the comma rule is one
     # \bL\b match and the no-comma rule one substring test per distinct
     # key letter; only non-ASCII answers run the python \b-exact parser.
-    marked = ~hot & has_a
+    marked = ~f["hot"] & f["has_a"]
     jrows = np.flatnonzero(marked[opt_qid] & keep)
-    correct = np.zeros(len(ovi), dtype=bool)
+    correct = np.zeros(len(opt_qid), dtype=bool)
     if len(jrows):
         ja = pa.array(jrows)
         ans_up = pc.utf8_upper(pc.take(anstext, pa.array(opt_qid[jrows])))
@@ -965,19 +919,18 @@ def _emit_final(state) -> pa.RecordBatch:
             _combine(pc.take(opt_key, pa.array(ki_keep))),
             _combine(pc.take(otext, pa.array(ki_keep))),
             pa.array(correct[ki_keep]),
-            _combine(_list_of(opt_img_refs, opt_img_counts)
+            _combine(_list_of(opt_img_refs, op["n_img"])
                      .take(pa.array(ki_keep))),
         ],
-        names=["key", "text", "is_correct", "images"],
+        names=schema.OPTION.names,
     )
     options = _list_of(
         opt_struct, np.bincount(opt_qid[ki_keep], minlength=nq)
     )
 
-    # ── anomalies (emit order: reference state_machine.py:386-414) ──
-    qimg_n = np.bincount(qid[img & (sec == 0)], minlength=nq)
-    m = np.stack([~has_q, ~hot & ~has_a, ~has_q & (qimg_n > 0)])
-    codes = np.tile(np.arange(3), nq)[m.T.ravel()]
+    # ── anomalies: the facts' mask, question-major ──
+    anom = f["anom"]
+    codes = np.tile(np.arange(3), nq)[anom.T.ravel()]
     ca = pa.array(codes)
     ctx = pa.array(
         [{"section": "question"} if c == 2 else None for c in codes],
@@ -990,36 +943,28 @@ def _emit_final(state) -> pa.RecordBatch:
             _combine(pc.take(_ANOM_MSG, ca)),
             ctx,
         ],
-        names=["type", "severity", "message", "context"],
+        names=schema.ANOMALY.names,
     )
-    anomalies = _list_of(anom_struct, m.sum(axis=0))
-
-    score = np.minimum(
-        100, (m * _ANOM_SEV[:, None].astype(np.int64)).sum(axis=0)
-    ).astype(np.int32)
+    anomalies = _list_of(anom_struct, anom.sum(axis=0))
     img_total = np.bincount(qid[ii], minlength=nq).astype(np.int32)
 
     return pa.RecordBatch.from_arrays(
-        [
-            pc.take(state["doc_ids"], pa.array(sg["doc_of_q"])),
-            pa.array(_doc_seq(sg)),
-            pa.array(sg["qnum_of_q"]),
-            pc.if_else(pa.array(hot), pa.scalar("hotspot"),
-                       pa.scalar("mcq")),
-            _combine(qtext),
+        _question_keys(state)
+        + [
+            _combine(f["qtext"]),
             q_imgs,
             options,
             _combine(anstext),
             a_imgs,
-            _combine(expltext),
+            _combine(f["expltext"]),
             e_imgs,
             pa.array(page_start.astype(np.int32)),
             pa.array(page_end.astype(np.int32)),
             anomalies,
-            pa.array(score),
-            pa.array(has_q),
-            pa.array(has_a),
-            pa.array(has_e),
+            pa.array(f["score"]),
+            pa.array(f["has_q"]),
+            pa.array(f["has_a"]),
+            pa.array(f["has_e"]),
             img_total,
         ],
         schema=QUESTION_FINAL_ARROW_SCHEMA,
@@ -1032,18 +977,6 @@ def _emit_final(state) -> pa.RecordBatch:
 #: written to
 COMMIT_QUESTIONS = "questions"
 COMMIT_FLAT_SPANS = "flat_spans"
-
-#: union of QUESTION_FINAL and the flat-span columns it lacks, plus the
-#: ``output`` discriminator (schema.EXTRACTION_COMMIT): one parse emits
-#: both committed outputs in one batch, and each row nulls the other
-#: output's columns
-COMMIT_ARROW_SCHEMA = pa.schema(
-    list(QUESTION_FINAL_ARROW_SCHEMA)
-    + [f for f in FLAT_ARROW_SCHEMA
-       if f.name not in QUESTION_FINAL_ARROW_SCHEMA.names]
-    + [pa.field("output", pa.string())]
-)
-
 
 def _emit_commit(state) -> pa.RecordBatch:
     """Both committed outputs of one parse as ONE batch: each part
@@ -1067,24 +1000,6 @@ def _emit_commit(state) -> pa.RecordBatch:
 
 # ── validation emitter (per-doc ValidationReport) ────────────────────────
 
-VALIDATION_ARROW_SCHEMA = pa.schema(
-    [
-        ("doc_id", pa.string()),
-        ("total_questions_detected", pa.int32()),
-        ("structured_successfully", pa.int32()),
-        ("questions_missing_answer", pa.list_(pa.int64())),
-        ("questions_missing_explanation", pa.list_(pa.int64())),
-        ("failed_to_structure", pa.list_(pa.int64())),
-        ("orphan_images", pa.int32()),
-        ("missing_question_numbers", pa.list_(pa.int64())),
-        ("gap_list_suppressed", pa.bool_()),
-        ("duplicate_question_numbers", pa.list_(pa.int64())),
-        ("anomaly_breakdown", pa.map_(pa.string(), pa.int32())),
-        ("success_rate", pa.float64()),
-    ]
-)
-
-
 _BD_KEYS = pa.array(  # breakdown keys in sorted() order
     ["missing_answer", "missing_question_text", "orphan_image"]
 )
@@ -1100,42 +1015,30 @@ def _emit_validation(state) -> pa.RecordBatch:
     validate_docs kernel is asserted by tests + differential fuzz."""
     from .dkernel import _round_half_up2
 
-    sg = state["sg"]
-    qid, img, sec = sg["qid"], sg["img"], sg["sec"]
+    sg, f = state["sg"], _facts(state)
     nq = sg["nq"]
     doc_of_q = sg["doc_of_q"]
     qnum = sg["qnum_of_q"]
-
-    has_q = _np(pc.not_equal(_per_question_text(state, 0), ""))
-    has_a = _np(pc.not_equal(_per_question_text(state, 2), ""))
-    has_e = _np(pc.not_equal(_per_question_text(state, 3), ""))
-    hot = np.zeros(nq, dtype=bool)
-    np.logical_or.at(hot, qid[sg["hot_valid"]], True)
-    qimg_n = np.bincount(qid[img & (sec == 0)], minlength=nq)
-    orphan = ~has_q & (qimg_n > 0)
-    structured = has_q & has_a
-    miss_ans_anom = ~hot & ~has_a
+    structured = f["has_q"] & f["has_a"]
 
     starts = np.flatnonzero(_run_starts(doc_of_q))
     nd = len(starts)
     didx = np.cumsum(_run_starts(doc_of_q)) - 1  # doc index per question
 
     def seg_sum(mask: np.ndarray) -> np.ndarray:
-        return np.add.reduceat(mask.astype(np.int64), starts)
+        return np.add.reduceat(mask.astype(np.int64), starts, axis=-1)
 
     total = seg_sum(np.ones(nq, dtype=bool))
     n_struct = seg_sum(structured)
-    orphan_n = seg_sum(orphan)
-    mqt_n = seg_sum(~has_q)
-    manom_n = seg_sum(miss_ans_anom)
+    anom_n = seg_sum(f["anom"])  # (3, nd), rows in _ANOM_TYPES order
 
     def num_list(mask: np.ndarray) -> pa.ListArray:
         # qnum/didx are doc-sorted, so masked values group contiguously
         return _list_of(pa.array(qnum[mask]),
                         np.bincount(didx[mask], minlength=nd))
 
-    miss_a = num_list(~has_a)
-    miss_e = num_list(~has_e)
+    miss_a = num_list(~f["has_a"])
+    miss_e = num_list(~f["has_e"])
     failed = num_list(~structured)
 
     # duplicates: runs of equal (doc, qnum) in sorted order; a run of
@@ -1168,7 +1071,7 @@ def _emit_validation(state) -> pa.RecordBatch:
     missing = pa.array(missing_py, pa.list_(pa.int64()))
 
     # anomaly_breakdown map, keys in sorted() order, zero counts absent
-    counts3 = np.stack([manom_n, mqt_n, orphan_n])  # (3, nd) key-sorted
+    counts3 = anom_n[[1, 0, 2]]  # (3, nd), _BD_KEYS order
     present3 = counts3 > 0
     codes = np.tile(np.arange(3), nd)[present3.T.ravel()]
     breakdown = pa.MapArray.from_arrays(
@@ -1191,7 +1094,7 @@ def _emit_validation(state) -> pa.RecordBatch:
             miss_a,
             miss_e,
             failed,
-            pa.array(orphan_n.astype(np.int32)),
+            pa.array(anom_n[2].astype(np.int32)),
             missing,
             pa.array(~sane),
             dups,

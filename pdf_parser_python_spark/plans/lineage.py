@@ -80,6 +80,17 @@ def _pooled(fn, units: list):
         return [r for r in pool.map(fn, units) if r is not None]
 
 
+def _journal(**fields: T.DataType) -> T.StructType:
+    """A journal row type, fields in declared order. Every field is
+    nullable, so a journal written before a field existed still loads
+    (that field reads null)."""
+    return T.StructType([T.StructField(n, t) for n, t in fields.items()])
+
+
+_INT, _LONG, _DOUBLE, _STR = (T.IntegerType(), T.LongType(), T.DoubleType(),
+                              T.StringType())
+
+
 class ExtractionJob:
     """Driver-side loop: process pending buckets, one commit each
     (up to :data:`LINEAGE_POOL` buckets in flight)."""
@@ -102,23 +113,31 @@ class ExtractionJob:
         with open(self.lineage_path) as fh:
             return [json.loads(line) for line in fh if line.strip()]
 
-    #: schema of the empty lineage frame (per-job-kind metric columns).
-    #: done/empty/failed rows all emit this EXACT key set (error = ""
-    #: when absent) so lineage()'s createDataFrame never has to merge
-    #: heterogeneous dicts — schema inference over mixed key sets is
-    #: where a single failed bucket used to break the lineage frame.
-    EMPTY_LINEAGE_SCHEMA = (
-        "partition_id int, status string, docs_parsed long, "
-        "spans_emitted long, questions_emitted long, "
-        "parse_failures long, wall_sec double, input_spans long, "
-        "error string"
+    #: the journal's row type (per-job-kind metric columns): every
+    #: journal row, done or failed, has these fields (:meth:`_row`), and
+    #: the lineage frame has this schema however many rows it holds
+    JOURNAL = _journal(
+        partition_id=_INT, status=_STR, docs_parsed=_LONG,
+        spans_emitted=_LONG, questions_emitted=_LONG, parse_failures=_LONG,
+        wall_sec=_DOUBLE, input_spans=_LONG, error=_STR,
     )
 
+    def _row(self, pid: int, status: str, **fields) -> dict:
+        """A journal row: ``fields`` over zero metrics, zero wall time
+        and an empty error."""
+        row = dict.fromkeys(self.JOURNAL.names, 0)
+        row.update(partition_id=pid, status=status, wall_sec=0.0, error="")
+        row.update(fields)
+        return row
+
+    def _empty_row(self, bucket: int) -> dict:
+        return self._row(bucket, "done")
+
+    def _failed_row(self, bucket: int, exc: Exception) -> dict:
+        return self._row(bucket, "failed", error=str(exc)[:500])
+
     def lineage(self, spark: SparkSession) -> DataFrame:
-        rows = self.lineage_rows()
-        if not rows:
-            return spark.createDataFrame([], self.EMPTY_LINEAGE_SCHEMA)
-        return spark.createDataFrame(rows)
+        return spark.createDataFrame(self.lineage_rows(), self.JOURNAL)
 
     def _latest_done(self, phase: str | None = None) -> dict[int, dict]:
         """partition_id → its latest ``done`` journal row (of ``phase``,
@@ -257,33 +276,13 @@ class ExtractionJob:
         ).partitionBy("output").parquet(bdir)
         n_docs, n_spans_in = self._input_counts(ob_in)
         m = ob.get
-        return {
-            "partition_id": bucket,
-            "status": "done",
-            "docs_parsed": n_docs,
-            "spans_emitted": int(m[vkernel.COMMIT_FLAT_SPANS]),
-            "questions_emitted": int(m[vkernel.COMMIT_QUESTIONS]),
-            "parse_failures": 0,
-            "wall_sec": round(time.perf_counter() - t0, 3),
-            "input_spans": n_spans_in,
-            "error": "",
-        }
-
-    def _empty_row(self, bucket: int) -> dict:
-        return {
-            "partition_id": bucket, "status": "done", "docs_parsed": 0,
-            "spans_emitted": 0, "questions_emitted": 0,
-            "parse_failures": 0, "wall_sec": 0.0, "input_spans": 0,
-            "error": "",
-        }
-
-    def _failed_row(self, bucket: int, exc: Exception) -> dict:
-        return {
-            "partition_id": bucket, "status": "failed", "docs_parsed": 0,
-            "spans_emitted": 0, "questions_emitted": 0,
-            "parse_failures": 0, "wall_sec": 0.0, "input_spans": 0,
-            "error": str(exc)[:500],
-        }
+        return self._row(
+            bucket, "done", docs_parsed=n_docs,
+            spans_emitted=int(m[vkernel.COMMIT_FLAT_SPANS]),
+            questions_emitted=int(m[vkernel.COMMIT_QUESTIONS]),
+            wall_sec=round(time.perf_counter() - t0, 3),
+            input_spans=n_spans_in,
+        )
 
     def run(
         self,
@@ -371,9 +370,10 @@ class CurationJob(ExtractionJob):
     verdicts, docs and tokens on the input. Extends the north-rule
     resumability story from extraction to the training-data lane."""
 
-    EMPTY_LINEAGE_SCHEMA = (
-        "partition_id int, status string, docs_in long, docs_gated long, "
-        "docs_kept long, wall_sec double, input_tokens long, error string"
+    JOURNAL = _journal(
+        partition_id=_INT, status=_STR, docs_in=_LONG, docs_gated=_LONG,
+        docs_kept=_LONG, wall_sec=_DOUBLE, input_tokens=_LONG,
+        error=_STR,
     )
 
     def __init__(
@@ -394,20 +394,6 @@ class CurationJob(ExtractionJob):
         return F.sum(
             token_count(F.coalesce(F.col("text"), F.lit(""))).cast("long")
         )
-
-    def _empty_row(self, bucket: int) -> dict:
-        return {
-            "partition_id": bucket, "status": "done", "docs_in": 0,
-            "docs_gated": 0, "docs_kept": 0, "wall_sec": 0.0,
-            "input_tokens": 0, "error": "",
-        }
-
-    def _failed_row(self, bucket: int, exc: Exception) -> dict:
-        return {
-            "partition_id": bucket, "status": "failed", "docs_in": 0,
-            "docs_gated": 0, "docs_kept": 0, "wall_sec": 0.0,
-            "input_tokens": 0, "error": str(exc)[:500],
-        }
 
     def _gate(self, docs: DataFrame) -> DataFrame:
         from ..operators.curation import curation_filter
@@ -431,16 +417,12 @@ class CurationJob(ExtractionJob):
             F.sum(F.col("keep").cast("long")).alias("k"),
         ).write.mode("overwrite").parquet(vdir)
         n_docs, n_tokens_in = self._input_counts(ob_in)
-        return {
-            "partition_id": bucket,
-            "status": "done",
-            "docs_in": n_docs,
-            "docs_gated": int(ob.get["n"]),
-            "docs_kept": int(ob.get["k"] or 0),
-            "wall_sec": round(time.perf_counter() - t0, 3),
-            "input_tokens": n_tokens_in,
-            "error": "",
-        }
+        return self._row(
+            bucket, "done", docs_in=n_docs, docs_gated=int(ob.get["n"]),
+            docs_kept=int(ob.get["k"] or 0),
+            wall_sec=round(time.perf_counter() - t0, 3),
+            input_tokens=n_tokens_in,
+        )
 
     def verdicts(self, spark: SparkSession) -> DataFrame:
         return self._read(spark, self._gate(self._empty_input(spark)).schema,
@@ -470,10 +452,10 @@ class DedupJob(ExtractionJob):
     unit + resume), database.py:289-322 (delete-before-insert);
     extended to the training-data lane."""
 
-    EMPTY_LINEAGE_SCHEMA = (
-        "partition_id int, phase string, status string, docs_in long, "
-        "rows_emitted long, wall_sec double, input_tokens long, "
-        "error string"
+    JOURNAL = _journal(
+        partition_id=_INT, phase=_STR, status=_STR, docs_in=_LONG,
+        rows_emitted=_LONG, wall_sec=_DOUBLE, input_tokens=_LONG,
+        error=_STR,
     )
 
     def __init__(
@@ -511,15 +493,8 @@ class DedupJob(ExtractionJob):
         done = self.done_bands()
         return [b for b in range(self.bands) if b not in done]
 
-    def _row(self, pid: int, phase: str, status: str, docs_in: int = 0,
-             rows_emitted: int = 0, wall: float = 0.0,
-             input_tokens: int = 0, error: str = "") -> dict:
-        return {
-            "partition_id": pid, "phase": phase, "status": status,
-            "docs_in": docs_in, "rows_emitted": rows_emitted,
-            "wall_sec": round(wall, 3), "input_tokens": input_tokens,
-            "error": error,
-        }
+    def _row(self, pid: int, phase: str, status: str, **fields) -> dict:
+        return super()._row(pid, status, phase=phase, **fields)
 
     def _input_metric_expr(self):
         from ..operators.textstats import token_count
@@ -559,7 +534,8 @@ class DedupJob(ExtractionJob):
         return self._row(
             bucket, "sig", "done", docs_in=n_docs,
             rows_emitted=int(ob.get["n"]),
-            wall=time.perf_counter() - t0, input_tokens=n_tokens_in,
+            wall_sec=round(time.perf_counter() - t0, 3),
+            input_tokens=n_tokens_in,
         )
 
     # ── phase 2: per-band LSH candidate pass ─────────────────────────
@@ -572,11 +548,12 @@ class DedupJob(ExtractionJob):
 
     def _band_pairs(self, sigs: DataFrame, band: int) -> DataFrame:
         """One band of minhash_lsh_pairs (operators/dedup.py) over a
-        signature store: slim (doc_id, bucket) self-join, max_bucket
-        skew cap, signature-similarity verify — identical hashing via
-        the shared combiner."""
+        signature store: the same slim (doc_id, bucket) self-join,
+        max_bucket skew cap and signature-similarity verify
+        (``dedup._lsh_pairs``), identical hashing via the shared
+        combiner."""
         from ..functions.hashing import combiner_for
-        from ..operators.dedup import _drop_over_cap
+        from ..operators.dedup import _lsh_pairs
 
         combine = combiner_for(self.hasher)
         rpb = self.k // self.bands
@@ -584,45 +561,8 @@ class DedupJob(ExtractionJob):
             [F.col("signature")[band * rpb + r] for r in range(rpb)], 0
         )
         slim = sigs.select("doc_id", bucket.alias("bucket"))
-        if self.max_bucket is not None:
-            # same cap semantics as minhash_lsh_pairs, same r8 shape:
-            # over-cap-key anti join instead of a whole-frame window
-            slim = _drop_over_cap(slim, ["bucket"], self.max_bucket)
-        a, b = slim.alias("a"), slim.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .dropDuplicates(["doc_a", "doc_b"])
-        )
-        # join strategy is AQE's, from the store's runtime size (as in
-        # minhash_lsh_pairs)
-        sa = sigs.select(F.col("doc_id").alias("doc_a"),
-                         F.col("signature").alias("sig_a"))
-        sb = sigs.select(F.col("doc_id").alias("doc_b"),
-                         F.col("signature").alias("sig_b"))
-        sim = (
-            F.size(
-                F.filter(
-                    F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                    lambda eq: eq,
-                )
-            )
-            / F.lit(self.k)
-        )
-        return (
-            cand.join(sa, "doc_a")
-            .join(sb, "doc_b")
-            .withColumn("sig_similarity", F.round(sim, 4))
-            .where(F.col("sig_similarity") >= self.threshold)
-            .select("doc_a", "doc_b", "sig_similarity")
-        )
+        return _lsh_pairs(slim, ["bucket"], sigs, self.k, self.threshold,
+                          self.max_bucket)
 
     def _write_band(self, spark: SparkSession, band: int) -> dict:
         """Commit one band's pairs over the committed signature store:
@@ -636,7 +576,7 @@ class DedupJob(ExtractionJob):
         ).write.mode("overwrite").parquet(pdir)
         return self._row(
             band, "band", "done", rows_emitted=int(ob.get["n"] or 0),
-            wall=time.perf_counter() - t0,
+            wall_sec=round(time.perf_counter() - t0, 3),
         )
 
     # ── driver loop ──────────────────────────────────────────────────

@@ -4,6 +4,11 @@ The reference validates shapes with pydantic models
 (/root/reference/parser/models.py); here the same contracts are Spark
 schemas so every stage is Arrow/Catalyst-typed with no Python objects
 on the hot path.
+
+This module is the single declaration of every kernel output: the
+vectorized kernel (operators/vkernel.py) derives each Arrow schema it
+emits from these types, and the pandas kernel (operators/dkernel.py)
+names its columns by them.
 """
 
 from __future__ import annotations
@@ -130,21 +135,9 @@ QUESTION_FINAL = T.StructType(
 )
 
 #: Canonical flattened output span (the correctness contract, §1.4 of
-#: SURVEY.md; reference crud.py:633-726 `_question_to_blocks`).
-FLAT_SPAN = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("question_number", T.LongType(), False),
-        T.StructField("section", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("media_ref", T.StringType(), False),
-        T.StructField("order", T.IntegerType(), False),
-    ]
-)
-
-#: flat_spans() output row (FLAT_SPAN + within-doc question seq) — also
-#: the schema of the fused packed→flat kernel (operators/dkernel.py).
+#: SURVEY.md; reference crud.py:633-726 `_question_to_blocks`) plus the
+#: within-doc question seq: the flat_spans() output row and the schema
+#: of both fused packed→flat kernels.
 FLAT_SPAN_SEQ = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),
@@ -232,19 +225,5 @@ VALIDATION_REPORT = T.StructType(
             False,
         ),
         T.StructField("success_rate", T.DoubleType(), False),
-    ]
-)
-
-# ── lineage / metrics (checkpoint-resume contract) ───────────────────────
-
-LINEAGE = T.StructType(
-    [
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("status", T.StringType(), False),  # done|failed
-        T.StructField("docs_parsed", T.LongType(), False),
-        T.StructField("spans_emitted", T.LongType(), False),
-        T.StructField("questions_emitted", T.LongType(), False),
-        T.StructField("parse_failures", T.LongType(), False),
-        T.StructField("wall_sec", T.DoubleType(), False),
     ]
 )

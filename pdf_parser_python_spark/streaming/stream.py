@@ -41,19 +41,6 @@ def read_documents_stream(
     )
 
 
-def streaming_questions(documents_stream: DataFrame) -> DataFrame:
-    """Streaming DF of finalized questions — the SAME vectorized Arrow
-    kernel (operators/vkernel.py, one mapInArrow stage) as batch:
-    ``extract_questions`` skips the giant-doc probe on streaming inputs
-    (no eager jobs on a stream) and the transform is stateless per
-    document row, so batch and streaming share the fast path."""
-    return pipeline.extract_questions(documents_stream)
-
-
-def streaming_flat_spans(documents_stream: DataFrame) -> DataFrame:
-    return pipeline.extract_flat_spans(documents_stream)
-
-
 def start_extraction(
     spark: SparkSession,
     input_dir: str,
@@ -68,7 +55,10 @@ def start_extraction(
     the streaming analogue of plans/lineage.ExtractionJob.
     """
     stream = read_documents_stream(spark, input_dir, with_page)
-    qs = streaming_questions(stream)
+    # the batch call: it skips the giant-doc probe on a streaming input
+    # (no eager job on a stream), and its one mapInArrow stage is
+    # stateless per document row
+    qs = pipeline.extract_questions(stream)
     writer = (
         qs.writeStream.format("parquet")
         .option("path", os.path.join(output_dir, "questions"))

@@ -326,3 +326,50 @@ def test_fuzz_fused_finalize_matches_reference(items):
             f[14], f[11], f[12],
         ))
     assert got == exp
+
+
+def test_kernel_outputs_have_their_declared_schema():
+    """Every kernel output is typed by its ``schema.py`` declaration:
+    each vkernel batch's Arrow schema is the type's (every field
+    nullable), and each dkernel frame's columns are the type's names,
+    on a mixed batch and on an empty input."""
+    from pdf_parser_python_spark import schema
+    from pdf_parser_python_spark.operators import dkernel
+    from pdf_parser_python_spark.operators import vkernel as V
+
+    batch = packed_docs([
+        ("ascii", _spans([
+            ("text", "Question: 1 pick one\nA. first\nB. second"),
+            ("image", "img/1.png"),
+            ("text", "Answer: B\nExplanation: because"),
+            ("text", "Question: 3 HOTSPOT\nHOTSPOT\nBox 1: x"),
+        ])),
+        ("unicode", _spans([
+            ("text", "Question: ٣ body\nſ. long s\nAnswer: ſ")])),
+        ("no-anchor", _spans([("text", "just prose")])),
+        ("empty", []),
+    ])
+    declared = {
+        V.parse_docs_flat_arrow: schema.FLAT_SPAN_SEQ,
+        V.doc_text_arrow: schema.DOC_TEXT,
+        V.question_scalars_arrow: schema.QUESTION_SCALARS,
+        V.parse_docs_final_arrow: schema.QUESTION_FINAL,
+        V.parse_docs_commit_arrow: schema.EXTRACTION_COMMIT,
+        V.validate_docs_arrow: schema.VALIDATION_REPORT,
+        dkernel.parse_docs_flat: schema.FLAT_SPAN_SEQ,
+        dkernel.parse_docs_final: schema.QUESTION_FINAL,
+        dkernel.validate_docs: schema.VALIDATION_REPORT,
+    }
+    for kernel, st in declared.items():
+        arrow = kernel.__module__.endswith("vkernel")
+        for inputs in ([batch if arrow else batch.to_pandas()], []):
+            outs = list(kernel(iter(inputs)))
+            assert outs, kernel.__name__
+            assert sum(len(o) for o in outs) > 0 or not inputs, (
+                kernel.__name__)
+            for out in outs:
+                if arrow:
+                    assert out.schema.equals(V._arrow_schema(st)), (
+                        kernel.__name__)
+                else:
+                    assert list(out.columns) == st.names, kernel.__name__

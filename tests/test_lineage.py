@@ -147,6 +147,25 @@ def test_dedup_done_sets_take_latest_done_row():
         assert job.done_bands() == {0}
 
 
+def test_lineage_frame_schema_does_not_depend_on_journal(spark):
+    """The lineage frame has the job's declared journal schema whether
+    the journal is empty or holds done and failed rows (an inferred
+    schema used to sort the columns and widen partition_id to bigint)."""
+    from pdf_parser_python_spark.plans.lineage import CurationJob, DedupJob
+
+    for cls in (ExtractionJob, CurationJob, DedupJob):
+        with tempfile.TemporaryDirectory() as td:
+            job = cls(td, n_buckets=2)
+            empty = job.lineage(spark).schema
+            job._append_lineage(job._empty_row(0))
+            job._append_lineage(job._failed_row(1, RuntimeError("lost")))
+            lin = job.lineage(spark)
+            assert lin.schema == empty, cls.__name__
+            assert empty == job.JOURNAL, cls.__name__
+            assert {(r["partition_id"], r["status"]) for r in lin.collect()
+                    } == {(0, "done"), (1, "failed")}
+
+
 def test_rerun_is_noop(spark, docs):
     with tempfile.TemporaryDirectory() as td:
         job = ExtractionJob(td, n_buckets=4)
