@@ -5,7 +5,8 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-REFERENCE = "/root/reference"
+from .oracle import REFERENCE  # noqa: E402
+
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 
 
@@ -38,6 +39,9 @@ def reference_parser():
 
 
 def fixture_dirs() -> list[str]:
+    """The reference's ``test_soa*`` snapshot dirs; none without the checkout."""
+    if not os.path.isdir(REFERENCE):
+        return []
     dirs = []
     for name in sorted(os.listdir(REFERENCE)):
         p = os.path.join(REFERENCE, name)

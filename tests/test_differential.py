@@ -12,7 +12,7 @@ from pdf_parser_python_spark import schema
 from pdf_parser_python_spark.plans import pipeline
 from pdf_parser_python_spark.sources.spans import generate_doc_spans
 
-from .oracle import flatten_doc, run_reference
+from .oracle import flatten_doc, requires_reference, run_reference
 
 N_DOCS = 60
 
@@ -25,6 +25,7 @@ def corpus():
     }
 
 
+@requires_reference
 def test_differential_span_equality(spark, corpus):
     docs = spark.createDataFrame(
         list(corpus.items()), schema=schema.DOCUMENT_SPANS_EXT
@@ -56,6 +57,7 @@ def test_differential_span_equality(spark, corpus):
     assert total_spans > 1000  # corpus is non-trivial
 
 
+@requires_reference
 def test_differential_question_fields(spark, corpus):
     sample = dict(list(corpus.items())[:20])
     docs = spark.createDataFrame(

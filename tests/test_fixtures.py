@@ -21,7 +21,9 @@ from pdf_parser_python_spark.plans import pipeline
 from pdf_parser_python_spark.sources import spans as sources
 
 from .conftest import fixture_dirs
-from .oracle import flatten_doc, run_reference
+from .oracle import flatten_doc, requires_reference, run_reference
+
+pytestmark = requires_reference
 
 KNOWN_STALE_SNAPSHOTS = {"test_soa_v2"}
 
@@ -58,7 +60,9 @@ def test_snapshot_drift_is_known():
     assert drifted == KNOWN_STALE_SNAPSHOTS
 
 
-@pytest.mark.parametrize("fdir", fixture_dirs(), ids=lambda d: os.path.basename(d))
+@pytest.mark.parametrize(
+    "fdir", fixture_dirs(), ids=[os.path.basename(d) for d in fixture_dirs()]
+)
 def test_fixture_span_equality(spark, fdir):
     docs = sources.load_fixture(spark, fdir)
     got_rows = (
@@ -74,7 +78,9 @@ def test_fixture_span_equality(spark, fdir):
     assert got == expected
 
 
-@pytest.mark.parametrize("fdir", fixture_dirs(), ids=lambda d: os.path.basename(d))
+@pytest.mark.parametrize(
+    "fdir", fixture_dirs(), ids=[os.path.basename(d) for d in fixture_dirs()]
+)
 def test_fixture_question_fields(spark, fdir):
     docs = sources.load_fixture(spark, fdir)
     rows = (
@@ -101,7 +107,9 @@ def test_fixture_question_fields(spark, fdir):
         assert [a.type for a in r.anomalies] == [a["type"] for a in e["anomalies"]]
 
 
-@pytest.mark.parametrize("fdir", fixture_dirs(), ids=lambda d: os.path.basename(d))
+@pytest.mark.parametrize(
+    "fdir", fixture_dirs(), ids=[os.path.basename(d) for d in fixture_dirs()]
+)
 def test_fixture_chunked_engine_parity(spark, fdir):
     """The anchor-chunked giant-doc branch (operators/chunked.py) must
     match the LIVE reference FSM on every golden fixture, with the

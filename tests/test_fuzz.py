@@ -6,7 +6,7 @@ minimal line sequence)."""
 
 from hypothesis import example, given, settings, strategies as st
 
-from .oracle import flatten_doc, run_reference
+from .oracle import flatten_doc, requires_reference, run_reference
 
 # building blocks chosen to collide with every anchor/noise pattern
 WORDS = st.sampled_from([
@@ -102,6 +102,7 @@ def _arrays(spans):
     return kinds, texts, refs, pages
 
 
+@requires_reference
 @given(st.lists(SPAN, min_size=1, max_size=25))
 @settings(max_examples=200, deadline=None)
 def test_fuzz_fused_flat_kernel_matches_reference(items):
@@ -214,6 +215,7 @@ def _arrow_rows(kernel, spans):
     return rows
 
 
+@requires_reference
 @given(st.lists(SPAN, min_size=1, max_size=25))
 @settings(max_examples=200, deadline=None)
 def test_fuzz_vectorized_kernel_matches_reference(items):
@@ -229,6 +231,7 @@ def test_fuzz_vectorized_kernel_matches_reference(items):
     assert got == expected
 
 
+@requires_reference
 @given(st.lists(SPAN, min_size=1, max_size=25))
 @settings(max_examples=200, deadline=None)
 def test_fuzz_vectorized_final_matches_reference(items):
@@ -296,6 +299,7 @@ def test_fuzz_vectorized_validation_matches_pandas(draw):
         assert kernel_rows(getattr(vkernel, name), batches) == rows, name
 
 
+@requires_reference
 @given(st.lists(SPAN, min_size=1, max_size=25))
 @settings(max_examples=200, deadline=None)
 def test_fuzz_fused_finalize_matches_reference(items):

@@ -13,7 +13,9 @@ from pdf_parser_python_spark.sources import spans as sources
 from pdf_parser_python_spark.sources.spans import generate_doc_spans
 
 from .conftest import fixture_dirs
-from .oracle import flatten_doc, run_reference
+from .oracle import flatten_doc, requires_reference, run_reference
+
+pytestmark = requires_reference
 
 
 def _native_flat(spark, docs):
@@ -22,7 +24,7 @@ def _native_flat(spark, docs):
 
 
 @pytest.mark.parametrize(
-    "fdir", fixture_dirs(), ids=lambda d: os.path.basename(d)
+    "fdir", fixture_dirs(), ids=[os.path.basename(d) for d in fixture_dirs()]
 )
 def test_native_fixture_equality(spark, fdir):
     _, blocks = sources.load_fixture_blocks(fdir)

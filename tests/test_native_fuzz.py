@@ -9,7 +9,7 @@ from pdf_parser_python_spark.operators import finalize
 from pdf_parser_python_spark.operators.flatten import flat_spans
 from pdf_parser_python_spark.plans import pipeline
 
-from .oracle import flatten_doc, run_reference
+from .oracle import flatten_doc, requires_reference, run_reference
 
 WORDS = [
     "Question", "question:", "Answer", "Ans", "Answers", "Key", "Keynote",
@@ -40,6 +40,7 @@ def _gen_doc(rng: random.Random) -> list[dict]:
     return spans
 
 
+@requires_reference
 def test_native_engine_fuzz_corpus(spark):
     rng = random.Random(0xFA22)
     corpus = {f"fz-{i:03d}": _gen_doc(rng) for i in range(150)}

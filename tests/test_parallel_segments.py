@@ -10,6 +10,8 @@ from pdf_parser_python_spark import schema
 from pdf_parser_python_spark.plans import pipeline
 from pdf_parser_python_spark.sources.spans import generate_doc_spans
 
+from .oracle import requires_reference
+
 
 def _giant_lines(spark, n_questions: int, parts: int = 16):
     """One document, n_questions × 5 clean line rows, built natively."""
@@ -184,6 +186,7 @@ def test_chunked_dispatch_end_to_end(spark):
         P._GIANT_PROBE_CACHE.clear()
 
 
+@requires_reference
 def test_chunked_vs_reference_random_compositions(spark):
     """Batched differential for the chunked engine: random adversarial
     line compositions (the fuzz WORDS pool: anchor lookalikes, solo

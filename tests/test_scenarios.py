@@ -2,14 +2,14 @@
 intent (FIXTURES.md §4; /root/reference/tests/test_parser.py:298-573 —
 that suite is stale at import level, so scenarios are re-expressed
 against the spans table and double-checked against the live reference
-FSM)."""
+FSM wherever its checkout is present)."""
 
 import pytest
 
 from pdf_parser_python_spark import schema
 from pdf_parser_python_spark.plans import pipeline
 
-from .oracle import run_reference
+from .oracle import HAVE_REFERENCE, run_reference
 
 
 def _doc(spark, *texts_or_spans, doc_id="t"):
@@ -35,8 +35,11 @@ def _doc(spark, *texts_or_spans, doc_id="t"):
 def _parse(spark, *items):
     docs, spans = _doc(spark, *items)
     got = pipeline.extract_questions(docs).orderBy("seq").collect()
+    # every scenario is also differential where the checkout is present:
+    # engine == live reference
+    if not HAVE_REFERENCE:
+        return got
     ref = run_reference(spans)
-    # every scenario is also differential: engine == live reference
     assert [q.question_number for q in got] == [r["question_number"] for r in ref]
     assert [q.question_text for q in got] == [r["question_text"] for r in ref]
     assert [q.answer_text for q in got] == [r["answer_text"] for r in ref]
@@ -77,8 +80,10 @@ def test_multi_page_pages(spark):
         {"kind": "text", "text": "Answer: A", "media_ref": "", "page": 4},
     )
     q = pipeline.extract_questions(docs).first()
-    ref = run_reference(spans)[0]
-    assert (q.page_start, q.page_end) == (ref["page_start"], ref["page_end"]) == (3, 4)
+    assert (q.page_start, q.page_end) == (3, 4)
+    if HAVE_REFERENCE:
+        ref = run_reference(spans)[0]
+        assert (q.page_start, q.page_end) == (ref["page_start"], ref["page_end"])
 
 
 @pytest.mark.parametrize(

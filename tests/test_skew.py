@@ -8,9 +8,10 @@ from pdf_parser_python_spark.operators.flatten import flat_spans
 from pdf_parser_python_spark.plans import pipeline
 from pdf_parser_python_spark.sources.spans import generate_doc_spans
 
-from .oracle import flatten_doc, run_reference
+from .oracle import flatten_doc, requires_reference, run_reference
 
 
+@requires_reference
 def test_giant_doc_correct_on_all_engines(spark):
     # giant_every=3 → docs 2, 5 are 100× tails
     corpus = [

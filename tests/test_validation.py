@@ -9,10 +9,12 @@ from pdf_parser_python_spark.operators.validate import validation_report
 from pdf_parser_python_spark.plans import pipeline
 from pdf_parser_python_spark.sources.spans import generate_doc_spans
 
+from .oracle import REFERENCE, requires_reference
+
 
 def reference_validate(spans):
-    if "/root/reference" not in sys.path:
-        sys.path.insert(0, "/root/reference")
+    if REFERENCE not in sys.path:
+        sys.path.insert(0, REFERENCE)
     from parser.validator import ValidationEngine
     from parser.models import BlockType, ContentBlock
     from parser.state_machine import StateMachineParser
@@ -62,6 +64,7 @@ def test_fused_validation_equals_relational(spark):
     assert a == b and len(a) == 20
 
 
+@requires_reference
 def test_validation_report_matches_reference(spark, corpus):
     docs = spark.createDataFrame(
         list(corpus.items()), schema=schema.DOCUMENT_SPANS_EXT
