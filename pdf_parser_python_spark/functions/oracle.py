@@ -1384,7 +1384,7 @@ def paragraph_dedup_sql(width: int = 15,
                         source: str = "documents") -> str:
     """Twin of dedup.paragraph_dedup as run by the para_dedup driver
     query (pseudo-paragraphs = width-token chunks, md5 hashing,
-    ' | ' output separator). The operator's min(struct) winner equals
+    ' | ' output separator). The operator's min_by winner equals
     row_number()=1 under (doc_id, pos) order — keys are unique."""
     h = md5_64_sql("para")
     return f"""

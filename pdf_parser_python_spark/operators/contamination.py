@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import xx64
+from .dedup import _reuse
 from .repetition import word_ngrams
 
 DEFAULT_N = 8
@@ -45,22 +46,19 @@ def _reuse_expensive_input(documents: DataFrame) -> DataFrame:
     """``decontaminated`` evaluates its corpus twice by design (once to
     find contaminated ids, once to emit survivors) — the price of never
     shuffling the corpus. For a plain scan that re-read is cheap and
-    caching it would be absurd (the input may be the whole raw corpus).
+    cutting it would copy the whole raw corpus into executor storage.
     But when the input plan already crosses the Python boundary (a
     curation-gate kernel, an extraction pass), re-evaluating it doubles
-    the most expensive stage of a composed pipeline — so persist
-    (LAZY, MEMORY_AND_DISK) exactly when the analyzed plan carries a
-    Python-eval node. The session's CacheManager keeps that cache until
-    ``unpersist()`` or ``spark.catalog.clearCache()``: garbage
-    collecting the frame does not release it."""
-    if documents.isStreaming:
-        return documents
+    the most expensive stage of a composed pipeline — so cut it with
+    :func:`.dedup._reuse` exactly when the analyzed plan carries a
+    Python-eval node. The blocks are freed with the returned frame; a
+    map-only input (the curation gate's) runs no job at plan build."""
     try:
         plan = documents._jdf.queryExecution().analyzed().toString()
     except Exception:  # non-JVM edge (mocks): behave as before
         return documents
     if any(t in plan for t in _PY_NODES):
-        return documents.persist()
+        return _reuse(documents)
     return documents
 
 

@@ -27,9 +27,11 @@ family) 2-4× per query, plus the skew-cap count-Window once per side.
 The signature/bucket frames are now cut with a LAZY
 ``localCheckpoint`` (:func:`_reuse`) so each is computed exactly once
 per run and every join side reads the materialized blocks. This is
-within-query reuse of a deterministic intermediate — nothing persists
-across invocations (each call builds a fresh checkpoint; results are
-recomputed from the parquet inputs every run).
+within-query reuse of a deterministic intermediate, and the package's
+only reuse point: no operator calls ``persist()`` or ``cache()``, so
+nothing is registered in the session's CacheManager and nothing
+outlives the frame that made it (each call builds a fresh checkpoint;
+results are recomputed from the parquet inputs every run).
 
 Join strategy is Spark's: no operator here hints a broadcast or counts
 rows to size one. Under AQE each join stage re-plans from the runtime
@@ -63,11 +65,18 @@ def _reuse(df: DataFrame) -> DataFrame:
     """Cut ``df`` with a lazy local checkpoint so a plan that references
     it from several join sides computes it ONCE (materialized into
     executor block storage on first use, MEMORY_AND_DISK) instead of
-    re-evaluating the whole subtree per side. Lazy: no job runs at plan
-    build. Per-DataFrame-instance, so nothing is shared across separate
-    invocations — every run still computes from its inputs. Every batch
-    frame is cut; streaming frames pass through unchanged
-    (checkpointing needs a batch RDD).
+    re-evaluating the whole subtree per side. This is the package's only
+    reuse primitive: it registers nothing in the session's CacheManager,
+    and its blocks are freed with the returned frame (the ContextCleaner
+    drops them once the frame is garbage-collected). Per-DataFrame-
+    instance, so nothing is shared across separate invocations — every
+    run still computes from its inputs. Streaming frames pass through
+    unchanged (checkpointing needs a batch RDD).
+
+    Lazy only when no exchange lies below the cut: creating the
+    checkpoint plans the subtree, and under AQE planning runs every
+    shuffle stage below it. Cut map-only subtrees in plan-building code;
+    an eager operator (``minhash_dedup_clusters``) may cut anywhere.
 
     Production note (100 TB): local checkpoints live on executor
     storage and are lost with the executor — the upstream lineage is
@@ -757,7 +766,6 @@ def minhash_dedup_clusters(
     bands: int = 8,
     shingle_k: int = 3,
     hasher: Hasher = xx64,
-    n_iter: int | None = None,
 ) -> DataFrame:
     """Scalable near-dup CLUSTER ASSIGNMENT — the linear-output
     alternative to pair listing for mass-duplicate corpora.
@@ -773,15 +781,11 @@ def minhash_dedup_clusters(
     Deterministic at any partitioning; labels only ever decrease, so
     extra iterations are idempotent at the fixpoint.
 
-    ``n_iter=None`` (default) iterates until the labels stop changing
-    — a guaranteed fixpoint (labels strictly decrease while any row
-    changes; ≤ log2(longest chain) squarings, so the convergence
-    check costs a handful of cheap jobs on an already-persisted
-    frame). Pass an int to force exactly that many squarings (the old
-    SQL-expressible contract: resolves chains up to 2^n_iter hops,
-    and components deeper than that get INCONSISTENT reps — only use
-    a fixed count when an external oracle must replicate the plan
-    hop-for-hop).
+    Iterates until the labels stop changing — a guaranteed fixpoint
+    (labels strictly decrease while any row changes; ≤ log2(longest
+    chain) squarings). Each round is cut with :func:`_reuse` and checked
+    with one ``count()``, so building the result runs jobs; every
+    round's blocks are freed with its frame.
 
     Returns (doc_id, cluster_rep) for every document sharing at least
     one band bucket with another document (singletons are excluded —
@@ -819,42 +823,19 @@ def minhash_dedup_clusters(
             F.col("rep2").alias("rep"),
         )
 
-    if n_iter is not None:
-        # each hop references `labels` twice (the frame and its own
-        # flipped copy) — checkpoint per hop or the subtree DOUBLES
-        # every iteration (2^n_iter signature pipelines by hop 3)
-        labels = _reuse(labels)
-        for _ in range(n_iter):
-            labels = _reuse(hop_once(labels).drop("_old"))
-        return labels.select("doc_id", F.col("rep").alias("cluster_rep"))
-
     # converge: squaring halves the unresolved chain every round, so
     # 20 rounds covers chains of 2^20 hops — far beyond any bucket-star
-    # graph; the cap only guards against a logic bug looping forever
-    labels = labels.persist()
-    prev = labels
+    # graph; the cap only guards against a logic bug looping forever.
+    # Each hop references `labels` twice (the frame and its flipped
+    # copy), so every round is cut: the plan never nests earlier hops.
+    labels = _reuse(labels)
     for _ in range(20):
-        nxt = hop_once(labels).persist()
-        # count() (not isEmpty) so nxt is FULLY materialized into the
-        # persist before the previous iteration's cache is dropped
-        converged = (
-            nxt.where(F.col("rep") != F.col("_old")).count() == 0
-        )
+        nxt = _reuse(hop_once(labels))
+        converged = nxt.where(F.col("rep") != F.col("_old")).count() == 0
         labels = nxt.drop("_old")
-        prev.unpersist()
-        prev = nxt
         if converged:
             break
-    # the fixpoint frame was fully materialized by the count() above;
-    # the returned plan is rooted at that persisted frame, and the
-    # cache block is INTENTIONALLY retained: dropping it here would
-    # force the caller to recompute the whole hop chain (whose
-    # intermediate persists are already released). Callers that are
-    # done with the result should `.unpersist()` it: the session's
-    # CacheManager keeps the plan cached until `unpersist()` or
-    # `spark.catalog.clearCache()`, garbage collection does not free it.
-    out = labels.select("doc_id", F.col("rep").alias("cluster_rep"))
-    return out
+    return labels.select("doc_id", F.col("rep").alias("cluster_rep"))
 
 
 def simhash(col: Column, bits: int = 64, hasher: Hasher = xx64) -> Column:
@@ -1280,21 +1261,26 @@ def paragraph_dedup(
     Scale shape — deliberately NOT a row_number window over the
     paragraph hash: the motivating input is one boilerplate paragraph
     duplicated 10⁸-10⁹ times, and a window would ship every copy to a
-    single partition. Instead the winner per hash is
-    ``min(struct(doc_id, pos))`` — a hash aggregation with map-side
-    partial combine, so the mega-duplicate collapses to one row per
-    map task before the shuffle — then a LEFT equi-join marks winners
-    on the near-unique (hash, doc_id, pos) triple, and one
-    groupBy(doc_id) reassembles. The input is scanned ONCE
-    (posexplode_outer keeps zero-paragraph documents as a null row, so
-    no separate doc-spine join): three skew-proof exchanges total, and
-    expensive upstream plans (gate kernels, decontamination) are not
-    recomputed for a second scan.
+    single partition. The input is scanned ONCE, and the plan has two
+    exchanges and no join:
+
+    - each document explodes to a head row (pos 0, null paragraph, so
+      documents with zero paragraphs survive) plus one row per
+      paragraph;
+    - one aggregation keyed by the paragraph hash keeps the
+      ``min_by(…, struct(doc_id, pos))`` row of each hash — partially
+      aggregated map-side, so the mega-duplicate collapses to one row
+      per map task before the shuffle; a null paragraph is keyed by its
+      own (doc_id, pos), so every head row survives;
+    - one groupBy(doc_id) reassembles each document from its head row
+      and the winners it owns.
+
+    Nothing is cached: the single scan leaves no subtree to share.
 
     Returns ``doc_id, n_paras, n_kept, text_deduped, *passthrough``
     (documents with zero paragraphs survive with empty text)."""
     reserved = {"doc_id", "n_paras", "n_kept", "text_deduped",
-                "pos", "para", "ph", "_win"}
+                "pos", "para", "ph", "_solo"}
     bad = reserved.intersection(passthrough)
     if bad:
         raise ValueError(
@@ -1309,46 +1295,34 @@ def paragraph_dedup(
             F.transform(F.split(c, F.lit(sep), -1), lambda x: F.trim(x)),
             lambda x: x != "",
         )
-    paras = documents.select(
+    rows = documents.select(
         "doc_id",
         *passthrough,
         F.size(paragraphs).cast("bigint").alias("n_paras"),
-        F.posexplode_outer(paragraphs).alias("pos", "para"),
-    ).withColumn(
-        "ph", F.when(F.col("para").isNotNull(), hasher(F.col("para"), 0))
+        F.posexplode(
+            F.concat(F.array(F.lit(None)), F.coalesce(paragraphs, F.array()))
+        ).alias("pos", "para"),
     )
-    if not documents.isStreaming:
-        # r8: the winners aggregate AND the marked join both consume
-        # `paras`; without a reuse point Spark evaluates the whole
-        # upstream twice — in a composed pipeline (gate → decontam →
-        # this) that doubles every stage before the dedup. A LAZY
-        # persist (MEMORY_AND_DISK) materializes the exploded
-        # paragraphs once on first action; no job runs at plan build.
-        # The session's CacheManager holds the cache until
-        # `unpersist()` or `spark.catalog.clearCache()`; garbage
-        # collecting the frame does not release it.
-        paras = paras.persist()
-    winners = (
-        paras.where(F.col("para").isNotNull())
-        .groupBy("ph")
-        .agg(F.min(F.struct("doc_id", "pos")).alias("w"))
-        .select(
-            "ph",
-            F.col("w.doc_id").alias("doc_id"),
-            F.col("w.pos").alias("pos"),
-            F.lit(True).alias("_win"),
-        )
+    para = F.col("para")
+    winners = rows.select(
+        "*",
+        F.when(para.isNotNull(), hasher(para, 0)).alias("ph"),
+        F.when(para.isNull(), F.struct("doc_id", "pos")).alias("_solo"),
+    ).groupBy("ph", "_solo").agg(
+        F.min_by(
+            F.struct("doc_id", "pos", "para", "n_paras", *passthrough),
+            F.struct("doc_id", "pos"),
+        ).alias("w")
     )
-    marked = paras.join(winners, ["ph", "doc_id", "pos"], "left")
-    out = marked.groupBy("doc_id").agg(
+    return winners.select("w.*").groupBy("doc_id").agg(
         F.first("n_paras").alias("n_paras"),
-        F.count("_win").cast("bigint").alias("n_kept"),
+        F.count_if(para.isNotNull()).alias("n_kept"),
         F.concat_ws(
             out_sep,
             F.transform(
                 F.array_sort(
                     F.collect_list(
-                        F.when(F.col("_win"), F.struct("pos", "para"))
+                        F.when(para.isNotNull(), F.struct("pos", "para"))
                     )
                 ),
                 lambda s: s["para"],
@@ -1356,11 +1330,3 @@ def paragraph_dedup(
         ).alias("text_deduped"),
         *[F.first(p).alias(p) for p in passthrough],
     )
-    if not documents.isStreaming:
-        # r8: downstream composition (mixture plan + sample, packing's
-        # prefix-sum sides) references this result several times — the
-        # round-7 compose plan re-ran the reassembly aggregate 8×.
-        # Same lazy-persist rationale, and the same lifetime, as
-        # `paras` above.
-        out = out.persist()
-    return out

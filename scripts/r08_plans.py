@@ -88,7 +88,7 @@ def main() -> None:
         from pdf_parser_python_spark.operators import dedup
 
         docs = spark.read.parquet("/tmp/bench_dedup_docs_1000000.parquet")
-        return dedup.minhash_dedup_clusters(docs, n_iter=3)
+        return dedup.minhash_dedup_clusters(docs)
 
     # the signature STAGE plan (the pairs/clusters plans root at the
     # localCheckpoint, so the signature pipeline — where the r8 Arrow

@@ -28,16 +28,6 @@ def spark():
     s.stop()
 
 
-@pytest.fixture(scope="session")
-def reference_parser():
-    """Import the live reference FSM for differential testing."""
-    if REFERENCE not in sys.path:
-        sys.path.insert(0, REFERENCE)
-    from parser.state_machine import StateMachineParser  # noqa
-
-    return StateMachineParser
-
-
 def fixture_dirs() -> list[str]:
     """The reference's ``test_soa*`` snapshot dirs; none without the checkout."""
     if not os.path.isdir(REFERENCE):

@@ -51,3 +51,29 @@ def test_operators_declare_no_arrow_schema():
         and node.func.value.id == "pa"
     ]
     assert hits == []
+
+
+def test_package_reuses_only_through_dedup_reuse():
+    """No operator caches in the session: ``persist()`` and ``cache()``
+    register a plan in the CacheManager, which keeps it past the frame
+    that made it. The one reuse point is ``operators.dedup._reuse``, a
+    local checkpoint whose blocks are freed with its frame."""
+    hits = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        reuse = [
+            node for fn in tree.body
+            if path == PACKAGE / "operators" / "dedup.py"
+            and isinstance(fn, ast.FunctionDef) and fn.name == "_reuse"
+            for node in ast.walk(fn)
+        ]
+        hits += [
+            f"{path.relative_to(PACKAGE.parent)}:{node.lineno}"
+            f" .{node.func.attr}("
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("persist", "cache", "localCheckpoint")
+            and node not in reuse
+        ]
+    assert hits == []

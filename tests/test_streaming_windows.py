@@ -10,6 +10,22 @@ from pyspark.sql import functions as F
 from pdf_parser_python_spark.streaming import windows as W
 
 
+def _stop(spark, q, timeout_s=30.0):
+    """Stop ``q``, then wait (bounded) until no Spark job is active and
+    no task is running: ``stop()`` cancels the micro-batch job and
+    returns while its killed tasks may still be writing under the
+    checkpoint directory that the caller is about to delete."""
+    q.stop()
+    tracker = spark.sparkContext.statusTracker()
+    jvm_tracker = spark.sparkContext._jsc.sc().statusTracker()
+    deadline = time.time() + timeout_s
+    while time.time() < deadline and (
+        tracker.getActiveJobsIds()
+        or any(e.numRunningTasks() for e in jvm_tracker.getExecutorInfos())
+    ):
+        time.sleep(0.1)
+
+
 def test_windowed_counts_with_watermark(spark):
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     with tempfile.TemporaryDirectory() as td:
@@ -78,7 +94,7 @@ def test_stateful_doc_assembler(spark):
             if len(got) == 3:
                 break
             time.sleep(0.5)
-        q.stop()
+        _stop(spark, q)
         assert len(got) == 3
         by_doc = {r.doc_id: r for r in got}
         for d in range(3):
@@ -129,7 +145,7 @@ def test_assembler_feeds_vectorized_kernel(spark):
             if len(got) == 2:
                 break
             time.sleep(0.5)
-        q.stop()
+        _stop(spark, q)
 
         # row-equal to the batch vectorized kernel over the same doc
         batch_doc = spark.createDataFrame(

@@ -407,11 +407,6 @@ def test_cluster_reps_are_fixpoints(spark):
                for r in dedup.minhash_dedup_clusters(
                    docs.repartition(13)).collect()}
     assert labels == labels2
-    # fixed-squaring mode still available and agrees once deep enough
-    labels3 = {r.doc_id: r.cluster_rep
-               for r in dedup.minhash_dedup_clusters(
-                   docs, n_iter=5).collect()}
-    assert labels == labels3
 
 
 def test_chunked_non_dense_offsets(spark):
