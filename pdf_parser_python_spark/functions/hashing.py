@@ -10,6 +10,11 @@ Two families:
   against a SQL oracle instead of rows-only. 15 hex digits = 60 bits,
   safely inside a signed int64 in both engines.
 
+Each has a Column form (:func:`xx64`, :func:`md5_64`) and a Spark-SQL
+form over SQL text (:func:`xx64_sql`, :func:`md5_64_sql`), as do their
+multi-lane combiners; :func:`sql_forms` maps a hasher to its SQL forms
+and refuses any other hasher.
+
 Seeding is uniform: the seed is prefixed as ``"{seed}:"`` text so the
 same construction works for seeded minhash permutations and unseeded
 fingerprints (seed 0).
@@ -31,7 +36,27 @@ def md5_64(col: Column, seed: int = 0) -> Column:
     ).cast("long")
 
 
-def md5_64_sql(expr: str, seed: int | str = 0) -> str:
+# ── Spark-SQL forms ──────────────────────────────────────────────────────
+# The same expressions as SQL text over SQL text. An operator whose
+# expression depends only on Python constants builds it as one string
+# and hands it to ``selectExpr``/``F.expr``: PySpark wraps every Column
+# method and ``F.*`` call in a call-site capture that costs about ten
+# Python↔JVM round trips, while a whole SQL string costs about three.
+# tests/test_hashing.py checks each SQL form equal to its Column form.
+
+
+def xx64_sql(expr: str, seed: int = 0) -> str:
+    """:func:`xx64` of the SQL expression ``expr``."""
+    return f"xxhash64({expr}, {seed})"
+
+
+def md5_64_sql(expr: str, seed: int = 0) -> str:
+    """:func:`md5_64` of the SQL expression ``expr``."""
+    return (f"CAST(conv(substring(md5(concat('{seed}:', {expr})), 1, 15),"
+            f" 16, 10) AS BIGINT)")
+
+
+def md5_64_duckdb(expr: str, seed: int | str = 0) -> str:
     """The DuckDB twin of :func:`md5_64`. ``seed`` may be an int or a
     SQL expression string (e.g. a lambda variable)."""
     seed_expr = f"'{seed}:'" if isinstance(seed, int) else f"({seed} || ':')"
@@ -51,26 +76,21 @@ def md5_64_sql(expr: str, seed: int | str = 0) -> str:
 # lane).
 
 
-def xx64_combine(cols: list[Column], seed: int = 0) -> Column:
-    return F.xxhash64(*cols, F.lit(seed))
+def xx64_combine_sql(exprs: list[str], seed: int = 0) -> str:
+    return f"xxhash64({', '.join(exprs)}, {seed})"
 
 
-def md5_64_combine(cols: list[Column], seed: int = 0) -> Column:
-    return md5_64(F.concat_ws(":", *[c.cast("string") for c in cols]), seed)
+def md5_64_combine_sql(exprs: list[str], seed: int = 0) -> str:
+    lanes = ", ".join(f"CAST({e} AS STRING)" for e in exprs)
+    return md5_64_sql(f"concat_ws(':', {lanes})", seed)
 
 
-def combiner_for(hasher):
-    """Resolve the multi-lane combiner matching a scalar ``hasher``.
-    Unknown hashers fall back to the string-join construction (correct
-    for any hasher, just not string-free)."""
+def sql_forms(hasher):
+    """``(one, combine)``: the SQL forms of a scalar ``hasher`` and of
+    its multi-lane combiner."""
     if hasher is xx64:
-        return xx64_combine
+        return xx64_sql, xx64_combine_sql
     if hasher is md5_64:
-        return md5_64_combine
-
-    def generic(cols: list[Column], seed: int = 0) -> Column:
-        return hasher(
-            F.concat_ws(":", *[c.cast("string") for c in cols]), seed
-        )
-
-    return generic
+        return md5_64_sql, md5_64_combine_sql
+    raise ValueError(
+        f"hasher must be hashing.xx64 or hashing.md5_64, got {hasher!r}")

@@ -29,7 +29,7 @@ Unicode-native already).
 from __future__ import annotations
 
 from . import anchors as A
-from .hashing import md5_64_sql
+from .hashing import md5_64_duckdb
 
 # ── RE2 forms of the shared grammar ──────────────────────────────────────
 
@@ -307,20 +307,20 @@ _SHINGLES = """
 #: round-6 operators/dedup.minhash_signatures: a shingle's base hash
 #: combines the 3 consecutive token hashes through the md5 combiner
 #: (decimal renderings joined with ':', "0:" seed prefix —
-#: functions/hashing.md5_64_combine). Degenerate docs (<3 tokens) take
+#: functions/hashing.md5_64_combine_sql). Degenerate docs (<3 tokens) take
 #: one shingle over all token hashes; array_to_string of the short
 #: array matches concat_ws's null-skip on the Spark side.
 _HASH_SHINGLES = (
     "\n    CASE WHEN len(th) >= 3\n"
     "         THEN list_distinct(list_transform(range(0, len(th) - 2),\n"
     "              i -> "
-    + md5_64_sql(
+    + md5_64_duckdb(
         "th[i+1]::VARCHAR || ':' || th[i+2]::VARCHAR"
         " || ':' || th[i+3]::VARCHAR",
         0,
     )
     + "))\n         ELSE ["
-    + md5_64_sql("array_to_string(th, ':')", 0)
+    + md5_64_duckdb("array_to_string(th, ':')", 0)
     + "] END\n"
 )
 
@@ -334,12 +334,12 @@ def dedup_minhash_sql(k: int = 32, bands: int = 16,
                       threshold: float = 0.5,
                       max_bucket: int = 4096) -> str:
     rpb = k // bands
-    h_tok = md5_64_sql("t", 0)
-    h_seed = md5_64_sql("h::VARCHAR", "j::VARCHAR")
+    h_tok = md5_64_duckdb("t", 0)
+    h_seed = md5_64_duckdb("h::VARCHAR", "j::VARCHAR")
     band_key = " || ':' || ".join(
         f"sig[b*{rpb}+{r}+1]::VARCHAR" for r in range(rpb)
     )
-    h_band = md5_64_sql(band_key, 0)
+    h_band = md5_64_duckdb(band_key, 0)
     return f"""
 WITH corpus AS (
     SELECT doc_id, text FROM documents
@@ -410,12 +410,12 @@ def dedup_clusters_sql(k: int = 32, bands: int = 16) -> str:
     converge in ≤3 squarings — 32 hops is a wide margin, and a deeper
     corpus would fail the gate loudly rather than silently agree)."""
     rpb = k // bands
-    h_tok = md5_64_sql("t", 0)
-    h_seed = md5_64_sql("h::VARCHAR", "j::VARCHAR")
+    h_tok = md5_64_duckdb("t", 0)
+    h_seed = md5_64_duckdb("h::VARCHAR", "j::VARCHAR")
     band_key = " || ':' || ".join(
         f"sig[b*{rpb}+{r}+1]::VARCHAR" for r in range(rpb)
     )
-    h_band = md5_64_sql(band_key, 0)
+    h_band = md5_64_duckdb(band_key, 0)
     return f"""
 WITH corpus AS (
     SELECT doc_id, text FROM documents
@@ -492,7 +492,7 @@ def dedup_simhash_sql(max_hamming: int = 3, max_bucket: int = 4096) -> str:
     blocks = simhash_blocks(max_hamming)
     pbits = 64 // blocks
     mask = (1 << pbits) - 1
-    h0 = md5_64_sql("s", 0)
+    h0 = md5_64_duckdb("s", 0)
     return f"""
 WITH corpus AS (
     SELECT doc_id, text FROM documents
@@ -532,7 +532,7 @@ SELECT doc_a, doc_b, hamming FROM pairs WHERE hamming <= {max_hamming}"""
 def text_profile_sql() -> str:
     from ..operators.textstats import STOPWORDS
 
-    h0 = md5_64_sql("s", 0)
+    h0 = md5_64_duckdb("s", 0)
     hit_exprs = []
     structs = []
     for lang in sorted(STOPWORDS):
@@ -766,7 +766,7 @@ FROM scored ORDER BY raw DESC, vec_id LIMIT {k}"""
 
 def sim_ivf_topk_sql(dim: int = 64, n_cells: int = 8, n_probe: int = 3,
                      k: int = 10) -> str:
-    h = md5_64_sql("vec_id::VARCHAR", 0)
+    h = md5_64_duckdb("vec_id::VARCHAR", 0)
     d2 = (f"list_sum(list_transform(range(1, {dim + 1}), "
           f"i -> (v[i] - cv[i]) * (v[i] - cv[i])))")
     d2q = (f"list_sum(list_transform(range(1, {dim + 1}), "
@@ -1285,7 +1285,7 @@ def _decontam_ctes(n: int = 8, corpus: str = "documents",
     carved from the raw one."""
     return _DECONTAM_CTES.format(
         toks_l=_TOKS_L, toks_raw=_TOKS_RAW, n=n, n1=n - 1,
-        hash_g=md5_64_sql("gram"), corpus=corpus, bench_src=bench_src,
+        hash_g=md5_64_duckdb("gram"), corpus=corpus, bench_src=bench_src,
     )
 
 
@@ -1386,7 +1386,7 @@ def paragraph_dedup_sql(width: int = 15,
     query (pseudo-paragraphs = width-token chunks, md5 hashing,
     ' | ' output separator). The operator's min_by winner equals
     row_number()=1 under (doc_id, pos) order — keys are unique."""
-    h = md5_64_sql("para")
+    h = md5_64_duckdb("para")
     return f"""
 WITH t AS (SELECT doc_id, {_TOKS_RAW} AS toks FROM {source}),
 p0 AS (
@@ -1452,7 +1452,7 @@ def packing_sql(seq_len: int = 2048, source: str = "documents",
     )
     order = (
         f"doc_id{ecol}" if shuffle_seed is None
-        else md5_64_sql(key, shuffle_seed) + f", doc_id{ecol}"
+        else md5_64_duckdb(key, shuffle_seed) + f", doc_id{ecol}"
     )
     return f"""
 WITH t AS (
@@ -1613,7 +1613,7 @@ def mixture_sample_sql(
 ) -> str:
     """Twin of mixture.mixture_sample (mix_sample driver query): the
     md5-ppm draw + epochs as a lateral generate_series."""
-    u = md5_64_sql("d.doc_id::varchar", seed)
+    u = md5_64_duckdb("d.doc_id::varchar", seed)
     return f"""
 WITH plan AS ({mixture_plan_sql(weights, target_tokens, source)}),
 base AS (

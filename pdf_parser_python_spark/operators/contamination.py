@@ -104,27 +104,20 @@ def _doc_gram_rows(
                 _gram_hashes(F.col(text_col), n, hasher)
             ).alias("gram_hash"),
         )
-    from ..functions.hashing import xx64_combine
-    from .textstats import tokens
+    from ..functions.hashing import xx64_combine_sql, xx64_sql
+    from .textstats import tokens_sql
 
-    staged = documents.select(
-        "doc_id",
-        F.transform(
-            tokens(F.lower(F.col(text_col))), lambda t: hasher(t, 0)
-        ).alias("_th"),
+    toks = tokens_sql(f"lower(`{text_col}`)")
+    staged = documents.selectExpr(
+        "doc_id", f"transform({toks}, t -> {xx64_sql('t')}) AS _th"
     )
-    th = F.col("_th")
-    n_t = F.size(th)
-    idx = F.sequence(F.lit(0), F.greatest(n_t - n, F.lit(0)))
-    lanes = F.transform(
-        idx,
-        # NB: one-arg lambda — a second parameter would bind the index
-        lambda i: xx64_combine([F.get(th, i + j) for j in range(n)], 0),
+    lane = xx64_combine_sql([f"get(_th, i + {j})" for j in range(n)])
+    grams = (
+        f"CASE WHEN size(_th) >= {n} THEN array_distinct(transform("
+        f"sequence(0, greatest(size(_th) - {n}, 0)), i -> {lane}))"
+        " ELSE CAST(array() AS ARRAY<BIGINT>) END"
     )
-    grams = F.when(n_t >= n, F.array_distinct(lanes)).otherwise(
-        F.array().cast("array<long>")
-    )
-    return staged.select("doc_id", F.explode(grams).alias("gram_hash"))
+    return staged.selectExpr("doc_id", f"explode({grams}) AS gram_hash")
 
 
 def benchmark_grams(
@@ -144,11 +137,12 @@ def benchmark_grams(
         # mirror the corpus side's hash-lane scheme (a gram string has
         # exactly n tokens; hashing them through the same combiner
         # reproduces the corpus side's lane value for that gram)
-        from ..functions.hashing import xx64_combine
-        from .textstats import tokens
+        from ..functions.hashing import xx64_combine_sql, xx64_sql
+        from .textstats import tokens_sql
 
-        th = F.transform(tokens(F.col("gram")), lambda t: hasher(t, 0))
-        gram_hash = xx64_combine([F.get(th, F.lit(j)) for j in range(n)], 0)
+        th = f"transform({tokens_sql('gram')}, t -> {xx64_sql('t')})"
+        gram_hash = F.expr(
+            xx64_combine_sql([f"get({th}, {j})" for j in range(n)]))
     else:
         gram_hash = hasher(F.col("gram"), 0)
     return (

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..zipcache import drop_zip_finders
 from .repetition import line_repetition, ngram_repetition, word_ngrams
-from .textstats import lang_guess, quality_score, token_count
+from .textstats import lang_guess, quality_score, sql_str, token_count
 
 #: rule names in evaluation order (part of the output contract).
 RULES = ("low_quality", "lang", "dup_lines", "repetitive_ngram", "too_short")
@@ -153,14 +153,14 @@ def _gate_metrics_arrow(staged: DataFrame, n: int, line_width: int | None,
                 res[p] = pdf[p].reset_index(drop=True)
             yield res
 
-    return staged.mapInPandas(kernel, out_schema).select(
+    return staged.mapInPandas(kernel, out_schema).selectExpr(
         "doc_id",
         "quality",
         "lang_guess",
         "n_tokens",
-        F.round("_dlf", 4).alias("dup_line_frac"),
-        F.round("_tncf", 4).alias("top_ngram_char_frac"),
-        *[F.col(p) for p in passthrough],
+        "round(_dlf, 4) AS dup_line_frac",
+        "round(_tncf, 4) AS top_ngram_char_frac",
+        *[f"`{p}`" for p in passthrough],
     )
 
 
@@ -217,16 +217,17 @@ def curation_filter(
             f"passthrough columns collide with gate outputs: "
             f"{sorted(bad)}"
         )
-    c = F.coalesce(F.col(text_col), F.lit(""))
+    text = f"coalesce(`{text_col}`, '')"
     if engine == "arrow":
         m = _gate_metrics_arrow(
-            documents.select(
-                "doc_id", c.alias("_text"),
-                *[F.col(p) for p in passthrough],
+            documents.selectExpr(
+                "doc_id", f"{text} AS _text",
+                *[f"`{p}`" for p in passthrough],
             ),
             n, line_width, passthrough,
         )
     else:
+        c = F.expr(text)
         if lines is None:
             lines = F.filter(
                 F.transform(F.split(c, "\n"), lambda x: F.trim(x)),
@@ -251,22 +252,20 @@ def curation_filter(
             nr["top_ngram_char_frac"].alias("top_ngram_char_frac"),
             *[F.col(p) for p in passthrough],
         )
+    listed = ", ".join(sql_str(lang) for lang in langs)
     checks = [
-        (F.col("quality") < min_quality, "low_quality"),
-        (~F.col("lang_guess").isin(*langs), "lang"),
-        (F.col("dup_line_frac") > max_dup_line_frac, "dup_lines"),
+        (f"quality < {min_quality}", "low_quality"),
+        (f"NOT lang_guess IN ({listed})" if langs else "true", "lang"),
+        (f"dup_line_frac > {float(max_dup_line_frac)!r}D", "dup_lines"),
         (
-            F.col("top_ngram_char_frac") > max_top_ngram_char_frac,
+            f"top_ngram_char_frac > {float(max_top_ngram_char_frac)!r}D",
             "repetitive_ngram",
         ),
-        (F.col("n_tokens") < min_tokens, "too_short"),
+        (f"n_tokens < {min_tokens}", "too_short"),
     ]
-    reasons = F.concat_ws(
-        ",",
-        *[F.when(cond, F.lit(name)) for cond, name in checks],
-    )
-    return m.select(
-        "*",
-        reasons.alias("reasons"),
-        (reasons == "").alias("keep"),
+    reasons = "concat_ws(',', {})".format(", ".join(
+        f"CASE WHEN {cond} THEN '{name}' END" for cond, name in checks
+    ))
+    return m.selectExpr(
+        "*", f"{reasons} AS reasons", f"{reasons} = '' AS keep"
     )

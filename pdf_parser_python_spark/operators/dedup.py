@@ -44,8 +44,6 @@ only when it must derive ``n_planes``).
 
 from __future__ import annotations
 
-import functools
-import operator
 from typing import Callable
 
 import numpy as np
@@ -56,7 +54,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import xx64
 from ..zipcache import drop_zip_finders
-from .textstats import shingles
+from .textstats import shingles, sql_str
 
 Hasher = Callable[[Column, int], Column]
 
@@ -103,8 +101,8 @@ def _drop_over_cap(df: DataFrame, keys: list[str], max_bucket: int,
     when a pathological corpus makes it large)."""
     over = (
         df.groupBy(*keys)
-        .agg(F.count("*").alias(count_col))
-        .where(F.col(count_col) > max_bucket)
+        .agg(F.expr(f"count(*) AS {count_col}"))
+        .where(f"{count_col} > {max_bucket}")
         .select(*keys)
     )
     return df.join(over, keys, "left_anti")
@@ -560,61 +558,46 @@ def minhash_signatures(
     over all tokens; null lanes are skipped by both combiners, so the
     construction is well-defined down to empty text.
     """
-    from ..functions.hashing import combiner_for
-    from .textstats import tokens
+    from ..functions.hashing import sql_forms
+    from .textstats import tokens_sql
 
-    toks = tokens(F.lower(F.col(text_col)))
-    d = documents.select(
-        "doc_id", F.transform(toks, lambda t: hasher(t, 0)).alias("th")
+    one, combine = sql_forms(hasher)
+    toks = tokens_sql(f"lower(`{text_col}`)")
+    d = documents.selectExpr(
+        "doc_id", f"transform({toks}, t -> {one('t', 0)}) AS th"
     )
     # r8: on the production xx64 path the shingle-combine + K-seed
     # min-fold runs as a vectorized Arrow kernel — bit-exact with the
     # HOF fold (see _minhash_sig_kernel), ~K× less hashing work
     # because the seed-independent hashLong is computed once per
-    # shingle. The md5/generic hashers (the DuckDB-oracled queries)
-    # and streaming input keep the HOF fold.
+    # shingle. The md5 hasher (the DuckDB-oracled queries) and
+    # streaming input keep the HOF fold.
     if hasher is xx64 and not documents.isStreaming:
         return _minhash_sig_arrow(d, k, shingle_k)
-    return _minhash_sig_hof(d, k, shingle_k, combiner_for(hasher))
+    return _minhash_sig_hof(d, k, shingle_k, combine)
 
 
 def _minhash_sig_hof(d: DataFrame, k: int, shingle_k: int,
                      combine) -> DataFrame:
     """(doc_id, th) → (doc_id, signature) as JVM higher-order functions:
-    ``combine`` chains ``shingle_k`` consecutive token hashes into a
-    distinct base hash per shingle, and signature[s] is the min over
-    the bases of ``combine([base], s)``. The reference that
-    :func:`_minhash_sig_kernel` reproduces bit-exactly for xx64."""
-    th = F.col("th")
-    n = F.size(th)
-    idx = F.sequence(F.lit(0), F.greatest(n - shingle_k, F.lit(0)))
-    base = F.transform(
-        idx,
-        # NB: one-arg lambda — a second parameter would bind the index
-        lambda i: combine(
-            [F.get(th, i + j) for j in range(shingle_k)], 0
-        ),
+    the SQL combiner ``combine`` chains ``shingle_k`` consecutive token
+    hashes into a distinct base hash per shingle, and signature[s] is
+    the min over the bases of ``combine([base], s)``. The reference
+    that :func:`_minhash_sig_kernel` reproduces bit-exactly for xx64."""
+    base = combine([f"get(th, i + {j})" for j in range(shingle_k)], 0)
+    short = combine([f"get(th, {j})" for j in range(shingle_k)], 0)
+    bh = (
+        f"CASE WHEN size(th) >= {shingle_k} THEN array_distinct(transform("
+        f"sequence(0, greatest(size(th) - {shingle_k}, 0)), i -> {base}))"
+        f" ELSE array({short}) END"
     )
-    short = F.array(combine([F.get(th, F.lit(j)) for j in range(shingle_k)], 0))
-    d = d.select(
-        "doc_id",
-        F.when(n >= shingle_k, F.array_distinct(base))
-        .otherwise(short)
-        .alias("bh"),
+    sig = ", ".join(
+        f"array_min(transform(bh, h -> {combine(['h'], s)}))"
+        for s in range(k)
     )
-    def seeded(s: int):
-        # NB: must return a ONE-arg lambda — a default-arg trick
-        # (lambda h, s=s) gives the function two parameters and the
-        # HOF machinery then binds the second to the element INDEX
-        return lambda h: combine([h], s)
-
-    sig = F.array(
-        *[
-            F.array_min(F.transform(F.col("bh"), seeded(s)))
-            for s in range(k)
-        ]
+    return d.selectExpr("doc_id", f"{bh} AS bh").selectExpr(
+        "doc_id", f"array({sig}) AS signature"
     )
-    return d.select("doc_id", sig.alias("signature"))
 
 
 def minhash_band_buckets(
@@ -632,31 +615,30 @@ def minhash_band_buckets(
     :func:`minhash_lsh_pairs` instead of re-deriving it. Pass a
     precomputed ``sigs`` (doc_id, signature) to reuse one signature
     subtree across several consumers."""
-    from ..functions.hashing import combiner_for
-
-    rows_per_band = k // bands
-    combine = combiner_for(hasher)
     if sigs is None:
         sigs = minhash_signatures(documents, text_col, k, shingle_k, hasher)
-
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                combine(
-                    [
-                        F.col("signature")[b * rows_per_band + r]
-                        for r in range(rows_per_band)
-                    ],
-                    0,
-                ).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
+    band_structs = ", ".join(
+        f"struct({b} AS band, {band_bucket_sql(hasher, k, bands, b)}"
+        " AS bucket)"
+        for b in range(bands)
     )
-    return sigs.select(
-        "doc_id", "signature", F.explode(band_structs).alias("bb")
-    ).select("doc_id", "signature", F.col("bb.band"), F.col("bb.bucket"))
+    return sigs.selectExpr(
+        "doc_id", "signature", f"explode(array({band_structs})) AS bb"
+    ).selectExpr("doc_id", "signature", "bb.band", "bb.bucket")
+
+
+def band_bucket_sql(hasher: Hasher, k: int, bands: int, band: int) -> str:
+    """The LSH bucket of ``band`` as SQL text: ``hasher``'s multi-lane
+    combiner over that band's rows of ``signature``. Shared by
+    :func:`minhash_band_buckets` and the per-band commits of
+    ``plans.lineage.DedupJob``."""
+    from ..functions.hashing import sql_forms
+
+    _, combine = sql_forms(hasher)
+    rpb = k // bands
+    return combine(
+        [f"signature[{band * rpb + r}]" for r in range(rpb)], 0
+    )
 
 
 def minhash_lsh_pairs(
@@ -714,17 +696,12 @@ def _lsh_pairs(slim: DataFrame, keys: list[str], sigs: DataFrame, k: int,
         slim = _drop_over_cap(slim, keys, max_bucket)
     a = slim.alias("a")
     b = slim.alias("b")
-    on = functools.reduce(
-        operator.and_,
-        [F.col(f"a.{key}") == F.col(f"b.{key}") for key in keys]
-        + [F.col("a.doc_id") < F.col("b.doc_id")],
+    on = " AND ".join(
+        [f"a.{key} = b.{key}" for key in keys] + ["a.doc_id < b.doc_id"]
     )
     cand = (
-        a.join(b, on)
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
+        a.join(b, F.expr(on))
+        .selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b")
         .dropDuplicates(["doc_a", "doc_b"])
     )
     # NOTE (r8): forcing SHUFFLE_HASH on these join-backs (build side =
@@ -735,26 +712,15 @@ def _lsh_pairs(slim: DataFrame, keys: list[str], sigs: DataFrame, k: int,
     # broadcast threshold is broadcast and the candidate pair stream is
     # not shuffled for the re-attachment; a larger one keeps the
     # shuffled join.
-    sa = sigs.select(
-        F.col("doc_id").alias("doc_a"), F.col("signature").alias("sig_a")
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("doc_b"), F.col("signature").alias("sig_b")
-    )
-    sim = (
-        F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                lambda eq: eq,
-            )
-        )
-        / F.lit(k)
-    )
+    sa = sigs.selectExpr("doc_id AS doc_a", "signature AS sig_a")
+    sb = sigs.selectExpr("doc_id AS doc_b", "signature AS sig_b")
+    sim = (f"size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y),"
+           f" eq -> eq)) / {k}")
     return (
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
-        .withColumn("sig_similarity", F.round(sim, 4))
-        .where(F.col("sig_similarity") >= threshold)
+        .withColumn("sig_similarity", F.expr(f"round({sim}, 4)"))
+        .where(f"sig_similarity >= {float(threshold)!r}D")
         .select("doc_a", "doc_b", "sig_similarity")
     )
 
@@ -1287,46 +1253,42 @@ def paragraph_dedup(
             f"passthrough columns collide with operator outputs: "
             f"{sorted(bad)}"
         )
+    from ..functions.hashing import sql_forms
+
+    one, _ = sql_forms(hasher)
     if out_sep is None:
         out_sep = sep
-    c = F.coalesce(F.col(text_col), F.lit(""))
     if paragraphs is None:
-        paragraphs = F.filter(
-            F.transform(F.split(c, F.lit(sep), -1), lambda x: F.trim(x)),
-            lambda x: x != "",
+        paragraphs = F.expr(
+            f"filter(transform(split(coalesce(`{text_col}`, ''),"
+            f" {sql_str(sep)}, -1), x -> trim(x)), x -> x != '')"
         )
     rows = documents.select(
         "doc_id",
         *passthrough,
         F.size(paragraphs).cast("bigint").alias("n_paras"),
         F.posexplode(
-            F.concat(F.array(F.lit(None)), F.coalesce(paragraphs, F.array()))
+            F.concat(F.expr("array(NULL)"),
+                     F.coalesce(paragraphs, F.expr("array()")))
         ).alias("pos", "para"),
     )
-    para = F.col("para")
-    winners = rows.select(
+    pt = "".join(f", `{p}`" for p in passthrough)
+    winners = rows.selectExpr(
         "*",
-        F.when(para.isNotNull(), hasher(para, 0)).alias("ph"),
-        F.when(para.isNull(), F.struct("doc_id", "pos")).alias("_solo"),
-    ).groupBy("ph", "_solo").agg(
-        F.min_by(
-            F.struct("doc_id", "pos", "para", "n_paras", *passthrough),
-            F.struct("doc_id", "pos"),
-        ).alias("w")
-    )
-    return winners.select("w.*").groupBy("doc_id").agg(
-        F.first("n_paras").alias("n_paras"),
-        F.count_if(para.isNotNull()).alias("n_kept"),
-        F.concat_ws(
-            out_sep,
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(para.isNotNull(), F.struct("pos", "para"))
-                    )
-                ),
-                lambda s: s["para"],
-            ),
-        ).alias("text_deduped"),
-        *[F.first(p).alias(p) for p in passthrough],
-    )
+        f"CASE WHEN para IS NOT NULL THEN {one('para', 0)} END AS ph",
+        "CASE WHEN para IS NULL THEN struct(doc_id, pos) END AS _solo",
+    ).groupBy("ph", "_solo").agg(F.expr(
+        f"min_by(struct(doc_id, pos, para, n_paras{pt}), struct(doc_id, pos))"
+        " AS w"
+    ))
+    return winners.select("w.*").groupBy("doc_id").agg(*[
+        F.expr(e) for e in (
+            "first(n_paras) AS n_paras",
+            "count_if(para IS NOT NULL) AS n_kept",
+            f"concat_ws({sql_str(out_sep)}, transform(array_sort("
+            "collect_list(CASE WHEN para IS NOT NULL THEN struct(pos, para)"
+            " END)), s -> s.para)) AS text_deduped",
+            *[f"first(`{p}`) AS `{p}`" for p in passthrough],
+        )
+    ])
+

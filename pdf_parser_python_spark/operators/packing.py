@@ -17,8 +17,10 @@ engine's chunked native FSM uses (``operators/native.py``):
 
 1. bucket by ``floor(doc_id / bucket_width)`` → per-bucket running
    sum (window partitioned by bucket — parallel);
-2. per-bucket totals (one tiny aggregate, rows = #buckets) → running
-   bucket offsets, broadcast back.
+2. per-bucket totals (one tiny aggregate of the token counts, rows =
+   #buckets, taken from the bucketed rows BEFORE the window, so the
+   in-bucket window runs once) → running bucket offsets, broadcast
+   back.
 
 Exact same prefix sums, no single-task stage. Reference scope: no
 counterpart in the reference engine; extends the training-data family.
@@ -28,9 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from .textstats import token_count
+from .textstats import tokens_sql
 
 
 #: u-space bucket shift for shuffled packing: md5-derived order keys
@@ -56,7 +57,9 @@ def pack_sequences(
     the assignment deterministic without re-keying; otherwise re-key
     duplicated ids first (bench's e2e phase uses ``doc_id*K + epoch``).
     Pass ``n_tokens`` to use a real tokenizer's counts instead of
-    whitespace tokens.
+    whitespace tokens (counts must not be negative). ``seq_len`` and
+    ``bucket_width`` must be positive; anything else raises
+    ``ValueError`` when the plan is built.
 
     ``shuffle_seed`` switches the global order from ``doc_id``
     ascending to a seeded pseudo-random permutation — the order key
@@ -68,18 +71,19 @@ def pack_sequences(
     GPT-style training packs. Same two-phase prefix sum, with hash-uniform u-space
     buckets replacing id-range buckets; still deterministic at any
     partitioning and cluster size, and reproducible per seed."""
-    from ..functions.hashing import md5_64
+    from ..functions.hashing import md5_64_sql
 
+    _check_seq_len(seq_len)
+    if bucket_width <= 0:
+        raise ValueError(f"bucket_width must be positive, got {bucket_width}")
     if n_tokens is None:
-        n_tokens = token_count(
-            F.coalesce(F.col(text_col), F.lit(""))
-        ).cast("long")
-    order_cols = ["doc_id"] + (
-        ["epoch"] if "epoch" in documents.columns else []
-    )
+        text = f"coalesce(`{text_col}`, '')"
+        n_tokens = F.expr(f"CAST(size({tokens_sql(text)}) AS BIGINT)")
+    has_epoch = "epoch" in documents.columns
+    order_cols = ["doc_id"] + (["epoch"] if has_epoch else [])
     if shuffle_seed is None:
         sort_cols = list(order_cols)
-        bucket = F.floor(F.col("doc_id") / bucket_width)
+        bucket = f"floor(doc_id / {bucket_width})"
         extra: list = []
     else:
         # hash the FULL order identity: when the input carries an
@@ -89,47 +93,47 @@ def pack_sequences(
         # the duplicates back-to-back, defeating the decorrelation
         # the seed exists for
         key = (
-            F.concat_ws(":", F.col("doc_id").cast("string"),
-                        F.col("epoch").cast("string"))
-            if "epoch" in documents.columns
-            else F.col("doc_id").cast("string")
+            "concat_ws(':', CAST(doc_id AS STRING), CAST(epoch AS STRING))"
+            if has_epoch else "CAST(doc_id AS STRING)"
         )
-        u = md5_64(key, shuffle_seed)
         sort_cols = ["_u"] + order_cols
-        bucket = F.shiftright(F.col("_u"), _SHUFFLE_BUCKET_SHIFT)
-        extra = [u.alias("_u")]
+        bucket = f"shiftright(_u, {_SHUFFLE_BUCKET_SHIFT})"
+        extra = [F.expr(f"{md5_64_sql(key, shuffle_seed)} AS _u")]
     d = documents.select(
         *order_cols,
         *extra,
         n_tokens.alias("n_tokens"),
-    ).withColumn("_b", bucket)
-    in_bucket = Window.partitionBy("_b").orderBy(*sort_cols).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    d = d.withColumn("_cum_in_b", F.sum("n_tokens").over(in_bucket))
-    totals = d.groupBy("_b").agg(F.max("_cum_in_b").alias("_tot"))
-    bucket_order = Window.orderBy("_b").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
+    ).withColumn("_b", F.expr(bucket))
+    # a bucket's total is its plain token sum (= the max of its running
+    # sum for non-negative counts), taken from the frame BEFORE the
+    # window so the in-bucket window runs once, feeding only the join
+    totals = d.groupBy("_b").agg(F.expr("sum(n_tokens) AS _tot"))
+    d = d.withColumn("_cum_in_b", F.expr(
+        f"sum(n_tokens) OVER (PARTITION BY _b ORDER BY {', '.join(sort_cols)}"
+        " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+    ))
     # the un-partitioned window here is over #buckets rows (corpus
     # size / bucket_width), not the corpus — driver-scale, by design
-    offsets = totals.withColumn(
-        "_off", F.sum("_tot").over(bucket_order) - F.col("_tot")
-    ).select("_b", "_off")
-    out = d.join(F.broadcast(offsets), "_b").select(
-        *order_cols,
-        "n_tokens",
-        (F.col("_off") + F.col("_cum_in_b") - F.col("n_tokens")).alias(
-            "start"
-        ),
+    offsets = totals.selectExpr(
+        "_b",
+        "sum(_tot) OVER (ORDER BY _b ROWS BETWEEN UNBOUNDED PRECEDING"
+        " AND CURRENT ROW) - _tot AS _off",
     )
-    return out.select(
+    out = d.join(F.broadcast(offsets), "_b").selectExpr(
+        *order_cols, "n_tokens", "_off + _cum_in_b - n_tokens AS start"
+    )
+    return out.selectExpr(
         *order_cols,
         "n_tokens",
         "start",
-        F.floor(F.col("start") / seq_len).cast("bigint").alias("pack_id"),
-        (F.col("start") % seq_len).cast("bigint").alias("pack_offset"),
+        f"CAST(floor(start / {seq_len}) AS BIGINT) AS pack_id",
+        f"CAST(start % {seq_len} AS BIGINT) AS pack_offset",
     )
+
+
+def _check_seq_len(seq_len: int) -> None:
+    if seq_len <= 0:
+        raise ValueError(f"seq_len must be positive, got {seq_len}")
 
 
 def pack_manifest(packed: DataFrame, seq_len: int = 2048) -> DataFrame:
@@ -144,41 +148,28 @@ def pack_manifest(packed: DataFrame, seq_len: int = 2048) -> DataFrame:
     by pack. Every pack except the stream's last holds exactly
     ``seq_len`` manifest tokens by construction — asserted in tests,
     and the string encoding makes the result engine-hashable."""
+    _check_seq_len(seq_len)
     L = seq_len
-    first = F.floor(F.col("start") / L)
-    last = F.floor((F.col("start") + F.col("n_tokens") - 1) / L)
-    e = packed.where(F.col("n_tokens") > 0).select(
+    e = packed.where("n_tokens > 0").selectExpr(
         "doc_id", "start", "n_tokens",
-        F.explode(F.sequence(first, last)).alias("pack_id"),
+        f"explode(sequence(floor(start / {L}),"
+        f" floor((start + n_tokens - 1) / {L}))) AS pack_id",
     )
-    seg_start = F.greatest(F.col("start"), F.col("pack_id") * L)
-    seg_end = F.least(
-        F.col("start") + F.col("n_tokens"), (F.col("pack_id") + 1) * L
-    )
-    segs = e.select(
+    seg_start = f"greatest(start, pack_id * {L})"
+    seg_end = f"least(start + n_tokens, (pack_id + 1) * {L})"
+    segs = e.selectExpr(
         "pack_id",
         "doc_id",
-        (seg_start - F.col("pack_id") * L).cast("bigint").alias("off"),
-        (seg_end - seg_start).cast("bigint").alias("len"),
+        f"CAST({seg_start} - pack_id * {L} AS BIGINT) AS off",
+        f"CAST({seg_end} - {seg_start} AS BIGINT) AS len",
     )
-    return segs.groupBy("pack_id").agg(
-        F.count("*").cast("bigint").alias("n_segments"),
-        F.sum("len").cast("bigint").alias("n_tokens"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("off", "doc_id", "len"))
-                ),
-                lambda s: F.concat_ws(
-                    ":",
-                    s["doc_id"].cast("string"),
-                    s["off"].cast("string"),
-                    s["len"].cast("string"),
-                ),
-            ),
-            ",",
-        ).alias("segments"),
-    )
+    return segs.groupBy("pack_id").agg(*[F.expr(e) for e in (
+        "CAST(count(*) AS BIGINT) AS n_segments",
+        "CAST(sum(len) AS BIGINT) AS n_tokens",
+        "array_join(transform(array_sort(collect_list(struct(off, doc_id,"
+        " len))), s -> concat_ws(':', CAST(s.doc_id AS STRING),"
+        " CAST(s.off AS STRING), CAST(s.len AS STRING))), ',') AS segments",
+    )])
 
 
 def pack_stats(packed: DataFrame, seq_len: int = 2048) -> DataFrame:
@@ -186,8 +177,9 @@ def pack_stats(packed: DataFrame, seq_len: int = 2048) -> DataFrame:
     in the pack, their token sum, and the pack's start-fill fraction
     (tokens that BEGIN in this pack / seq_len — >1 means carry-over
     into later packs, the straddle case)."""
-    return packed.groupBy("pack_id").agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.sum("n_tokens").cast("bigint").alias("n_tokens"),
-        F.round(F.sum("n_tokens") / seq_len, 4).alias("fill_ratio"),
-    )
+    _check_seq_len(seq_len)
+    return packed.groupBy("pack_id").agg(*[F.expr(e) for e in (
+        "CAST(count(*) AS BIGINT) AS n_docs",
+        "CAST(sum(n_tokens) AS BIGINT) AS n_tokens",
+        f"round(sum(n_tokens) / {seq_len}, 4) AS fill_ratio",
+    )])

@@ -28,6 +28,16 @@ def tokens(col: Column) -> Column:
     return F.filter(t, lambda x: x != "")
 
 
+def tokens_sql(expr: str) -> str:
+    """:func:`tokens` of the SQL expression ``expr``, as SQL text."""
+    return f"filter(split(trim({expr}), '\\\\s+'), x -> x != '')"
+
+
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def token_count(col: Column) -> Column:
     return F.size(tokens(col))
 

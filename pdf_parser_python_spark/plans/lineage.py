@@ -552,15 +552,10 @@ class DedupJob(ExtractionJob):
         max_bucket skew cap and signature-similarity verify
         (``dedup._lsh_pairs``), identical hashing via the shared
         combiner."""
-        from ..functions.hashing import combiner_for
-        from ..operators.dedup import _lsh_pairs
+        from ..operators.dedup import _lsh_pairs, band_bucket_sql
 
-        combine = combiner_for(self.hasher)
-        rpb = self.k // self.bands
-        bucket = combine(
-            [F.col("signature")[band * rpb + r] for r in range(rpb)], 0
-        )
-        slim = sigs.select("doc_id", bucket.alias("bucket"))
+        bucket = band_bucket_sql(self.hasher, self.k, self.bands, band)
+        slim = sigs.selectExpr("doc_id", f"{bucket} AS bucket")
         return _lsh_pairs(slim, ["bucket"], sigs, self.k, self.threshold,
                           self.max_bucket)
 

@@ -96,13 +96,13 @@ def main() -> None:
     # "before" captures the HOF fold: the kernel entry is swapped for
     # dedup._minhash_sig_hof
     def bench_minhash_sig():
-        from pdf_parser_python_spark.functions.hashing import xx64_combine
+        from pdf_parser_python_spark.functions.hashing import xx64_combine_sql
         from pdf_parser_python_spark.operators import dedup
 
         if TAG == "before":
             dedup._minhash_sig_arrow = (
                 lambda d, k, shingle_k:
-                dedup._minhash_sig_hof(d, k, shingle_k, xx64_combine))
+                dedup._minhash_sig_hof(d, k, shingle_k, xx64_combine_sql))
         docs = spark.read.parquet("/tmp/bench_dedup_docs_1000000.parquet")
         return dedup.minhash_signatures(docs)
 

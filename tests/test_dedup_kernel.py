@@ -10,12 +10,12 @@ public operator with its kernel entry swapped for the HOF function."""
 import pytest
 from pyspark.sql import functions as F
 
-from pdf_parser_python_spark.functions.hashing import xx64, xx64_combine
+from pdf_parser_python_spark.functions.hashing import xx64, xx64_combine_sql
 from pdf_parser_python_spark.operators import dedup
 
 
 def _minhash_hof(d, k, shingle_k):
-    return dedup._minhash_sig_hof(d, k, shingle_k, xx64_combine)
+    return dedup._minhash_sig_hof(d, k, shingle_k, xx64_combine_sql)
 
 
 def _simhash_hof(documents, text_col):

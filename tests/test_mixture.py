@@ -4,6 +4,7 @@ parity, partitioning invariance, epoch semantics."""
 import hashlib
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from pdf_parser_python_spark.operators.mixture import (
@@ -113,8 +114,14 @@ def test_plan_is_single_tiny_aggregate(spark):
     plan = mixture_sample(
         docs, mixture_plan(docs, {"s0": 1.0}, 100)
     )._jdf.queryExecution().executedPlan().toString()
-    # corpus-side join is broadcast (the plan table is #sources rows)
-    assert "BroadcastHashJoin" in plan
+    # the corpus is neither shuffled nor joined: the #sources-row plan is
+    # read once as a scalar subquery (the lines marked ':', which hold
+    # the plan's own tiny aggregate) and looked up per document
+    corpus_side = [line for line in plan.splitlines()
+                   if not line.lstrip().startswith(":")]
+    assert "Subquery" in plan
+    assert not any("Exchange" in line or "Join" in line
+                   for line in corpus_side)
     assert "SortMergeJoin" not in plan
 
 
@@ -218,3 +225,35 @@ def test_residual_ppm_no_bigint_wrap(spark):
     ).collect()[0]
     assert 0 <= plan["residual_ppm"] < PPM
     assert plan["residual_ppm"] == 333333  # 1e16/3 = .33e12 rem over 1.2e13
+
+
+def test_plan_rejects_weights_that_sum_to_nothing(spark):
+    """A recipe whose weights sum to 0 or less has no mixture to plan:
+    building the plan raises, instead of the job failing on a division
+    by zero. No weights at all plan nothing, as before."""
+    docs = _corpus(spark)
+    for weights in ({"s0": 0.0}, {"s0": 0.0, "s1": 0.0},
+                    {"s0": 1.0, "s1": -2.0}):
+        with pytest.raises(ValueError, match="weights"):
+            mixture_plan(docs, weights, 100)
+    empty = mixture_plan(docs, {}, 100)
+    assert empty.count() == 0
+    assert mixture_sample(docs, empty).count() == 0
+
+
+def test_plan_and_sample_hold_no_table_and_no_join(spark):
+    """The recipe enters mixture_plan as literals and the plan enters
+    mixture_sample as a scalar-subquery lookup: neither analyzed plan
+    holds a Python-made table (LogicalRDD, a job of its own on a second
+    Python worker pool) or a Join."""
+    docs = spark.range(40).selectExpr(
+        "id AS doc_id", "concat('s', CAST(id % 3 AS STRING)) AS source",
+        "repeat('w ', CAST(id % 5 AS INT)) AS text")
+    plan = mixture_plan(docs, {"s0": 2.0, "s1": 1.0}, 50)
+    sample = mixture_sample(docs, plan)
+    for df in (plan, sample):
+        tree = df._jdf.queryExecution().analyzed().toString()
+        assert "LogicalRDD" not in tree
+        assert "Join" not in tree
+    assert {r["source"] for r in plan.collect()} == {"s0", "s1"}
+    assert sample.count() > 0

@@ -77,3 +77,24 @@ def test_package_reuses_only_through_dedup_reuse():
             and node not in reuse
         ]
     assert hits == []
+
+
+def test_operators_make_no_python_side_tables():
+    """An operator builds no DataFrame from Python rows:
+    ``createDataFrame``/``parallelize`` inside a plan runs a Python-RDD
+    job, which starts a second Python worker pool beside the kernels'.
+    The two synthetic-media fixtures in ``media`` are the only
+    makers."""
+    allowed = {("media.py", "synthetic_media"),
+               ("media.py", "synthetic_bmp_media")}
+    hits = [
+        f"{path.name}:{node.lineno}"
+        for path in sorted((PACKAGE / "operators").glob("*.py"))
+        for top in ast.parse(path.read_text()).body
+        if (path.name, getattr(top, "name", None)) not in allowed
+        for node in ast.walk(top)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("createDataFrame", "parallelize")
+    ]
+    assert hits == []

@@ -3,9 +3,11 @@ single-partition global window."""
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from pdf_parser_python_spark.operators.packing import (
+    pack_manifest,
     pack_sequences,
     pack_stats,
 )
@@ -218,3 +220,22 @@ def test_shuffled_packing_decorrelates_epoch_copies(spark):
         for r in oracle.itertuples()
     }
     assert starts == want
+
+
+def test_nonpositive_sizes_raise_when_the_plan_is_built(spark):
+    """A pack or bucket size of 0 or less is refused before any job:
+    ``seq_len=0`` and ``bucket_width=0`` used to fail mid-job on a
+    division by zero and ``seq_len=-4`` to return pack_id -1."""
+    df = spark.createDataFrame(
+        [(i, "a b c") for i in range(5)], "doc_id long, text string")
+    for seq_len in (0, -4):
+        with pytest.raises(ValueError, match="seq_len"):
+            pack_sequences(df, seq_len=seq_len)
+    for bucket_width in (0, -1):
+        with pytest.raises(ValueError, match="bucket_width"):
+            pack_sequences(df, bucket_width=bucket_width)
+    packed = pack_sequences(df, seq_len=4)
+    for fn in (pack_stats, pack_manifest):
+        for seq_len in (0, -4):
+            with pytest.raises(ValueError, match="seq_len"):
+                fn(packed, seq_len=seq_len)
