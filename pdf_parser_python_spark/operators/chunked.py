@@ -35,16 +35,16 @@ Safe-split subtleties mirrored from the kernels:
 - the anchor must be the first NON-EMPTY line of its span (earlier
   lines would belong to the previous question); empty lines use the
   kernels' python-strip parity class;
-- noise wins over anchors (dkernel._COMBINED_NOISE order), so a first
+- noise wins over anchors (anchors.RE_LINE order), so a first
   line matching any always-ignore pattern is not a split;
+- the flag's patterns are anchors' ``J_*`` forms, which read ``\\s``
+  as Python does; their ``\\d`` is Java's (anchors' dialect notes);
 - ties on duplicate span offsets may re-order differently from the
   packed comparator sort; offsets are unique in every source this
   engine ships (pdfscan re-index, spans generator).
 """
 
 from __future__ import annotations
-
-import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -83,23 +83,6 @@ def _first_line():
     )
 
 
-def _py_ws(pattern: str) -> str:
-    """A (?U) J_* grammar pattern with ``\\s``/``\\S`` widened to Python's
-    whitespace set: Java's (?U) ``\\s`` is Unicode White_Space, which
-    lacks \\x1C-\\x1F, and Python's ``re`` and ``str.strip()`` count
-    those as whitespace too."""
-    return re.sub(
-        r"\\([sS])",
-        lambda m: ("[^" if m.group(1) == "S" else "[") + r"\s\x1C-\x1F]",
-        pattern,
-    )
-
-
-_SPLIT = _py_ws(A.J_QUESTION)
-_NO_SPLIT = [_py_ws(p) for p in (A.J_SOLO_QUESTION, A.J_COVER_NOISE,
-                                 A.J_NOISE_CI, A.J_NOISE_CS)]
-
-
 def _safe_split_flag(first=None):
     """First non-empty stripped line of the span is an unconditional
     question anchor: an anchor, and neither a solo "Question N" nor
@@ -107,8 +90,10 @@ def _safe_split_flag(first=None):
     has already projected :func:`_first_line` (so the plan evaluates
     it once)."""
     first = _first_line() if first is None else first
-    flag = (F.col("kind") == "text") & (first != "") & first.rlike(_SPLIT)
-    for p in _NO_SPLIT:
+    flag = ((F.col("kind") == "text") & (first != "")
+            & first.rlike(A.J_QUESTION))
+    for p in (A.J_SOLO_QUESTION, A.J_COVER_NOISE, A.J_NOISE_CI,
+              A.J_NOISE_CS):
         flag = flag & ~first.rlike(p)
     return flag
 

@@ -18,9 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: (?:^|\n)-prefixed form — the rescan runs on raw block text where
-#: anchors may sit mid-block (background_worker.py:417-419).
-RAW_ANCHOR = r"(?i)(?:^|\n)\s*Question\s*:?\s*(\d+)"
+from ..functions import anchors as A
 
 
 def raw_scan_questions(documents: DataFrame) -> DataFrame:
@@ -37,20 +35,20 @@ def raw_scan_questions(documents: DataFrame) -> DataFrame:
         (F.col("s.page") if has_page else F.lit(1)).cast("int").alias("page"),
     )
     hits = base.where(
-        (F.col("kind") == "text") & F.col("text").rlike(RAW_ANCHOR)
+        (F.col("kind") == "text") & F.col("text").rlike(A.J_RAW_QUESTION)
     ).select(
         "doc_id",
         "offset",
         "page",
         F.explode(
-            F.regexp_extract_all("text", F.lit(RAW_ANCHOR), 1)
+            F.regexp_extract_all("text", F.lit(A.J_RAW_QUESTION), 1)
         ).alias("qnum_s"),
     )
     qn = F.when(
         # value-based clamp (leading zeros stripped) — mirrors the
         # engines' min(int(qnum), QNUM_CAP) semantics
         F.length(F.regexp_replace(F.col("qnum_s"), "^0+", "")) > 18,
-        F.lit(10**18 - 1),
+        F.lit(A.QNUM_CAP),
     ).otherwise(F.col("qnum_s").cast("long"))
     return (
         hits.select("doc_id", qn.alias("question_number"), "offset", "page")

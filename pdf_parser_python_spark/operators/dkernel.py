@@ -25,7 +25,6 @@ the vectorized kernel.
 
 from __future__ import annotations
 
-import re
 from typing import Iterator
 
 import pandas as pd
@@ -35,29 +34,6 @@ from pyspark.sql import functions as F
 from .. import schema
 from ..functions import anchors as A
 from ..zipcache import drop_zip_finders
-
-_ANCHOR_ALTERNATION = (
-    r"Question\s*:?\s*(?P<qnum>\d+)"
-    r"|(?P<hot>HOTSPOT)\s*$"
-    r"|\(?(?P<okey>[A-Za-z])\s*[.):\-–—]\s*"
-    r"|(?P<ans>(?:Correct\s+)?(?:Answer|Ans|Key))[\s.:]*"
-    r"|(?P<exp>Explanation|Reference|Rationale|Solution)\s*:?\s*"
-)
-
-#: one C-level regex pass classifies a line completely. The ordered
-#: alternation keeps the reference's check order (question → hotspot →
-#: option → answer → explanation), and the always-ignore noise check
-#: (reference state_machine.py:200-202 — noise wins over every anchor)
-#: rides as the FIRST alternative. The two case-SENSITIVE noise rules
-#: (separators, lone URLs) keep their sensitivity via (?-i:...).
-_COMBINED_NOISE = re.compile(
-    r"^\s*(?:(?P<noise>"
-    + A.NOISE_CI_BODY
-    + r"|(?-i:" + A.NOISE_CS_BODY + r"))"
-    + r"|" + _ANCHOR_ALTERNATION + r")",
-    re.IGNORECASE,
-)
-_COVER = A.RE_COVER_NOISE
 
 # FSM states
 _QBODY, _OPTION, _ANSWER, _EXPL = 0, 1, 2, 3
@@ -99,8 +75,8 @@ def _process_rows(ds: _DocState, kinds, texts, medias, pages) -> None:
     """Run one document's rows (already in order) through the FSM —
     reference state_machine.py:133-366; ``(:N)`` notes cite its lines.
     ``ds.cur`` is the open question, flushed on the next anchor."""
-    match = _COMBINED_NOISE.match
-    cover = _COVER.match
+    match = A.RE_LINE.match
+    cover = A.RE_COVER_NOISE.match
     state = _QBODY
     cur = None
     opt = None
@@ -193,26 +169,6 @@ def _process_rows(ds: _DocState, kinds, texts, medias, pages) -> None:
                 cur[7].append(rem)
 
 
-#: answer-letter extraction (reference state_machine.py:437-452)
-_LETTER_BOUND = re.compile(r"\b([A-Z])\b")
-_LETTER = re.compile(r"([A-Z])")
-
-
-def _answer_keys(ans: str) -> list[str]:
-    up = ans.strip().upper()
-    if "," in up:
-        ks = [m for part in up.split(",") for m in _LETTER_BOUND.findall(part)]
-    else:
-        ks = _LETTER.findall(up)
-    seen: set[str] = set()
-    out: list[str] = []
-    for k in ks:
-        if k not in seen:
-            seen.add(k)
-            out.append(k)
-    return out
-
-
 def _finalize_row(r: tuple) -> tuple:
     """Python twin of operators/finalize.py (F8/F9/J5 + anomaly
     stamping + computed fields) for the fused packed path. Row-equality
@@ -227,7 +183,7 @@ def _finalize_row(r: tuple) -> tuple:
     has_a = ans.strip() != ""
     hotspot = r[3] == "hotspot"
     if not hotspot and has_a:
-        keys = _answer_keys(ans)
+        keys = A.answer_keys(ans)
         valid = [o["key"].upper() for o in opts]
         final = [k for k in keys if k in valid] if opts else keys
         opts = [
@@ -379,7 +335,7 @@ def _docs(pdf: pd.DataFrame) -> Iterator[tuple]:
 def _parse_doc(doc_id: str, kinds, texts, refs, pages) -> list[tuple]:
     """One packed document → raw question rows.
 
-    Noise filtering is fused into the classifier (_COMBINED_NOISE):
+    Noise filtering is fused into the classifier (anchors.RE_LINE):
     one C-level regex pass per line instead of separate noise + anchor
     passes."""
     k_l: list[str] = []

@@ -37,10 +37,10 @@ def _answer_keys(answer: Column) -> Column:
     comma = F.flatten(
         F.transform(
             F.split(up, ","),
-            lambda p: F.regexp_extract_all(p, F.lit(r"\b([A-Z])\b"), 1),
+            lambda p: F.regexp_extract_all(p, F.lit(A.ANSWER_LETTER), 1),
         )
     )
-    plain = F.regexp_extract_all(up, F.lit("([A-Z])"), 1)
+    plain = F.regexp_extract_all(up, F.lit(A.LETTER), 1)
     return F.array_distinct(F.when(up.contains(","), comma).otherwise(plain))
 
 

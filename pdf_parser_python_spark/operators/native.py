@@ -41,7 +41,9 @@ from ..functions import anchors as A
 
 
 def _strip_anchor(text, pattern: str):
-    return F.trim(F.regexp_replace(text, pattern, ""))
+    """The line after its anchor, stripped as ``str.strip()`` strips."""
+    return F.regexp_replace(F.regexp_replace(text, pattern, ""),
+                            A.J_PY_STRIP, "")
 
 
 def parse_native(lines: DataFrame) -> DataFrame:
@@ -50,7 +52,9 @@ def parse_native(lines: DataFrame) -> DataFrame:
     is_img = F.col("kind") == "image"
 
     # ── per-line classification (codegen'd regex Column ops) ────────
-    qnum_s = F.regexp_extract(t, A.J_QUESTION, 1)
+    # the number in ASCII digits, as Python's int() reads any digits
+    qnum_s = F.translate(F.regexp_extract(t, A.J_QUESTION, 1),
+                         *A.py_digits())
     is_q_hit = ~is_img & (qnum_s != "")
     is_solo = t.rlike(A.J_SOLO_QUESTION) & ~t.contains(":")
     is_q = is_q_hit & ~is_solo

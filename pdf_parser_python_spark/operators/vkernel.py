@@ -21,17 +21,13 @@ end:
    fragments never become Python objects.
 
 Dialect: RE2's ``\\s``/``\\d``/``\\b`` are ASCII-only and its case
-folding skips İ/ı, while Python's are Unicode-aware. Each grammar
-pattern therefore has two RE2 forms. The ASCII form rewrites only
-``\\s``/``\\S`` to the exact 29-char class Python treats as whitespace
-(anchors.PY_WS_CHARS); on ASCII text it equals Python ``re`` by
-construction. The Python-exact form also spells ``\\d``, ``\\b``, a
-case-insensitive ``i`` and the option key class as classes read off
-Python's own ``re`` over every codepoint. A slice whose lines are all
-ASCII runs the ASCII form (the patterns are smaller and RE2 compiles
-them on every call); any other slice runs the Python-exact form. Every
-document stays on this path; tests assert row-equality with the Python
-kernel (:mod:`.dkernel`) over all of Unicode's divergent classes.
+folding skips İ/ı, so the kernel runs one of the two RE2 forms that
+functions/anchors.py renders: a slice whose lines are all ASCII runs
+``anchors.RE2_ASCII`` (the patterns are smaller and RE2 compiles them
+on every call); any other slice runs ``anchors.re2_exact()``, built on
+a worker's first such slice. Every document stays on this path; tests
+assert row-equality with the Python kernel (:mod:`.dkernel`) over all
+of Unicode's divergent classes.
 
 Every output's Arrow schema is derived from its ``schema.py`` type
 (:func:`_arrow_schema`); no output format is declared here.
@@ -43,8 +39,7 @@ Reference semantics: /root/reference/parser/state_machine.py:133-366
 from __future__ import annotations
 
 import functools
-import re
-from typing import Iterator, NamedTuple
+from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -55,113 +50,13 @@ from .. import schema
 from ..functions import anchors as A
 from ..zipcache import drop_zip_finders
 
-# ── RE2 forms of the shared grammar ──────────────────────────────────────
-# Python \s (unicode) as explicit RE2 class innards: the exact 29-char
-# set from anchors.PY_WS_CHARS (equality with re \s and str.isspace()
-# over all of Unicode is asserted by tests/test_engines.py).
-_WS_IN = "".join(f"\\x{{{ord(c):x}}}" for c in A.PY_WS_CHARS)
-
-#: a bracketed class of a grammar pattern (RE2 has no nested classes)
-_CLASS = re.compile(r"(\[(?:[^\]\\]|\\.)*\])")
-
-
-class _Grammar(NamedTuple):
-    """One RE2 form of every grammar pattern the kernel runs."""
-
-    question: str
-    option: str
-    answer: str
-    explanation: str
-    hotspot: str
-    noise: str  # NOISE_CI and NOISE_CS in one pass
-    cover: str
-
-
-def _py_class(pattern: str, every: str) -> str:
-    """RE2 class innards: the codepoint ranges of ``every`` (each
-    codepoint once, ascending) that Python's ``re`` matches with the
-    one-character ``pattern``."""
-    rng = ((ord(m[0][0]), ord(m[0][-1]))
-           for m in re.finditer(f"(?:{pattern})+", every))
-    return "".join(f"\\x{{{a:x}}}" + (f"-\\x{{{b:x}}}" if b > a else "")
-                   for a, b in rng)
-
-
-def _py_classes() -> dict:
-    """Python's Unicode ``\\d``, ``\\w``, case-insensitive ``i`` and
-    case-insensitive ``[A-Za-z]`` (the option key) as RE2 class innards,
-    read off Python's own ``re`` over every non-surrogate codepoint.
-    RE2's ``\\p{Nd}`` is no substitute: its Unicode tables can be newer
-    than Python's and count more digits."""
-    cps = np.arange(0x110000, dtype=np.uint32)
-    every = cps[(cps < 0xD800) | (cps > 0xDFFF)].tobytes().decode(
-        "utf-32-le")
-    return {k: _py_class(p, every) for k, p in (
-        ("d", r"\d"), ("w", r"\w"), ("i", "(?i:i)"),
-        ("key", "(?i:[A-Za-z])"))}
-
-
-def _re2(pattern: str, ci: bool, py: dict | None = None) -> str:
-    """RE2 form of a grammar pattern: ``\\s``/``\\S`` become Python's
-    whitespace set. With ``py`` (:func:`_py_classes`) ``\\d`` becomes
-    Python's decimal digits, ``\\b`` (always after an ASCII letter in
-    the grammar) a non-word char or the end, and a case-insensitive
-    ``i``/``I`` also matches İ and ı, which RE2 does not fold."""
-    parts = _CLASS.split(pattern)  # odd items are bracketed classes
-    for j, p in enumerate(parts):
-        if j % 2:  # inside a class: splice in the raw innards
-            p = p.replace("\\s", _WS_IN)
-        else:
-            if py:
-                if ci:
-                    p = re.sub(r"(?<!\\)[iI]", lambda _: f"[{py['i']}]", p)
-                p = p.replace("\\d", f"[{py['d']}]").replace(
-                    "\\b", f"(?-i:$|[^{py['w']}])")
-            p = p.replace("\\S", f"[^{_WS_IN}]").replace(
-                "\\s", f"[{_WS_IN}]")
-        parts[j] = p
-    p = "".join(parts)
-    return f"(?i:{p})" if ci else p
-
-
-def _grammar(py: dict | None) -> _Grammar:
-    key = py["key"] if py else "A-Za-z"
-    return _Grammar(
-        question=_re2(A.QUESTION.replace("(\\d+)", "(?P<q>\\d+)"), True,
-                      py),
-        option=_re2(A.OPTION.replace("([A-Za-z])", f"(?P<k>[{key}])"),
-                    False, py),
-        answer=_re2(A.ANSWER, True, py),
-        explanation=_re2(A.EXPLANATION, True, py),
-        hotspot=_re2(A.HOTSPOT, True, py),
-        noise=f"(?:{_re2(A.NOISE_CI, True, py)}|"
-              f"{_re2(A.NOISE_CS, False, py)})",
-        cover=_re2(A.COVER_NOISE, False, py),
-    )
-
-
-#: the form for slices whose lines are all ASCII
-_ASCII = _grammar(None)
-
-
-@functools.lru_cache(maxsize=1)
-def _exact() -> _Grammar:
-    """The Python-exact form, built on a process's first non-ASCII
-    slice (the class scan and the build take ~0.2 s)."""
-    return _grammar(_py_classes())
-
-
 #: NOTE (measured dead end, do not revisit): folding the whole grammar
-#: into ONE ordered-alternation extract_regex pass (dkernel._COMBINED_NOISE
-#: style) is ~2× SLOWER than the independent match passes above —
-#: capture groups in a large alternation push RE2 off its DFA fast
-#: path into per-line submatch NFA. Independent group-free
+#: into ONE ordered-alternation extract_regex pass (anchors.RE_LINE
+#: style) is ~2× SLOWER than :func:`_classify`'s independent match
+#: passes — capture groups in a large alternation push RE2 off its DFA
+#: fast path into per-line submatch NFA. Independent group-free
 #: match_substring_regex passes each stay on the DFA; group extraction
 #: then runs only on the tiny anchor subsets.
-
-#: Python str.strip() whitespace — the full unicode set (utf8_trim
-#: is codepoint-aware, so the trim matches str.strip() exactly)
-_STRIP_CHARS = A.PY_WS_CHARS
 
 _SECTIONS = pa.array(["question", "options", "answer", "explanation"])
 _KINDS = pa.array(["text", "image"])
@@ -272,7 +167,7 @@ def _explode_batch(batch: pa.RecordBatch):
     lines_l = pc.split_pattern(split_src, "\n")
     line_parent = _np(pc.list_parent_indices(lines_l)).astype(np.int64)
     line_f = pc.utf8_trim(pc.list_flatten(lines_l),
-                          characters=_STRIP_CHARS)
+                          characters=A.PY_WS_CHARS)
 
     row_img = is_img_span[line_parent]
     keep = row_img | _np(pc.not_equal(line_f, ""))
@@ -294,7 +189,8 @@ def _explode_batch(batch: pa.RecordBatch):
         "lines": lines,
         "ref_f": pc.list_flatten(batch.column("refs")),
         "span_page": span_page,
-        "g": _ASCII if _np(pc.string_is_ascii(lines)).all() else _exact(),
+        "g": (A.RE2_ASCII if _np(pc.string_is_ascii(lines)).all()
+              else A.re2_exact()),
     }
     return doc_ids, vec
 
@@ -308,11 +204,11 @@ def _rem(lines: pa.Array, pattern: str) -> pa.Array:
     return pc.utf8_trim(
         pc.replace_substring_regex(lines, pattern=pattern,
                                    replacement=""),
-        characters=_STRIP_CHARS,
+        characters=A.PY_WS_CHARS,
     ).fill_null("")
 
 
-def _classify(lines: pa.Array, img: np.ndarray, g: _Grammar) -> dict:
+def _classify(lines: pa.Array, img: np.ndarray, g: A.Re2Grammar) -> dict:
     """Full-corpus passes only where every line genuinely needs one;
     solo/cover/qnum run on the question-anchor subset (the per-class
     remainders are computed later on even smaller subsets)."""
@@ -807,29 +703,6 @@ def _emit_question_scalars(state) -> pa.RecordBatch:
 
 # ── full-entity emitter (QUESTION_FINAL, nested arrow output) ───────────
 
-_RE_KEY_BOUND = None  # compiled lazily (keeps import light)
-
-
-def _answer_key_set(ans: str) -> frozenset:
-    """Python twin of finalize._answer_keys membership (exact re \\b
-    semantics — the one place RE2 cannot substitute, see finalize.py
-    :30-42 / reference state_machine.py:437-452)."""
-    global _RE_KEY_BOUND
-    import re as _pyre
-
-    if _RE_KEY_BOUND is None:
-        _RE_KEY_BOUND = (
-            _pyre.compile(r"\b([A-Z])\b"),
-            _pyre.compile("([A-Z])"),
-        )
-    up = ans.strip().upper()
-    if "," in up:
-        return frozenset(
-            m for part in up.split(",")
-            for m in _RE_KEY_BOUND[0].findall(part)
-        )
-    return frozenset(_RE_KEY_BOUND[1].findall(up))
-
 
 def _list_of(values, counts) -> pa.ListArray:
     offsets = np.concatenate(
@@ -910,7 +783,7 @@ def _emit_final(state) -> pa.RecordBatch:
         if len(na_rows):
             ans_py = pc.take(ans_up, pa.array(na_rows)).to_pylist()
             for i, r in zip(na_rows, range(len(na_rows))):
-                cj[i] = keys_j[i] in _answer_key_set(ans_py[r])
+                cj[i] = keys_j[i] in A.answer_keys(ans_py[r])
         correct[jrows] = cj
 
     ki_keep = np.flatnonzero(keep)

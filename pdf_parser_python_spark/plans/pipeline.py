@@ -257,16 +257,8 @@ def tokenize(documents: DataFrame) -> DataFrame:
             "offset",
             "page",
         )
-        # python str.strip() parity (shared class, anchors.py — includes
-        # the \x1C-\x1F separators Java's \s misses)
-        .withColumn(
-            "text",
-            F.regexp_replace(
-                "line",
-                f"^{A.J_PY_STRIP_CLASS}+|{A.J_PY_STRIP_CLASS}+$",
-                "",
-            ),
-        )
+        # python str.strip() parity
+        .withColumn("text", F.regexp_replace("line", A.J_PY_STRIP, ""))
         .drop("line")
         .where(F.col("text") != "")
         # F2 noise pushdown: always-ignored boilerplate never reaches

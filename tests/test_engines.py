@@ -134,13 +134,13 @@ def test_exact_grammar_classes_equal_python_everywhere():
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from pdf_parser_python_spark.operators import vkernel
+    from pdf_parser_python_spark.functions import anchors
 
     cps = [c for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF]
     chars = [chr(c) for c in cps]
     arr = pa.array(chars)
     every = "".join(chars)
-    py = vkernel._py_classes()
+    py = anchors._py_classes()
 
     def re2(pattern, strings=arr):
         return {cps[i] for i in np.flatnonzero(
@@ -162,11 +162,11 @@ def test_exact_grammar_classes_equal_python_everywhere():
                         if not (c.isalnum() or c == "_")}
     after_a = pa.array(["a" + c for c in chars])
     for ci in (False, True):
-        assert re2("^" + vkernel._re2(r"a\b", ci, py), after_a) == non_word
-        assert re2("^" + vkernel._re2(r"a\b", ci, py), pa.array(["a"]))
+        assert re2("^" + anchors._re2(r"a\b", ci, py), after_a) == non_word
+        assert re2("^" + anchors._re2(r"a\b", ci, py), pa.array(["a"]))
 
     for letter in "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ":
-        got = re2(f"^{vkernel._re2(letter, True, py)}$")
+        got = re2(f"^{anchors._re2(letter, True, py)}$")
         assert got == python(f"(?i:{letter})"), letter
     assert python("(?i:i)") == {ord(c) for c in "iIİı"}
 
@@ -176,9 +176,100 @@ def test_exact_grammar_classes_equal_python_everywhere():
     assert pc.utf8_upper(keys).to_pylist() == [
         k.upper() for k in keys.to_pylist()]
 
-    exact = vkernel._exact()
+    exact = anchors.re2_exact()
     for name, pattern in exact._asdict().items():
         assert "\\b" not in pattern and "\\d" not in pattern, name
+
+
+def test_java_ws_classes_equal_python_whitespace_everywhere(spark):
+    """The JVM twin of the test above: in one Spark job over every
+    non-surrogate codepoint, the Java ``(?U)`` rendering of ``\\s``
+    (every ``J_*`` form's), its ``\\S`` complement, J_PY_STRIP_CLASS
+    and the J_PY_STRIP strip each match exactly anchors.PY_WS_CHARS."""
+    from pyspark.sql import functions as F
+
+    from pdf_parser_python_spark.functions import anchors as A
+
+    # each codepoint as a string: UTF-16BE, a surrogate pair above the BMP
+    chars = spark.range(0x110000).where("id < 55296 OR id > 57343")
+    c = F.expr(
+        "decode(unhex(CASE WHEN id < 65536 THEN lpad(hex(id), 4, '0') ELSE"
+        " concat(hex(55232 + shiftright(id, 10)), hex(56320 + (id & 1023)))"
+        " END), 'UTF-16BE')")
+
+    def ids(cond):
+        return F.sort_array(F.collect_list(F.when(cond, F.col("id"))))
+
+    ws_j = c.rlike(A._java("U", r"^\s$"))
+    got = chars.agg(
+        F.count("*").alias("n"),
+        F.sum((F.length(c) != 1).cast("int")).alias("bad_len"),
+        F.sum((ws_j == c.rlike(A._java("U", r"^\S$"))).cast("int")).alias(
+            "s_is_S"),
+        ids(ws_j).alias("ws_j"),
+        ids(c.rlike(f"^{A.J_PY_STRIP_CLASS}$")).alias("strip_class"),
+        ids(F.regexp_replace(c, A.J_PY_STRIP, "") == "").alias("strip"),
+    ).first()
+    want = sorted(ord(ch) for ch in A.PY_WS_CHARS)
+    assert (got.n, got.bad_len, got.s_is_S) == (1_112_064, 0, 0)
+    assert got.ws_j == got.strip_class == got.strip == want
+    assert A._java("U", r"\s") == "(?U)" + A.J_WS_CLASS
+
+
+#: one document per character Python's ``\s`` has and Java's (?U) ``\s``
+#: (U+001C-U+001F) or ``F.trim`` (TAB, NBSP, U+3000) lacks: the character
+#: inside and after every anchor, and inside a noise line
+_WS_CASES = ["\x1c", "\x1d", "\x1e", "\x1f", "\t", "\xa0", "\u3000"]
+
+
+def test_engines_agree_on_python_whitespace_and_digits(spark):
+    """All three engines read whitespace and question-number digits as
+    Python does: flat spans and QUESTION_FINAL rows are equal across
+    ``packed``, ``packed-pandas`` and ``native``, and carry the values
+    written out below."""
+    docs = [
+        (f"ws{i}", [f"Question{c}:{c}{i + 1}{c}What is it?",
+                    f"Page{c}3{c}of{c}9",
+                    f"A{c}.{c}first",
+                    f"B{c}){c}second",
+                    f"Correct{c}Answer{c}:{c}B",
+                    f"Explanation{c}:{c}because"])
+        for i, c in enumerate(_WS_CASES)
+    ] + [
+        ("fullwidth", ["Question: ８ Fullwidth?", "A. x", "Answer: A"]),
+        ("arabic", ["Question: ٥ Arabic-Indic?", "A. x", "Answer: A"]),
+        ("padded", ["Question: " + "٠" * 19 + "٤٢ Padded?", "A. x",
+                    "Answer: A"]),
+    ]
+    frame = spark.createDataFrame(
+        [(d, [{"kind": "text", "text": t, "media_ref": "", "offset": j,
+               "page": 1} for j, t in enumerate(lines)])
+         for d, lines in docs],
+        schema=schema.DOCUMENT_SPANS_EXT,
+    )
+    engines = ("packed", "packed-pandas", "native")
+    flat = {e: _flat(pipeline.extract_flat_spans(frame, engine=e))
+            for e in engines}
+    assert flat["packed"] == flat["packed-pandas"] == flat["native"]
+    final = {e: _json_rows(pipeline.extract_questions(frame, engine=e))
+             for e in engines}
+    assert final["packed"] == final["packed-pandas"] == final["native"]
+
+    got = sorted(
+        (r.doc_id, r.question_number, r.question_text,
+         [(o.key, o.text, o.is_correct) for o in r.options],
+         r.answer_text, r.explanation_text)
+        for r in pipeline.extract_questions(frame, engine="native").collect()
+    )
+    assert got == sorted([
+        (f"ws{i}", i + 1, "What is it?",
+         [("A", "first", False), ("B", "second", True)], "B", "because")
+        for i in range(len(_WS_CASES))
+    ] + [
+        ("arabic", 5, "Arabic-Indic?", [("A", "x", True)], "A", ""),
+        ("fullwidth", 8, "Fullwidth?", [("A", "x", True)], "A", ""),
+        ("padded", 42, "Padded?", [("A", "x", True)], "A", ""),
+    ])
 
 
 def test_nonascii_stays_on_vectorized_path(spark, monkeypatch):

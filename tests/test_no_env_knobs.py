@@ -1,10 +1,11 @@
 """The package reads no ``PDFP_*`` environment variables: its behaviour
 follows from its arguments and the Spark session alone, the extraction
 entry points name every option they take, and the kernels declare no
-output format of their own. No Spark."""
+output format and no regex dialect of their own. No Spark."""
 
 import ast
 import pathlib
+import re
 
 PACKAGE = pathlib.Path(__file__).resolve().parent.parent / (
     "pdf_parser_python_spark")
@@ -98,3 +99,56 @@ def test_operators_make_no_python_side_tables():
         and node.func.attr in ("createDataFrame", "parallelize")
     ]
     assert hits == []
+
+
+#: spellings of the anchor grammar (functions/anchors.py)
+_GRAMMAR = ("Question\\s", "HOTSPOT", "Answer|Ans|Key",
+            "Explanation|Reference")
+
+#: a regex ``\s``/``\S``/``\d`` as the text a rewrite looks for
+_ESCAPE = re.compile(r"\\+\(?\[?[sSd]")
+
+
+def test_only_anchors_renders_the_grammar():
+    """``functions/anchors.py`` is the one module that turns the grammar
+    into a regex engine's dialect: no module under ``operators/`` or
+    ``plans/`` holds a grammar literal in a string constant (docstrings
+    aside) or rewrites a regex ``\\s``/``\\d`` with ``replace``/``sub``."""
+    hits = []
+    for path in sorted([*(PACKAGE / "operators").glob("*.py"),
+                        *(PACKAGE / "plans").glob("*.py")]):
+        tree = ast.parse(path.read_text())
+        docs = {
+            id(node.body[0].value) for node in ast.walk(tree)
+            if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef))
+            and node.body and isinstance(node.body[0], ast.Expr)
+        }
+        where = f"{path.relative_to(PACKAGE.parent)}"
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Constant) and isinstance(node.value, str)
+                    and id(node) not in docs):
+                hits += [f"{where}:{node.lineno} {g}"
+                         for g in _GRAMMAR if g in node.value]
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("replace", "sub")
+                    and node.args and isinstance(node.args[0], ast.Constant)
+                    and isinstance(node.args[0].value, str)
+                    and _ESCAPE.search(node.args[0].value)):
+                hits.append(f"{where}:{node.lineno} rewrite")
+    assert hits == []
+
+
+def test_exact_re2_form_is_built_lazily():
+    """The Python-exact RE2 form scans every codepoint (~0.2 s): importing
+    the package and building a plan's patterns must not build it."""
+    import subprocess
+    import sys
+
+    code = (
+        "from pdf_parser_python_spark.plans import pipeline\n"
+        "from pdf_parser_python_spark.functions import anchors\n"
+        "assert anchors.re2_exact.cache_info().currsize == 0\n"
+    )
+    subprocess.run([sys.executable, "-c", code], check=True,
+                   cwd=PACKAGE.parent)
