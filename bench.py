@@ -152,8 +152,9 @@ def _giant_phase(spark, corpus_docs) -> dict:
 
     - packed, default policy (threshold 5M → 2M-span doc stays in the
       fused single-task kernel — the measured best plan);
-    - packed, dispatch FORCED at the old 250k threshold (chunked
-      reroute) — documents why the threshold was raised;
+    - packed, every document through the chunked reroute
+      (``chunked.parse_giant_final``, what a threshold below the giant
+      doc would dispatch it to) — documents why the threshold was raised;
     - span-grained rows (the recommended ingest shape for pathological
       docs) through the anchor-chunked vectorized kernel — the scan
       itself parallelizes and the straggler disappears.
@@ -161,6 +162,7 @@ def _giant_phase(spark, corpus_docs) -> dict:
     from pyspark.sql import functions as F
 
     from pdf_parser_python_spark.operators import chunked
+    from pdf_parser_python_spark.operators.flatten import flat_spans
     from pdf_parser_python_spark.plans import pipeline
 
     if not os.path.exists(GIANT_CORPUS):
@@ -185,7 +187,8 @@ def _giant_phase(spark, corpus_docs) -> dict:
     for tag, fn in (
         ("packed_default", lambda: pipeline.extract_flat_spans(gd)),
         ("packed_forced_dispatch",
-         lambda: pipeline.extract_flat_spans(gd, giant_doc_spans=250_000)),
+         lambda: flat_spans(
+             chunked.parse_giant_final(gd, pipeline.GIANT_CHUNK))),
         ("span_rows_chunked_kernel",
          lambda: chunked.parse_span_rows_final(span_rows, 100_000)),
     ):
@@ -202,11 +205,11 @@ def _giant_phase(spark, corpus_docs) -> dict:
     # row-equality spot check: chunked span-row parse vs packed parse
     n_chunked = chunked.parse_span_rows_final(span_rows, 100_000).count()
     n_packed = (
-        pipeline.extract_questions(gd, giant_doc_spans=None)
+        pipeline.extract_questions(gd)
         .where(F.col("doc_id") == "giant-000").count()
     )
     return {
-        "giant_doc_spans": GIANT_SPANS,
+        "giant_spans": GIANT_SPANS,
         "walls_sec": walls,
         "walls_calibration": calibs,
         "giant_questions_span_rows": n_chunked,
@@ -302,7 +305,7 @@ def _giant10m_phase(spark) -> dict:
         + _cmp(packed_out).exceptAll(_cmp(got)).count()
     )
     return {
-        "giant_doc_spans": n,
+        "giant_spans": n,
         "questions": n_q,
         "wall_sec_span_rows_chunked": round(w_rows, 3),
         "calibration_span_rows": round(c_rows, 4),

@@ -15,8 +15,11 @@ Dialect notes. Every pattern is ``^``-anchored where the reference
 used ``.match`` (``rlike`` searches); IGNORECASE is an inline ``(?i)``.
 - Java: ``(?U)`` makes ``\\b``/``\\d``/``\\w`` Unicode-aware and folds
   ſ, K (Kelvin sign), İ and ı as Python does, but its ``\\s`` (Unicode
-  White_Space) lacks the \\x1C-\\x1F separators Python counts: every
-  ``J_*`` spells ``\\s`` as :data:`J_WS_CLASS`. (All 29 characters
+  White_Space) lacks the \\x1C-\\x1F separators Python counts, and
+  Java 17's ``\\d`` (Unicode 13) lacks the Tangsa digits
+  (U+16AC0-16AC9) Python 3.11's (Unicode 14) reads: every ``J_*``
+  spells ``\\s`` as :data:`J_WS_CLASS` and ``\\d`` as
+  :data:`J_DIGIT_CLASS`. (All 29 characters
   spelled out are slower in Java: 3M strings through the five
   split-flag patterns took 6.4-7.0 s against 2.5-3.5 s, 4-vCPU local[4].)
   ``F.trim`` strips U+0020 only: strip with :data:`J_PY_STRIP`. A
@@ -27,10 +30,6 @@ used ``.match`` (``rlike`` searches); IGNORECASE is an inline ``(?i)``.
   lines); :func:`re2_exact` also spells ``\\d``, ``\\b``, a
   case-insensitive ``i`` and the option key class as classes read off
   Python's ``re`` over every codepoint.
-- The gap that remains: Java 17's ``(?U)\\d`` follows Unicode 13,
-  Python 3.11's Unicode 14, so a question number in Tangsa digits
-  (U+16AC0-16AC9) anchors in the packed engines only, not in
-  ``native`` or the giant-doc split flag.
 """
 
 from __future__ import annotations
@@ -185,13 +184,18 @@ def answer_keys(ans: str) -> list[str]:
 _J_WS = r"\s\x1C-\x1F"
 J_WS_CLASS = f"[{_J_WS}]"
 
+#: Python's ``\d`` under Java's ``(?U)``: Java 17's Unicode 13 digits
+#: and Unicode 14's Tangsa digits
+J_DIGIT_CLASS = r"[\d\x{16AC0}-\x{16AC9}]"
+
 
 def _java(flags: str, pattern: str) -> str:
-    """Java form of a grammar pattern: inline ``flags``, with ``\\s``
-    and ``\\S`` read as Python reads them."""
+    """Java form of a grammar pattern: inline ``flags``, with ``\\s``,
+    ``\\S`` and ``\\d`` read as Python reads them."""
     return f"(?{flags})" + re.sub(
-        r"\\([sS])",
-        lambda m: f"[^{_J_WS}]" if m[1] == "S" else J_WS_CLASS,
+        r"\\([sSd])",
+        lambda m: {"S": f"[^{_J_WS}]", "s": J_WS_CLASS,
+                   "d": J_DIGIT_CLASS}[m[1]],
         pattern,
     )
 

@@ -38,7 +38,7 @@ Safe-split subtleties mirrored from the kernels:
 - noise wins over anchors (anchors.RE_LINE order), so a first
   line matching any always-ignore pattern is not a split;
 - the flag's patterns are anchors' ``J_*`` forms, which read ``\\s``
-  as Python does; their ``\\d`` is Java's (anchors' dialect notes);
+  and ``\\d`` as Python does;
 - ties on duplicate span offsets may re-order differently from the
   packed comparator sort; offsets are unique in every source this
   engine ships (pdfscan re-index, spans generator).

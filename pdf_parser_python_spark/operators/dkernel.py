@@ -419,13 +419,19 @@ def parse_docs_flat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                        schema.FLAT_SPAN_SEQ.names)
 
 
+#: ``spans`` sorted by offset, stable on ties. A sign comparator: the
+#: difference of two offsets overflows (ARITHMETIC_OVERFLOW under ANSI)
+SPANS_BY_OFFSET = (
+    "array_sort(spans, (a, b) -> CASE WHEN a.offset < b.offset THEN -1"
+    " WHEN a.offset > b.offset THEN 1 ELSE 0 END)"
+)
+
+
 def packed_projection(documents: DataFrame) -> DataFrame:
     """Native prep: sort spans by offset, project primitive arrays
     (keeps Arrow transfer to plain list<string>/list<int> — no dicts)."""
     has_page = "page" in documents.schema["spans"].dataType.elementType.names
-    spans = F.array_sort(
-        "spans", lambda a, b: a["offset"].cast("int") - b["offset"].cast("int")
-    )
+    spans = F.expr(SPANS_BY_OFFSET)
     return documents.select(
         "doc_id",
         F.transform(spans, lambda s: s["kind"]).alias("kinds"),

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dkernel import SPANS_BY_OFFSET
+
 PARSER_VERSION = "1.0.0"  # reference models.py:210
 
 #: canonical span serialization separators (unit / record)
@@ -29,9 +31,7 @@ _US, _RS = "\x1f", "\x1e"
 
 def canonical_source(documents: DataFrame):
     """sha256 + byte size of the offset-ordered span serialization."""
-    spans = F.array_sort(
-        "spans", lambda a, b: a["offset"].cast("int") - b["offset"].cast("int")
-    )
+    spans = F.expr(SPANS_BY_OFFSET)
     canon = F.array_join(
         F.transform(
             spans,

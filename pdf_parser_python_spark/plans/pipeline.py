@@ -14,7 +14,11 @@ finalize/flatten stage follows it. It parses every document: a slice
 with non-ASCII lines runs RE2 patterns built with Python ``re``'s
 Unicode semantics. Documents above
 ``GIANT_DOC_SPANS`` spans reroute to operators/chunked.py: anchor-aligned
-chunks, one hash exchange on (doc_id, chunk), the same kernel.
+chunks, one hash exchange on (doc_id, chunk), the same kernel. Whether
+an input holds such a document is decided from the input on every call
+(``_has_giant``): from the parquet footer statistics of a scalar
+``n_spans`` column when the scan has them (zero Spark jobs), else by
+one small probe job; a streaming input is never rerouted.
 
 Every packed entry point is the same plan (``_packed``): giant-doc
 split → packed_projection → one kernel pass → union with the chunked
@@ -44,7 +48,7 @@ from pyspark.sql import functions as F
 
 from .. import schema
 from ..functions import anchors as A
-from ..operators import dkernel
+from ..operators import chunked, dkernel
 from ..operators import finalize as _finalize
 from ..operators import flatten as _flatten
 from ..operators import native as _native
@@ -80,25 +84,6 @@ def _doc_size(documents: DataFrame):
     )
 
 
-def _giant_split(
-    documents: DataFrame, threshold: int
-) -> tuple[DataFrame, DataFrame]:
-    """(small, big) split by per-doc span count. The big branch rescans
-    the input (cheap under n_spans/stats; a size(spans) pass otherwise)
-    — the price of never letting one degenerate document serialize a
-    1000-executor stage."""
-    sz = _doc_size(documents)
-    return (
-        documents.where(sz <= F.lit(threshold)),
-        documents.where(sz > F.lit(threshold)),
-    )
-
-
-#: probe memo: (session id, analyzed-plan semanticHash, threshold) →
-#: bool. A heuristic cache — a false stale entry can only cost perf
-#: (straggler or an empty union branch), never correctness.
-_GIANT_PROBE_CACHE: dict[tuple, bool] = {}
-
 #: footer-stats bound: above this many input files the driver-side
 #: footer walk is skipped in favor of the (stats-pruned) probe job —
 #: which is the right tool for huge tables anyway. At real 100-TB
@@ -114,7 +99,7 @@ def _footer_max_doc_spans(documents: DataFrame) -> int | None:
 
     Returns None when unavailable (no ``n_spans``, non-local-file plan,
     > ``_FOOTER_MAX_FILES`` files, stats missing) — callers then fall
-    back to the memoized probe job. When the DataFrame carries filters
+    back to the probe job. When the DataFrame carries filters
     above the scan, ``inputFiles()`` still lists the underlying files,
     so the bound is conservative (may over-report a giant that the
     filter drops): a perf-only false positive, never a correctness one.
@@ -176,57 +161,22 @@ def _footer_max_doc_spans(documents: DataFrame) -> int | None:
     return mx
 
 
-def _resolve_threshold(documents: DataFrame, giant_doc_spans) -> int | None:
-    """Giant-doc dispatch policy for the packed engines.
-
-    ``giant_doc_spans``: ``"auto"`` (default) bounds the corpus's
-    max doc size — `any doc > GIANT_DOC_SPANS spans?` — and only
-    builds the union plan when outliers exist, because the chunked
-    branch carries seconds of fixed plan/stage overhead that the common
-    giant-free case must not pay. The bound comes from parquet footer
-    stats read driver-side (``_footer_max_doc_spans``: zero Spark
-    jobs) when the table carries ``n_spans``; otherwise one tiny
-    memoized probe job. An explicit int forces the static union
-    (deterministic plan, no probe); None disables dispatch. Streaming
-    inputs skip the probe (no eager jobs on a stream).
-    """
-    if giant_doc_spans != "auto":
-        return giant_doc_spans
+def _has_giant(documents: DataFrame) -> bool:
+    """Does ``documents`` hold a document above ``GIANT_DOC_SPANS``
+    spans? Decided from the input on every call, so the chunked branch
+    (seconds of fixed plan/stage overhead) joins the plan only when an
+    outlier exists. The footer statistics decide when they can
+    (``_footer_max_doc_spans``: zero Spark jobs); otherwise one tiny
+    probe job does. A streaming input has no giant-doc dispatch (no
+    eager job on a stream)."""
     if documents.isStreaming:
-        return None
-    try:
-        key = (
-            documents.sparkSession.sparkContext.applicationId,
-            documents._jdf.queryExecution().analyzed().semanticHash(),
-            GIANT_DOC_SPANS,
-        )
-    except Exception:  # non-JVM edge: probe without memo
-        key = None
-    if key is not None and key in _GIANT_PROBE_CACHE:
-        has_giant = _GIANT_PROBE_CACHE[key]
-    else:
-        footer_max = _footer_max_doc_spans(documents)
-        if footer_max is not None:
-            has_giant = footer_max > GIANT_DOC_SPANS
-        else:
-            has_giant = not documents.where(
-                _doc_size(documents) > F.lit(GIANT_DOC_SPANS)
-            ).isEmpty()
-        if key is not None:
-            _GIANT_PROBE_CACHE[key] = has_giant
-    return GIANT_DOC_SPANS if has_giant else None
-
-
-def _parse_giant_final(big: DataFrame) -> DataFrame:
-    """Giant-doc branch: anchor-aligned chunking + the SAME vectorized
-    kernel as the main path (operators/chunked.py — r4 rework: the
-    previous chunked-native-FSM branch was measured ~15× slower than a
-    single vkernel task, so dispatch never won wall-clock). One hash
-    exchange on (doc_id, chunk); a giant document spreads over
-    ~n_spans/GIANT_CHUNK kernel rows."""
-    from ..operators.chunked import parse_giant_final
-
-    return parse_giant_final(big, chunk_spans=GIANT_CHUNK)
+        return False
+    footer_max = _footer_max_doc_spans(documents)
+    if footer_max is not None:
+        return footer_max > GIANT_DOC_SPANS
+    return not documents.where(
+        _doc_size(documents) > F.lit(GIANT_DOC_SPANS)
+    ).isEmpty()
 
 
 def tokenize(documents: DataFrame) -> DataFrame:
@@ -283,7 +233,6 @@ def parse_raw(documents: DataFrame) -> DataFrame:
 def _packed(
     documents: DataFrame,
     engine: str,
-    giant_doc_spans,
     out_schema,
     arrow_fn: str,
     pandas_fn,
@@ -291,13 +240,13 @@ def _packed(
 ) -> DataFrame:
     """The packed plan every ``extract_*`` call shares: giant-doc split
     → ``packed_projection`` → one kernel pass, unioned with the chunked
-    branch for the documents above the threshold.
+    branch for the documents above ``GIANT_DOC_SPANS`` spans.
 
     ``arrow_fn`` names the ``vkernel`` entry point (``engine="packed"``);
     ``pandas_fn`` is its dkernel twin (``"packed-pandas"``), None where
     the call has no twin. ``giant`` turns the chunked branch's
     QUESTION_FINAL rows into ``out_schema`` rows. The engine is checked
-    before ``_resolve_threshold`` can run its probe job."""
+    before ``_has_giant`` can run its probe job."""
     if engine == "packed":
         from ..operators import vkernel
 
@@ -306,25 +255,25 @@ def _packed(
         kernel = pandas_fn
     else:
         raise ValueError(f"unknown engine {engine!r}")
-    threshold = _resolve_threshold(documents, giant_doc_spans)
-    small, big = (
-        (documents, None)
-        if threshold is None
-        else _giant_split(documents, threshold)
-    )
-    proj = dkernel.packed_projection(small)
+    giant_rows = None
+    if _has_giant(documents):
+        # the big branch rescans the input: cheap under n_spans stats, a
+        # size(spans) pass otherwise
+        sz = _doc_size(documents)
+        giant_rows = giant(chunked.parse_giant_final(
+            documents.where(sz > F.lit(GIANT_DOC_SPANS)), GIANT_CHUNK))
+        documents = documents.where(sz <= F.lit(GIANT_DOC_SPANS))
+    proj = dkernel.packed_projection(documents)
     if engine == "packed":
         out = proj.mapInArrow(kernel, schema=out_schema)
     else:
         out = proj.mapInPandas(kernel, schema=out_schema)
-    if big is not None:
-        out = out.unionByName(giant(_parse_giant_final(big)))
+    if giant_rows is not None:
+        out = out.unionByName(giant_rows)
     return out
 
 
-def extract_questions(
-    documents: DataFrame, *, engine: str = "packed", giant_doc_spans="auto"
-) -> DataFrame:
+def extract_questions(documents: DataFrame, *, engine: str = "packed") -> DataFrame:
     """documents → finalized question table (the flagship operator).
 
     Packed default = the vectorized Arrow kernel (parse + finalize in
@@ -332,22 +281,19 @@ def extract_questions(
     vkernel.py); engine="packed-pandas" keeps the fused pandas kernel;
     engine="native" keeps parse → Column finalize, and tests assert row
     equality between all of them. On the packed engines, documents
-    above ``giant_doc_spans`` (default auto-probe; None disables)
-    route to the anchor-chunked branch (operators/chunked.py) — no
-    single-task straggler on skewed corpora. ``native`` has no
-    giant-doc dispatch and ignores ``giant_doc_spans``."""
+    above ``GIANT_DOC_SPANS`` spans route to the anchor-chunked branch
+    (operators/chunked.py) — no single-task straggler on skewed
+    corpora. ``native`` has no giant-doc dispatch."""
     if engine == "native":
         return _finalize.finalize_questions(parse_raw(documents))
     return _packed(
-        documents, engine, giant_doc_spans, schema.QUESTION_FINAL,
+        documents, engine, schema.QUESTION_FINAL,
         "parse_docs_final_arrow", dkernel.parse_docs_final,
         lambda questions: questions,
     )
 
 
-def extract_validation(
-    documents: DataFrame, *, engine: str = "packed", giant_doc_spans="auto"
-) -> DataFrame:
+def extract_validation(documents: DataFrame, *, engine: str = "packed") -> DataFrame:
     """documents → per-doc ValidationReport (reference validator.py).
 
     The packed engines compute the report INSIDE the parse kernel
@@ -357,21 +303,19 @@ def extract_validation(
     pays the full FSM parse and then aggregates it away (r2 bench:
     6.99 s vs 5.69 s for the parse alone at sf0.1). engine="native"
     keeps the relational decomposition (operators/validate.py),
-    row-equal by test, and ignores ``giant_doc_spans``."""
+    row-equal by test."""
     if engine == "native":
         return _validate.validation_report(
             extract_questions(documents, engine="native")
         )
     return _packed(
-        documents, engine, giant_doc_spans, schema.VALIDATION_REPORT,
+        documents, engine, schema.VALIDATION_REPORT,
         "validate_docs_arrow", dkernel.validate_docs,
         _validate.validation_report,
     )
 
 
-def extract_flat_spans(
-    documents: DataFrame, *, engine: str = "packed", giant_doc_spans="auto"
-) -> DataFrame:
+def extract_flat_spans(documents: DataFrame, *, engine: str = "packed") -> DataFrame:
     """documents → canonical ordered output spans (§1.4 contract).
 
     The packed engines emit flat primitive columns straight from the
@@ -381,14 +325,14 @@ def extract_flat_spans(
     finalize+flatten stage they replace is interpreted HOF expressions
     costing ~3× the FSM itself; the fused path is row-equal by test.
     engine="native" keeps parse → finalize → flatten (the reference
-    decomposition) and ignores ``giant_doc_spans``.
+    decomposition).
     """
     if engine == "native":
         return _flatten.flat_spans(
             extract_questions(documents, engine="native")
         )
     return _packed(
-        documents, engine, giant_doc_spans, schema.FLAT_SPAN_SEQ,
+        documents, engine, schema.FLAT_SPAN_SEQ,
         "parse_docs_flat_arrow", dkernel.parse_docs_flat,
         _flatten.flat_spans,
     )
@@ -410,9 +354,7 @@ def _giant_doc_text(questions: DataFrame) -> DataFrame:
     )
 
 
-def extract_doc_text(
-    documents: DataFrame, giant_doc_spans="auto"
-) -> DataFrame:
+def extract_doc_text(documents: DataFrame) -> DataFrame:
     """documents → ONE reassembled text per document (doc_id, text,
     n_text_spans): the text-kind flat spans joined with " " in the
     canonical (seq, order) sequence — exam reassembly, the e2e
@@ -426,21 +368,19 @@ def extract_doc_text(
     is exactly what the rare giant-doc branch still computes (one
     extra shuffle over a handful of outlier docs)."""
     return _packed(
-        documents, "packed", giant_doc_spans, schema.DOC_TEXT,
+        documents, "packed", schema.DOC_TEXT,
         "doc_text_arrow", None, _giant_doc_text,
     )
 
 
-def extract_question_scalars(
-    documents: DataFrame, giant_doc_spans="auto"
-) -> DataFrame:
+def extract_question_scalars(documents: DataFrame) -> DataFrame:
     """documents → per-question scalar columns (doc_id, seq,
     question_number, question_type, question_text, answer_text,
     anomaly_score) via the vectorized kernel — the flagship query's
     projection without materializing nested options/images/anomalies.
     For the full QUESTION_FINAL entity table use extract_questions."""
     return _packed(
-        documents, "packed", giant_doc_spans, schema.QUESTION_SCALARS,
+        documents, "packed", schema.QUESTION_SCALARS,
         "question_scalars_arrow", None,
         lambda questions: questions.select(*schema.QUESTION_SCALARS.names),
     )

@@ -93,16 +93,21 @@ def test_unknown_engine_raises_at_plan_time(spark, entry, engine):
 
 
 def test_entry_points_take_explicit_options(spark):
-    """``engine`` and ``giant_doc_spans`` are explicit keyword options
-    of every engine (``native`` ignores the threshold), and any other
-    keyword is a TypeError rather than silently dropped."""
+    """``engine`` is the one keyword option of every engine; any other
+    keyword, the giant-doc threshold included, is a TypeError rather
+    than silently dropped."""
     docs = spark.createDataFrame([], schema=schema.DOCUMENT_SPANS_EXT)
     for entry in ("extract_questions", "extract_flat_spans",
                   "extract_validation"):
         for engine in ("packed", "packed-pandas", "native"):
-            df = getattr(pipeline, entry)(
-                docs, engine=engine, giant_doc_spans=None)
+            df = getattr(pipeline, entry)(docs, engine=engine)
             assert df.collect() == [], (entry, engine)
+            with pytest.raises(TypeError):
+                getattr(pipeline, entry)(
+                    docs, engine=engine, giant_doc_spans=None)
+    for entry in ("extract_doc_text", "extract_question_scalars"):
+        with pytest.raises(TypeError):
+            getattr(pipeline, entry)(docs, giant_doc_spans=None)
     with pytest.raises(TypeError):
         pipeline.extract_questions(docs, chunk_size=7)
 
@@ -185,7 +190,10 @@ def test_java_ws_classes_equal_python_whitespace_everywhere(spark):
     """The JVM twin of the test above: in one Spark job over every
     non-surrogate codepoint, the Java ``(?U)`` rendering of ``\\s``
     (every ``J_*`` form's), its ``\\S`` complement, J_PY_STRIP_CLASS
-    and the J_PY_STRIP strip each match exactly anchors.PY_WS_CHARS."""
+    and the J_PY_STRIP strip each match exactly anchors.PY_WS_CHARS,
+    and the Java rendering of ``\\d`` matches exactly Python's ``\\d``."""
+    import re
+
     from pyspark.sql import functions as F
 
     from pdf_parser_python_spark.functions import anchors as A
@@ -209,11 +217,14 @@ def test_java_ws_classes_equal_python_whitespace_everywhere(spark):
         ids(ws_j).alias("ws_j"),
         ids(c.rlike(f"^{A.J_PY_STRIP_CLASS}$")).alias("strip_class"),
         ids(F.regexp_replace(c, A.J_PY_STRIP, "") == "").alias("strip"),
+        ids(c.rlike(A._java("U", r"^\d$"))).alias("digit_j"),
     ).first()
     want = sorted(ord(ch) for ch in A.PY_WS_CHARS)
     assert (got.n, got.bad_len, got.s_is_S) == (1_112_064, 0, 0)
     assert got.ws_j == got.strip_class == got.strip == want
     assert A._java("U", r"\s") == "(?U)" + A.J_WS_CLASS
+    assert got.digit_j == [ord(ch) for ch in re.findall(r"\d", A._codepoints())]
+    assert A._java("U", r"\d") == "(?U)" + A.J_DIGIT_CLASS
 
 
 #: one document per character Python's ``\s`` has and Java's (?U) ``\s``
@@ -239,6 +250,8 @@ def test_engines_agree_on_python_whitespace_and_digits(spark):
         ("fullwidth", ["Question: ８ Fullwidth?", "A. x", "Answer: A"]),
         ("arabic", ["Question: ٥ Arabic-Indic?", "A. x", "Answer: A"]),
         ("padded", ["Question: " + "٠" * 19 + "٤٢ Padded?", "A. x",
+                    "Answer: A"]),
+        ("tangsa", ["Question: \U00016AC3 Tangsa three?", "A. x",
                     "Answer: A"]),
     ]
     frame = spark.createDataFrame(
@@ -269,7 +282,35 @@ def test_engines_agree_on_python_whitespace_and_digits(spark):
         ("arabic", 5, "Arabic-Indic?", [("A", "x", True)], "A", ""),
         ("fullwidth", 8, "Fullwidth?", [("A", "x", True)], "A", ""),
         ("padded", 42, "Padded?", [("A", "x", True)], "A", ""),
+        ("tangsa", 3, "Tangsa three?", [("A", "x", True)], "A", ""),
     ])
+
+
+def test_engines_sort_spans_over_the_whole_offset_range(spark):
+    """Spans sort by offset at both ends of the int range: a comparator
+    that subtracts offsets overflows under ANSI (ARITHMETIC_OVERFLOW).
+    All three engines give the hand-written rows, and the envelope
+    hashes the spans in offset order."""
+    import hashlib
+
+    from pdf_parser_python_spark.operators import envelope
+
+    spans = [("Question: 1\nFirst?\nAnswer: A", 2_147_483_647),
+             ("Question: 2\nSecond?\nAnswer: B", -5)]
+    frame = spark.createDataFrame(
+        [("edge", [{"kind": "text", "text": t, "media_ref": "", "offset": o,
+                    "page": 1} for t, o in spans])],
+        schema=schema.DOCUMENT_SPANS_EXT,
+    )
+    for engine in ("packed", "packed-pandas", "native"):
+        got = [(r.seq, r.question_number, r.question_text)
+               for r in pipeline.extract_questions(frame, engine=engine)
+               .orderBy("seq").collect()]
+        assert got == [(0, 2, "Second?"), (1, 1, "First?")], engine
+    canon = "\x1e".join(f"text\x1f{t}\x1f" for t, _ in reversed(spans))
+    sha, size = envelope.canonical_source(frame)
+    assert frame.select(sha, size).first() == (
+        hashlib.sha256(canon.encode()).hexdigest(), len(canon.encode()))
 
 
 def test_nonascii_stays_on_vectorized_path(spark, monkeypatch):
@@ -459,7 +500,7 @@ def test_packed_handles_unsorted_spans(spark):
     assert a == b and len(a) > 10
 
 
-def test_doc_text_equals_groupby_reassembly(spark):
+def test_doc_text_equals_groupby_reassembly(spark, monkeypatch):
     """r7: the in-kernel exam reassembly (pipeline.extract_doc_text)
     must be row-equal to the groupBy(collect_list) formulation it
     replaces — including a doc with non-ASCII digits (the kernel's
@@ -510,9 +551,6 @@ def test_doc_text_equals_groupby_reassembly(spark):
     assert len(kernel) == len(corpus)
 
     # forced-giant dispatch: the union branch must agree too
-    giant = sorted(
-        tuple(r)
-        for r in pipeline.extract_doc_text(docs, giant_doc_spans=10)
-        .collect()
-    )
+    monkeypatch.setattr(pipeline, "GIANT_DOC_SPANS", 10)
+    giant = sorted(tuple(r) for r in pipeline.extract_doc_text(docs).collect())
     assert giant == grouped

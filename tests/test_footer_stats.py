@@ -77,7 +77,6 @@ def test_plan_build_no_jobs_small_corpus(spark, tmp_path, no_probe):
     p = str(tmp_path / "docs")
     _write_corpus(spark, p, giant=False)
     df = spark.read.parquet(p)
-    pipeline._GIANT_PROBE_CACHE.clear()
     plan, jobs = _build_in_group(
         spark, "plan-build-small", lambda: pipeline.extract_questions(df)
     )
@@ -90,7 +89,6 @@ def test_plan_build_no_jobs_giant_corpus(spark, tmp_path, no_probe):
     p = str(tmp_path / "docs")
     _write_corpus(spark, p, giant=True)
     df = spark.read.parquet(p)
-    pipeline._GIANT_PROBE_CACHE.clear()
     plan, jobs = _build_in_group(
         spark, "plan-build-giant", lambda: pipeline.extract_questions(df)
     )
@@ -98,11 +96,25 @@ def test_plan_build_no_jobs_giant_corpus(spark, tmp_path, no_probe):
     assert "Union" in plan._jdf.queryExecution().analyzed().toString()
 
 
+def test_dispatch_follows_a_table_rewritten_in_place(spark, tmp_path):
+    """Dispatch is decided from the input on every call: after the same
+    path is overwritten with a giant document, the next plan has the
+    giant branch."""
+    p = str(tmp_path / "docs")
+    _write_corpus(spark, p, giant=False)
+    first = pipeline.extract_questions(spark.read.parquet(p))
+    assert "Union" not in first._jdf.queryExecution().analyzed().toString()
+    _write_corpus(spark, p, giant=True)
+    df = spark.read.parquet(p)
+    assert pipeline._footer_max_doc_spans(df) == pipeline.GIANT_DOC_SPANS + 1
+    second = pipeline.extract_questions(df)
+    assert "Union" in second._jdf.queryExecution().analyzed().toString()
+
+
 def test_statless_input_falls_back_to_probe(spark, monkeypatch):
     rows = [("d0", [{"kind": "text", "text": "Question: 1\nAnswer: A",
                      "media_ref": "", "offset": 0}])]
     df = spark.createDataFrame(rows, schema=schema.DOCUMENT_SPANS)
-    pipeline._GIANT_PROBE_CACHE.clear()
     called = {}
     cls = _df_class()
     orig = cls.isEmpty

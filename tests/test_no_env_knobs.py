@@ -152,3 +152,28 @@ def test_exact_re2_form_is_built_lazily():
     )
     subprocess.run([sys.executable, "-c", code], check=True,
                    cwd=PACKAGE.parent)
+
+
+def _empty_container(node) -> bool:
+    """``{}``, ``[]``, ``set()``, ``dict()`` or ``list()``."""
+    if isinstance(node, ast.Dict):
+        return not node.keys
+    if isinstance(node, ast.List):
+        return not node.elts
+    return (isinstance(node, ast.Call) and not node.args
+            and not node.keywords and isinstance(node.func, ast.Name)
+            and node.func.id in ("set", "dict", "list"))
+
+
+def test_package_keeps_no_module_state():
+    """No module of the package starts a mutable container it could fill
+    across calls (a memo, a registry): what a call does follows from its
+    arguments and the session, never from what an earlier call saw."""
+    hits = [
+        f"{path.relative_to(PACKAGE.parent)}:{node.lineno}"
+        for path in sorted(PACKAGE.rglob("*.py"))
+        for node in ast.parse(path.read_text()).body
+        if isinstance(node, (ast.Assign, ast.AnnAssign))
+        and node.value is not None and _empty_container(node.value)
+    ]
+    assert hits == []

@@ -45,7 +45,7 @@ def _giant_lines(spark, n_questions: int, parts: int = 16):
     )
 
 
-def test_auto_giant_dispatch_span_equal_on_mixed_corpus(spark):
+def test_auto_giant_dispatch_span_equal_on_mixed_corpus(spark, monkeypatch):
     """DEFAULT extract_flat_spans / extract_questions on a corpus mixing
     normal docs with one doc above the giant threshold must route the
     outlier to the chunked engine (no single-task straggler) and emit
@@ -77,46 +77,25 @@ def test_auto_giant_dispatch_span_equal_on_mixed_corpus(spark):
             for r in df.collect()
         )
 
-    got = canon(pipeline.extract_flat_spans(mixed, giant_doc_spans=300))
-    ref = canon(pipeline.extract_flat_spans(mixed, giant_doc_spans=None))
+    def questions(df):
+        return sorted(map(tuple, df.select(
+            "doc_id", "seq", "question_number", "question_text",
+            "answer_text", "anomaly_score").collect()))
+
+    # whole-document parse first: every doc is below the real threshold
+    ref = canon(pipeline.extract_flat_spans(mixed))
+    qref = questions(pipeline.extract_questions(mixed))
+
+    monkeypatch.setattr(pipeline, "GIANT_DOC_SPANS", 300)
+    flat = pipeline.extract_flat_spans(mixed)
+    got = canon(flat)
     assert got == ref and len(got) > 800
+    assert questions(pipeline.extract_questions(mixed)) == qref
 
-    qgot = sorted(
-        map(tuple, pipeline.extract_questions(
-            mixed, giant_doc_spans=300
-        ).select("doc_id", "seq", "question_number", "question_text",
-                 "answer_text", "anomaly_score").collect())
-    )
-    qref = sorted(
-        map(tuple, pipeline.extract_questions(
-            mixed, giant_doc_spans=None
-        ).select("doc_id", "seq", "question_number", "question_text",
-                 "answer_text", "anomaly_score").collect())
-    )
-    assert qgot == qref
-
-    # the giant doc's branch really is the chunked engine: its rows key
-    # on (doc_id, _chunk) in the physical plan
-    p = (
-        pipeline.extract_flat_spans(mixed, giant_doc_spans=300)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "_chunk" in p
-
-    # AUTO mode: the probe must detect the outlier and build the same
-    # dispatched plan without an explicit threshold
-    old = pipeline.GIANT_DOC_SPANS
-    pipeline.GIANT_DOC_SPANS = 300
-    try:
-        auto = canon(pipeline.extract_flat_spans(mixed))
-        p_auto = (
-            pipeline.extract_flat_spans(mixed)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-    finally:
-        pipeline.GIANT_DOC_SPANS = old
-    assert auto == ref
-    assert "_chunk" in p_auto and "Union" in p_auto
+    # the probe detects the outlier, and its branch really is the chunked
+    # engine: its rows key on (doc_id, _chunk) in the physical plan
+    p = flat._jdf.queryExecution().executedPlan().toString()
+    assert "_chunk" in p and "Union" in p
 
 
 def test_chunked_vkernel_equals_whole_doc(spark):
@@ -134,7 +113,7 @@ def test_chunked_vkernel_equals_whole_doc(spark):
         for i in range(40)
     ]
     df = spark.createDataFrame(corpus, schema=S.DOCUMENT_SPANS_EXT)
-    whole = pipeline.extract_questions(df, giant_doc_spans=None)
+    whole = pipeline.extract_questions(df)
     chunk = chunked.parse_giant_final(df, chunk_spans=7)  # many chunks
 
     key = lambda r: (r["doc_id"], r["seq"])
@@ -145,7 +124,7 @@ def test_chunked_vkernel_equals_whole_doc(spark):
         assert a[k] == b[k], (k, a[k], b[k])
 
 
-def test_chunked_dispatch_end_to_end(spark):
+def test_chunked_dispatch_end_to_end(spark, monkeypatch):
     """extract_* auto-dispatch with the chunked-vkernel giant branch:
     a synthetic giant doc + normal corpus must equal the undispatched
     parse."""
@@ -170,20 +149,10 @@ def test_chunked_dispatch_end_to_end(spark):
     corpus.append(("zz-giant", giant_spans))
     df = spark.createDataFrame(corpus, schema=S.DOCUMENT_SPANS_EXT)
 
-    import pdf_parser_python_spark.plans.pipeline as P
-    old = P.GIANT_DOC_SPANS
-    P.GIANT_DOC_SPANS = 500  # force the giant branch for zz-giant
-    P._GIANT_PROBE_CACHE.clear()
-    try:
-        auto = pipeline.extract_flat_spans(df)
-        plain = pipeline.extract_flat_spans(df, giant_doc_spans=None)
-        key = lambda r: tuple(r)
-        assert sorted(map(key, auto.collect())) == sorted(
-            map(key, plain.collect())
-        )
-    finally:
-        P.GIANT_DOC_SPANS = old
-        P._GIANT_PROBE_CACHE.clear()
+    plain = sorted(map(tuple, pipeline.extract_flat_spans(df).collect()))
+    monkeypatch.setattr(pipeline, "GIANT_DOC_SPANS", 500)  # zz-giant only
+    auto = sorted(map(tuple, pipeline.extract_flat_spans(df).collect()))
+    assert auto == plain
 
 
 @requires_reference

@@ -23,21 +23,20 @@ def _docs(spark):
 
 
 def test_packed_engine_zero_shuffle(spark):
-    # dispatch disabled: the packed small-doc path itself must stay
-    # scan → mapInPandas with no exchange
-    p = _plan(pipeline.extract_questions(_docs(spark),
-                                         giant_doc_spans=None))
+    # no giant document: the packed path itself must stay scan →
+    # mapInArrow with no exchange
+    p = _plan(pipeline.extract_questions(_docs(spark)))
     assert p.count("Exchange") == 0
     assert p.count("MapInArrow") == 1 and p.count("MapInPandas") == 0
     assert "FlatMapGroupsInPandas" not in p
 
 
-def test_default_dispatch_probe_and_forced_union(spark):
-    """Default (auto) dispatch: a giant-free corpus gets the pure
-    packed plan (probe says no outliers → no union overhead); a forced
-    threshold builds the union with the anchor-chunked vectorized
-    branch keyed on (doc_id, chunk). Holds for all five packed entry
-    points on every engine each one takes."""
+def test_default_dispatch_probe_and_forced_union(spark, monkeypatch):
+    """Dispatch: a giant-free corpus gets the pure packed plan (probe
+    says no outliers → no union overhead); with the threshold lowered
+    below its documents the plan has the union with the anchor-chunked
+    vectorized branch keyed on (doc_id, chunk). Holds for all five
+    packed entry points on every engine each one takes."""
     d = _docs(spark)
     calls = [
         (entry, {"engine": e})
@@ -53,7 +52,9 @@ def test_default_dispatch_probe_and_forced_union(spark):
             (0, 1) if pandas else (1, 0)), (entry, kw)
         assert "Exchange" not in p_auto and "Union" not in p_auto, (
             entry, kw)
-        p = _plan(fn(d, giant_doc_spans=10, **kw))
+        with monkeypatch.context() as m:
+            m.setattr(pipeline, "GIANT_DOC_SPANS", 10)
+            p = _plan(fn(d, **kw))
         assert "Union" in p, (entry, kw)
         # the giant branch re-packs pseudo-docs on (doc_id, chunk)
         parts = re.findall(r"hashpartitioning\(([^)]*)\)", p)
@@ -66,8 +67,7 @@ def test_default_dispatch_probe_and_forced_union(spark):
 
 
 def test_validation_single_shuffle(spark):
-    p = _plan(validation_report(pipeline.extract_questions(
-        _docs(spark), giant_doc_spans=None)))
+    p = _plan(validation_report(pipeline.extract_questions(_docs(spark))))
     assert p.count("Exchange") == 1
 
 
@@ -144,7 +144,7 @@ def test_compose_e2e_no_corpus_self_join(spark):
     assert not self_joins, self_joins
 
 
-def test_doc_text_zero_exchange(spark):
+def test_doc_text_zero_exchange(spark, monkeypatch):
     """r7 (VERDICT r6 item 2): exam reassembly aggregates inside the
     kernel — pruned scan → one MapInArrow, NO Exchange (the old
     groupBy(collect_list) re-shuffled rows the kernel had colocated).
@@ -154,8 +154,8 @@ def test_doc_text_zero_exchange(spark):
     assert p.count("Exchange") == 0
     assert p.count("MapInArrow") == 1 and "Union" not in p
 
-    p_giant = _plan(pipeline.extract_doc_text(_docs(spark),
-                                              giant_doc_spans=10))
+    monkeypatch.setattr(pipeline, "GIANT_DOC_SPANS", 10)
+    p_giant = _plan(pipeline.extract_doc_text(_docs(spark)))
     assert "Union" in p_giant and p_giant.count("MapInArrow") >= 1
 
 

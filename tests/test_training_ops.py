@@ -441,8 +441,7 @@ def test_chunked_non_dense_offsets(spark):
         schema.DOCUMENT_SPANS_EXT)
     want = sorted(
         (r.doc_id, r.seq, r.question_number, r.question_text)
-        for r in pipeline.extract_questions(
-            packed, giant_doc_spans=None).collect()
+        for r in pipeline.extract_questions(packed).collect()
     )
     assert got == want and len(got) == 30
     # packed projection path too (explode → same bucket map logic)
